@@ -15509,8 +15509,12 @@ def ts_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("slope").alias("lo"), F.max("slope").alias("hi")
     ).collect()[0]
     lo, hi = rng["lo"], rng["hi"]
-    if lo is None or lo == hi:
-        # 0/1 distinct slope value: the median IS that value
+    if lo is None:
+        # zero slope pairs (fewer than two days): no median, no row —
+        # the oracle's rank filter over an empty pair set
+        return spark.createDataFrame([], "n_pairs long, sen_slope double")
+    if lo == hi:
+        # one distinct slope value: the median IS that value
         n = slopes.count()
         return spark.range(1).select(
             F.lit(n).cast("long").alias("n_pairs"),

@@ -3,8 +3,18 @@
 The reference infers every schema (``spark.read.json`` with no schema,
 reference etl.py:43, etl.py:87). Inference is a full extra pass over JSON and
 nondeterministic under sampling at scale, so this engine declares schemas for
-every source (SURVEY.md §1.4). Parquet sources are self-describing; these
-StructTypes document the contract and back the JSON/streaming readers.
+every source (SURVEY.md §1.4), and the JSON and streaming readers read under
+them.
+
+Parquet corpus tables (``TESTDATA_SCHEMAS``; ``events`` has two variants)
+are read under these schemas only when the file's footer proves them
+exact: ``sources.readers.corpus_schema`` maps the footer to the schema
+Spark's own inference would give and returns the declared entry only on an
+exact match of column names, order and types. Spark does not check a
+declared schema against a parquet file — a µs ``events.ts`` read as bigint
+returns epoch micros, a missing column reads as nulls — so on any mismatch,
+and on non-local roots (``hdfs://``, ``s3a://``), the table is read with
+inference instead.
 """
 
 from __future__ import annotations
@@ -88,8 +98,8 @@ LINEITEM = T.StructType(
 # events.ts arrives either as parquet TIMESTAMP(NANOS) — read as epoch-nanos
 # long via spark.sql.legacy.parquet.nanosAsLong — or (current corpus) as
 # TIMESTAMP(MICROS). The readers normalize both to the same working columns
-# (ts timestamp + ts_ns epoch-nanos); streaming probes the footer to pick
-# the matching explicit schema (readStream cannot infer).
+# (ts timestamp + ts_ns epoch-nanos); the footer rule picks which of the two
+# a file is read under, batch and streaming alike (readStream cannot infer).
 EVENTS_RAW = T.StructType(
     [
         T.StructField("event_id", T.LongType()),

@@ -20,7 +20,8 @@ import os
 from pyspark.sql import SparkSession
 
 # Runtime-settable SQL confs applied to every session we touch. All of these
-# are dynamic (not static) confs, so they can be applied to a live session.
+# are dynamic (not static) confs, so prepare() can apply them to a live
+# session.
 RUNTIME_CONFS: dict[str, str] = {
     # Determinism: time functions (hour/day/...) depend on session TZ.
     "spark.sql.session.timeZone": "UTC",
@@ -36,6 +37,16 @@ RUNTIME_CONFS: dict[str, str] = {
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Push MIN/MAX/COUNT aggregates into the parquet footer scan.
     "spark.sql.parquet.aggregatePushdown": "true",
+    # Tz-less parquet timestamps infer as timestamp_ntz (the Spark
+    # default, pinned): sources.readers.corpus_schema matches a file's
+    # footer against the declared schemas under exactly these rules.
+    "spark.sql.parquet.inferTimestampNTZ.enabled": "true",
+}
+
+# Static confs: only a session's builder can set them, so get_spark
+# applies them and prepare() never tries (a live session rejects them
+# with AnalysisException on every call).
+STATIC_CONFS: dict[str, str] = {
     # PySpark 4's per-call user-frame capture (error enrichment) walks the
     # Python stack on EVERY DataFrame API call — pure driver-side overhead
     # (~0.3-0.5 s per lifecycle query of inspect.currentframe chains,
@@ -57,21 +68,22 @@ def prepare(spark: SparkSession) -> SparkSession:
     for key, value in RUNTIME_CONFS.items():
         try:
             spark.conf.set(key, value)
-        except Exception:  # pragma: no cover - static conf on some builds
+        except Exception:  # pragma: no cover - conf unknown to some builds
             pass
     # pyspark caches the dataFrameDebugging flag module-globally on first
     # use; a driver-owned session may have primed it True before handing
-    # us the session, so sync the cache with the conf we just set — but
-    # ONLY after reading the conf back as 'false' (ADVICE r12: never force
-    # the process-wide private cache off when the conf.set above failed or
-    # a co-hosted session legitimately runs with debugging on).
+    # us the session. Sync the cache with the session's (static) conf —
+    # but ONLY after reading the conf back as 'false': never force the
+    # process-wide private cache off when a co-hosted session
+    # legitimately runs with debugging on. Once synced off, there is
+    # nothing left to read.
     try:  # pragma: no cover - private attr may move between releases
-        if (
+        from pyspark.errors import utils as _errors_utils
+
+        if _errors_utils._enable_debugging_cache is not False and (
             spark.conf.get("spark.python.sql.dataFrameDebugging.enabled")
             == "false"
         ):
-            from pyspark.errors import utils as _errors_utils
-
             _errors_utils._enable_debugging_cache = False
     except Exception:
         pass
@@ -120,7 +132,7 @@ def get_spark(
         )
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
-    for key, value in RUNTIME_CONFS.items():
+    for key, value in {**RUNTIME_CONFS, **STATIC_CONFS}.items():
         builder = builder.config(key, value)
     for key, value in (extra_confs or {}).items():
         builder = builder.config(key, value)

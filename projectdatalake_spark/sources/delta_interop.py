@@ -1781,26 +1781,33 @@ class DeltaTable:
             _atomic.strip_file_scheme(self._abs_data_path(a["path"]))
             for a in adds
         ]
-        schema = _fs.arrow_schema_of(add_paths[0])
+        local = all(_fs.footers_readable(p) for p in add_paths)
         # same filter the old read-back-schema walk applied
         cols = [
-            fld.name
-            for fld in schema
-            if fld.name not in pcols
-            and _fs.spark_type_name(fld.type) in _SIMPLE_TYPES
+            name
+            for name, tn in _fs.column_types(self.spark, add_paths[0], local)
+            if name not in pcols and tn in _SIMPLE_TYPES
         ]
         bloom_cols = [c for c in self._bloom_cols() if c in set(cols)]
-        per_file = _fs.footer_file_stats(
-            self.spark, add_paths, want_cols=cols, with_nulls=True
-        )
-        untrusted: list[str] = []
-        for st in per_file.values():
-            untrusted += [c for c in st["untrusted"] if c not in untrusted]
-        spark_by_path, spark_blooms = (
+        if local:
+            per_file = _fs.footer_file_stats(
+                self.spark, add_paths, want_cols=cols, with_nulls=True
+            )
+            untrusted: list[str] = []
+            for st in per_file.values():
+                untrusted += [c for c in st["untrusted"] if c not in untrusted]
+        else:
+            untrusted = cols
+        spark_by_path, spark_blooms, spark_nrec = (
             self._attach_stats_spark(adds, untrusted, bloom_cols)
             if untrusted or bloom_cols
-            else ({}, {})
+            else ({}, {}, {})
         )
+        if not local:
+            per_file = {
+                p: _fs.untrusted_stats(spark_nrec.get(p, 0), cols)
+                for p in add_paths
+            }
         for a, p in zip(adds, add_paths):
             st = per_file.get(p)
             if st is None or st["nrec"] == 0:
@@ -1839,10 +1846,12 @@ class DeltaTable:
 
     def _attach_stats_spark(
         self, adds: list[dict], cols: list[str], bloom_cols: list[str]
-    ) -> tuple[dict, dict]:
+    ) -> tuple[dict, dict, dict]:
         """The original one-Spark-pass grouped stats aggregate, now the
-        RESTRICTED fallback for footer-untrusted and bloom columns.
-        Returns ({path: {col: (min, max, nulls)}}, {path: {col: hex}})."""
+        RESTRICTED fallback for footer-untrusted and bloom columns (and
+        the whole stats pass on roots whose footers are not readable
+        here). Returns ({path: {col: (min, max, nulls)}},
+        {path: {col: hex}}, {path: numRecords})."""
         from .txlog import _BLOOM_M, _BLOOM_SEEDS
 
         paths = [self._abs_data_path(a["path"]) for a in adds]
@@ -1878,9 +1887,11 @@ class DeltaTable:
         # filesystem side gets a plain scheme strip, never a decode
         by_path: dict[str, dict] = {}
         blooms_by_path: dict[str, dict] = {}
+        nrec_by_path: dict[str, int] = {}
         for r in rows:
             d = r.asDict()
             fpath = _atomic.uri_to_path(d.pop("__file"))
+            nrec_by_path[fpath] = int(d["__n"])
             by_path[fpath] = {
                 c: (d[f"min__{c}"], d[f"max__{c}"], d[f"nulls__{c}"] or 0)
                 for c in cols
@@ -1894,7 +1905,7 @@ class DeltaTable:
                 if bits:
                     blooms[c] = f"{bits:x}"
             blooms_by_path[fpath] = blooms
-        return by_path, blooms_by_path
+        return by_path, blooms_by_path, nrec_by_path
 
     def _ict_prev(self, version: int) -> tuple[bool, int | None]:
         """(was ICT active at ``version - 1``, that commit's authoritative

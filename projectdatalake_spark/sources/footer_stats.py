@@ -40,6 +40,13 @@ to ``_DRIVER_MAX_FILES`` adds it runs as a driver loop (the commit path
 already walks the same files one-by-one to rename them); past that it
 ships the path list through ``spark.sparkContext.parallelize`` so each
 executor parses its own files' footers — no full-table scan either way.
+Both branches open files with local pyarrow, so only local roots take
+them (``footers_readable``); ``hdfs://`` and ``s3a://`` commits derive
+every stat with the Spark aggregate.
+
+The same footers also tell which schema Spark would infer for a file
+(``spark_read_schema``): the corpus reader's check before it reads a
+table under its declared schema.
 """
 
 from __future__ import annotations
@@ -91,6 +98,15 @@ class _Untrusted(Exception):
     pass
 
 
+# every typeName spark_type_name can return: the stats-eligible primitives
+_STATS_TYPES = frozenset(
+    {
+        "byte", "short", "integer", "long", "float", "double", "boolean",
+        "string", "date", "timestamp_ntz", "timestamp", "decimal",
+    }
+)
+
+
 def spark_type_name(arrow_type) -> str | None:
     """Arrow type → Spark ``dataType.typeName()`` for the type classes
     the stats passes filter on (None = not a stats-eligible primitive).
@@ -126,11 +142,110 @@ def spark_type_name(arrow_type) -> str | None:
     return None
 
 
+def footers_readable(root: str) -> bool:
+    """Whether the data-file footers under ``root`` can be opened with
+    local pyarrow — by the driver, and past ``_DRIVER_MAX_FILES`` by each
+    executor in the parallelize branch. Only local (or ``file:``) roots
+    qualify, the same ``atomic.is_local_path`` rule the corpus reader
+    uses; ``hdfs://``, ``s3a://`` and every other scheme take the Spark
+    aggregate (the commit paths' ``_attach_stats_spark``)."""
+    from .atomic import is_local_path
+
+    return is_local_path(root)
+
+
+def column_types(spark, path: str, local: bool) -> list[tuple[str, str | None]]:
+    """(name, Spark ``typeName``) per top-level column of one data file,
+    the type None where the stats passes skip the column (binary,
+    nested, unsigned). From the footer when ``local``, else from the
+    schema Spark reads through the Hadoop filesystem."""
+    if local:
+        return [(f.name, spark_type_name(f.type)) for f in arrow_schema_of(path)]
+    names = [(f.name, f.dataType.typeName()) for f in spark.read.parquet(path).schema]
+    return [(n, tn if tn in _STATS_TYPES else None) for n, tn in names]
+
+
+def untrusted_stats(nrec: int, cols: Iterable[str], dicts: dict | None = None) -> dict:
+    """A per-file entry shaped like ``_one_file_stats`` that trusts no
+    column: for files on a root whose footers are not readable here, so
+    every column's stats come from the caller's Spark aggregate."""
+    return {
+        "nrec": nrec,
+        "min": {},
+        "max": {},
+        "nulls": {},
+        "dict": dict(dicts or {}),
+        "untrusted": list(cols),
+    }
+
+
 def arrow_schema_of(path: str):
     """Arrow schema of one parquet file (footer only)."""
     import pyarrow.parquet as pq
 
     return pq.ParquetFile(_strip_scheme(path)).schema_arrow
+
+
+# Spark ``typeName`` → ``simpleString`` where the two differ
+_SIMPLE_STRING = {
+    "byte": "tinyint",
+    "short": "smallint",
+    "integer": "int",
+    "long": "bigint",
+}
+
+
+def _spark_read_type(arrow_type, leaf) -> str | None:
+    """Spark ``simpleString`` of the type Spark infers for one column;
+    ``leaf`` is the column's parquet descriptor (timestamps need its
+    physical and logical type, which the arrow type does not carry:
+    INT96 and TIMESTAMP(NANOS) both surface as arrow timestamp[ns]; a
+    timestamp inside a list has no leaf here and is left unmapped)."""
+    import json
+
+    import pyarrow as pa
+
+    t = arrow_type
+    if pa.types.is_timestamp(t):
+        if leaf is None:
+            return None
+        if leaf.physical_type == "INT96":
+            return "timestamp"
+        lt = json.loads(leaf.logical_type.to_json())
+        if lt.get("Type") != "Timestamp":
+            return None
+        if lt["timeUnit"] == "nanoseconds":
+            return "bigint"  # spark.sql.legacy.parquet.nanosAsLong
+        return "timestamp" if lt["isAdjustedToUTC"] else "timestamp_ntz"
+    if pa.types.is_list(t) or pa.types.is_large_list(t):
+        inner = _spark_read_type(t.value_type, None)
+        return None if inner is None else f"array<{inner}>"
+    if pa.types.is_decimal(t):
+        return f"decimal({t.precision},{t.scale})"
+    name = spark_type_name(t)
+    return _SIMPLE_STRING.get(name, name)
+
+
+def spark_read_schema(path: str) -> str | None:
+    """``simpleString`` of the schema ``spark.read.parquet`` infers for
+    one parquet file, from its footer alone, under the confs
+    ``session.prepare`` pins (TIMESTAMP(NANOS) as bigint, tz-less
+    timestamps as timestamp_ntz). Spark reads every file column as
+    nullable, so nullability does not enter. None when a column's type
+    is outside this mapping (structs, maps, unsigned ints, binary,
+    arrow-restored dictionary columns): the caller then lets Spark
+    infer."""
+    import pyarrow.parquet as pq
+
+    pf = pq.ParquetFile(_strip_scheme(path))
+    leaves = {c.path: c for c in (pf.schema.column(i) for i in range(len(pf.schema)))}
+    cols = []
+    for fld in pf.schema_arrow:
+        typ = _spark_read_type(fld.type, leaves.get(fld.name))
+        if typ is None:
+            return None
+        cols.append(f"{fld.name}:{typ}")
+    return f"struct<{','.join(cols)}>"
 
 
 def _one_file_stats(
@@ -269,8 +384,15 @@ def footer_file_stats(
     file:-prefixed). Driver loop for small commits; a parallelize job
     over the path list for large ones (each task opens only its own
     files' footers — never the data, except the requested dict columns).
-    Returns {stripped_path: stats-dict} (see _one_file_stats)."""
+    Returns {stripped_path: stats-dict} (see _one_file_stats). Local
+    paths only (``footers_readable``): callers gate on their root."""
     paths = [_strip_scheme(p) for p in paths]
+    remote = [p for p in paths if not footers_readable(p)]
+    if remote:
+        raise ValueError(
+            f"footer stats read local files only, got {remote[0]!r}: "
+            "gate the caller on footers_readable(root)"
+        )
     dict_cols = tuple(dict_cols)
     if len(paths) <= _DRIVER_MAX_FILES or spark is None:
         return {

@@ -44,6 +44,7 @@ from __future__ import annotations
 import json
 import time
 import uuid
+from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructField, StructType
@@ -2488,18 +2489,25 @@ class IcebergTable:
             # is probed and pinned in sources/footer_stats.py +
             # tests/test_footer_stats.py; columns the footer cannot
             # reproduce exactly (INT96 ltz timestamps) fall back to the
-            # original Spark aggregate RESTRICTED to those columns.
+            # original Spark aggregate RESTRICTED to those columns. A root
+            # whose footers are not readable here (hdfs://, s3a://) takes
+            # counts and every bound from that aggregate.
             from . import footer_stats as _fs
 
             add_paths = [p for p, _sz in files]
-            per_file = _fs.footer_file_stats(
-                self.spark, add_paths, want_cols=bcols
-            )
-            untrusted: list[str] = []
-            for st in per_file.values():
-                untrusted += [c for c in st["untrusted"] if c not in untrusted]
+            footers = _fs.footers_readable(self.root)
+            if footers:
+                per_file = _fs.footer_file_stats(
+                    self.spark, add_paths, want_cols=bcols
+                )
+                untrusted: list[str] = []
+                for st in per_file.values():
+                    untrusted += [c for c in st["untrusted"] if c not in untrusted]
+            else:
+                untrusted = bcols
             fb_bounds: dict[str, dict] = {}
-            if untrusted:
+            fb_counts: dict[str, int] = {}
+            if untrusted or not footers:
                 aggs = [F.count(F.lit(1)).alias("__n")]
                 for c in untrusted:
                     aggs.append(F.min(c).alias(f"min__{c}"))
@@ -2521,11 +2529,21 @@ class IcebergTable:
                     d = r.asDict()
                     # decode the input_file_name URI: partition values
                     # with spaces arrive percent-encoded and would never
-                    # match the raw listing paths (bounds lost)
-                    key = _atomic.uri_to_path(d["__file"])
+                    # match the raw listing paths (bounds lost). Hadoop
+                    # listings above are scheme-less URI paths.
+                    uri = d["__file"]
+                    key = _atomic.uri_to_path(
+                        uri if footers else urlsplit(uri).path
+                    )
+                    fb_counts[key] = d["__n"]
                     fb_bounds[key] = {
                         c: (d[f"min__{c}"], d[f"max__{c}"]) for c in untrusted
                     }
+            if not footers:
+                per_file = {
+                    p: _fs.untrusted_stats(fb_counts.get(p, 0), bcols)
+                    for p in add_paths
+                }
             for path in add_paths:
                 st = per_file.get(path)
                 if st is None:

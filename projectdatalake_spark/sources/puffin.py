@@ -304,7 +304,7 @@ def column_theta_sketches(df, cols: list[str], k: int) -> dict:
     import pandas as pd
     from pyspark.sql import Window, functions as F
 
-    cols = list(cols)
+    cols = list(dict.fromkeys(cols))  # a column named twice is sketched once
     if not cols:
         return {}
 

@@ -608,6 +608,9 @@ class TxTable:
             # via _state (not a raw fold): a re-checkpoint after earlier
             # pruning must build on the previous checkpoint's base
             "state": self._state(v),
+            # the deletion vectors in force: prune_log may drop the
+            # delete_dv commits that wrote them
+            "dvs": self._active_dvs(v),
         }
         fs = self._fs()
         ck = f"{self.root}/{_LOG_DIR}/{v:08d}.checkpoint.json"
@@ -667,10 +670,21 @@ class TxTable:
         files), the vector is inert and vacuum may reap it. ``restore``
         and ``clone`` commits carry the exact DV set of their target
         state, replacing the replayed list (post-target deletions must
-        not leak through a restore)."""
+        not leak through a restore). The fold starts from the set a
+        checkpoint at or below ``version`` recorded, so it survives
+        log-retention pruning of the commits that wrote the vectors."""
         active = {a["path"] for a in self._active_files(version)}
         entries: list[dict] = []
+        start_after = -1
+        ck = self._read_checkpoint()
+        if ck is not None and "dvs" in ck and (
+            version is None or ck["version"] <= version
+        ):
+            entries = list(ck["dvs"])
+            start_after = ck["version"]
         for commit in self.history():
+            if commit["version"] <= start_after:
+                continue
             if version is not None and commit["version"] > version:
                 break
             if "dv" in commit:  # delete_dv / update_dv commits
@@ -1385,33 +1399,46 @@ class TxTable:
         add_paths = [
             _atomic.strip_file_scheme(self._data_path(a)) for a in adds
         ]
-        schema = _fs.arrow_schema_of(add_paths[0])
+        # a table may reference files outside its root (shallow clones):
+        # every file must be footer-readable for the footer path
+        local = all(_fs.footers_readable(p) for p in add_paths)
         pcols = set().union(*(a["partition"].keys() for a in adds))
         # same filter the old read-back-schema walk applied: non-partition
         # primitives minus binary/array/map/struct
         cols, dict_cols = [], []
         dict_types = {"string", "integer", "long", "short", "byte", "boolean"}
-        for fld in schema:
-            tn = _fs.spark_type_name(fld.type)
-            if fld.name in pcols or tn is None:
+        for name, tn in _fs.column_types(self.spark, add_paths[0], local):
+            if name in pcols or tn is None:
                 continue
-            cols.append(fld.name)
+            cols.append(name)
             if tn in dict_types:
-                dict_cols.append(fld.name)
+                dict_cols.append(name)
         if not cols:
             return
         bloom_cols = [c for c in self._bloom_by() if c in set(cols)]
-        per_file = _fs.footer_file_stats(
-            self.spark, add_paths, want_cols=cols, dict_cols=dict_cols
-        )
-        untrusted: list[str] = []
-        for st in per_file.values():
-            untrusted += [c for c in st["untrusted"] if c not in untrusted]
-        spark_by_path, spark_dicts, spark_blooms, _spark_nrec = (
-            self._attach_stats_spark(adds, untrusted, [], bloom_cols)
+        if local:
+            per_file = _fs.footer_file_stats(
+                self.spark, add_paths, want_cols=cols, dict_cols=dict_cols
+            )
+            untrusted: list[str] = []
+            for st in per_file.values():
+                untrusted += [c for c in st["untrusted"] if c not in untrusted]
+        else:
+            untrusted = cols
+        spark_by_path, spark_dicts, spark_blooms, spark_nrec = (
+            self._attach_stats_spark(
+                adds, untrusted, [] if local else dict_cols, bloom_cols
+            )
             if untrusted or bloom_cols
             else ({}, {}, {}, {})
         )
+        if not local:
+            per_file = {
+                p: _fs.untrusted_stats(
+                    spark_nrec.get(p, 0), cols, spark_dicts.get(p)
+                )
+                for p in add_paths
+            }
         for a, p in zip(adds, add_paths):
             st = per_file.get(p)
             if st is None or st["nrec"] == 0:
@@ -1451,7 +1478,8 @@ class TxTable:
         """The original ONE-Spark-pass grouped stats aggregate, now the
         RESTRICTED fallback: runs only over the columns the footer path
         could not serve (plus bloom columns, whose bit positions need
-        the same Spark xxhash64 expression the reader probes with).
+        the same Spark xxhash64 expression the reader probes with), or
+        over every column on a root whose footers are not readable here.
         Returns (stats, dicts, blooms, numRecords), each keyed by
         stripped absolute file path."""
         from pyspark.sql import functions as F

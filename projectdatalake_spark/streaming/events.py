@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from projectdatalake_spark import schemas
 from projectdatalake_spark.session import prepare
-from projectdatalake_spark.sources.readers import table_path
+from projectdatalake_spark.sources.readers import corpus_schema, table_path
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -33,28 +33,25 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # file-source streams take a directory; select the one table via glob.
     # event time stays TimestampType (ltz): watermarks require it — window
     # bounds are cast to ntz at output (session TZ is pinned UTC).
-    # readStream needs an explicit schema, so probe the parquet footer with
-    # a batch read to learn which corpus flavor this is (TIMESTAMP(NANOS)
-    # read as long, or TIMESTAMP(MICROS) read as timestamp_ntz).
-    ts_type = dict(
-        spark.read.parquet(table_path(sf_dir, "events")).dtypes
-    ).get("ts")
-    if ts_type == "bigint":
-        raw = (
-            spark.readStream.schema(schemas.EVENTS_RAW)
-            .option("pathGlobFilter", "events.parquet")
-            .format("parquet")
-            .load(sf_dir)
-        )
-        return raw.withColumn("ts_ns", F.col("ts")).withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000"))
-        )
+    # readStream needs an explicit schema: the footer rule picks it
+    # (TIMESTAMP(NANOS) read as long, or TIMESTAMP(MICROS) read as
+    # timestamp_ntz); a footer it cannot decide falls back to probing the
+    # ts type with an inferred batch read.
+    path = table_path(sf_dir, "events")
+    schema = corpus_schema(path, "events")
+    if schema is None:
+        ts_type = dict(spark.read.parquet(path).dtypes).get("ts")
+        schema = schemas.EVENTS_RAW if ts_type == "bigint" else schemas.EVENTS_RAW_TS
     raw = (
-        spark.readStream.schema(schemas.EVENTS_RAW_TS)
+        spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
         .format("parquet")
         .load(sf_dir)
     )
+    if schema is schemas.EVENTS_RAW:
+        return raw.withColumn("ts_ns", F.col("ts")).withColumn(
+            "ts", F.timestamp_micros(F.expr("ts div 1000"))
+        )
     ltz = F.col("ts").cast("timestamp")
     return raw.withColumn("ts_ns", F.unix_micros(ltz) * F.lit(1000)).withColumn(
         "ts", ltz

@@ -150,7 +150,7 @@ def test_delta_footer_stats_match_spark_agg(spark, tmp_path):
         f.name for f in df.schema.fields
         if f.name != "part" and f.dataType.typeName() in _SIMPLE_TYPES
     ]
-    by_path, _blooms = t._attach_stats_spark(adds, cols, [])
+    by_path, _blooms, nrec = t._attach_stats_spark(adds, cols, [])
     from projectdatalake_spark.sources import atomic as _atomic
 
     for a in adds:
@@ -162,7 +162,7 @@ def test_delta_footer_stats_match_spark_agg(spark, tmp_path):
             "nullCount": {},
         }
         got = json.loads(a["stats"])
-        want["numRecords"] = got["numRecords"]  # checked via row count below
+        want["numRecords"] = nrec[p]
         for c in cols:
             mn, mx, nulls = by_path[p][c]
             if mn is not None:
@@ -204,6 +204,32 @@ def test_iceberg_footer_bounds_match_sql_minmax(spark, tmp_path):
         assert str(hi).lower() == truth[1].lower(), (col, hi, truth[1])
 
 
+def _iceberg_bounds(t):
+    """Raw manifest lower/upper bound bytes and record count per file."""
+    import json
+
+    entries, _ = t._entries_for_snapshot(t.metadata(), None)
+    out = []
+    for e in entries:
+        d = e["data_file"]
+        out.append(
+            (
+                json.dumps(
+                    {kv["key"]: kv["value"].hex() if isinstance(kv["value"], (bytes, bytearray)) else kv["value"]
+                     for kv in (d.get("lower_bounds") or [])},
+                    sort_keys=True,
+                ),
+                json.dumps(
+                    {kv["key"]: kv["value"].hex() if isinstance(kv["value"], (bytes, bytearray)) else kv["value"]
+                     for kv in (d.get("upper_bounds") or [])},
+                    sort_keys=True,
+                ),
+                d["record_count"],
+            )
+        )
+    return sorted(out)
+
+
 def test_iceberg_footer_bounds_byte_equal_spark_fallback(
     spark, tmp_path, monkeypatch
 ):
@@ -212,33 +238,9 @@ def test_iceberg_footer_bounds_byte_equal_spark_fallback(
     same table twice — once on the footer path, once with every column
     forced through the original Spark aggregate — and compare the raw
     manifest lower/upper bound bytes."""
-    import json
-
     from projectdatalake_spark.sources.iceberg_interop import IcebergTable
 
     df = _adversarial_df(spark).coalesce(1)
-
-    def bounds_of(t):
-        entries, _ = t._entries_for_snapshot(t.metadata(), None)
-        out = []
-        for e in entries:
-            d = e["data_file"]
-            out.append(
-                (
-                    json.dumps(
-                        {kv["key"]: kv["value"].hex() if isinstance(kv["value"], (bytes, bytearray)) else kv["value"]
-                         for kv in (d.get("lower_bounds") or [])},
-                        sort_keys=True,
-                    ),
-                    json.dumps(
-                        {kv["key"]: kv["value"].hex() if isinstance(kv["value"], (bytes, bytearray)) else kv["value"]
-                         for kv in (d.get("upper_bounds") or [])},
-                        sort_keys=True,
-                    ),
-                    d["record_count"],
-                )
-            )
-        return sorted(out)
 
     fast = IcebergTable.create(spark, str(tmp_path / "fast"), df)
     orig = FS.footer_file_stats
@@ -252,7 +254,7 @@ def test_iceberg_footer_bounds_byte_equal_spark_fallback(
 
     monkeypatch.setattr(FS, "footer_file_stats", all_untrusted)
     slow = IcebergTable.create(spark, str(tmp_path / "slow"), df)
-    assert bounds_of(fast) == bounds_of(slow)
+    assert _iceberg_bounds(fast) == _iceberg_bounds(slow)
 
 
 def test_footer_stats_empty_table_attaches_nothing(spark, tmp_path):
@@ -313,3 +315,87 @@ def test_decimal_raw_decode():
         (-12345).to_bytes(3, "big", signed=True), 3
     ) == decimal.Decimal("-12.345")
     assert FS._decode_decimal(None, 2) is None
+
+
+# --- non-local roots: the footer path is gated off ---------------------------
+
+
+def test_footers_readable_gate():
+    assert FS.footers_readable("/warehouse/t")
+    assert FS.footers_readable("file:/warehouse/t")
+    assert FS.footers_readable("file:///warehouse/t")
+    assert not FS.footers_readable("hdfs://nn:8020/warehouse/t")
+    assert not FS.footers_readable("s3a://bucket/warehouse/t")
+    # the driver loop and the parallelize branch alike refuse before
+    # opening anything
+    for n in (1, FS._DRIVER_MAX_FILES + 1):
+        paths = [f"hdfs://nn:8020/t/part-{i}.parquet" for i in range(n)]
+        with pytest.raises(ValueError, match="local files only"):
+            FS.footer_file_stats(None, paths, want_cols=None)
+
+
+def _remote_root(monkeypatch):
+    """Make every root look non-local, and fail any footer read."""
+
+    def no_footers(*args, **kwargs):
+        raise AssertionError("footer read on a non-local root")
+
+    monkeypatch.setattr(FS, "footers_readable", lambda root: False)
+    monkeypatch.setattr(FS, "footer_file_stats", no_footers)
+    monkeypatch.setattr(FS, "arrow_schema_of", no_footers)
+
+
+def test_txlog_non_local_root_takes_spark_stats(spark, tmp_path, monkeypatch):
+    import copy
+
+    from projectdatalake_spark.sources.txlog import TxTable
+
+    df = _adversarial_df(spark).withColumn("part", F.col("k") % 2)
+    t = TxTable.create(
+        spark, str(tmp_path / "t"), df, partition_by=("part",), bloom_by=("s",)
+    )
+    want = t.history()[0]["adds"]
+    assert all("numRecords" in a and "dict" in a and "bloom" in a for a in want)
+    got = copy.deepcopy(want)
+    for a in got:
+        for key in ("numRecords", "stats", "dict", "bloom"):
+            a.pop(key, None)
+    _remote_root(monkeypatch)
+    t._attach_stats(got)
+    assert _normf(got) == _normf(want)
+
+
+def test_delta_non_local_root_takes_spark_stats(spark, tmp_path, monkeypatch):
+    import copy
+    import json
+
+    from projectdatalake_spark.sources.delta_interop import DeltaTable
+
+    df = (
+        _adversarial_df(spark)
+        .drop("dec", "bigdec")
+        .withColumn("tlz", F.col("tsn").cast("timestamp"))
+        .withColumn("part", F.col("k") % 2)
+    )
+    t = DeltaTable.create(spark, str(tmp_path / "d"), df, partition_by=("part",))
+    log0 = tmp_path / "d" / "_delta_log" / f"{0:020d}.json"
+    want = [
+        a["add"] for a in map(json.loads, log0.read_text().splitlines()) if "add" in a
+    ]
+    got = copy.deepcopy(want)
+    for a in got:
+        a.pop("stats")
+    _remote_root(monkeypatch)
+    t._attach_stats(got, {"part"})
+    assert [a["stats"] for a in got] == [a["stats"] for a in want]
+
+
+def test_iceberg_non_local_root_takes_spark_stats(spark, tmp_path, monkeypatch):
+    from projectdatalake_spark.sources.iceberg_interop import IcebergTable
+
+    df = _adversarial_df(spark).repartition(3)
+    fast = IcebergTable.create(spark, str(tmp_path / "fast"), df)
+    _remote_root(monkeypatch)
+    slow = IcebergTable.create(spark, str(tmp_path / "slow"), df)
+    assert _iceberg_bounds(fast) == _iceberg_bounds(slow)
+    assert sum(n for _lo, _hi, n in _iceberg_bounds(slow)) == df.count()

@@ -33,6 +33,40 @@ def test_multi_column_sketches_match_single(spark, sf_dir):
         assert got.estimate() == want.estimate(), c
 
 
+def test_multi_column_sketches_duplicate_column(spark, sf_dir):
+    from projectdatalake_spark.sources.puffin import (
+        column_theta_sketch,
+        column_theta_sketches,
+    )
+
+    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    got = column_theta_sketches(o, ["o_custkey", "o_orderkey", "o_custkey"], k=64)
+    assert list(got) == ["o_custkey", "o_orderkey"]
+    for c in got:
+        assert got[c].hashes == column_theta_sketch(o, c, k=64).hashes, c
+
+
+def test_theil_sen_zero_and_one_pair(spark, monkeypatch):
+    """Degenerate input: one distinct day has no slope pairs and no
+    median (no row, as the oracle's rank filter); two days give one."""
+    import datetime
+
+    from projectdatalake_spark import queries as Q
+
+    def orders_on(*days):
+        rows = [(datetime.datetime(1995, 1, d),) for d in days]
+        return spark.createDataFrame(rows, "o_orderdate timestamp_ntz")
+
+    fn = Q.QUERIES["ts_theil_sen_trend"]
+    monkeypatch.setattr(Q, "_t", lambda s, sf, name: orders_on(3, 3, 3))
+    out = fn(spark, "unused")
+    assert out.collect() == []
+    assert out.dtypes == [("n_pairs", "bigint"), ("sen_slope", "double")]
+    # day 3 has 2 orders, day 5 has 1: slope (1 - 2) / 2 days
+    monkeypatch.setattr(Q, "_t", lambda s, sf, name: orders_on(3, 3, 5))
+    assert [tuple(r) for r in fn(spark, "unused").collect()] == [(1, -0.5)]
+
+
 def test_theil_sen_bucketed_selection_matches_global_window(spark, sf_dir):
     # ground truth: the old single-partition global median window
     o = spark.read.parquet(f"{sf_dir}/orders.parquet")

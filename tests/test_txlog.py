@@ -742,6 +742,22 @@ def test_delete_dv_no_file_rewrite(spark, table):
     assert {r.id for r in table.snapshot().collect()} == {3}
 
 
+def test_prune_log_keeps_live_deletion_vectors(spark, table):
+    """The checkpoint records the vectors in force, so pruning the
+    delete_dv commit that wrote one cannot resurrect its rows."""
+    assert table.delete_where_dv("val = 20") is not None
+    table.append(_mkdf(spark, [(4, "B", 40)]))
+    table.checkpoint()
+    table.prune_log(retain_versions=0)
+    t2 = TxTable(table.spark, table.root)
+    assert not any("dv" in c for c in t2.history())  # the DV commit is gone
+    got = {(r.id, r.val) for r in t2.snapshot().collect()}
+    assert got == {(1, 10), (3, 30), (4, 40)}
+    # a later vector stacks on the checkpointed one
+    assert t2.delete_where_dv("id = 4") is not None
+    assert {r.id for r in t2.snapshot().collect()} == {1, 3}
+
+
 def test_delete_dv_changes_feed(spark, table):
     table.delete_where_dv("id = 1")
     ch = table.changes(0).collect()
