@@ -24,6 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from projectdatalake_spark.session import local_frame
+
 
 # r13 NOTE: the r12 serialized-storage checkpoint experiment for the
 # k-core loop was REVERTED after the clean-host A/B the r12 verdict asked
@@ -378,7 +380,8 @@ def bfs_distances(
         .localCheckpoint(eager=True)
     )
     spark = edges.sparkSession
-    dist = spark.createDataFrame(
+    dist = local_frame(
+        spark,
         [(int(source), 0)], "node long, dist int"
     ).localCheckpoint(eager=True)
     frontier = dist

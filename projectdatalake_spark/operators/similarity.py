@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, functions as F
 
 from projectdatalake_spark.functions.scalar import vec_dot, vec_dots_literal
+from projectdatalake_spark.session import local_frame
 
 
 def _py_fold_norm(c: list) -> float:
@@ -253,7 +254,8 @@ def topk_neighbors_lsh(
         (t, p, 1 << p, tables[t][p])
         for t, p in itertools.product(range(num_tables), range(num_planes))
     ]
-    planes_df = spark.createDataFrame(
+    planes_df = local_frame(
+        spark,
         plane_rows, schema="t int, p int, bit long, w array<double>"
     )
 
@@ -420,7 +422,8 @@ def ivf_search(
         for cell in np.argsort(d2)[:n_probe]:
             probe_rows.append((r[id_col], qv.tolist(), int(cell)))
     spark = assigned.sparkSession
-    q_probe = spark.createDataFrame(
+    q_probe = local_frame(
+        spark,
         probe_rows, schema=f"query_id long, q_vec array<double>, cell int"
     ).withColumn("q_norm", F.sqrt(vec_dot(F.col("q_vec"), F.col("q_vec"))))
 
@@ -1369,7 +1372,8 @@ def power_iteration_top_component(
             nrm = nrm + w[i] * w[i]
         s = math.sqrt(nrm)
         v = [wi / s for wi in w]
-    return df.sparkSession.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         [(i, v[i]) for i in range(d)], "dim int, weight double"
     )
 
@@ -1624,7 +1628,8 @@ def pq_search(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).cast("array<double>").alias("n_vec"),
     )
-    qv = spark.createDataFrame(
+    qv = local_frame(
+        spark,
         [(int(i), v.tolist()) for i, v in zip(qids, Q)],
         schema="query_id long, q_vec array<double>",
     )
@@ -1791,7 +1796,8 @@ def ivfpq_search(
         probes.append([int(c) for c in np.argsort(d2)[:n_probe]])
     Q = np.stack(qvecs)
     spark = cells_codes.sparkSession
-    probe_df = spark.createDataFrame(
+    probe_df = local_frame(
+        spark,
         [(qid, c) for qid, ps in zip(qids, probes) for c in ps],
         schema="query_id long, cell int",
     )
@@ -1846,7 +1852,8 @@ def ivfpq_search(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).cast("array<double>").alias("n_vec"),
     )
-    qv_df = spark.createDataFrame(
+    qv_df = local_frame(
+        spark,
         [(qid, Q[i].tolist()) for i, qid in enumerate(qids)],
         schema="query_id long, q_vec array<double>",
     )

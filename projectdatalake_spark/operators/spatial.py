@@ -22,6 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from projectdatalake_spark.session import local_frame
+
 
 def grid_radius_join(
     points: DataFrame,
@@ -245,7 +247,8 @@ def grid_knn_join(
         # an expression array: (2R+1)² struct literals blow past janino's
         # generated-code limits by R≈16 — offsets-as-rows cost nothing at
         # any R
-        offsets = spark.createDataFrame(
+        offsets = local_frame(
+            spark,
             [(dx, dy) for dx in range(-R, R + 1) for dy in range(-R, R + 1)],
             "dx long, dy long",
         )

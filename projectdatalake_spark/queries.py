@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from projectdatalake_spark.functions import scalar as fx
 from projectdatalake_spark.operators import relational as R
-from projectdatalake_spark.session import prepare
+from projectdatalake_spark.session import local_frame, prepare
 from projectdatalake_spark.sources.readers import load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -2933,7 +2933,7 @@ def text_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
             .limit(20)
             .collect()
         )
-    return spark.createDataFrame(topk, schema="token string, cnt long")
+    return local_frame(spark, topk, schema="token string, cnt long")
 
 
 @query(
@@ -4003,7 +4003,7 @@ def txlog_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id", "event_type", F.col("value").cast("double").alias("value")
     )
     root = tempfile.mkdtemp(prefix="txlog_sink_")
-    seed = spark.createDataFrame([], stream.schema)
+    seed = local_frame(spark, [], stream.schema)
     table = TxTable.create(spark, root, seed)
     ckpt = tempfile.mkdtemp(prefix="txlog_sink_ckpt_")
     q = append_stream(stream, table, ckpt)
@@ -10040,7 +10040,8 @@ def agg_kmv_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .count()
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [("click", "purchase", n_a, n_b, est_a, est_b, est_union, est_int,
           exact_int)],
         schema=(
@@ -10280,7 +10281,8 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ulp — absorbed by the 4dp round; ranking ties break on doc_id."""
     from projectdatalake_spark.operators import text as TX
 
-    qdf = spark.createDataFrame(
+    qdf = local_frame(
+        spark,
         [(1, "spark"), (1, "query"), (2, "hash"), (2, "join"), (2, "fast"),
          (3, "dup"), (3, "vector")],
         "query_id int, term string",
@@ -11761,7 +11763,7 @@ def stream_backfill_bounded_batches(spark: SparkSession, sf_dir: str) -> DataFra
         .parquet(src)
     )
     root = tempfile.mkdtemp(prefix="backfill_tbl_")
-    table = TxTable.create(spark, root, spark.createDataFrame([], stream.schema))
+    table = TxTable.create(spark, root, local_frame(spark, [], stream.schema))
     ckpt = tempfile.mkdtemp(prefix="backfill_ckpt_")
     q = append_stream(stream, table, ckpt)
     q.awaitTermination(600)
@@ -13236,9 +13238,9 @@ def stream_fanout_two_sinks(spark: SparkSession, sf_dir: str) -> DataFrame:
     tx_root = tempfile.mkdtemp(prefix="fanout_tx_") + "/t"
     dl_root = tempfile.mkdtemp(prefix="fanout_dl_") + "/t"
     ckpt = tempfile.mkdtemp(prefix="fanout_ckpt_")
-    tx = TxTable.create(spark, tx_root, spark.createDataFrame([], stream.schema))
+    tx = TxTable.create(spark, tx_root, local_frame(spark, [], stream.schema))
     dl = DeltaTable.create(
-        spark, dl_root, spark.createDataFrame([], stream.schema)
+        spark, dl_root, local_frame(spark, [], stream.schema)
     )
     sinks = [
         lambda df, bid: tx.append_once(df, ckpt, bid),
@@ -13250,7 +13252,8 @@ def stream_fanout_two_sinks(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the dangerous case, by hand: a crash-replayed batch re-applies to
     # BOTH sinks; each one's ledger must no-op it
     vt, vd = tx.latest_version(), dl.latest_version()
-    replay = spark.createDataFrame(
+    replay = local_frame(
+        spark,
         [(999_999_999, "replayed", 1.0)], stream.schema
     )
     for sink in sinks:
@@ -14042,7 +14045,7 @@ def delta_cdf_to_txlog_replica(spark: SparkSession, sf_dir: str) -> DataFrame:
     replica = TxTable.create(
         spark,
         tempfile.mkdtemp(prefix="cdf_replica_") + "/t",
-        spark.createDataFrame([], o.schema),
+        local_frame(spark, [], o.schema),
     )
 
     def sync(lo: int, hi: int) -> None:
@@ -15512,7 +15515,7 @@ def ts_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     if lo is None:
         # zero slope pairs (fewer than two days): no median, no row —
         # the oracle's rank filter over an empty pair set
-        return spark.createDataFrame([], "n_pairs long, sen_slope double")
+        return local_frame(spark, [], "n_pairs long, sen_slope double")
     if lo == hi:
         # one distinct slope value: the median IS that value
         n = slopes.count()
@@ -15597,7 +15600,8 @@ def sketch_intersection_ndv(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "exact oracle)"
             )
     both = sk_a.intersect(sk_b)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(
             int(round(sk_a.estimate())),
             int(round(sk_b.estimate())),
@@ -16352,7 +16356,8 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     merges = train(docs, n_merges=12)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         merges, "step int, left string, right string, pair_count long"
     ).orderBy("step")
 
@@ -16640,7 +16645,8 @@ def sketch_kll_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     q25, q50, q75, q90 = (
         int(sk.quantile_disc(q)) for q in (0.25, 0.50, 0.75, 0.90)
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(sk.n, q25, q50, q75, q90)],
         "n_days long, q25 long, q50 long, q75 long, q90 long",
     )
@@ -16851,7 +16857,8 @@ def sketch_difference_ndv(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "mode (ndv > k=16384) — raise k above the per-era "
                 "distinct o_custkey count, or gate rows-only"
             )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(
             int(round(sk_a.a_not_b(sk_b).estimate())),
             int(round(sk_b.a_not_b(sk_a).estimate())),
@@ -17893,7 +17900,8 @@ def ann_mmr_rerank_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
                 best = (c, score)
         picks.append((rank, best[0], best[1]))
         selected.append(best[0])
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(r, i, s) for r, i, s in picks],
         "rank int, vec_id long, score double",
     ).select("rank", "vec_id", F.round("score", 12).alias("score"))
@@ -17984,7 +17992,8 @@ def stream_kll_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert merged == [one.quantile_disc(x) for x in qs], (
         "stream-merged sketch diverged from the one-shot sketch"
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(sk.n, *merged)],
         "n long, q25 double, q50 double, q75 double, q90 double",
     )
@@ -18078,7 +18087,8 @@ def iceberg_puffin_kll(spark: SparkSession, sf_dir: str) -> DataFrame:
         (era, sk.n, *(int(sk.quantile_disc(x)) for x in (0.25, 0.50, 0.75)))
         for era, sk in ((0, sk1), (1, sk2))
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows, "era int, n_days long, q25 long, q50 long, q75 long"
     )
 
@@ -18165,7 +18175,8 @@ def quantile_stats_three_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
             + tuple(int(sk.quantile_disc(x)) for x in (0.25, 0.50, 0.75, 0.90))
         )
     assert len({r[1:] for r in rows}) == 1  # three channels, one answer
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows, "fmt string, n_days long, q25 long, q50 long, q75 long, q90 long"
     )
 
@@ -19054,7 +19065,7 @@ def dedup_minhash_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
             % F.lit(P)
         ).alias("hv"),
     )
-    perms = spark.createDataFrame(PERMS, "j int, a long, b long")
+    perms = local_frame(spark, PERMS, "j int, a long, b long")
     sig = (
         h.crossJoin(F.broadcast(perms))
         .groupBy("doc_id", "j")
@@ -19175,7 +19186,8 @@ def iceberg_partition_stats_full(spark: SparkSession, sf_dir: str) -> DataFrame:
         t.metadata().get("snapshots", []),
         key=lambda s: s["sequence-number"],
     )
-    ords = spark.createDataFrame(
+    ords = local_frame(
+        spark,
         [
             (s["snapshot-id"], i, int(s["timestamp-ms"]))
             for i, s in enumerate(snaps)

@@ -10,14 +10,33 @@ Scale posture (100 TB / 1000 executors):
 - AQE on: runtime coalescing, skew-join splitting, dynamic join strategy.
 - shuffle partitions sized to the cluster, not the 200 default.
 - UTC session timezone pinned so time functions are deterministic anywhere.
-- Arrow enabled so any pandas-UDF boundary is vectorized, not pickled rows.
+- Arrow enabled for pandas-UDF and toPandas boundaries.
+
+Driver-built frames (deletion-vector pairs, checkpoint rows, path lists,
+small query results) go through ``local_frame`` and nowhere else:
+``spark.createDataFrame(<python list>)`` parallelizes pickled rows, so
+every execution of such a frame starts Python workers, and its
+``LogicalRDD`` carries no size statistics. ``local_frame`` ships the rows
+as one Arrow table that the JVM turns into a ``LocalRelation``.
 """
 
 from __future__ import annotations
 
+import decimal
 import os
+from typing import Any, Callable, Iterable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    DecimalType,
+    MapType,
+    StructType,
+    _create_converter,
+    _make_type_verifier,
+    _parse_datatype_string,
+)
 
 # Runtime-settable SQL confs applied to every session we touch. All of these
 # are dynamic (not static) confs, so prepare() can apply them to a live
@@ -139,3 +158,75 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return prepare(spark)
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Any], schema: StructType | str
+) -> DataFrame:
+    """A DataFrame of driver-side ``rows`` under ``schema`` (DDL or
+    ``StructType``; never inferred), planned as a ``LocalRelation``.
+
+    The rows are checked and converted exactly as
+    ``spark.createDataFrame(list, schema)`` does it (its type verifier,
+    then ``StructType.toInternal``): tuples, dicts and ``Row`` objects;
+    naive ``datetime`` values in the process's local time zone; a wrong
+    type raises. Decimals are rounded half-up to the column's scale, as
+    the JVM does for that path. The internal values then travel as one
+    ``pyarrow.Table``, so no Python worker runs when the frame executes.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = schema if isinstance(schema, StructType) else _parse_datatype_string(schema)
+    if not isinstance(struct, StructType):
+        raise TypeError(f"local_frame needs a struct schema, got {schema!r}")
+    verify = _make_type_verifier(struct)
+    to_tuple = _create_converter(struct)
+    internal = []
+    for row in rows:
+        verify(row)
+        internal.append(struct.toInternal(to_tuple(row)))
+    arrow_schema = to_arrow_schema(struct)
+    columns = list(zip(*internal)) if internal else [()] * len(struct.fields)
+    table = pa.Table.from_arrays(
+        [
+            pa.array(_arrow_values(f.dataType, col), type=af.type)
+            for f, af, col in zip(struct.fields, arrow_schema, columns)
+        ],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, struct)
+
+
+def _arrow_values(dt: DataType, values: Iterable[Any]) -> list:
+    """``toInternal`` values pyarrow accepts as they are, but for decimals."""
+    fix = _decimal_fixer(dt)
+    return [fix(v) if v is not None else None for v in values] if fix else list(values)
+
+
+def _decimal_fixer(dt: DataType) -> Callable[[Any], Any] | None:
+    """Rounds every decimal inside ``dt`` to its scale (None: no decimals)."""
+    if isinstance(dt, DecimalType):
+        quantum = decimal.Decimal(1).scaleb(-dt.scale)
+        return lambda v: v.quantize(quantum, rounding=decimal.ROUND_HALF_UP)
+    if isinstance(dt, ArrayType):
+        el = _decimal_fixer(dt.elementType)
+        if el is None:
+            return None
+        return lambda v: [el(e) if e is not None else None for e in v]
+    if isinstance(dt, MapType):
+        key, val = _decimal_fixer(dt.keyType), _decimal_fixer(dt.valueType)
+        if key is None and val is None:
+            return None
+        key, val = key or (lambda k: k), val or (lambda x: x)
+        return lambda v: {
+            key(k): val(x) if x is not None else None for k, x in v.items()
+        }
+    if isinstance(dt, StructType):
+        fixes = [_decimal_fixer(f.dataType) for f in dt.fields]
+        if not any(fixes):
+            return None
+        return lambda v: tuple(
+            fix(x) if fix and x is not None else x for fix, x in zip(fixes, v)
+        )
+    return None

@@ -51,6 +51,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
+from projectdatalake_spark.session import local_frame
 from projectdatalake_spark.sources import atomic as _atomic
 
 _LOG = "_delta_log"
@@ -953,7 +954,7 @@ class DeltaTable:
             where_phys = {phys_of.get(c, c): v for c, v in where.items()}
             adds = [a for a in adds if self._stats_may_match(a, where_phys)]
         if not adds:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         from pyspark.sql.types import StructField
 
         # physical read schema: data files store PHYSICAL column names; in
@@ -1213,7 +1214,7 @@ class DeltaTable:
                 "__fp", _file_path_raw(F.col("_metadata.file_path"))
             ).withColumn("__ri", F.col("_metadata.row_index"))
         if pairs:
-            deleted = self.spark.createDataFrame(pairs, "__fp string, __ri long")
+            deleted = local_frame(self.spark, pairs, "__fp string, __ri long")
             df = df.join(
                 F.broadcast(deleted), on=["__fp", "__ri"], how="left_anti"
             )
@@ -1255,7 +1256,8 @@ class DeltaTable:
             return df
 
         def rows_at(add: dict, indices: set[int]) -> DataFrame:
-            pairs = self.spark.createDataFrame(
+            pairs = local_frame(
+                self.spark,
                 [(i,) for i in indices], "__ri long"
             )
             return (
@@ -1336,7 +1338,7 @@ class DeltaTable:
                     StructField("_commit_version", LongType()),
                 ]
             )
-            return self.spark.createDataFrame([], empty)
+            return local_frame(self.spark, [], empty)
         out = frames[0]
         for f in frames[1:]:
             out = out.unionByName(f)
@@ -1836,7 +1838,9 @@ class DeltaTable:
                     stats["minValues"][c] = _stats_scalar(mn)
                 if mx is not None:
                     stats["maxValues"][c] = _stats_scalar(mx)
-                stats["nullCount"][c] = st["nulls"].get(c, 0)
+                # no null count: the file lacks the column, which then
+                # reads as all null
+                stats["nullCount"][c] = st["nulls"].get(c, st["nrec"])
             a["stats"] = json.dumps(stats, separators=(",", ":"))
             blooms = spark_blooms.get(p)
             if blooms:
@@ -3376,7 +3380,8 @@ class DeltaTable:
                     )
                     .withColumn("__ri", F.col("_metadata.row_index"))
                 )
-                base_map = self.spark.createDataFrame(
+                base_map = local_frame(
+                    self.spark,
                     [
                         (
                             self._abs_data_path(a["path"]),
@@ -3403,7 +3408,8 @@ class DeltaTable:
                     for ri in self._dv_deleted_rows(a["deletionVector"]):
                         pairs.append((p, ri))
                 if pairs:
-                    deleted = self.spark.createDataFrame(
+                    deleted = local_frame(
+                        self.spark,
                         pairs, "__fp string, __ri long"
                     )
                     df = df.join(
@@ -3834,12 +3840,14 @@ class DeltaTable:
             adds = [a for a in adds if above(a)]
         schema = StructType.fromJson(json.loads(meta["schemaString"]))
         if not adds:
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [], StructType(list(schema.fields)),
             ).withColumn("row_id", F.lit(None).cast("long")).withColumn(
                 "row_commit_version", F.lit(None).cast("long")
             )
-        base_map = self.spark.createDataFrame(
+        base_map = local_frame(
+            self.spark,
             [
                 (
                     self._abs_data_path(a["path"]),
@@ -3880,7 +3888,8 @@ class DeltaTable:
                 for ri in self._dv_deleted_rows(a["deletionVector"]):
                     pairs.append((p, ri))
             if pairs:
-                deleted = self.spark.createDataFrame(
+                deleted = local_frame(
+                    self.spark,
                     pairs, "__fp string, __ri long"
                 )
                 df = df.join(
@@ -4101,7 +4110,7 @@ class DeltaTable:
             }
             for r in rows
         ]
-        ckpt_df = self.spark.createDataFrame(norm_rows, schema=schema_ddl)
+        ckpt_df = local_frame(self.spark, norm_rows, schema=schema_ddl)
         tmp = f"{self.root}/_staging/ckpt_{uuid.uuid4().hex}"
         ckpt_df.coalesce(1).write.mode("overwrite").parquet(tmp)
         fs = self._fs()
@@ -4197,7 +4206,8 @@ class DeltaTable:
         sidecar_actions: list[dict] = []
         if adds:
             side_schema = f"add {_CKPT_ADD_T}, remove {_CKPT_REMOVE_T}"
-            side_df = self.spark.createDataFrame(
+            side_df = local_frame(
+                self.spark,
                 [{"add": a, "remove": None} for a in adds], schema=side_schema
             )
             n_side = max(1, min(int(sidecar_files), len(adds)))
@@ -4249,7 +4259,7 @@ class DeltaTable:
             for dom, cfg in state.get("domains", {}).items()
         ]
         top_rows += [{**blank, "sidecar": s} for s in sidecar_actions]
-        top_df = self.spark.createDataFrame(top_rows, schema=top_schema)
+        top_df = local_frame(self.spark, top_rows, schema=top_schema)
         tmp = f"{self.root}/_staging/ckpt_v2_top_{uuid.uuid4().hex}"
         top_df.coalesce(1).write.mode("overwrite").parquet(tmp)
         part = None
@@ -4413,7 +4423,7 @@ def convert_parquet_to_delta(
             continue
         files.append((rel, status.getLen(), status.getModificationTime()))
     adds = []
-    for rel, size, mtime in files:
+    for rel, size, mtime in sorted(files):
         pv = {
             seg.split("=", 1)[0]: _unquote_path(seg.split("=", 1)[1])
             for seg in rel.split("/")[:-1]

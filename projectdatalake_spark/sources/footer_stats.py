@@ -5,10 +5,10 @@ replacement for the per-commit full re-read the txlog/delta/iceberg
 lever #1, spark_optimization_guide §6: read the bytes once — the stats
 of a file just written are already sitting in its footer).
 
-Exactness contract (probed empirically via tools/footer_stats_probe.py
-on parquet-mr 1.16 / pyarrow 16.1 — the writer/reader pair this engine
-ships — and pinned against the Spark aggregate in
-tests/test_footer_stats.py):
+Exactness contract (probed on the raw footers of Spark-written files by
+``tests/test_footer_stats.py::test_footer_semantics_probe`` — first on
+parquet-mr 1.16 / pyarrow 16.1 — and pinned against the Spark aggregate
+in the rest of that file):
 
 - ints / longs / shorts / bytes / booleans / dates / strings: footer
   min/max are EXACT. parquet-mr does NOT truncate footer string stats

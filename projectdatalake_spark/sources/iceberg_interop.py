@@ -49,6 +49,7 @@ from urllib.parse import urlsplit
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructField, StructType
 
+from projectdatalake_spark.session import local_frame
 from projectdatalake_spark.sources import atomic as _atomic
 from projectdatalake_spark.sources.avro_codec import read_container, write_container
 
@@ -588,19 +589,16 @@ def _normalize_stored_delete_paths(spark, deletes_df, live_paths, pos_col="pos")
 
     Two-phase for plan quality: the common case (every stored path
     matches a live file verbatim — all tables this writer produced)
-    returns a PLAIN parquet-scan-shaped frame, so the downstream MOR
-    anti-join keeps its size-estimated BroadcastHashJoin; a
-    createDataFrame-joined frame would reset Catalyst's size stats and
-    degrade the anti-join to a double-shuffle SortMergeJoin (caught by
-    tools/plan_regress.py: Exchange 1 → 7). The legacy probe is one
-    bounded job over the DELETE files only — O(delete bytes), never the
-    data side."""
+    returns the PLAIN parquet-scan-shaped frame, so the downstream MOR
+    anti-join plans against the delete files alone, with no extra join
+    or decode in front of it. The legacy probe is one bounded job over
+    the DELETE files only — O(delete bytes), never the data side."""
     verbatim = F.regexp_replace(F.col("file_path"), "^file:", "")
     verbatim_df = deletes_df.select(
         verbatim.alias("file_path"), F.col(pos_col)
     )
-    live_df = spark.createDataFrame(
-        [(p,) for p in sorted(set(live_paths))], "__lp string"
+    live_df = local_frame(
+        spark, [(p,) for p in sorted(set(live_paths))], "__lp string"
     )
     legacy = (
         verbatim_df.join(
@@ -1862,7 +1860,8 @@ class IcebergTable:
                 )
                 for e in (entries if kind == "files" else dels)
             ]
-            return spark.createDataFrame(
+            return local_frame(
+                spark,
                 rows,
                 "file_path string, content int, partition string, "
                 "record_count long, file_size_in_bytes long, "
@@ -1915,7 +1914,8 @@ class IcebergTable:
                             None if hi is None else str(hi),
                         )
                     )
-            return spark.createDataFrame(
+            return local_frame(
+                spark,
                 rows,
                 "file_path string, sequence_number long, column string, "
                 "lower string, upper string",
@@ -1931,7 +1931,8 @@ class IcebergTable:
                 )
                 for s in meta.get("snapshots", [])
             ]
-            return spark.createDataFrame(
+            return local_frame(
+                spark,
                 rows,
                 "snapshot_id long, parent_id long, sequence_number long, "
                 "committed_at_ms long, operation string",
@@ -1941,7 +1942,8 @@ class IcebergTable:
                 (int(e["timestamp-ms"]), int(e["snapshot-id"]))
                 for e in meta.get("snapshot-log", [])
             ]
-            return spark.createDataFrame(
+            return local_frame(
+                spark,
                 rows, "made_current_at_ms long, snapshot_id long"
             )
         if kind == "refs":
@@ -1949,7 +1951,8 @@ class IcebergTable:
                 (name, r["type"], int(r["snapshot-id"]))
                 for name, r in (meta.get("refs") or {}).items()
             ]
-            return spark.createDataFrame(
+            return local_frame(
+                spark,
                 rows, "name string, type string, snapshot_id long"
             )
         if kind == "partitions":
@@ -1964,7 +1967,8 @@ class IcebergTable:
                 a[1] += e["data_file"]["record_count"]
                 a[2] += e["data_file"]["file_size_in_bytes"]
             rows = [(k, a[0], a[1], a[2]) for k, a in agg.items()]
-            return spark.createDataFrame(
+            return local_frame(
+                spark,
                 rows,
                 "partition string, file_count long, record_count long, "
                 "total_size_bytes long",
@@ -1983,7 +1987,8 @@ class IcebergTable:
                 for s in meta.get("statistics", [])
                 for bm in s.get("blob-metadata", [])
             ]
-            return spark.createDataFrame(
+            return local_frame(
+                spark,
                 rows,
                 "snapshot_id long, statistics_path string, "
                 "file_size_in_bytes long, column string, blob_type string, "
@@ -2163,7 +2168,7 @@ class IcebergTable:
 
             entries = [e for e in entries if in_range(e)]
         if not entries:
-            return self.spark.createDataFrame([], schema)
+            return local_frame(self.spark, [], schema)
         # identity fields (restore-as-constant set) per spec era
         idcols_by_spec = {
             sid: [p["pname"] for p in era if p["transform"] == "identity"]
@@ -3047,7 +3052,7 @@ class IcebergTable:
         cur_sid = meta.get("current-snapshot-id")
         schema = self._spark_schema(meta)
         if cur_sid is None or cur_sid == -1:
-            return self.spark.createDataFrame([], schema).withColumn(
+            return local_frame(self.spark, [], schema).withColumn(
                 "_row_id", F.lit(None).cast("long")
             )
         cur_snap = next(
@@ -3132,7 +3137,7 @@ class IcebergTable:
                         c: part.get(c) for c in m_ident
                     }
         if not base_of:
-            return self.spark.createDataFrame([], schema).withColumn(
+            return local_frame(self.spark, [], schema).withColumn(
                 "_row_id", F.lit(None).cast("long")
             )
         from pyspark.sql.types import (
@@ -3157,7 +3162,8 @@ class IcebergTable:
                 for f in ident_cols
             ]
         )
-        base_map = self.spark.createDataFrame(
+        base_map = local_frame(
+            self.spark,
             [
                 tuple(
                     [p, b, seq_of[p]]
@@ -3340,7 +3346,10 @@ class IcebergTable:
         the rewrite range-partitions + sorts on those columns into
         ``target_files`` files (default: the session's parallelism), so
         each compacted file has tight disjoint bounds — write-side
-        completion of the column-bounds skipping ladder.
+        completion of the column-bounds skipping ladder. Without a sort
+        order or ``zorder_by`` it writes at most ``target_files`` files
+        per partition (default 1, as Delta ``optimize`` compacts each
+        partition), split by row content, never by the input's layout.
 
         Under ROW LINEAGE the rewrite is id-preserving: each row's
         ``_row_id`` is materialized into the new files (reserved field
@@ -3394,7 +3403,12 @@ class IcebergTable:
             df = df.repartitionByRange(n_out, *sort_cols).sortWithinPartitions(
                 *sort_cols
             )
-        files = self._prepare_files(df, meta, extra_fields=extra_fields)
+        # unsorted: Delta optimize's rule, at most target_files (default 1)
+        # files per partition, whatever partitioning the input plan has
+        per_partition = None if zorder_by or sort_cols else target_files or 1
+        files = self._prepare_files(
+            df, meta, extra_fields=extra_fields, files_per_partition=per_partition
+        )
         return self.append_files(
             files, meta=meta, replace=True, operation="replace",
             materialized_row_ids=lineage,
@@ -3631,7 +3645,8 @@ class IcebergTable:
         # shared pair reader — consolidation converts them to sorted v2
         # pair files (a legal downgrade: the pairs are the semantics)
         live_paths = [e["data_file"]["file_path"] for e in data_entries]
-        live_df = self.spark.createDataFrame(
+        live_df = local_frame(
+            self.spark,
             [(p,) for p in live_paths], "file_path string"
         )
         pairs = (
@@ -3936,14 +3951,21 @@ class IcebergTable:
         )
 
     def _prepare_files(
-        self, df: DataFrame, meta: dict, extra_fields: dict | None = None
+        self,
+        df: DataFrame,
+        meta: dict,
+        extra_fields: dict | None = None,
+        files_per_partition: int | None = None,
     ) -> list[dict]:
         """Stage ``df`` as data files under the current spec and return
         append_files-shaped descriptors (path, size, TYPED partition
         tuple, record count, column bounds). ``extra_fields`` (name →
         (field_id, ice_type)) stages reserved metadata columns WITH
         bounds — the rewrite path's materialized ``_row_id`` needs its
-        per-file max in upper_bounds for watermark pruning."""
+        per-file max in upper_bounds for watermark pruning.
+        ``files_per_partition`` (None: ``df``'s own layout) hashes rows
+        into at most that many files per partition value, by content, so
+        the count does not depend on how ``df`` is partitioned."""
         spec = self._current_spec(meta)
         pf = _spec_part_fields(meta, spec)
         pcols = tuple(p["pname"] for p in pf)
@@ -3986,6 +4008,17 @@ class IcebergTable:
                     p["pname"],
                     _transform_expr(p["transform"], p["source"], p["src_type"]),
                 )
+        if files_per_partition:
+            keys = [F.col(c) for c in pcols]
+            hashable = [c for c, t in df.dtypes if "map<" not in t]
+            if files_per_partition > 1 and hashable:
+                salt = F.pmod(F.xxhash64(*hashable), F.lit(files_per_partition))
+                keys.append(salt)
+            df = (
+                df.repartition(self.spark.sparkContext.defaultParallelism, *keys)
+                if keys
+                else df.repartition(1)
+            )
         staged = self._stage_data(df, pcols, bound_types)
         files = []
         for path, size, parts, count, bounds in staged:
@@ -4605,7 +4638,8 @@ class IcebergTable:
                 )
             )
         if dv_rows:
-            spec_df = self.spark.createDataFrame(
+            spec_df = local_frame(
+                self.spark,
                 dv_rows, "puffin string, file_path string, off long, len long"
             )
             bins = (

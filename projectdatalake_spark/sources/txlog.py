@@ -42,6 +42,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from projectdatalake_spark.session import local_frame
 from projectdatalake_spark.sources import atomic as _atomic
 
 _LOG_DIR = "_txlog"
@@ -2751,7 +2752,8 @@ class TxTable:
         ).withColumn("__fpu", F.col("_metadata.file_path"))
         out = None
         if base_rows:
-            base_map = self.spark.createDataFrame(
+            base_map = local_frame(
+                self.spark,
                 base_rows, "__fp string, __base long"
             )
             df = tag(self.spark.read.parquet(*[p for p, _b in base_rows]))
@@ -2874,7 +2876,8 @@ class TxTable:
             pf = plain_frames[0]
             for f2 in plain_frames[1:]:
                 pf = pf.unionByName(f2, allowMissingColumns=True)
-            base_map = self.spark.createDataFrame(
+            base_map = local_frame(
+                self.spark,
                 base_rows, "__fp string, __base long"
             )
             decoded = F.url_decode(

@@ -40,6 +40,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from projectdatalake_spark.session import local_frame
+
 _BANDED_SCHEMA = "doc_id long, band int, bkey long"
 _SH_SCHEMA = "doc_id long, sh array<string>"
 # banded-index directory buckets: batch_id=N/bq=M, bq = pmod(xxhash64(
@@ -175,7 +177,7 @@ def _read_indexed(
             df = df.drop("bq")
         parts.append(df.drop("batch_id"))
     if not parts:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     out = parts[0]
     for extra in parts[1:]:
         out = out.unionByName(extra)

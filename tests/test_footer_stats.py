@@ -299,6 +299,156 @@ def test_footer_stats_distributed_branch_matches_driver(spark, tmp_path):
     assert norm(driver) == norm(dist)
 
 
+# --- footer semantics of the shipped writer/reader pair ------------------
+
+PROBE_ROWS = [
+    Row(id=1, dbl=1.5, flt=2.5, s="alpha",
+        ts=datetime.datetime(2020, 1, 2, 3, 4, 5, 123456),
+        dt=datetime.date(2020, 1, 2), dec=decimal.Decimal("123.45"), b=True,
+        i16=3, i64=-7),
+    Row(id=2, dbl=float("nan"), flt=float("nan"), s="b" * 63,
+        ts=datetime.datetime(2021, 6, 7), dt=datetime.date(2021, 6, 7),
+        dec=decimal.Decimal("-0.01"), b=False, i16=-32768, i64=2**62),
+    Row(id=3, dbl=float("inf"), flt=float("-inf"), s="c" * 64, ts=None,
+        dt=None, dec=None, b=None, i16=None, i64=None),
+    Row(id=4, dbl=-0.0, flt=0.0, s="d" * 65,
+        ts=datetime.datetime(1969, 12, 31, 23, 59, 59),
+        dt=datetime.date(1969, 12, 31), dec=decimal.Decimal("99999.99"),
+        b=True, i16=32767, i64=-(2**62)),
+    Row(id=5, dbl=None, flt=None, s="é≠☃ unicode" + "x" * 100,
+        ts=datetime.datetime(2030, 12, 31), dt=datetime.date(2030, 12, 31),
+        dec=decimal.Decimal("0.00"), b=False, i16=0, i64=0),
+    Row(id=6, dbl=3.25, flt=-1.25, s="z" * 3000,
+        ts=datetime.datetime(2020, 1, 2, 3, 4, 5),
+        dt=datetime.date(2000, 2, 29), dec=decimal.Decimal("-99999.99"),
+        b=True, i16=1, i64=1),
+]
+
+PROBE_SCHEMA = (
+    "id int, dbl double, flt float, s string, ts timestamp, dt date, "
+    "dec decimal(7,2), b boolean, i16 short, i64 long"
+)
+
+
+def test_footer_semantics_probe(spark, tmp_path):
+    """The raw footers Spark's own parquet writer leaves, read by pyarrow,
+    still mean what ``footer_stats`` assumes: string stats untruncated,
+    Java float order (NaN poisons max), INT96 ltz timestamps without
+    stats, all-null columns without bounds. Every column footer_stats
+    trusts must equal the Spark aggregate; a writer or pyarrow upgrade
+    that changes footer semantics fails here, not in a skipped file."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    df = spark.createDataFrame(PROBE_ROWS, PROBE_SCHEMA).withColumn(
+        "tsn", F.col("ts").cast("timestamp_ntz")
+    )
+    dirs = {
+        "mixed": (df, str(tmp_path / "mixed")),
+        "allnan": (
+            spark.createDataFrame([(1, float("nan")), (2, float("nan"))],
+                                  "id int, dbl double"),
+            str(tmp_path / "allnan"),
+        ),
+        "allnull": (
+            spark.createDataFrame([(1, None), (2, None)], "id int, dbl double"),
+            str(tmp_path / "allnull"),
+        ),
+    }
+    raw = {}
+    for name, (frame, out) in dirs.items():
+        frame.coalesce(1).write.mode("overwrite").parquet(out)
+        (fname,) = [f for f in os.listdir(out) if f.endswith(".parquet")]
+        path = os.path.join(out, fname)
+        sdf = spark.read.parquet(out)
+        aggs = [F.count(F.lit(1)).alias("__n")]
+        for c in sdf.columns:
+            aggs += [
+                F.min(c).alias(f"min__{c}"),
+                F.max(c).alias(f"max__{c}"),
+                F.sum(F.col(c).isNull().cast("long")).alias(f"nulls__{c}"),
+            ]
+        want = sdf.agg(*aggs).first().asDict()
+        got = FS._one_file_stats(path, None, (), with_nulls=True)
+        md = pq.ParquetFile(path).metadata
+        assert md.created_by.startswith("parquet-mr"), md.created_by
+        assert got["nrec"] == want["__n"] == md.num_rows
+        for c in sdf.columns:
+            if c in got["untrusted"]:
+                continue
+            assert _normf(got["min"].get(c)) == _normf(want[f"min__{c}"]), (name, c)
+            assert _normf(got["max"].get(c)) == _normf(want[f"max__{c}"]), (name, c)
+            assert got["nulls"][c] == want[f"nulls__{c}"], (name, c)
+        raw[name] = (md, got)
+
+    md, got = raw["mixed"]
+    # INT96 ltz timestamps carry no footer stats: always the fallback
+    assert got["untrusted"] == ["ts"]
+    cols = {md.row_group(0).column(i).path_in_schema: md.row_group(0).column(i)
+            for i in range(md.row_group(0).num_columns)}
+    assert cols["ts"].physical_type == "INT96"
+    assert cols["tsn"].physical_type == "INT64"
+    # strings compare bytewise (é after z) and their stats are untruncated
+    assert cols["s"].statistics.max == "é≠☃ unicode" + "x" * 100
+    # NaN sorts above +Inf, -0.0 below +0.0 (Java order)
+    assert math.isnan(cols["dbl"].statistics.max)
+    assert math.isnan(got["max"]["flt"]) and got["min"]["flt"] == float("-inf")
+    assert repr(got["min"]["dbl"]) == "-0.0"
+    assert got["min"]["dec"] == decimal.Decimal("-99999.99")
+    # all-NaN: NaN bounds; all-null: no bounds, full null count
+    _md, nan_stats = raw["allnan"]
+    assert math.isnan(nan_stats["min"]["dbl"]) and math.isnan(nan_stats["max"]["dbl"])
+    md_null, null_stats = raw["allnull"]
+    st = md_null.row_group(0).column(1).statistics
+    assert not st.has_min_max and st.null_count == md_null.num_rows
+    assert "dbl" not in null_stats["min"] and null_stats["nulls"]["dbl"] == 2
+
+
+def test_delta_convert_absent_column_counts_all_nulls(spark, tmp_path):
+    """A file that lacks a table column reads it as all null, so its
+    Delta nullCount is its record count, never 0 (a 0 would let an
+    ``IS NULL`` predicate skip the file)."""
+    import json
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+
+    from projectdatalake_spark.sources.delta_interop import (
+        DeltaTable,
+        convert_parquet_to_delta,
+    )
+
+    root = tmp_path / "conv"
+    root.mkdir()
+    pq.write_table(
+        pa.table({"id": [1, 2, 3], "a": [1.0, 2.0, None], "b": [10, None, 30]}),
+        root / "part-0.parquet",
+    )
+    pq.write_table(
+        pa.table({"id": [4, 5], "a": [4.0, 5.0]}), root / "part-1.parquet"
+    )
+    schema = StructType([
+        StructField("id", LongType()),
+        StructField("a", DoubleType()),
+        StructField("b", LongType()),
+    ])
+    t = convert_parquet_to_delta(spark, str(root), schema)
+    stats = {
+        a["path"]: json.loads(a["stats"])
+        for a in DeltaTable(spark, str(root))._state()["adds"].values()
+    }
+    assert stats["part-0.parquet"]["nullCount"] == {"id": 0, "a": 1, "b": 1}
+    narrow = stats["part-1.parquet"]
+    assert narrow["numRecords"] == 2
+    assert narrow["nullCount"] == {"id": 0, "a": 0, "b": 2}
+    assert "b" not in narrow["minValues"]
+    assert sorted(
+        r.id for r in t.snapshot().filter("b IS NULL").collect()
+    ) == [2, 4, 5]
+
+
 def test_float_merge_key_total_order():
     # the cross-row-group merge comparator must replicate Java ordering
     vals = [float("nan"), float("inf"), float("-inf"), -0.0, 0.0, 1.5, -1e300]

@@ -713,6 +713,41 @@ def test_equality_delete_stream_refused(spark, root):
         q.awaitTermination()
 
 
+def _unsorted_rewrite_layout(spark, n_input_parts, target_files):
+    """Files per partition after an unsorted rewrite of a MOR table whose
+    files, and so whose snapshot plan, come in ``n_input_parts`` pieces."""
+    root = tempfile.mkdtemp(prefix="iceberg_test_")
+    t = IcebergTable.create(
+        spark, root, _df(spark, 0, 600).repartition(n_input_parts),
+        partition_by=("seg",),
+    )
+    t.append(_df(spark, 600, 900).repartition(n_input_parts))
+    t.delete_where("id % 10 = 7")
+    assert t.rewrite_data_files(target_files=target_files) is not None
+    entries, _ = t._entries_for_snapshot(t.metadata(), None)
+    per_part: dict = {}
+    for e in entries:
+        seg = e["data_file"]["partition"]["seg"]
+        per_part[seg] = per_part.get(seg, 0) + 1
+    assert t.snapshot().count() == 810
+    return per_part
+
+
+@pytest.mark.parametrize("target_files", [None, 3])
+def test_unsorted_rewrite_file_count_ignores_input_layout(spark, target_files):
+    """Without a sort order the rewrite lays out each partition by its
+    own rule (at most ``target_files``, default 1, files per partition),
+    so the file count is the same however the input plan is split."""
+    one = _unsorted_rewrite_layout(spark, 1, target_files)
+    seven = _unsorted_rewrite_layout(spark, 7, target_files)
+    assert one == seven
+    assert sorted(one) == [0, 1, 2]
+    if target_files is None:
+        assert set(one.values()) == {1}
+    else:
+        assert all(1 <= n <= target_files for n in one.values())
+
+
 def test_rewrite_data_files_folds_deletes(spark, root):
     """Copy-on-write compaction: MOR delete files (position + equality)
     are folded into fresh data files; reads become plain scans, prior
