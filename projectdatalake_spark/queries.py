@@ -13149,6 +13149,7 @@ def iceberg_rewrite_manifests(spark: SparkSession, sf_dir: str) -> DataFrame:
     cheapest maintenance action in the book — pure metadata."""
     import tempfile
 
+    from projectdatalake_spark.sources import atomic as _atomic
     from projectdatalake_spark.sources.avro_codec import read_container
     from projectdatalake_spark.sources.iceberg_interop import IcebergTable
 
@@ -13171,7 +13172,7 @@ def iceberg_rewrite_manifests(spark: SparkSession, sf_dir: str) -> DataFrame:
             s for s in meta["snapshots"]
             if s["snapshot-id"] == meta["current-snapshot-id"]
         )
-        _, rows = read_container(t._read_bytes(cur["manifest-list"]))
+        _, rows = read_container(_atomic.read_bytes(spark, cur["manifest-list"]))
         return len([m for m in rows if m.get("content", 0) == 0])
 
     assert n_data_manifests() == 5
@@ -18257,6 +18258,7 @@ def delta_log_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     log retention drop the per-commit files early."""
     import tempfile
 
+    from projectdatalake_spark.sources import atomic as _atomic
     from projectdatalake_spark.sources.delta_interop import DeltaTable
 
     o = _t(spark, sf_dir, "orders").select(
@@ -18273,9 +18275,8 @@ def delta_log_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     t.delete_where_dv("o_orderkey % 10 = 7")                         # v3
     t.append(o.filter(F.col("o_orderkey") % 4 == 3).repartition(4))  # v4
     t.compact_log(1, 3)
-    fs = t._fs()
     for v in range(1, 4):  # metadata cleanup inside the compacted range
-        assert fs.delete(t._path(f"{root}/_delta_log/{v:020d}.json"), False)
+        assert _atomic.delete(spark, f"{root}/_delta_log/{v:020d}.json")
     fresh = DeltaTable(spark, root)
     return (
         fresh.snapshot()

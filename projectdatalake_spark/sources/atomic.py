@@ -1,26 +1,36 @@
-"""Atomic exclusive-create — the commit point of every table format here.
+"""The table formats' one filesystem seam, and their commit point.
 
-Optimistic commit protocols (txlog, Delta, Iceberg) rely on "create this
-version file ONLY if it does not exist" for mutual exclusion. Hadoop's
-``RawLocalFileSystem.create(path, overwrite=false)`` implements that as
-check-then-create — a TOCTOU window in which two racing writers both pass
-the exists() check and both stream into the SAME version file, the later
-close silently winning: a committed snapshot vanishes with no conflict
-raised (reproduced ~1/12 under six racing appends in
+Every byte the table formats (txlog, Delta, Iceberg) read or write
+outside a Spark job goes through the functions below: read, write
+(exclusive or overwrite), exists, list a directory, list a tree,
+rename, mkdirs and delete. Each takes the session and a path. A local
+path (no scheme, or ``file:``; ``is_local_path``) is served by ``os``
+in the driver process, with no JVM round trip. Any other scheme
+(``hdfs://``, ``s3a://``) goes through the Hadoop ``FileSystem`` of the
+session's Hadoop configuration, one py4j call per operation step, as
+before the seam existed.
+
+Exclusive create is the commit point of every optimistic protocol
+here: "create this version file ONLY if it does not exist" is the
+mutual exclusion. Hadoop's ``RawLocalFileSystem.create(path,
+overwrite=false)`` implements that as check-then-create, a TOCTOU
+window in which two racing writers both pass the exists() check and
+the later close silently wins (reproduced ~1/12 under six racing
+appends in
 tests/test_iceberg_interop.py::test_concurrent_appends_no_lost_snapshots).
+Locally the seam uses the kernel's ``O_CREAT|O_EXCL`` open, which is
+atomic on POSIX: exactly one writer wins and every loser gets
+``ExclusiveCreateConflict``. HDFS create is atomic at the NameNode;
+object-store semantics are connector-specific, so non-local roots keep
+``fs.create``.
 
-For local paths the fix is the kernel's own primitive: ``O_CREAT|O_EXCL``
-open is atomic on POSIX, so exactly one writer wins and every loser gets
-``FileExistsError``. Non-local filesystems keep the Hadoop ``fs.create``
-path — HDFS create IS atomic at the NameNode, and object-store semantics
-are connector-specific (conditional PUT) — this module only closes the
-local-FS hole the sandbox (and any local-mode deployment) actually runs
-on.
-
-Side effect accepted: files written through the POSIX path carry no
-Hadoop ``.crc`` sidecar. ChecksumFileSystem verifies only when a sidecar
-exists, so mixed trees stay readable; every reader in this repo already
-tolerates (and retries) checksum mismatches from non-atomic overwrites.
+Hadoop ``.crc`` sidecars: files written through the local branch carry
+none. ``ChecksumFileSystem`` verifies only when a sidecar exists, so
+mixed trees stay readable by Spark and by the Hadoop branch. A local
+overwrite, rename onto an existing file or delete also removes the
+target's sidecar, so no stale checksum outlives the bytes it covered,
+and local listings never return ``.crc`` files (Hadoop's listings hide
+them too).
 """
 
 from __future__ import annotations
@@ -29,6 +39,7 @@ import os
 import random
 import threading
 import time
+import uuid
 
 
 class ExclusiveCreateConflict(FileExistsError):
@@ -101,59 +112,203 @@ def uri_to_path(p: str) -> str:
     return unquote(strip_file_scheme(p))
 
 
-def list_local_files(
-    root: str, suffix: str = ".parquet"
+# --- the filesystem seam ---------------------------------------------------
+
+
+def _hadoop(spark, p: str):
+    """(FileSystem, Path) of ``p`` under the session's Hadoop conf."""
+    path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(p)
+    return path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), path
+
+
+def _drop_crc(raw: str) -> None:
+    """Remove the Hadoop checksum sidecar ``.<name>.crc`` of ``raw``."""
+    d, name = os.path.split(raw)
+    try:
+        os.unlink(os.path.join(d, f".{name}.crc"))
+    except FileNotFoundError:
+        pass
+
+
+def path_only(p: str) -> str:
+    """``p`` without scheme and authority (``hdfs://nn:8020/a`` → ``/a``,
+    ``file:/a`` → ``/a``); the rest verbatim — never URL-parsed, so a
+    ``#``, ``?`` or ``%`` in a partition value survives."""
+    if p.startswith("file:"):
+        return strip_file_scheme(p)
+    i = p.find("://")
+    if i < 0:
+        return p
+    j = p.find("/", i + 3)
+    return p[j:] if j >= 0 else "/"
+
+
+def read_bytes(spark, p: str) -> bytes:
+    if is_local_path(p):
+        with open(strip_file_scheme(p), "rb") as f:
+            return f.read()
+    fs, path = _hadoop(spark, p)
+    try:
+        stream = fs.open(path)
+    except Exception as exc:  # py4j-wrapped java.io.FileNotFoundException
+        if "FileNotFoundException" in str(exc):
+            raise FileNotFoundError(p) from exc
+        raise
+    try:
+        return bytes(spark.sparkContext._jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
+    finally:
+        stream.close()
+
+
+def read_text(spark, p: str) -> str:
+    return read_bytes(spark, p).decode("utf-8")
+
+
+def write_bytes(spark, p: str, data: bytes, exclusive: bool) -> None:
+    """Write ``data`` to ``p``, creating parent directories.
+
+    ``exclusive``: create only if absent, else ``ExclusiveCreateConflict``
+    — exactly one of any number of racing writers succeeds. Otherwise
+    overwrite; locally that is a write to a unique temp name plus an
+    atomic ``os.replace``, so a reader never sees a torn file."""
+    if is_local_path(p):
+        raw = strip_file_scheme(p)
+        os.makedirs(os.path.dirname(raw), exist_ok=True)
+        target = raw if exclusive else f"{raw}.tmp.{uuid.uuid4().hex}"
+        try:
+            fd = os.open(target, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+        except FileExistsError as exc:
+            raise ExclusiveCreateConflict(p) from exc
+        with os.fdopen(fd, "wb") as f:
+            f.write(data)
+        if not exclusive:
+            os.replace(target, raw)
+            _drop_crc(raw)
+        return
+    fs, path = _hadoop(spark, p)
+    try:
+        out = fs.create(path, not exclusive)
+    except Exception as exc:  # py4j-wrapped FileAlreadyExistsException
+        raise ExclusiveCreateConflict(p) from exc
+    try:
+        out.write(bytearray(data))
+    finally:
+        out.close()
+
+
+def write_text(spark, p: str, text: str, exclusive: bool) -> None:
+    write_bytes(spark, p, text.encode("utf-8"), exclusive)
+
+
+def exists(spark, p: str) -> bool:
+    if is_local_path(p):
+        return os.path.exists(strip_file_scheme(p))
+    fs, path = _hadoop(spark, p)
+    return bool(fs.exists(path))
+
+
+def list_dir(spark, p: str) -> list[str]:
+    """Sorted child names of directory ``p``; [] when it does not exist."""
+    if is_local_path(p):
+        try:
+            names = os.listdir(strip_file_scheme(p))
+        except (FileNotFoundError, NotADirectoryError):
+            return []
+        return sorted(n for n in names if not n.endswith(".crc"))
+    fs, path = _hadoop(spark, p)
+    if not fs.exists(path):
+        return []
+    return sorted(st.getPath().getName() for st in fs.listStatus(path))
+
+
+def list_files(
+    spark, root: str, suffix: str = ""
 ) -> list[tuple[str, int, int]]:
-    """Recursive LOCAL listing via os.scandir — the py4j-free twin of
-    ``FileSystem.listFiles(path, recursive=true)`` for ``file:`` roots
-    (r13: the staging loops paid one driver↔JVM roundtrip per file just
-    to enumerate what they had written). Returns (absolute path, size
-    bytes, mtime millis), path-sorted — deterministic where Hadoop's
-    local iterator order is filesystem-dependent; every consumer keys by
-    path or re-sorts."""
+    """Recursive listing of the files under ``root`` whose names end with
+    ``suffix``: (path, size bytes, mtime millis), path-sorted; [] when
+    ``root`` does not exist. Local paths come back raw (no scheme);
+    Hadoop ones as ``Path.toString()`` (scheme and authority kept)."""
     out: list[tuple[str, int, int]] = []
-    stack = [strip_file_scheme(root)]
-    while stack:
-        d = stack.pop()
-        with os.scandir(d) as it:
-            for e in it:
-                if e.is_dir(follow_symlinks=False):
-                    stack.append(e.path)
-                elif e.name.endswith(suffix):
-                    st = e.stat()
-                    out.append((e.path, st.st_size, st.st_mtime_ns // 1_000_000))
+    if is_local_path(root):
+        stack = [strip_file_scheme(root)]
+        while stack:
+            d = stack.pop()
+            try:
+                it = os.scandir(d)
+            except FileNotFoundError:
+                continue
+            with it:
+                for e in it:
+                    if e.is_dir(follow_symlinks=False):
+                        stack.append(e.path)
+                    elif e.name.endswith(suffix) and not e.name.endswith(".crc"):
+                        st = e.stat()
+                        out.append((e.path, st.st_size, st.st_mtime_ns // 1_000_000))
+    else:
+        fs, path = _hadoop(spark, root)
+        if not fs.exists(path):
+            return []
+        it = fs.listFiles(path, True)
+        while it.hasNext():
+            st = it.next()
+            name = st.getPath().toString()
+            if name.endswith(suffix):
+                out.append((name, st.getLen(), st.getModificationTime()))
     out.sort()
     return out
 
 
-def move_local_file(src: str, dst: str) -> None:
-    """``mkdirs(parent(dst)) + rename(src, dst)`` for LOCAL paths in two
-    syscalls instead of three py4j roundtrips. Destination names are
-    uuid-unique staged part files, so the overwrite semantics of
-    os.replace can never clobber a concurrent writer's output."""
-    raw_dst = strip_file_scheme(dst)
-    os.makedirs(os.path.dirname(raw_dst), exist_ok=True)
-    os.replace(strip_file_scheme(src), raw_dst)
+def mtime_ms(spark, p: str) -> int:
+    if is_local_path(p):
+        return os.stat(strip_file_scheme(p)).st_mtime_ns // 1_000_000
+    fs, path = _hadoop(spark, p)
+    return fs.getFileStatus(path).getModificationTime()
 
 
-def delete_local_tree(p: str) -> None:
-    """Recursive local delete (FileSystem.delete(path, true) twin)."""
-    import shutil
+def mkdirs(spark, p: str) -> None:
+    if is_local_path(p):
+        os.makedirs(strip_file_scheme(p), exist_ok=True)
+        return
+    fs, path = _hadoop(spark, p)
+    fs.mkdirs(path)
 
-    shutil.rmtree(strip_file_scheme(p), ignore_errors=True)
+
+def rename(spark, src: str, dst: str) -> bool:
+    """Move ``src`` to ``dst``, creating ``dst``'s parent directories.
+    Locally an existing ``dst`` is replaced atomically (its sidecar
+    dropped); Hadoop's rename refuses an existing destination and returns
+    False. Callers either move to fresh names or fall back to an
+    overwrite on False (the Iceberg version hint)."""
+    if is_local_path(dst):
+        raw = strip_file_scheme(dst)
+        os.makedirs(os.path.dirname(raw), exist_ok=True)
+        try:
+            os.replace(strip_file_scheme(src), raw)
+        except FileNotFoundError:
+            return False
+        _drop_crc(raw)
+        return True
+    fs, s = _hadoop(spark, src)
+    d = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(dst)
+    fs.mkdirs(d.getParent())
+    return bool(fs.rename(s, d))
 
 
-def write_exclusive_local(p: str, data: bytes) -> None:
-    """Atomically create ``p`` (O_CREAT|O_EXCL) and write ``data``.
+def delete(spark, p: str, recursive: bool = False) -> bool:
+    """Delete file ``p`` (with its sidecar), or the tree under it when
+    ``recursive``; False when nothing was there."""
+    if is_local_path(p):
+        raw = strip_file_scheme(p)
+        if recursive and os.path.isdir(raw):
+            import shutil
 
-    Raises ``ExclusiveCreateConflict`` if the file already exists —
-    exactly one of any number of racing writers succeeds.
-    """
-    raw = strip_file_scheme(p)
-    os.makedirs(os.path.dirname(raw), exist_ok=True)
-    try:
-        fd = os.open(raw, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError as exc:
-        raise ExclusiveCreateConflict(p) from exc
-    with os.fdopen(fd, "wb") as f:
-        f.write(data)
+            shutil.rmtree(raw, ignore_errors=True)
+            return True
+        try:
+            os.unlink(raw)
+        except FileNotFoundError:
+            return False
+        _drop_crc(raw)
+        return True
+    fs, path = _hadoop(spark, p)
+    return bool(fs.delete(path, recursive))

@@ -53,6 +53,7 @@ from pyspark.sql.types import StructType
 
 from projectdatalake_spark.session import local_frame
 from projectdatalake_spark.sources import atomic as _atomic
+from projectdatalake_spark.sources import deletion_vectors as _dv
 
 _LOG = "_delta_log"
 _LAST_CHECKPOINT = "_last_checkpoint"
@@ -320,52 +321,15 @@ def _partition_literal(value: str | None, dtype):
 
 class DeltaTable:
     """A Delta table at ``root`` — reader for any protocol-(1,2) table,
-    writer producing spec-conformant logs. Scheme-agnostic via the Hadoop
-    FileSystem API (file://, hdfs://; s3a with a LogStore caveat)."""
+    writer producing spec-conformant logs. Scheme-agnostic through the
+    filesystem seam in ``sources/atomic.py`` (``os`` for local roots, the
+    Hadoop FileSystem for hdfs://; s3a with a LogStore caveat)."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root.rstrip("/")
-        self._jvm = spark.sparkContext._jvm
-        self._hconf = spark.sparkContext._jsc.hadoopConfiguration()
         # commit files are immutable once published → memoize parses
         self._commit_memo: dict[int, list[dict]] = {}
-
-    # --- filesystem plumbing ---------------------------------------------
-
-    def _path(self, p: str):
-        return self._jvm.org.apache.hadoop.fs.Path(p)
-
-    def _fs(self):
-        return self._path(self.root).getFileSystem(self._hconf)
-
-    def _read_text(self, p: str) -> str:
-        fs = self._fs()
-        stream = fs.open(self._path(p))
-        try:
-            return self._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-        finally:
-            stream.close()
-
-    def _write_text(self, p: str, text: str, exclusive: bool) -> None:
-        if exclusive and _atomic.is_local_path(p):
-            # local Hadoop create(overwrite=false) is check-then-create
-            # (TOCTOU) — racing commits can both "win" a version file;
-            # POSIX O_CREAT|O_EXCL is the actual mutual exclusion
-            try:
-                _atomic.write_exclusive_local(p, text.encode("utf-8"))
-            except _atomic.ExclusiveCreateConflict as exc:
-                raise DeltaCommitConflict(p) from exc
-            return
-        fs = self._fs()
-        try:
-            out = fs.create(self._path(p), not exclusive)
-        except Exception as exc:  # py4j FileAlreadyExistsException
-            raise DeltaCommitConflict(p) from exc
-        try:
-            out.write(bytearray(text.encode("utf-8")))
-        finally:
-            out.close()
 
     # --- log discovery ----------------------------------------------------
 
@@ -378,15 +342,10 @@ class DeltaTable:
         ends witness the tip after a cleanup), and a second listStatus
         per call would double the metadata round-trips on an object
         store."""
-        fs = self._fs()
-        log_path = self._path(f"{self.root}/{_LOG}")
-        if not fs.exists(log_path):
-            return [], [], []
         commits: list[int] = []
         checkpoints: set[int] = set()
         compactions: list[tuple[int, int]] = []
-        for status in fs.listStatus(log_path):
-            name = status.getPath().getName()
+        for name in _atomic.list_dir(self.spark, f"{self.root}/{_LOG}"):
             if name.endswith(".compact.json"):
                 parts = name[: -len(".compact.json")].split(".")
                 if len(parts) == 2 and all(p.isdigit() for p in parts):
@@ -444,7 +403,7 @@ class DeltaTable:
             last: Exception | None = None
             for attempt in range(40):
                 try:
-                    text = self._read_text(p)
+                    text = _atomic.read_text(self.spark, p)
                     if text.strip():
                         self._commit_memo[version] = [
                             json.loads(line)
@@ -469,11 +428,9 @@ class DeltaTable:
         in SIDECAR parquet files under ``_delta_log/_sidecars/`` (one
         ``sidecar`` action per file). When both exist the V2 one wins —
         it is the shape later writers maintain."""
-        fs = self._fs()
         prefix = f"{version:020d}.checkpoint."
         cands: list[tuple[int, str]] = []
-        for status in fs.listStatus(self._path(f"{self.root}/{_LOG}")):
-            name = status.getPath().getName()
+        for name in _atomic.list_dir(self.spark, f"{self.root}/{_LOG}"):
             if name == f"{prefix}parquet":
                 cands.append((0, name))
             elif name.startswith(prefix) and name.endswith(".parquet"):
@@ -595,7 +552,8 @@ class DeltaTable:
         return state
 
     def _compaction_actions(self, start: int, end: int) -> list[dict]:
-        text = self._read_text(
+        text = _atomic.read_text(
+            self.spark,
             f"{self.root}/{_LOG}/{start:020d}.{end:020d}.compact.json"
         )
         return [json.loads(line) for line in text.splitlines() if line.strip()]
@@ -705,7 +663,10 @@ class DeltaTable:
             + "\n"
         )
         rel = f"{_LOG}/{start:020d}.{end:020d}.compact.json"
-        self._write_text(f"{self.root}/{rel}", text, exclusive=True)
+        try:
+            _atomic.write_text(self.spark, f"{self.root}/{rel}", text, exclusive=True)
+        except _atomic.ExclusiveCreateConflict as exc:
+            raise DeltaCommitConflict(str(exc)) from exc
         return f"{self.root}/{rel}"
 
     def history(self) -> list[dict]:
@@ -741,10 +702,9 @@ class DeltaTable:
         for h in self.history():
             t = h.get("inCommitTimestamp", h.get("timestamp"))
             if t is None:
-                fs = self._fs()
-                t = fs.getFileStatus(
-                    self._path(f"{self.root}/{_LOG}/{h['version']:020d}.json")
-                ).getModificationTime()
+                t = _atomic.mtime_ms(
+                    self.spark, f"{self.root}/{_LOG}/{h['version']:020d}.json"
+                )
             if t <= ts_millis:
                 best = h["version"]
         if best is None:
@@ -1033,16 +993,6 @@ class DeltaTable:
 
     # --- deletion vectors -------------------------------------------------
 
-    def _read_bytes(self, p: str) -> bytes:
-        fs = self._fs()
-        stream = fs.open(self._path(p))
-        try:
-            return bytes(
-                self._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-            )
-        finally:
-            stream.close()
-
     def _dv_deleted_rows(self, dv: dict) -> set[int]:
         """Decode a deletion-vector descriptor → set of deleted row
         indices. Supports the spec's three storage types: inline z85
@@ -1071,7 +1021,7 @@ class DeltaTable:
                 prefix, uid = raw[:n_prefix], _uuid.UUID(bytes=raw[n_prefix:])
                 sub = prefix.decode("ascii") + "/" if prefix else ""
                 path = f"{self.root}/{sub}deletion_vector_{uid}.bin"
-            blob = self._read_bytes(path)
+            blob = _atomic.read_bytes(self.spark, path)
             off = int(dv.get("offset", 1))
             (stored_size,) = _struct.unpack_from(">i", blob, off)
             if stored_size != size:
@@ -1199,22 +1149,22 @@ class DeltaTable:
     def _apply_dvs(
         self, df: DataFrame, dv_adds: list[dict], has_meta: bool = False
     ) -> DataFrame:
-        """Filter DV-masked rows: anti-join on (file, row_index) using the
-        parquet metadata columns — O(deleted rows) state, executed as a
-        distributed join (the merge-on-read read path). ``has_meta=True``
+        """Filter DV-masked rows: the vectors decode on the driver and the
+        (file, row_index) pairs anti-join the parquet metadata columns as
+        one broadcast local frame (deletion_vectors.py — O(deleted rows)
+        driver memory; the merge-on-read read path). ``has_meta=True``
         when the frame already carries ``__fp``/``__ri`` (the id-mode
         ``_read_physical`` projection, where ``_metadata`` is gone)."""
-        pairs = []
-        for a in dv_adds:
-            path = self._abs_data_path(a["path"])
-            for ri in self._dv_deleted_rows(a["deletionVector"]):
-                pairs.append((path, ri))
+        by_file = {
+            self._abs_data_path(a["path"]): self._dv_deleted_rows(a["deletionVector"])
+            for a in dv_adds
+        }
         if not has_meta:
             df = df.withColumn(
                 "__fp", _file_path_raw(F.col("_metadata.file_path"))
             ).withColumn("__ri", F.col("_metadata.row_index"))
-        if pairs:
-            deleted = local_frame(self.spark, pairs, "__fp string, __ri long")
+        if any(by_file.values()):
+            deleted = _dv.pairs_frame(self.spark, by_file, "__fp", "__ri")
             df = df.join(
                 F.broadcast(deleted), on=["__fp", "__ri"], how="left_anti"
             )
@@ -1701,55 +1651,22 @@ class DeltaTable:
             }
 
         adds = []
-        if _atomic.is_local_path(self.root):
-            # local fast path (r13): one py4j roundtrip per file for the
-            # listing + three per rename were pure driver time on every
-            # commit (guide §5; cProfile in OPTIMIZATION_r13.md)
-            stage_uri = _atomic.strip_file_scheme(stage_dir)
-            root_uri = _atomic.strip_file_scheme(self.root)
-            for p, size, mtime in _atomic.list_local_files(stage_uri):
-                rel = p[len(stage_uri):].lstrip("/")
-                _atomic.move_local_file(p, f"{root_uri}/{rel}")
-                adds.append(
-                    {
-                        "path": _quote_path(rel),
-                        "partitionValues": _pv_of(rel),
-                        "size": size,
-                        "modificationTime": mtime,
-                        "dataChange": True,
-                    }
-                )
-            _atomic.delete_local_tree(stage_uri)
-        else:
-            fs = self._fs()
-            stage_path = self._path(stage_dir)
-            staged = []
-            it = fs.listFiles(stage_path, True)
-            while it.hasNext():
-                status = it.next()
-                p = status.getPath()
-                if p.getName().endswith(".parquet"):
-                    staged.append(
-                        (p, status.getLen(), status.getModificationTime())
-                    )
-            stage_uri = stage_path.toUri().getPath()
-            for p, size, mtime in staged:
-                rel = p.toUri().getPath()[len(stage_uri):].lstrip("/")
-                dest = self._path(f"{self.root}/{rel}")
-                fs.mkdirs(dest.getParent())
-                if not fs.rename(p, dest):
-                    raise IOError(f"failed to move staged file {p} -> {dest}")
-                adds.append(
-                    {
-                        "path": _quote_path(rel),
-                        "partitionValues": _pv_of(rel),
-                        "size": size,
-                        "modificationTime": mtime,
-                        "dataChange": True,
-                    }
-                )
-            fs.delete(stage_path, True)
-        self._attach_stats(adds, set(partition_by))
+        stage_uri = _atomic.path_only(stage_dir)
+        for p, size, mtime in _atomic.list_files(self.spark, stage_dir, ".parquet"):
+            rel = _atomic.path_only(p)[len(stage_uri):].lstrip("/")
+            if not _atomic.rename(self.spark, p, f"{self.root}/{rel}"):
+                raise IOError(f"failed to move staged file {p} -> {self.root}/{rel}")
+            adds.append(
+                {
+                    "path": _quote_path(rel),
+                    "partitionValues": _pv_of(rel),
+                    "size": size,
+                    "modificationTime": mtime,
+                    "dataChange": True,
+                }
+            )
+        _atomic.delete(self.spark, stage_dir, recursive=True)
+        self._attach_stats(adds, set(partition_by), df.schema)
         return adds
 
     @staticmethod
@@ -1765,7 +1682,9 @@ class DeltaTable:
             return tuple(getattr(self, "_pending_bloom", ()))
         return self._bloom_cols_of(self._state()["metaData"])
 
-    def _attach_stats(self, adds: list[dict], pcols: set) -> None:
+    def _attach_stats(
+        self, adds: list[dict], pcols: set, schema: StructType
+    ) -> None:
         """Delta-format per-file stats (numRecords / minValues / maxValues /
         nullCount). Derived from the parquet FOOTERS instead of a full
         Spark re-read of the data just written (guide §6; OPTIMIZATION_r13
@@ -1774,7 +1693,10 @@ class DeltaTable:
         footer cannot reproduce exactly (INT96 ltz timestamps, unexpected
         missing stats) and every ``bloom_by`` column (per-file bloom hex in
         add.tags needs Spark-xxhash64 parity, txlog's bit layout) run
-        through the original Spark aggregate RESTRICTED to those columns."""
+        through the original Spark aggregate RESTRICTED to those columns.
+        The stats columns come from ``schema`` (the written frame's, or
+        the converted table's), so a column only some files carry still
+        gets stats in each file that has it."""
         if not adds:
             return
         from . import footer_stats as _fs
@@ -1784,11 +1706,10 @@ class DeltaTable:
             for a in adds
         ]
         local = all(_fs.footers_readable(p) for p in add_paths)
-        # same filter the old read-back-schema walk applied
         cols = [
-            name
-            for name, tn in _fs.column_types(self.spark, add_paths[0], local)
-            if name not in pcols and tn in _SIMPLE_TYPES
+            f.name
+            for f in schema.fields
+            if f.name not in pcols and f.dataType.typeName() in _SIMPLE_TYPES
         ]
         bloom_cols = [c for c in self._bloom_cols() if c in set(cols)]
         if local:
@@ -1928,8 +1849,9 @@ class DeltaTable:
             return (False, None)
         # a pruned file is a deterministic absence — skip _commit_actions'
         # torn-write retry loop (40 × backoff) with one exists() probe
-        prev = self._path(f"{self.root}/{_LOG}/{version - 1:020d}.json")
-        if not self._fs().exists(prev):
+        if not _atomic.exists(
+            self.spark, f"{self.root}/{_LOG}/{version - 1:020d}.json"
+        ):
             return self._ict_recover(version - 1)
         try:
             acts = self._commit_actions(version - 1)
@@ -2077,11 +1999,13 @@ class DeltaTable:
     def _publish(self, version: int, actions: list[dict]) -> None:
         actions = self._stamp_in_commit_timestamp(version, actions)
         text = "\n".join(json.dumps(a, separators=(",", ":")) for a in actions) + "\n"
-        fs = self._fs()
-        fs.mkdirs(self._path(f"{self.root}/{_LOG}"))
-        self._write_text(
-            f"{self.root}/{_LOG}/{version:020d}.json", text, exclusive=True
-        )
+        try:
+            _atomic.write_text(
+                self.spark, f"{self.root}/{_LOG}/{version:020d}.json", text,
+                exclusive=True,
+            )
+        except _atomic.ExclusiveCreateConflict as exc:
+            raise DeltaCommitConflict(str(exc)) from exc
 
     def _refuse_mapped(self, meta: dict, op: str) -> None:
         if self._column_mapping(meta):
@@ -3026,10 +2950,9 @@ class DeltaTable:
         state = self._state()
         old = self._state(version)
         self._refuse_mapped(state["metaData"], "restore")
-        fs = self._fs()
         for p, a in old["adds"].items():
-            if p not in state["adds"] and not fs.exists(
-                self._path(self._abs_data_path(a["path"]))
+            if p not in state["adds"] and not _atomic.exists(
+                self.spark, self._abs_data_path(a["path"])
             ):
                 raise DeltaProtocolError(
                     f"cannot restore to version {version}: data file "
@@ -3183,7 +3106,7 @@ class DeltaTable:
             groups.setdefault(
                 tuple((c, pv.get(phys_of.get(c, c))) for c in pcols), []
             ).append(a)
-        hit_rows: list = []
+        hits = None
         for key, group in groups.items():
             paths = [self._abs_data_path(a["path"]) for a in group]
             # __fp/__ri come pre-materialized from the scan projection
@@ -3195,16 +3118,13 @@ class DeltaTable:
                     df = df.withColumnRenamed(phys_of[f.name], f.name)
             for col, sval in key:
                 df = df.withColumn(col, _partition_literal(sval, ptypes[col]))
-            hit_rows.extend(
-                df.filter(condition)
-                .select(F.col("__fp").alias("fp"), F.col("__ri").alias("ri"))
-                .collect()
-            )
-        if not hit_rows:
+            df = df.filter(condition).select("__fp", "__ri")
+            hits = df if hits is None else hits.unionByName(df)
+        new_by_file = (
+            _dv.positions_by_file(hits, "__fp", "__ri") if hits is not None else {}
+        )
+        if not new_by_file:
             return None
-        new_by_file: dict[str, set[int]] = {}
-        for r in hit_rows:
-            new_by_file.setdefault(r["fp"], set()).add(r["ri"])
         now = int(time.time() * 1000)
         actions: list[dict] = [
             {"commitInfo": self._commit_info("DELETE", {"predicate": condition})}
@@ -3234,7 +3154,7 @@ class DeltaTable:
             add = by_abs[fp]
             prior = add.get("deletionVector")
             if prior:
-                rows = rows | self._dv_deleted_rows(prior)
+                rows = set(rows) | self._dv_deleted_rows(prior)
             data = _struct.pack("<i", MAGIC) + serialize_rba(rows)
             if len(data) <= 256:
                 descriptors[fp] = {
@@ -3256,7 +3176,7 @@ class DeltaTable:
                     "cardinality": len(rows),
                 }
         if len(blob) > 1:
-            self._write_bytes(f"{self.root}/{dv_rel}", bytes(blob), exclusive=True)
+            _atomic.write_bytes(self.spark, f"{self.root}/{dv_rel}", bytes(blob), exclusive=True)
         for fp, desc in descriptors.items():
             add = by_abs[fp]
             actions.append(
@@ -3272,23 +3192,6 @@ class DeltaTable:
         v = state["version"] + 1
         self._publish(v, actions)
         return v
-
-    def _write_bytes(self, p: str, data: bytes, exclusive: bool) -> None:
-        if exclusive and _atomic.is_local_path(p):
-            try:
-                _atomic.write_exclusive_local(p, data)
-            except _atomic.ExclusiveCreateConflict as exc:
-                raise DeltaCommitConflict(p) from exc
-            return
-        fs = self._fs()
-        try:
-            out = fs.create(self._path(p), not exclusive)
-        except Exception as exc:
-            raise DeltaCommitConflict(p) from exc
-        try:
-            out.write(bytearray(data))
-        finally:
-            out.close()
 
     def optimize(
         self,
@@ -3401,23 +3304,9 @@ class DeltaTable:
                     )
                     .drop("__base")
                 )
-                dv_adds = [a for a in group if a.get("deletionVector")]
-                pairs = []
-                for a in dv_adds:
-                    p = self._abs_data_path(a["path"])
-                    for ri in self._dv_deleted_rows(a["deletionVector"]):
-                        pairs.append((p, ri))
-                if pairs:
-                    deleted = local_frame(
-                        self.spark,
-                        pairs, "__fp string, __ri long"
-                    )
-                    df = df.join(
-                        F.broadcast(deleted),
-                        on=["__fp", "__ri"],
-                        how="left_anti",
-                    )
-                df = df.drop("__fp", "__ri")
+                df = self._apply_dvs(
+                    df, [a for a in group if a.get("deletionVector")], has_meta=True
+                )
             else:
                 df = self.spark.read.schema(data_schema).parquet(*paths)
                 dv_adds = [a for a in group if a.get("deletionVector")]
@@ -3880,22 +3769,9 @@ class DeltaTable:
             .withColumn("row_commit_version", F.col("__dcv"))
             .drop("_row_id")
         )
-        dv_adds = [a for a in adds if a.get("deletionVector")]
-        if dv_adds:
-            pairs = []
-            for a in dv_adds:
-                p = self._abs_data_path(a["path"])
-                for ri in self._dv_deleted_rows(a["deletionVector"]):
-                    pairs.append((p, ri))
-            if pairs:
-                deleted = local_frame(
-                    self.spark,
-                    pairs, "__fp string, __ri long"
-                )
-                df = df.join(
-                    F.broadcast(deleted), on=["__fp", "__ri"], how="left_anti"
-                )
-        df = df.drop("__fp", "__ri", "__base", "__dcv")
+        df = self._apply_dvs(
+            df, [a for a in adds if a.get("deletionVector")], has_meta=True
+        ).drop("__base", "__dcv")
         if min_row_id is not None:
             df = df.filter(F.col("row_id") >= F.lit(int(min_row_id)))
         return df
@@ -4113,17 +3989,9 @@ class DeltaTable:
         ckpt_df = local_frame(self.spark, norm_rows, schema=schema_ddl)
         tmp = f"{self.root}/_staging/ckpt_{uuid.uuid4().hex}"
         ckpt_df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        fs = self._fs()
-        part = None
-        for status in fs.listStatus(self._path(tmp)):
-            if status.getPath().getName().endswith(".parquet"):
-                part = status.getPath()
-                break
-        dest = self._path(f"{self.root}/{_LOG}/{v:020d}.checkpoint.parquet")
-        if part is None or not fs.rename(part, dest):
-            raise IOError(f"checkpoint move failed for version {v}")
-        fs.delete(self._path(tmp), True)
-        self._write_text(
+        self._move_single_part(tmp, f"{self.root}/{_LOG}/{v:020d}.checkpoint.parquet")
+        _atomic.write_text(
+            self.spark,
             f"{self.root}/{_LOG}/{_LAST_CHECKPOINT}",
             json.dumps({"version": v, "size": len(norm_rows)}),
             exclusive=False,  # spec: _last_checkpoint is overwritten in place
@@ -4201,7 +4069,6 @@ class DeltaTable:
                     f"v2Checkpoint upgrade lost 20 races at {self.root}"
                 )
         v = state["version"]
-        fs = self._fs()
         adds = list(state["adds"].values())
         sidecar_actions: list[dict] = []
         if adds:
@@ -4213,25 +4080,20 @@ class DeltaTable:
             n_side = max(1, min(int(sidecar_files), len(adds)))
             tmp = f"{self.root}/_staging/ckpt_v2_{uuid.uuid4().hex}"
             side_df.repartition(n_side).write.mode("overwrite").parquet(tmp)
-            fs.mkdirs(self._path(f"{self.root}/{_LOG}/{_SIDECAR_DIR}"))
-            for status in fs.listStatus(self._path(tmp)):
-                p = status.getPath()
-                if not p.getName().endswith(".parquet"):
-                    continue
+            for p, size, _m in _atomic.list_files(self.spark, tmp, ".parquet"):
                 rel = f"{uuid.uuid4().hex}.parquet"
-                dest = self._path(f"{self.root}/{_LOG}/{_SIDECAR_DIR}/{rel}")
-                if not fs.rename(p, dest):
+                dest = f"{self.root}/{_LOG}/{_SIDECAR_DIR}/{rel}"
+                if not _atomic.rename(self.spark, p, dest):
                     raise IOError(f"sidecar move failed for version {v}")
-                st = fs.getFileStatus(dest)
                 sidecar_actions.append(
                     {
                         "path": rel,  # spec: relative to _delta_log/_sidecars/
-                        "sizeInBytes": st.getLen(),
-                        "modificationTime": st.getModificationTime(),
+                        "sizeInBytes": size,
+                        "modificationTime": _atomic.mtime_ms(self.spark, dest),
                         "tags": None,
                     }
                 )
-            fs.delete(self._path(tmp), True)
+            _atomic.delete(self.spark, tmp, recursive=True)
         top_schema = (
             f"txn {_CKPT_TXN_T}, add {_CKPT_ADD_T}, remove {_CKPT_REMOVE_T}, "
             f"metaData {_CKPT_META_T}, protocol {_CKPT_PROTO_T}, "
@@ -4262,23 +4124,24 @@ class DeltaTable:
         top_df = local_frame(self.spark, top_rows, schema=top_schema)
         tmp = f"{self.root}/_staging/ckpt_v2_top_{uuid.uuid4().hex}"
         top_df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = None
-        for status in fs.listStatus(self._path(tmp)):
-            if status.getPath().getName().endswith(".parquet"):
-                part = status.getPath()
-                break
-        dest = self._path(
-            f"{self.root}/{_LOG}/{v:020d}.checkpoint.{uuid.uuid4().hex}.parquet"
+        self._move_single_part(
+            tmp, f"{self.root}/{_LOG}/{v:020d}.checkpoint.{uuid.uuid4().hex}.parquet"
         )
-        if part is None or not fs.rename(part, dest):
-            raise IOError(f"v2 checkpoint move failed for version {v}")
-        fs.delete(self._path(tmp), True)
-        self._write_text(
+        _atomic.write_text(
+            self.spark,
             f"{self.root}/{_LOG}/{_LAST_CHECKPOINT}",
             json.dumps({"version": v, "size": len(top_rows) + len(adds)}),
             exclusive=False,  # spec: _last_checkpoint is overwritten in place
         )
         return v
+
+    def _move_single_part(self, tmp: str, dest: str) -> None:
+        """Move the one parquet part Spark wrote under ``tmp`` to ``dest``
+        and drop ``tmp``."""
+        parts = _atomic.list_files(self.spark, tmp, ".parquet")
+        if not parts or not _atomic.rename(self.spark, parts[0][0], dest):
+            raise IOError(f"checkpoint move failed: {tmp} -> {dest}")
+        _atomic.delete(self.spark, tmp, recursive=True)
 
     def vacuum(self, retain_versions: int = 1) -> int:
         """Delete data files (and DV blobs) no longer referenced by any of
@@ -4299,25 +4162,19 @@ class DeltaTable:
                 dv = a.get("deletionVector")
                 if dv and dv.get("storageType") in ("p", "u"):
                     dv_keep.add(dv["pathOrInlineDv"])
-        fs = self._fs()
-        root_uri = self._path(self.root).toUri().getPath()
+        keep = {_atomic.path_only(p) for p in keep}
+        dv_keep = {_atomic.path_only(p) for p in dv_keep}
+        root_uri = _atomic.path_only(self.root)
         deleted = 0
-        it = fs.listFiles(self._path(self.root), True)
-        victims = []
-        while it.hasNext():
-            status = it.next()
-            p = status.getPath()
-            rel = p.toUri().getPath()[len(root_uri):].lstrip("/")
+        for p, _size, _m in _atomic.list_files(self.spark, self.root):
+            abs_p = _atomic.path_only(p)
+            rel = abs_p[len(root_uri):].lstrip("/")
             if rel.startswith((_LOG, "_staging")) or rel.startswith("."):
                 continue
-            abs_p = p.toUri().getPath()
-            if rel.endswith(".parquet") and abs_p not in keep:
-                victims.append(p)
-            elif ".bin" in rel and "deletion_vector" in rel and abs_p not in dv_keep:
-                victims.append(p)
-        for p in victims:
-            if fs.delete(p, False):
-                deleted += 1
+            if (rel.endswith(".parquet") and abs_p not in keep) or (
+                ".bin" in rel and "deletion_vector" in rel and abs_p not in dv_keep
+            ):
+                deleted += _atomic.delete(self.spark, p)
         return deleted
 
     def prune_log(self) -> int:
@@ -4328,11 +4185,10 @@ class DeltaTable:
         if not checkpoints:
             return 0
         ckpt = max(checkpoints)
-        fs = self._fs()
         n = 0
         for v in commits:
             if v <= ckpt:
-                fs.delete(self._path(f"{self.root}/{_LOG}/{v:020d}.json"), False)
+                _atomic.delete(self.spark, f"{self.root}/{_LOG}/{v:020d}.json")
                 self._commit_memo.pop(v, None)
                 n += 1
         return n
@@ -4411,17 +4267,12 @@ def convert_parquet_to_delta(
     t = DeltaTable(spark, root)
     if t.exists():
         raise DeltaCommitConflict(f"already a Delta table: {root}")
-    fs = t._fs()
     files = []
-    it = fs.listFiles(t._path(root), True)
-    root_uri = t._path(root).toUri().getPath()
-    while it.hasNext():
-        status = it.next()
-        p = status.getPath()
-        rel = p.toUri().getPath()[len(root_uri):].lstrip("/")
-        if rel.startswith((_LOG, "_staging")) or not rel.endswith(".parquet"):
-            continue
-        files.append((rel, status.getLen(), status.getModificationTime()))
+    root_uri = _atomic.path_only(root)
+    for p, size, mtime in _atomic.list_files(spark, root, ".parquet"):
+        rel = _atomic.path_only(p)[len(root_uri):].lstrip("/")
+        if not rel.startswith((_LOG, "_staging")):
+            files.append((rel, size, mtime))
     adds = []
     for rel, size, mtime in sorted(files):
         pv = {
@@ -4440,7 +4291,7 @@ def convert_parquet_to_delta(
             }
         )
     if collect_stats:
-        t._attach_stats(adds, set(partition_by))
+        t._attach_stats(adds, set(partition_by), schema)
     meta = {
         "id": str(uuid.uuid4()),
         "format": {"provider": "parquet", "options": {}},

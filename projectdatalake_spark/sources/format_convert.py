@@ -29,6 +29,7 @@ import uuid
 
 from pyspark.sql.types import StructType
 
+from projectdatalake_spark.sources import atomic as _atomic
 from projectdatalake_spark.sources.delta_interop import (
     DeltaCommitConflict,
     DeltaProtocolError,
@@ -193,7 +194,7 @@ def _delta_dvs_as_iceberg_dv_files(
         properties={"created-by": "projectdatalake-spark uniform dv export"},
     )
     puffin_path = f"{t.root}/metadata/{uuid.uuid4().hex}-uniform-deletes.puffin"
-    t._write_bytes(puffin_path, puffin_bytes, exclusive=True)
+    _atomic.write_bytes(t.spark, puffin_path, puffin_bytes, exclusive=True)
     written, _ = read_puffin(puffin_bytes)
     offsets = {
         b["properties"]["referenced-data-file"]: (b["offset"], b["length"])
@@ -295,8 +296,7 @@ def uniform_export(
     root = (ice_root or delta.root).rstrip("/")
     v = state["version"]
     t = IcebergTable(delta.spark, root)
-    fs = t._fs()
-    fresh = not fs.exists(t._path(f"{root}/metadata/version-hint.text"))
+    fresh = not _atomic.exists(delta.spark, f"{root}/metadata/version-hint.text")
     if fresh:
         t = IcebergTable.create_empty(
             delta.spark,

@@ -44,13 +44,14 @@ from __future__ import annotations
 import json
 import time
 import uuid
-from urllib.parse import urlsplit
+from urllib.parse import unquote, urlsplit
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructField, StructType
 
 from projectdatalake_spark.session import local_frame
 from projectdatalake_spark.sources import atomic as _atomic
+from projectdatalake_spark.sources import deletion_vectors as _dv
 from projectdatalake_spark.sources.avro_codec import read_container, write_container
 
 _SPARK_TO_ICEBERG = {
@@ -550,9 +551,14 @@ def _spec_part_fields(meta: dict, spec: dict) -> list[dict]:
     return out
 
 
+# a URI's scheme and authority, as ``atomic.path_only`` drops them
+_SCHEME_AUTHORITY = "^[A-Za-z][A-Za-z0-9+.-]*:(//[^/]*)?"
+
+
 def _file_path_raw(col):
     """``_metadata.file_path`` as a RAW filesystem path (executor-side):
-    strip the scheme, then percent-decode — the URI form is
+    strip the scheme and authority (manifests record paths without them,
+    ``atomic.path_only``), then percent-decode — the URI form is
     percent-encoded (space-valued hive partitions arrive as %20) while
     manifests record raw paths, and the spec requires position-delete
     file_path values to EQUAL the manifest form. ``url_decode`` is
@@ -561,20 +567,40 @@ def _file_path_raw(col):
     c = col if not isinstance(col, str) else F.col(col)
     return F.url_decode(
         F.regexp_replace(
-            F.regexp_replace(c, "^file:", ""), r"\+", "%2B"
+            F.regexp_replace(c, _SCHEME_AUTHORITY, ""),
+            r"\+",
+            "%2B",
         )
     )
+
+
+def _raw_ddl_type(values: list) -> str:
+    """DDL type holding the decoded Avro partition values of one column
+    (int/long → bigint, float/double → double); the scan casts it to the
+    column type exactly as a literal of that value would be cast."""
+    for v in values:
+        if isinstance(v, bool):
+            return "boolean"
+        if isinstance(v, int):
+            return "bigint"
+        if isinstance(v, float):
+            return "double"
+        if v is not None:
+            return "string"
+    return "string"
 
 
 def _normalize_stored_delete_paths(spark, deletes_df, live_paths, pos_col="pos"):
     """Stored position-delete ``file_path`` values, normalized to the RAW
     manifest form for comparison against the data side; returns a
-    (``file_path``, ``pos_col``) frame.
+    (``file_path``, ``pos_col``) frame and whether legacy rows were found.
+    ``live_paths=None`` skips the probe: the caller already knows every
+    stored path is raw.
 
     ``delete_where`` writes them ALREADY in raw form (spec: the value must
     equal the manifest entry), so the stored value is compared VERBATIM
-    (scheme stripped only, never decoded): a raw path whose hive-escaped
-    partition dir contains %XX (':' → %3A, '%' → %25, '#' → %23 — e.g.
+    (scheme and authority stripped only, never decoded): a raw path whose
+    hive-escaped partition dir contains %XX (':' → %3A, '%' → %25, '#' → %23 — e.g.
     timestamp-valued partitions) would decode a SECOND time and silently
     stop matching — deleted rows would resurrect on read and
     rewrite_position_deletes would drop their pairs as dangling. Only the
@@ -593,12 +619,16 @@ def _normalize_stored_delete_paths(spark, deletes_df, live_paths, pos_col="pos")
     anti-join plans against the delete files alone, with no extra join
     or decode in front of it. The legacy probe is one bounded job over
     the DELETE files only — O(delete bytes), never the data side."""
-    verbatim = F.regexp_replace(F.col("file_path"), "^file:", "")
+    verbatim = F.regexp_replace(F.col("file_path"), _SCHEME_AUTHORITY, "")
     verbatim_df = deletes_df.select(
         verbatim.alias("file_path"), F.col(pos_col)
     )
+    if live_paths is None:
+        return verbatim_df, False
     live_df = local_frame(
-        spark, [(p,) for p in sorted(set(live_paths))], "__lp string"
+        spark,
+        [(p,) for p in sorted({_atomic.path_only(p) for p in live_paths})],
+        "__lp string",
     )
     legacy = (
         verbatim_df.join(
@@ -610,7 +640,7 @@ def _normalize_stored_delete_paths(spark, deletes_df, live_paths, pos_col="pos")
         .count()
     )
     if not legacy:
-        return verbatim_df
+        return verbatim_df, False
     return (
         verbatim_df.select(F.col("file_path").alias("__fpv"), F.col(pos_col))
         .join(F.broadcast(live_df), F.col("__fpv") == F.col("__lp"), "left")
@@ -622,7 +652,7 @@ def _normalize_stored_delete_paths(spark, deletes_df, live_paths, pos_col="pos")
             .alias("file_path"),
             pos_col,
         )
-    )
+    ), True
 
 
 def _ntz_epoch_micros(col):
@@ -970,8 +1000,10 @@ class IcebergTable:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root.rstrip("/")
-        self._jvm = spark.sparkContext._jvm
-        self._hconf = spark.sparkContext._jsc.hadoopConfiguration()
+        # position-delete files known to store raw manifest-form paths
+        # (written by this object, or probed once): delete files are
+        # immutable, so the verdict holds for the object's life
+        self._raw_form_deletes: set[str] = set()
         # Iceberg resolves columns by FIELD ID, not name — that is what
         # makes its schema evolution (rename/add/drop) metadata-only.
         # Spark's parquet reader/writer support exactly this: ids travel
@@ -980,58 +1012,19 @@ class IcebergTable:
         spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
         spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
 
-    # --- fs plumbing ------------------------------------------------------
-
-    def _path(self, p: str):
-        return self._jvm.org.apache.hadoop.fs.Path(p)
-
-    def _fs(self):
-        return self._path(self.root).getFileSystem(self._hconf)
-
-    def _read_bytes(self, p: str) -> bytes:
-        fs = self._fs()
-        stream = fs.open(self._path(p))
-        try:
-            return bytes(
-                self._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-            )
-        finally:
-            stream.close()
-
-    def _write_bytes(self, p: str, data: bytes, exclusive: bool) -> None:
-        if exclusive and _atomic.is_local_path(p):
-            # Hadoop's local create(overwrite=false) is check-THEN-create;
-            # two racing commits can both pass the check and one snapshot
-            # silently vanishes. POSIX O_CREAT|O_EXCL is the real mutex.
-            try:
-                _atomic.write_exclusive_local(p, data)
-            except _atomic.ExclusiveCreateConflict as exc:
-                raise IcebergCommitConflict(p) from exc
-            return
-        fs = self._fs()
-        try:
-            out = fs.create(self._path(p), not exclusive)
-        except Exception as exc:
-            raise IcebergCommitConflict(p) from exc
-        try:
-            out.write(bytearray(data))
-        finally:
-            out.close()
-
     # --- metadata discovery ----------------------------------------------
 
     def current_metadata_version(self) -> int:
         hint = f"{self.root}/metadata/version-hint.text"
-        fs = self._fs()
         # The hint is advisory and may be observed mid-overwrite by a racing
         # writer (filesystems without atomic replace truncate-then-write).
         # A torn read must degrade to the authoritative directory scan, not
         # crash the reader with a bare int() ValueError.
         for attempt in range(5):
-            if not fs.exists(self._path(hint)):
-                break
             try:
-                raw = self._read_bytes(hint).decode().strip()
+                raw = _atomic.read_bytes(self.spark, hint).decode().strip()
+            except FileNotFoundError:
+                break
             except Exception:
                 raw = ""
             if raw.isdigit():
@@ -1039,8 +1032,8 @@ class IcebergTable:
                 # the hint may be STALE (two racing winners' hint writes can
                 # land out of order) — walk forward to the true tip; each
                 # probe is one exists() call and almost always misses
-                while fs.exists(
-                    self._path(f"{self.root}/metadata/v{v + 1}.metadata.json")
+                while _atomic.exists(
+                    self.spark, f"{self.root}/metadata/v{v + 1}.metadata.json"
                 ):
                     v += 1
                 return v
@@ -1048,14 +1041,11 @@ class IcebergTable:
         # hint missing (crash window) or torn (racing overwrite): scan for
         # the highest v*.metadata.json — always correct, O(#versions) names
         best = -1
-        meta_dir = self._path(f"{self.root}/metadata")
-        if fs.exists(meta_dir):
-            for status in fs.listStatus(meta_dir):
-                name = status.getPath().getName()
-                if name.startswith("v") and name.endswith(".metadata.json"):
-                    stem = name[1 : -len(".metadata.json")]
-                    if stem.isdigit():
-                        best = max(best, int(stem))
+        for name in _atomic.list_dir(self.spark, f"{self.root}/metadata"):
+            if name.startswith("v") and name.endswith(".metadata.json"):
+                stem = name[1 : -len(".metadata.json")]
+                if stem.isdigit():
+                    best = max(best, int(stem))
         if best < 0:
             raise FileNotFoundError(f"not an Iceberg table: {self.root}")
         return best
@@ -1072,7 +1062,7 @@ class IcebergTable:
         last: Exception | None = None
         for attempt in range(10):
             try:
-                return json.loads(self._read_bytes(p).decode())
+                return json.loads(_atomic.read_bytes(self.spark, p).decode())
             except Exception as exc:
                 last = exc
                 _atomic.backoff_sleep(attempt)
@@ -1105,7 +1095,7 @@ class IcebergTable:
         )
         if snap is None:
             raise FileNotFoundError(f"snapshot {sid} not in table metadata")
-        _, manifests = read_container(self._read_bytes(snap["manifest-list"]))
+        _, manifests = read_container(_atomic.read_bytes(self.spark, snap["manifest-list"]))
         lineage = bool(meta.get("row-lineage"))
         data: list[dict] = []
         deletes: list[dict] = []
@@ -1117,7 +1107,7 @@ class IcebergTable:
                 )
             if content == 0 and skip_manifest is not None and skip_manifest(m):
                 continue
-            _, rows = read_container(self._read_bytes(m["manifest_path"]))
+            _, rows = read_container(_atomic.read_bytes(self.spark, m["manifest_path"]))
             # row-lineage id resolution (round 11): a data file's
             # first_row_id is its explicit field-142 stamp, else
             # inherited from the manifest's base by record_count
@@ -1391,7 +1381,7 @@ class IcebergTable:
             blobs, {"created-by": "projectdatalake-spark"}
         )
         path = f"{self.root}/metadata/{sid}-{uuid.uuid4().hex}.stats"
-        self._write_bytes(path, data, exclusive=True)
+        _atomic.write_bytes(self.spark, path, data, exclusive=True)
         entry = {
             "snapshot-id": sid,
             "statistics-path": path,
@@ -1440,7 +1430,7 @@ class IcebergTable:
             if s["snapshot-id"] != sid:
                 continue
             blobs, _props = _puffin.read_puffin(
-                self._read_bytes(s["statistics-path"])
+                _atomic.read_bytes(self.spark, s["statistics-path"])
             )
             for bm, payload in blobs:
                 if (
@@ -1528,7 +1518,7 @@ class IcebergTable:
             blobs, {"created-by": "projectdatalake-spark"}
         )
         path = f"{self.root}/metadata/{sid}-{uuid.uuid4().hex}.stats"
-        self._write_bytes(path, data, exclusive=True)
+        _atomic.write_bytes(self.spark, path, data, exclusive=True)
         entry = {
             "snapshot-id": sid,
             "statistics-path": path,
@@ -1562,7 +1552,7 @@ class IcebergTable:
             if s["snapshot-id"] != sid:
                 continue
             blobs, _props = _puffin.read_puffin(
-                self._read_bytes(s["statistics-path"])
+                _atomic.read_bytes(self.spark, s["statistics-path"])
             )
             ds_payload = None
             for bm, payload in blobs:
@@ -1806,7 +1796,7 @@ class IcebergTable:
         pq.write_table(tbl, buf)
         data = buf.getvalue()
         path = f"{self.root}/metadata/partition-stats-{sid}-{uuid.uuid4().hex}.parquet"
-        self._write_bytes(path, data, exclusive=True)
+        _atomic.write_bytes(self.spark, path, data, exclusive=True)
         entry = {
             "snapshot-id": sid,
             "statistics-path": path,
@@ -2174,7 +2164,6 @@ class IcebergTable:
             sid: [p["pname"] for p in era if p["transform"] == "identity"]
             for sid, era in pf_by_spec.items()
         }
-        ptypes = {f.name: f.dataType for f in schema.fields}
         pos_entries = [
             e for e in delete_entries if e["data_file"].get("content") != 2
         ]
@@ -2187,61 +2176,30 @@ class IcebergTable:
                     "equality delete file without equality_ids — cannot "
                     "apply, rows would be resurrected"
                 )
-        # equality deletes apply to data files with STRICTLY SMALLER data
-        # sequence numbers, so when any exist the scan groups by (spec era,
-        # partition, seq) to carry each file's effective sequence through
-        # the plan; the spec era picks which columns come back as constants
-        groups: dict[tuple, list[str]] = {}
-        for e in entries:
-            df_rec = e["data_file"]
-            part = df_rec.get("partition", {}) or {}
-            era_cols = idcols_by_spec.get(e["_spec_id"], [])
-            key = (
-                e["_spec_id"],
-                tuple((c, part.get(c)) for c in era_cols),
-                e["_seq"] if eq_entries else None,
-            )
-            groups.setdefault(key, []).append(df_rec["file_path"])
         deletes_df = None
         if pos_entries:
             # v2 position deletes (parquet pairs) and v3 deletion vectors
-            # (puffin roaring blobs) in one frame, applied as a
-            # distributed anti-join on the parquet metadata row index —
-            # merge-on-read, no data rewritten, executor-side
+            # (puffin roaring blobs) in one frame, applied once as an
+            # anti-join on the parquet metadata row index — merge-on-read,
+            # no data rewritten
             deletes_df = self._pos_delete_pairs_df(
-                pos_entries, [p for ps in groups.values() for p in ps]
+                pos_entries, [e["data_file"]["file_path"] for e in entries]
             ).select(
                 F.col("file_path").alias("__fp"), F.col("pos").alias("__ri")
             )
-        frames = []
-        for (spec_id, key, seq), paths in groups.items():
-            era_cols = set(idcols_by_spec.get(spec_id, []))
-            data_schema = StructType(
-                [f for f in schema.fields if f.name not in era_cols]
-            )
-            df = self.spark.read.schema(data_schema).parquet(*paths)
-            if deletes_df is not None:
-                df = (
-                    df.withColumn(
-                        "__fp", _file_path_raw(F.col("_metadata.file_path"))
-                    )
-                    .withColumn("__ri", F.col("_metadata.row_index"))
-                    .join(deletes_df, on=["__fp", "__ri"], how="left_anti")
-                    .drop("__fp", "__ri")
-                )
-            if eq_entries:
-                df = df.withColumn("__seq", F.lit(seq).cast("long"))
-            for col, val in key:
-                df = df.withColumn(col, F.lit(val).cast(ptypes[col]))
-            frames.append(
-                df.select(
-                    *[f.name for f in schema.fields],
-                    *(["__seq"] if eq_entries else []),
-                )
-            )
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f)
+        # equality deletes apply to data files with STRICTLY SMALLER data
+        # sequence numbers, so when any exist each file's data sequence
+        # number rides along as ``__seq``
+        out = self._era_scan(
+            entries, schema, idcols_by_spec,
+            with_seq=bool(eq_entries), with_ri=deletes_df is not None,
+        )
+        if deletes_df is not None:
+            out = out.join(deletes_df, on=["__fp", "__ri"], how="left_anti")
+        out = out.select(
+            *[f.name for f in schema.fields],
+            *(["__seq"] if eq_entries else []),
+        )
         if eq_entries:
             # group delete files by their equality-id tuple; each group is
             # one broadcast anti-join on null-safe key equality plus the
@@ -2289,6 +2247,71 @@ class IcebergTable:
                     cond = cond & F.col(c).eqNullSafe(F.col(f"__eq_{c}"))
                 out = out.join(F.broadcast(kf), on=cond, how="left_anti")
             out = out.drop("__seq")
+        return out
+
+    def _era_scan(
+        self,
+        entries: list[dict],
+        schema: StructType,
+        idcols_by_spec: dict[int, list[str]],
+        with_seq: bool = False,
+        with_ri: bool = False,
+    ) -> DataFrame:
+        """The live data files as ONE parquet scan per partition-spec era
+        (unioned when the specs evolved), carrying the table schema,
+        ``__fp`` (the raw file path, ``_file_path_raw``) and with
+        ``with_ri`` the row index ``__ri``. Identity-partition columns
+        come back as the spec's typed constants, and with ``with_seq``
+        ``__seq`` as each file's data sequence number, through ONE
+        broadcast frame per era keyed on the file path — the manifest
+        form normalised as ``_file_path_raw`` normalises the data side."""
+        ptypes = {f.name: f.dataType for f in schema.fields}
+        eras: dict[int, dict[str, dict]] = {}
+        for e in entries:
+            eras.setdefault(e["_spec_id"], {}).setdefault(
+                _atomic.path_only(e["data_file"]["file_path"]), e
+            )
+        scans = []
+        for spec_id, by_path in eras.items():
+            era_cols = idcols_by_spec.get(spec_id, [])
+            data_schema = StructType(
+                [f for f in schema.fields if f.name not in set(era_cols)]
+            )
+            df = self.spark.read.schema(data_schema).parquet(
+                *[e["data_file"]["file_path"] for e in by_path.values()]
+            ).withColumn("__fp", _file_path_raw(F.col("_metadata.file_path")))
+            if with_ri:
+                df = df.withColumn("__ri", F.col("_metadata.row_index"))
+            if era_cols or with_seq:
+                rows = []
+                for key, e in by_path.items():
+                    part = e["data_file"].get("partition", {}) or {}
+                    rows.append(
+                        (key, *[part.get(c) for c in era_cols])
+                        + ((e["_seq"],) if with_seq else ())
+                    )
+                raw_types = [
+                    _raw_ddl_type([r[i + 1] for r in rows])
+                    for i in range(len(era_cols))
+                ]
+                ddl = ", ".join(
+                    ["__fp string"]
+                    + [f"__c{i} {t}" for i, t in enumerate(raw_types)]
+                    + (["__seq long"] if with_seq else [])
+                )
+                consts = local_frame(self.spark, rows, ddl).select(
+                    "__fp",
+                    *[
+                        F.col(f"__c{i}").cast(ptypes[c]).alias(c)
+                        for i, c in enumerate(era_cols)
+                    ],
+                    *(["__seq"] if with_seq else []),
+                )
+                df = df.join(F.broadcast(consts), "__fp")
+            scans.append(df)
+        out = scans[0]
+        for df in scans[1:]:
+            out = out.unionByName(df)
         return out
 
     def _spark_schema(self, meta: dict) -> StructType:
@@ -2389,8 +2412,7 @@ class IcebergTable:
         files without ids → reads resolve by NAME, and rename/drop are
         refused because old files could not serve the renamed column)."""
         t = cls(spark, root)
-        fs = t._fs()
-        if fs.exists(t._path(f"{root}/metadata/version-hint.text")):
+        if _atomic.exists(spark, f"{root}/metadata/version-hint.text"):
             raise IcebergCommitConflict(f"already an Iceberg table: {root}")
         fields = _iceberg_schema(spark_schema)
         by_name = {f["name"]: f for f in fields}
@@ -2423,28 +2445,51 @@ class IcebergTable:
         return t
 
     def _write_metadata(self, version: int, meta: dict) -> None:
-        self._write_bytes(
-            f"{self.root}/metadata/v{version}.metadata.json",
-            json.dumps(meta, indent=1).encode(),
-            exclusive=True,
-        )
+        try:
+            _atomic.write_bytes(
+                self.spark,
+                f"{self.root}/metadata/v{version}.metadata.json",
+                json.dumps(meta, indent=1).encode(),
+                exclusive=True,
+            )
+        except _atomic.ExclusiveCreateConflict as exc:
+            raise IcebergCommitConflict(str(exc)) from exc
         # Advance the hint via temp-file + rename where the FS supports it
         # (single-FS atomic replace → no torn-read window for local/HDFS).
         # Object stores rename non-atomically but their overwrite PUT is
         # already atomic, so the plain-overwrite fallback is safe there.
         hint = f"{self.root}/metadata/version-hint.text"
+        data = str(version).encode()
         tmp = f"{hint}.tmp.{uuid.uuid4().hex}"
-        self._write_bytes(tmp, str(version).encode(), exclusive=True)
+        _atomic.write_bytes(self.spark, tmp, data, exclusive=True)
         try:
-            renamed = self._fs().rename(self._path(tmp), self._path(hint))
+            renamed = _atomic.rename(self.spark, tmp, hint)
         except Exception:
             renamed = False
         if not renamed:
-            self._write_bytes(hint, str(version).encode(), exclusive=False)
+            _atomic.write_bytes(self.spark, hint, data, exclusive=False)
             try:
-                self._fs().delete(self._path(tmp), False)
+                _atomic.delete(self.spark, tmp)
             except Exception:
                 pass
+
+    def _staged_files(self, stage: str) -> tuple[list[tuple[str, int]], dict]:
+        """The parquet files Spark just wrote under ``stage``: ([(path,
+        size)], {path: record count}), paths scheme-less as manifests
+        record them."""
+        files = [
+            (_atomic.path_only(p), size)
+            for p, size, _m in _atomic.list_files(self.spark, stage, ".parquet")
+        ]
+        counts = {
+            _atomic.path_only(_atomic.uri_to_path(r["__file"])): r["count"]
+            for r in self.spark.read.parquet(*[f for f, _ in files])
+            .withColumn("__file", F.input_file_name())
+            .groupBy("__file")
+            .count()
+            .collect()
+        }
+        return files, counts
 
     def _stage_data(
         self,
@@ -2464,24 +2509,10 @@ class IcebergTable:
         if pcols:
             writer = writer.partitionBy(*pcols)
         writer.parquet(stage_dir)
-        if _atomic.is_local_path(self.root):
-            # local fast path (r13): the Hadoop iterator costs one py4j
-            # roundtrip per staged file (guide §5 — driver time)
-            files = [
-                (p, size)
-                for p, size, _m in _atomic.list_local_files(
-                    _atomic.strip_file_scheme(stage_dir)
-                )
-            ]
-        else:
-            fs = self._fs()
-            files = []
-            it = fs.listFiles(self._path(stage_dir), True)
-            while it.hasNext():
-                status = it.next()
-                p = status.getPath()
-                if p.getName().endswith(".parquet"):
-                    files.append((p.toUri().getPath(), status.getLen()))
+        files = [
+            (_atomic.path_only(p), size)
+            for p, size, _m in _atomic.list_files(self.spark, stage_dir, ".parquet")
+        ]
         counts: dict = {}
         bounds_by_file: dict[str, dict] = {}
         bcols = [
@@ -2565,9 +2596,10 @@ class IcebergTable:
                 }
         out = []
         for path, size in files:
-            rel = path[len(self._path(stage_dir).toUri().getPath()):].lstrip("/")
+            rel = path[len(_atomic.path_only(stage_dir)):].lstrip("/")
+            # hive layout escapes %, #, = (and more) in directory names
             parts = {
-                seg.split("=", 1)[0]: seg.split("=", 1)[1]
+                seg.split("=", 1)[0]: unquote(seg.split("=", 1)[1])
                 for seg in rel.split("/")[:-1]
                 if "=" in seg
             }
@@ -2954,7 +2986,7 @@ class IcebergTable:
                 s for s in meta["snapshots"] if s["snapshot-id"] == cur_sid
             )
             _, manifests = read_container(
-                self._read_bytes(cur_snap["manifest-list"])
+                _atomic.read_bytes(self.spark, cur_snap["manifest-list"])
             )
             running = 0
             stamped = []
@@ -2971,7 +3003,8 @@ class IcebergTable:
             mlist_path = (
                 f"{self.root}/metadata/snap-{sid}-1-{uuid.uuid4().hex}.avro"
             )
-            self._write_bytes(
+            _atomic.write_bytes(
+                self.spark,
                 mlist_path,
                 write_container(
                     _manifest_list_schema(),
@@ -3058,7 +3091,7 @@ class IcebergTable:
         cur_snap = next(
             s for s in meta["snapshots"] if s["snapshot-id"] == cur_sid
         )
-        _, manifests = read_container(self._read_bytes(cur_snap["manifest-list"]))
+        _, manifests = read_container(_atomic.read_bytes(self.spark, cur_snap["manifest-list"]))
         base_of: dict[str, int] = {}
         seq_of: dict[str, int] = {}
         ident_of: dict[str, dict] = {}  # file → {pname: constant}
@@ -3067,7 +3100,7 @@ class IcebergTable:
         for m in manifests:
             content = m.get("content", 0)
             m_ident = ident_by_spec.get(m.get("partition_spec_id", 0), [])
-            _, rows = read_container(self._read_bytes(m["manifest_path"]))
+            _, rows = read_container(_atomic.read_bytes(self.spark, m["manifest_path"]))
             if content == 1:
                 for e in rows:
                     if e["status"] not in (0, 1):
@@ -3166,7 +3199,7 @@ class IcebergTable:
             self.spark,
             [
                 tuple(
-                    [p, b, seq_of[p]]
+                    [_atomic.path_only(p), b, seq_of[p]]
                     + [ident_of.get(p, {}).get(f.name) for f in ident_cols]
                 )
                 for p, b in base_of.items()
@@ -3441,7 +3474,7 @@ class IcebergTable:
         cur_snap = next(
             s for s in meta["snapshots"] if s["snapshot-id"] == sid_cur
         )
-        _, prior = read_container(self._read_bytes(cur_snap["manifest-list"]))
+        _, prior = read_container(_atomic.read_bytes(self.spark, cur_snap["manifest-list"]))
         data_manifests = [m for m in prior if m.get("content", 0) == 0]
         delete_manifests = [m for m in prior if m.get("content", 0) == 1]
         specs_present = {m.get("partition_spec_id", 0) for m in data_manifests}
@@ -3451,7 +3484,7 @@ class IcebergTable:
         # group live entries by spec era, pin their effective sequences
         by_spec: dict[int, list[dict]] = {}
         for m in data_manifests:
-            _, rows = read_container(self._read_bytes(m["manifest_path"]))
+            _, rows = read_container(_atomic.read_bytes(self.spark, m["manifest_path"]))
             if lineage:
                 if m.get("first_row_id") is None:
                     raise IcebergProtocolError(
@@ -3515,7 +3548,7 @@ class IcebergTable:
                     "content": b"data",
                 },
             )
-            self._write_bytes(mp, mb, exclusive=True)
+            _atomic.write_bytes(self.spark, mp, mb, exclusive=True)
             new_rows.append(
                 {
                     "manifest_path": mp,
@@ -3575,7 +3608,7 @@ class IcebergTable:
                 "format-version": b"2",
             },
         )
-        self._write_bytes(mlist_path, mlist_bytes, exclusive=True)
+        _atomic.write_bytes(self.spark, mlist_path, mlist_bytes, exclusive=True)
         now = int(time.time() * 1000)
         snap = {
             "snapshot-id": sid,
@@ -3662,22 +3695,8 @@ class IcebergTable:
             .write.mode("overwrite")
             .parquet(stage)
         )
-        fs = self._fs()
-        del_files = []
-        it = fs.listFiles(self._path(stage), True)
-        while it.hasNext():
-            status = it.next()
-            p = status.getPath()
-            if p.getName().endswith(".parquet"):
-                del_files.append((p.toUri().getPath(), status.getLen()))
-        counts = {
-            _atomic.uri_to_path(r["__file"]): r["count"]
-            for r in self.spark.read.parquet(*[f for f, _ in del_files])
-            .withColumn("__file", F.input_file_name())
-            .groupBy("__file")
-            .count()
-            .collect()
-        }
+        del_files, counts = self._staged_files(stage)
+        self._raw_form_deletes.update(p for p, _ in del_files)
         n_after = sum(counts.values())
         sid = uuid.uuid4().int % (1 << 62)
         del_spec = self._unpartitioned_spec(meta)
@@ -3713,7 +3732,7 @@ class IcebergTable:
                 "partitions": None,
             }
         else:
-            fs.delete(self._path(stage), True)
+            _atomic.delete(self.spark, stage, recursive=True)
         base_sid = meta.get("current-snapshot-id")
         replaced = {e["data_file"]["file_path"] for e in pos_entries}
         # single-attempt commit: the rewritten pair set was computed
@@ -3733,14 +3752,14 @@ class IcebergTable:
             s for s in meta["snapshots"] if s["snapshot-id"] == cur_sid
         )
         _, prior = read_container(
-            self._read_bytes(cur_snap["manifest-list"])
+            _atomic.read_bytes(self.spark, cur_snap["manifest-list"])
         )
         kept: list[dict] = []
         for m in prior:
             if m.get("content", 0) == 0:
                 kept.append(m)  # data manifests untouched
                 continue
-            _, rows = read_container(self._read_bytes(m["manifest_path"]))
+            _, rows = read_container(_atomic.read_bytes(self.spark, m["manifest_path"]))
             live_rows = [
                 e
                 for e in rows
@@ -3791,7 +3810,7 @@ class IcebergTable:
                     "content": b"deletes",
                 },
             )
-            self._write_bytes(mp, mb, exclusive=True)
+            _atomic.write_bytes(self.spark, mp, mb, exclusive=True)
             kept.append(
                 {
                     "manifest_path": mp,
@@ -3837,7 +3856,7 @@ class IcebergTable:
                 "format-version": b"2",
             },
         )
-        self._write_bytes(mlist_path, mlist_bytes, exclusive=True)
+        _atomic.write_bytes(self.spark, mlist_path, mlist_bytes, exclusive=True)
         now = int(time.time() * 1000)
         snap = {
             "snapshot-id": sid,
@@ -4187,7 +4206,7 @@ class IcebergTable:
                 "content": b"data",
             },
         )
-        self._write_bytes(manifest_path, manifest_bytes, exclusive=True)
+        _atomic.write_bytes(self.spark, manifest_path, manifest_bytes, exclusive=True)
         # OPTIMISTIC COMMIT: the data manifest above is immutable (entry
         # seqs are null/pinned, so it is sequence-independent), but
         # everything derived from the table tip — sequence number,
@@ -4281,7 +4300,7 @@ class IcebergTable:
                     s for s in meta["snapshots"] if s["snapshot-id"] == cur_sid
                 )
                 _, prior = read_container(
-                    self._read_bytes(cur_snap["manifest-list"])
+                    _atomic.read_bytes(self.spark, cur_snap["manifest-list"])
                 )
                 if replace:
                     # dynamic overwrite: data manifests are replaced by the
@@ -4310,7 +4329,7 @@ class IcebergTable:
                     "format-version": b"2",
                 },
             )
-            self._write_bytes(mlist_path, mlist_bytes, exclusive=True)
+            _atomic.write_bytes(self.spark, mlist_path, mlist_bytes, exclusive=True)
             now = int(time.time() * 1000)
             snap = {
                 "snapshot-id": sid,
@@ -4432,10 +4451,10 @@ class IcebergTable:
             keep_meta: set[str] = set()
             for s in keep_snaps:
                 keep_meta.add(s["manifest-list"])
-                _, manifests = read_container(self._read_bytes(s["manifest-list"]))
+                _, manifests = read_container(_atomic.read_bytes(self.spark, s["manifest-list"]))
                 for m in manifests:
                     keep_meta.add(m["manifest_path"])
-                    _, rows = read_container(self._read_bytes(m["manifest_path"]))
+                    _, rows = read_container(_atomic.read_bytes(self.spark, m["manifest_path"]))
                     for e in rows:
                         keep_data.add(e["data_file"]["file_path"])
             victims: set[str] = set()
@@ -4443,11 +4462,11 @@ class IcebergTable:
                 if s["manifest-list"] in keep_meta:
                     continue
                 victims.add(s["manifest-list"])
-                _, manifests = read_container(self._read_bytes(s["manifest-list"]))
+                _, manifests = read_container(_atomic.read_bytes(self.spark, s["manifest-list"]))
                 for m in manifests:
                     if m["manifest_path"] not in keep_meta:
                         victims.add(m["manifest_path"])
-                    _, rows = read_container(self._read_bytes(m["manifest_path"]))
+                    _, rows = read_container(_atomic.read_bytes(self.spark, m["manifest_path"]))
                     for e in rows:
                         p = e["data_file"]["file_path"]
                         if p not in keep_data:
@@ -4483,7 +4502,6 @@ class IcebergTable:
                 self._write_metadata(v + 1, new_meta)
             except IcebergCommitConflict:
                 continue  # racer landed: recompute against the new tip
-            fs = self._fs()
             deleted = 0
             prefix = self.root.rstrip("/") + "/"
             for p in victims:
@@ -4494,7 +4512,7 @@ class IcebergTable:
                 if not p.startswith(prefix):
                     continue
                 try:
-                    if fs.delete(self._path(p), False):
+                    if _atomic.delete(self.spark, p):
                         deleted += 1
                 except Exception:
                     pass  # already gone
@@ -4517,33 +4535,21 @@ class IcebergTable:
         meta = self.metadata()
         referenced: set[str] = set()
         for s in meta.get("snapshots", []):
-            _, manifests = read_container(self._read_bytes(s["manifest-list"]))
+            _, manifests = read_container(_atomic.read_bytes(self.spark, s["manifest-list"]))
             for m in manifests:
-                _, rows = read_container(self._read_bytes(m["manifest_path"]))
+                _, rows = read_container(_atomic.read_bytes(self.spark, m["manifest_path"]))
                 for e in rows:
-                    referenced.add(e["data_file"]["file_path"])
-        fs = self._fs()
-        data_dir = self._path(f"{self.root}/data")
-        if not fs.exists(data_dir):
-            return 0
+                    referenced.add(_atomic.path_only(e["data_file"]["file_path"]))
         now = int(time.time() * 1000)
         deleted = 0
-        it = fs.listFiles(data_dir, True)
-        victims = []
-        while it.hasNext():
-            st = it.next()
-            p = st.getPath().toUri().getPath()
+        for path, _size, mtime in _atomic.list_files(self.spark, f"{self.root}/data"):
+            p = _atomic.path_only(path)
             if p in referenced:
                 continue
-            if (
-                older_than_ms is not None
-                and st.getModificationTime() > now - older_than_ms
-            ):
+            if older_than_ms is not None and mtime > now - older_than_ms:
                 continue
-            victims.append(p)
-        for p in victims:
             try:
-                if fs.delete(self._path(p), False):
+                if _atomic.delete(self.spark, path):
                     deleted += 1
             except Exception:
                 pass  # already gone
@@ -4563,52 +4569,26 @@ class IcebergTable:
             ]
             for s in meta["partition-specs"]
         }
-        ptypes = {f.name: f.dataType for f in schema.fields}
         entries, _ = self._entries_for_snapshot(meta, None)
         if not entries:
             return None
-        groups: dict[tuple, list[str]] = {}
-        for e in entries:
-            part = e["data_file"].get("partition", {}) or {}
-            era_cols = idcols_by_spec.get(e["_spec_id"], [])
-            key = (
-                e["_spec_id"],
-                tuple((c, part.get(c)) for c in era_cols),
-            )
-            groups.setdefault(key, []).append(e["data_file"]["file_path"])
-        pair_frames = []
-        for (spec_id, key), paths in groups.items():
-            era_cols = set(idcols_by_spec.get(spec_id, []))
-            data_schema = StructType(
-                [f for f in schema.fields if f.name not in era_cols]
-            )
-            df = self.spark.read.schema(data_schema).parquet(*paths)
-            for col, val in key:
-                df = df.withColumn(col, F.lit(val).cast(ptypes[col]))
-            pair_frames.append(
-                df.filter(condition).select(
-                    # spec: file_path must equal the manifest's raw form
-                    _file_path_raw(F.col("_metadata.file_path")).alias(
-                        "file_path"
-                    ),
-                    F.col("_metadata.row_index").alias("pos"),
-                )
-            )
-        pairs = pair_frames[0]
-        for f in pair_frames[1:]:
-            pairs = pairs.unionByName(f)
-        return pairs
+        # spec: file_path must equal the manifest's raw form
+        return (
+            self._era_scan(entries, schema, idcols_by_spec, with_ri=True)
+            .filter(condition)
+            .select(F.col("__fp").alias("file_path"), F.col("__ri").alias("pos"))
+        )
 
     def _pos_delete_pairs_df(
         self, pos_entries: list[dict], live_paths: list[str]
     ) -> DataFrame:
         """(file_path, pos) pairs from content=1 delete entries — v2
         parquet pair files and v3 puffin deletion vectors, unioned into
-        one frame. DV blobs decode EXECUTOR-side (binaryFile scan of the
-        puffin containers + an Arrow-batched slice/parse per blob), so
-        deleted positions never materialize on the driver; each entry's
-        ``referenced_data_file`` / ``content_offset`` / size address its
-        blob exactly."""
+        one frame. Parquet pairs stay a scan; DV blobs are read and
+        decoded on the driver (each entry's ``referenced_data_file`` /
+        ``content_offset`` / size address its blob exactly) and enter
+        the plan as one broadcast local frame — deletion_vectors.py's
+        rule, O(deleted rows) driver memory."""
         parquet_paths = [
             e["data_file"]["file_path"]
             for e in pos_entries
@@ -4627,52 +4607,36 @@ class IcebergTable:
         frames: list[DataFrame] = []
         if parquet_paths:
             # delete files record RAW manifest-form paths (spec) — compared
-            # verbatim; only encoded-form legacy rows fall back to a decode
-            frames.append(
-                _normalize_stored_delete_paths(
-                    self.spark,
-                    self.spark.read.schema(
-                        "file_path string, pos long"
-                    ).parquet(*parquet_paths),
-                    live_paths,
-                )
-            )
-        if dv_rows:
-            spec_df = local_frame(
+            # verbatim; only encoded-form legacy rows fall back to a decode.
+            # The legacy probe (one Spark job) runs only while some file
+            # is not yet known to be raw-form
+            probe = not self._raw_form_deletes.issuperset(parquet_paths)
+            pairs, legacy = _normalize_stored_delete_paths(
                 self.spark,
-                dv_rows, "puffin string, file_path string, off long, len long"
+                self.spark.read.schema("file_path string, pos long").parquet(
+                    *parquet_paths
+                ),
+                live_paths if probe else None,
             )
-            bins = (
-                self.spark.read.format("binaryFile")
-                .load(sorted({r[0] for r in dv_rows}))
-                .select(
-                    _file_path_raw(F.col("path")).alias("puffin"), "content"
-                )
-            )
+            if not legacy:
+                self._raw_form_deletes.update(parquet_paths)
+            frames.append(pairs)
+        if dv_rows:
+            from projectdatalake_spark.sources.puffin import dv_blob_positions
 
-            def decode(batches):
-                import pandas as pd
-
-                from projectdatalake_spark.sources.puffin import (
-                    dv_blob_positions,
-                )
-
-                for pdf in batches:
-                    for content, fp, off, ln in zip(
-                        pdf["content"], pdf["file_path"], pdf["off"], pdf["len"]
-                    ):
-                        payload = bytes(content)[int(off) : int(off) + int(ln)]
-                        pos = sorted(dv_blob_positions(payload))
-                        if pos:
-                            yield pd.DataFrame(
-                                {"file_path": fp, "pos": pos}
-                            )
-
-            frames.append(
-                bins.join(F.broadcast(spec_df), "puffin").mapInPandas(
-                    decode, "file_path string, pos long"
-                )
-            )
+            # each puffin read once through the seam; every blob sliced
+            # and decoded (CRC-checked) on the driver
+            by_file: dict[str, set[int]] = {}
+            for puffin in sorted({r[0] for r in dv_rows}):
+                data = _atomic.read_bytes(self.spark, puffin)
+                for p, fp, off, ln in dv_rows:
+                    if p == puffin:
+                        by_file.setdefault(
+                            _atomic.path_only(fp), set()
+                        ).update(dv_blob_positions(data[off : off + ln]))
+            frames.append(_dv.pairs_frame(self.spark, by_file))
+        if not parquet_paths:
+            return F.broadcast(frames[0])
         out = frames[0]
         for f in frames[1:]:
             out = out.unionByName(f)
@@ -4694,29 +4658,15 @@ class IcebergTable:
         pairs.repartition(1).sortWithinPartitions("file_path", "pos").write.mode(
             "overwrite"
         ).parquet(stage)
-        fs = self._fs()
-        del_files = []
-        it = fs.listFiles(self._path(stage), True)
-        while it.hasNext():
-            status = it.next()
-            p = status.getPath()
-            if p.getName().endswith(".parquet"):
-                del_files.append((p.toUri().getPath(), status.getLen()))
-        counts = {
-            _atomic.uri_to_path(r["__file"]): r["count"]
-            for r in self.spark.read.parquet(*[f for f, _ in del_files])
-            .withColumn("__file", F.input_file_name())
-            .groupBy("__file")
-            .count()
-            .collect()
-        }
+        del_files, counts = self._staged_files(stage)
         n_deleted = sum(counts.values())
         if n_deleted == 0:
-            fs.delete(self._path(stage), True)
+            _atomic.delete(self.spark, stage, recursive=True)
             return None
         # the pair file spans every partition → global delete, written
         # under the unpartitioned spec (empty tuple) per the Iceberg spec
         del_spec = self._unpartitioned_spec(meta)
+        self._raw_form_deletes.update(p for p, _ in del_files)
         return self._commit_delete_snapshot(
             meta,
             del_spec,
@@ -4766,13 +4716,12 @@ class IcebergTable:
         ACCUMULATES vectors — readers union all DVs for a file, which is
         semantically equal to the spec's maintained-current-DV.
 
-        Bitmaps are built executor-side (one applyInPandas per masked
-        file, bitmap-compressed state); only the compressed blobs reach
-        the driver for puffin assembly — O(masked files), not O(deleted
-        rows). Returns the new snapshot id, or None when nothing
+        Matching positions are grouped per file in the JVM and reach the
+        driver as one sorted list per masked file
+        (deletion_vectors.positions_by_file), where each becomes a blob
+        — O(deleted rows) driver memory, the limit Delta's DV delete has
+        too. Returns the new snapshot id, or None when nothing
         matched."""
-        import pandas as pd
-
         from projectdatalake_spark.sources.puffin import (
             DV_BLOB_TYPE,
             dv_blob_payload,
@@ -4784,23 +4733,10 @@ class IcebergTable:
         if pairs is None:
             return None
 
-        def to_blob(pdf: pd.DataFrame) -> pd.DataFrame:
-            positions = [int(p) for p in pdf["pos"]]
-            return pd.DataFrame(
-                [[
-                    pdf["file_path"].iloc[0],
-                    dv_blob_payload(positions),
-                    len(positions),
-                ]],
-                columns=["file_path", "blob", "card"],
-            )
-
-        blobs = sorted(
-            (r.file_path, bytes(r.blob), int(r.card))
-            for r in pairs.groupBy("file_path")
-            .applyInPandas(to_blob, "file_path string, blob binary, card long")
-            .collect()
-        )
+        blobs = [
+            (fp, dv_blob_payload(pos), len(pos))
+            for fp, pos in sorted(_dv.positions_by_file(pairs).items())
+        ]
         if not blobs:
             return None
         sid = uuid.uuid4().int % (1 << 62)
@@ -4825,7 +4761,7 @@ class IcebergTable:
             properties={"created-by": "projectdatalake-spark dv writer"},
         )
         puffin_path = f"{self.root}/data/{uuid.uuid4().hex}-deletes.puffin"
-        self._write_bytes(puffin_path, puffin_bytes, exclusive=True)
+        _atomic.write_bytes(self.spark, puffin_path, puffin_bytes, exclusive=True)
         # recover each blob's offset/length from the written container
         # (write_puffin assigned them) — addressing must match the bytes
         from projectdatalake_spark.sources.puffin import read_puffin
@@ -4937,7 +4873,7 @@ class IcebergTable:
                 "content": b"deletes",
             },
         )
-        self._write_bytes(manifest_path, manifest_bytes, exclusive=True)
+        _atomic.write_bytes(self.spark, manifest_path, manifest_bytes, exclusive=True)
         return manifest_path, len(manifest_bytes)
 
     def _stage_equality_keys(
@@ -4964,25 +4900,10 @@ class IcebergTable:
         ).distinct()
         stage = f"{self.root}/data/{uuid.uuid4().hex}-eqdel"
         distinct.repartition(1).write.mode("overwrite").parquet(stage)
-        fs = self._fs()
-        del_files = []
-        it = fs.listFiles(self._path(stage), True)
-        while it.hasNext():
-            status = it.next()
-            p = status.getPath()
-            if p.getName().endswith(".parquet"):
-                del_files.append((p.toUri().getPath(), status.getLen()))
-        counts = {
-            _atomic.uri_to_path(r["__file"]): r["count"]
-            for r in self.spark.read.parquet(*[f for f, _ in del_files])
-            .withColumn("__file", F.input_file_name())
-            .groupBy("__file")
-            .count()
-            .collect()
-        }
+        del_files, counts = self._staged_files(stage)
         n_keys = sum(counts.values())
         if n_keys == 0:
-            fs.delete(self._path(stage), True)
+            _atomic.delete(self.spark, stage, recursive=True)
             return [], eq_ids, 0
         return (
             [
@@ -5138,7 +5059,7 @@ class IcebergTable:
             cur_snap = next(
                 s for s in meta["snapshots"] if s["snapshot-id"] == cur_sid
             )
-            _, prior = read_container(self._read_bytes(cur_snap["manifest-list"]))
+            _, prior = read_container(_atomic.read_bytes(self.spark, cur_snap["manifest-list"]))
             mlist_path = f"{self.root}/metadata/snap-{sid}-1-{uuid.uuid4().hex}.avro"
             mlist_bytes = write_container(
                 _manifest_list_schema(),
@@ -5149,7 +5070,7 @@ class IcebergTable:
                     "format-version": b"2",
                 },
             )
-            self._write_bytes(mlist_path, mlist_bytes, exclusive=True)
+            _atomic.write_bytes(self.spark, mlist_path, mlist_bytes, exclusive=True)
             now = int(time.time() * 1000)
             snap = {
                 "snapshot-id": sid,

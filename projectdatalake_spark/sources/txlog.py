@@ -23,9 +23,9 @@ replaying the log into a snapshot):
   move files in before committing; files that never make it into a commit
   are ignored by snapshot readers and reaped by ``vacuum``.
 
-Everything goes through the Hadoop FileSystem API (same code path for
-file://, hdfs://, s3a://), not ``os`` — the JVM filesystem the Spark job
-itself writes through.
+Log, checkpoint and staging I/O goes through the filesystem seam in
+``sources/atomic.py``: ``os`` for local roots, the Hadoop FileSystem
+(the one the Spark job itself writes through) for hdfs:// and s3a://.
 
 Scale note: log replay and file-list planning are driver-side and O(files),
 the same contract as Delta's scan planning; snapshot reads hand Spark an
@@ -305,8 +305,6 @@ class TxTable:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root.rstrip("/")
-        self._jvm = spark.sparkContext._jvm
-        self._hconf = spark.sparkContext._jsc.hadoopConfiguration()
         # commit-JSON memo: commits are IMMUTABLE once published
         # (exclusive create), so a version read once never re-reads; the
         # directory is still listed on every history() call, which is
@@ -315,22 +313,6 @@ class TxTable:
         # re-parse the whole log several times per operation.
         self._commit_memo: dict[int, dict] = {}
         self._checkpoint_memo: dict[int, dict] = {}
-
-    # --- filesystem plumbing (Hadoop FS: scheme-agnostic) -----------------
-
-    def _path(self, p: str):
-        return self._jvm.org.apache.hadoop.fs.Path(p)
-
-    def _fs(self):
-        return self._path(self.root).getFileSystem(self._hconf)
-
-    def _read_text(self, p: str) -> str:
-        fs = self._fs()
-        stream = fs.open(self._path(p))
-        try:
-            return self._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
-        finally:
-            stream.close()
 
     def _read_json_retry(self, p: str) -> dict:
         """Read + parse a log file, tolerating TRANSIENT torn states.
@@ -347,7 +329,7 @@ class TxTable:
         last: Exception | None = None
         for attempt in range(40):
             try:
-                text = self._read_text(p)
+                text = _atomic.read_text(self.spark, p)
                 if text.strip():
                     return json.loads(text)
                 last = ValueError(f"empty commit file {p}")
@@ -356,39 +338,12 @@ class TxTable:
             _atomic.backoff_sleep(attempt)
         raise IOError(f"torn or unreadable log file {p}") from last
 
-    def _write_text_exclusive(self, p: str, text: str) -> None:
-        """Create-if-absent write — the commit protocol's mutual exclusion.
-
-        Local paths use POSIX O_CREAT|O_EXCL (sources/atomic.py): Hadoop's
-        local create(overwrite=false) is check-then-create, a TOCTOU race
-        where two commits can both win the same version file."""
-        if _atomic.is_local_path(p):
-            try:
-                _atomic.write_exclusive_local(p, text.encode("utf-8"))
-            except _atomic.ExclusiveCreateConflict as exc:
-                raise CommitConflict(p) from exc
-            return
-        fs = self._fs()
-        try:
-            out = fs.create(self._path(p), False)
-        except Exception as exc:  # py4j-wrapped FileAlreadyExistsException
-            raise CommitConflict(p) from exc
-        try:
-            out.write(bytearray(text.encode("utf-8")))
-        finally:
-            out.close()
-
     # --- log replay -------------------------------------------------------
 
     def history(self) -> list[dict]:
         """All commits, version-ascending. Empty list = table absent."""
-        fs = self._fs()
-        log_dir = self._path(f"{self.root}/{_LOG_DIR}")
-        if not fs.exists(log_dir):
-            return []
         versions = []
-        for status in fs.listStatus(log_dir):
-            name = status.getPath().getName()
+        for name in _atomic.list_dir(self.spark, f"{self.root}/{_LOG_DIR}"):
             if name.endswith(".json") and name[:-5].isdigit():
                 versions.append(int(name[:-5]))
         present = set(versions)
@@ -426,16 +381,16 @@ class TxTable:
     def _read_checkpoint(self) -> dict | None:
         """The newest log checkpoint at or below no particular version —
         ``_last_checkpoint`` names it, mirroring Delta's discovery file."""
-        fs = self._fs()
-        marker = self._path(f"{self.root}/{_LOG_DIR}/_last_checkpoint")
-        if not fs.exists(marker):
+        marker = f"{self.root}/{_LOG_DIR}/_last_checkpoint"
+        if not _atomic.exists(self.spark, marker):
             return None
         try:
-            v = int(json.loads(self._read_text(str(marker)))["version"])
+            v = int(json.loads(_atomic.read_text(self.spark, marker))["version"])
             body = self._checkpoint_memo.get(v)
             if body is None:  # checkpoint files are immutable per version
                 body = json.loads(
-                    self._read_text(
+                    _atomic.read_text(
+                        self.spark,
                         f"{self.root}/{_LOG_DIR}/{v:08d}.checkpoint.json"
                     )
                 )
@@ -613,15 +568,16 @@ class TxTable:
             # delete_dv commits that wrote them
             "dvs": self._active_dvs(v),
         }
-        fs = self._fs()
         ck = f"{self.root}/{_LOG_DIR}/{v:08d}.checkpoint.json"
-        if not fs.exists(self._path(ck)):
-            self._write_text_exclusive(ck, json.dumps(body, indent=1))
-        out = fs.create(self._path(f"{self.root}/{_LOG_DIR}/_last_checkpoint"), True)
-        try:
-            out.write(bytearray(json.dumps({"version": v}).encode("utf-8")))
-        finally:
-            out.close()
+        if not _atomic.exists(self.spark, ck):
+            try:
+                _atomic.write_text(self.spark, ck, json.dumps(body, indent=1), exclusive=True)
+            except _atomic.ExclusiveCreateConflict as exc:
+                raise CommitConflict(str(exc)) from exc
+        _atomic.write_text(
+            self.spark, f"{self.root}/{_LOG_DIR}/_last_checkpoint",
+            json.dumps({"version": v}), exclusive=False,
+        )
         return v
 
     def _active_files(self, version: int | None = None) -> list[dict]:
@@ -1336,47 +1292,18 @@ class TxTable:
             writer = writer.partitionBy(*part_names)
         writer.parquet(stage_dir)
         adds: list[dict] = []
-        if _atomic.is_local_path(self.root):
-            # local fast path (r13): the Hadoop loop below costs one py4j
-            # roundtrip per file for listing and three more per rename —
-            # pure driver time on every commit (guide §5: the driver
-            # should do almost no work; cProfile in OPTIMIZATION_r13.md)
-            stage_uri = _atomic.strip_file_scheme(stage_dir)
-            root_uri = _atomic.strip_file_scheme(self.root)
-            for p, size, _mtime in _atomic.list_local_files(stage_uri):
-                rel = p[len(stage_uri):].lstrip("/")
-                partition = {
-                    seg.split("=", 1)[0]: seg.split("=", 1)[1]
-                    for seg in rel.split("/")[:-1]
-                    if "=" in seg
-                }
-                _atomic.move_local_file(p, f"{root_uri}/{rel}")
-                adds.append({"path": rel, "partition": partition, "size": size})
-            _atomic.delete_local_tree(stage_uri)
-        else:
-            fs = self._fs()
-            stage_path = self._path(stage_dir)
-            it = fs.listFiles(stage_path, True)
-            staged = []
-            while it.hasNext():
-                status = it.next()
-                p = status.getPath()
-                if p.getName().endswith(".parquet"):
-                    staged.append((p, status.getLen()))
-            stage_uri = stage_path.toUri().getPath()
-            for p, size in staged:
-                rel = p.toUri().getPath()[len(stage_uri) :].lstrip("/")
-                partition = {
-                    seg.split("=", 1)[0]: seg.split("=", 1)[1]
-                    for seg in rel.split("/")[:-1]
-                    if "=" in seg
-                }
-                dest = self._path(f"{self.root}/{rel}")
-                fs.mkdirs(dest.getParent())
-                if not fs.rename(p, dest):
-                    raise IOError(f"failed to move staged file {p} -> {dest}")
-                adds.append({"path": rel, "partition": partition, "size": size})
-            fs.delete(stage_path, True)
+        stage_uri = _atomic.path_only(stage_dir)
+        for p, size, _mtime in _atomic.list_files(self.spark, stage_dir, ".parquet"):
+            rel = _atomic.path_only(p)[len(stage_uri) :].lstrip("/")
+            partition = {
+                seg.split("=", 1)[0]: seg.split("=", 1)[1]
+                for seg in rel.split("/")[:-1]
+                if "=" in seg
+            }
+            if not _atomic.rename(self.spark, p, f"{self.root}/{rel}"):
+                raise IOError(f"failed to move staged file {p} -> {self.root}/{rel}")
+            adds.append({"path": rel, "partition": partition, "size": size})
+        _atomic.delete(self.spark, stage_dir, recursive=True)
         self._attach_stats(adds)
         return adds
 
@@ -1604,9 +1531,9 @@ class TxTable:
                 **(extra_fn(version) if extra_fn is not None else {}),
             }
             try:
-                self._write_text_exclusive(
-                    f"{self.root}/{_LOG_DIR}/{version:08d}.json",
-                    json.dumps(commit, indent=1),
+                _atomic.write_text(
+                    self.spark, f"{self.root}/{_LOG_DIR}/{version:08d}.json",
+                    json.dumps(commit, indent=1), exclusive=True,
                 )
                 if version > 0 and version % 10 == 0:
                     try:  # best-effort: a failed checkpoint costs replay, not data
@@ -1614,7 +1541,7 @@ class TxTable:
                     except Exception:
                         pass
                 return version
-            except CommitConflict:
+            except _atomic.ExclusiveCreateConflict:
                 # lost the race: recompute against the new log tip. Appends
                 # commute; precondition-guarded commits (idempotent append,
                 # optimize) keep their planned removes — the precondition
@@ -2340,11 +2267,10 @@ class TxTable:
         stage_id = uuid.uuid4().hex
         stage_dir = f"{self.root}/{_STAGING}/{stage_id}"
         hits.coalesce(1).write.mode("overwrite").parquet(stage_dir)
-        fs = self._fs()
         staged = self.spark.read.parquet(stage_dir)
         n = staged.count()
         if n == 0:
-            fs.delete(self._path(stage_dir), True)
+            _atomic.delete(self.spark, stage_dir, recursive=True)
             return None
         touched_abs = [r.file_path for r in staged.select("file_path").distinct().collect()]
 
@@ -2362,20 +2288,12 @@ class TxTable:
             by_abs[_atomic.uri_to_path(p)] for p in touched_abs
         )
         dv_rel = f"{_DV_DIR}/{stage_id}.parquet"
-        it = fs.listFiles(self._path(stage_dir), True)
-        moved = False
-        while it.hasNext():
-            p = it.next().getPath()
-            if p.getName().endswith(".parquet"):
-                dest = self._path(f"{self.root}/{dv_rel}")
-                fs.mkdirs(dest.getParent())
-                if not fs.rename(p, dest):
-                    raise IOError(f"failed to move deletion vector to {dest}")
-                moved = True
-                break
-        fs.delete(self._path(stage_dir), True)
-        if not moved:
+        parts = _atomic.list_files(self.spark, stage_dir, ".parquet")
+        if not parts:
             raise IOError("deletion vector staging produced no parquet file")
+        if not _atomic.rename(self.spark, parts[0][0], f"{self.root}/{dv_rel}"):
+            raise IOError(f"failed to move deletion vector to {self.root}/{dv_rel}")
+        _atomic.delete(self.spark, stage_dir, recursive=True)
         return dv_rel, touched_rel, n
 
     def update_where_dv(self, condition: str, set_exprs: dict[str, str]) -> int | None:
@@ -2408,10 +2326,9 @@ class TxTable:
         stage_id = uuid.uuid4().hex
         stage_dir = f"{self.root}/{_STAGING}/{stage_id}"
         logical.filter(cond).write.mode("overwrite").parquet(stage_dir)
-        fs = self._fs()
         matches = self.spark.read.parquet(stage_dir)
         if matches.limit(1).count() == 0:
-            fs.delete(self._path(stage_dir), True)
+            _atomic.delete(self.spark, stage_dir, recursive=True)
             return None
         staged = self._stage_dv(
             matches.select(
@@ -2436,7 +2353,7 @@ class TxTable:
             dv={"path": dv_rel, "files": touched_rel, "rows": n},
             precondition=positions_still_valid,
         )
-        fs.delete(self._path(stage_dir), True)
+        _atomic.delete(self.spark, stage_dir, recursive=True)
         return version
 
     def restore(self, version: int) -> int | None:
@@ -2457,9 +2374,8 @@ class TxTable:
         if not target:
             raise ValueError(f"version {version} has no data to restore")
         current = {a["path"] for a in self._active_files()}
-        fs = self._fs()
         for p, a in target.items():
-            if p not in current and not fs.exists(self._path(self._data_path(a))):
+            if p not in current and not _atomic.exists(self.spark, self._data_path(a)):
                 raise ValueError(
                     f"cannot restore to version {version}: {p} was vacuumed"
                 )
@@ -3271,27 +3187,18 @@ class TxTable:
         """Delete data files unreachable from the last ``retain_versions+1``
         snapshots — staged-but-never-committed orphans and removed files
         past the time-travel horizon. Returns deleted relative paths."""
-        fs = self._fs()
         latest = self.latest_version()
         keep: set[str] = set()
         for v in range(max(0, latest - retain_versions), latest + 1):
             keep.update(a["path"] for a in self._active_files(v))
             keep.update(dv["path"] for dv in self._active_dvs(v))
-        root_path = self._path(self.root)
-        root_uri = root_path.toUri().getPath()
+        root_uri = _atomic.path_only(self.root)
         deleted = []
-        it = fs.listFiles(root_path, True)
-        doomed = []
-        while it.hasNext():
-            p = it.next().getPath()
-            rel = p.toUri().getPath()[len(root_uri) :].lstrip("/")
-            top = rel.split("/", 1)[0]
-            if top in (_LOG_DIR, _STAGING):
+        for p, _size, _m in _atomic.list_files(self.spark, self.root, ".parquet"):
+            rel = _atomic.path_only(p)[len(root_uri) :].lstrip("/")
+            if rel.split("/", 1)[0] in (_LOG_DIR, _STAGING) or rel in keep:
                 continue
-            if rel.endswith(".parquet") and rel not in keep:
-                doomed.append((p, rel))
-        for p, rel in doomed:
-            fs.delete(p, False)
+            _atomic.delete(self.spark, p)
             deleted.append(rel)
         return deleted
 
@@ -3315,14 +3222,13 @@ class TxTable:
             )
         # never prune past the checkpoint: replay starts there
         cutoff = min(cutoff, ck["version"] + 1)
-        fs = self._fs()
         deleted = []
         for c in self.history():
             v = c["version"]
             if v >= cutoff:
                 break
             name = f"{v:08d}.json"
-            fs.delete(self._path(f"{self.root}/{_LOG_DIR}/{name}"), False)
+            _atomic.delete(self.spark, f"{self.root}/{_LOG_DIR}/{name}")
             deleted.append(name)
         return deleted
 

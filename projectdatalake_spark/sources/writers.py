@@ -52,34 +52,24 @@ def compact_parquet(
     accumulate small files from incremental writes (every dynamic-overwrite
     batch adds per-partition files) until open/footer overhead dominates
     scans — at 100 TB, listing+opening 10⁶ tiny files costs more than
-    reading them. Sizing uses the Hadoop FileSystem API, so the same code
-    compacts file:// and s3a:// paths. Returns (files_before, files_after).
+    reading them. Sizing and the swap go through the filesystem seam
+    (sources/atomic.py), so the same code compacts file:// and s3a:// paths. Returns (files_before, files_after).
 
     Plain-parquet caveat (documented, inherent without a table format):
     the swap is directory-replace, not transactional — run it in the
     pipeline's maintenance window; Delta/Iceberg make it atomic.
     """
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(conf)
-    files_before = sum(
-        1
-        for f in fs.listStatus(hpath)
-        if f.getPath().getName().endswith(".parquet")
-    )
-    total_bytes = fs.getContentSummary(hpath).getLength()
+    from projectdatalake_spark.sources import atomic
+
+    files_before = sum(1 for n in atomic.list_dir(spark, path) if n.endswith(".parquet"))
+    total_bytes = sum(size for _p, size, _m in atomic.list_files(spark, path))
     n_files = max(1, -(-total_bytes // (target_file_mb * 1024 * 1024)))
     df = spark.read.parquet(path)
     tmp = path.rstrip("/") + "__compacting"
     df.repartition(int(n_files)).write.mode("overwrite").parquet(tmp)
-    fs.delete(hpath, True)
-    fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), hpath)
-    files_after = sum(
-        1
-        for f in fs.listStatus(hpath)
-        if f.getPath().getName().endswith(".parquet")
-    )
+    atomic.delete(spark, path, recursive=True)
+    atomic.rename(spark, tmp, path)
+    files_after = sum(1 for n in atomic.list_dir(spark, path) if n.endswith(".parquet"))
     return files_before, files_after
 
 

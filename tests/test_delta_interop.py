@@ -10,6 +10,7 @@ fields, stats shape) — the parts a foreign reader would parse."""
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import tempfile
@@ -18,6 +19,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from projectdatalake_spark.sources import atomic as _atomic
 from projectdatalake_spark.sources.delta_interop import (
     DeltaCommitConflict,
     DeltaProtocolError,
@@ -1078,6 +1080,21 @@ def test_shallow_clone_carries_row_tracking_domain(spark, root):
     assert t._row_id_high_water_mark(t._state()) == 99
 
 
+@contextlib.contextmanager
+def _full_range_sample(spark):
+    """Spark seeds its range-partition sample with the RDD id, which
+    counts every RDD the session built before, so the OPTIMIZE file
+    boundaries (and the overlap counts below) moved with what ran
+    earlier in the process. A sample of every row makes them a function
+    of the data alone."""
+    key = "spark.sql.execution.rangeExchange.sampleSizePerPartition"
+    spark.conf.set(key, "20000")
+    try:
+        yield
+    finally:
+        spark.conf.unset(key)
+
+
 def test_optimize_zorder_multi_column_skipping(spark, root):
     """OPTIMIZE ZORDER BY: after Z-clustering on (x, y), file-level
     stats prune narrow predicates on EITHER column — the multi-column
@@ -1094,7 +1111,8 @@ def test_optimize_zorder_multi_column_skipping(spark, root):
     )
     t = DeltaTable.create(spark, root, df)
     before = t.snapshot().count()
-    v = t.optimize(zorder_by=("x", "y"), target_files=16)
+    with _full_range_sample(spark):
+        v = t.optimize(zorder_by=("x", "y"), target_files=16)
     assert v is not None
     assert t.snapshot().count() == before
     adds = list(t._state()["adds"].values())
@@ -1133,7 +1151,8 @@ def test_optimize_hilbert_curve_skipping(spark, root):
     )
     t = DeltaTable.create(spark, root, df)
     before = t.snapshot().count()
-    v = t.optimize(zorder_by=("x", "y"), curve="hilbert", target_files=16)
+    with _full_range_sample(spark):
+        v = t.optimize(zorder_by=("x", "y"), curve="hilbert", target_files=16)
     assert v is not None
     assert t.snapshot().count() == before
     adds = list(t._state()["adds"].values())
@@ -1797,9 +1816,8 @@ def test_log_compaction_reconciles_and_survives_pruning(spark, root):
     assert len(before) == 91  # 100 ids minus the 9 DV-deleted
     # a cleanup drops the per-commit JSONs inside the compacted range:
     # replay must route through the compaction file
-    fs = t._fs()
     for v in range(1, 4):
-        assert fs.delete(t._path(f"{root}/_delta_log/{v:020d}.json"), False)
+        assert _atomic.delete(t.spark, f"{root}/_delta_log/{v:020d}.json")
     fresh = DeltaTable(spark, root)
     after = {r.id for r in fresh.snapshot().collect()}
     assert after == before
@@ -1892,9 +1910,8 @@ def test_ict_floor_survives_log_compaction_pruning(spark, root, monkeypatch):
     ts0 = hist[0]["timestamp"]
     ict3 = hist[3]["inCommitTimestamp"]
     t.compact_log(1, 3)
-    fs = t._fs()
     for v in range(1, 4):
-        assert fs.delete(t._path(f"{root}/_delta_log/{v:020d}.json"), False)
+        assert _atomic.delete(t.spark, f"{root}/_delta_log/{v:020d}.json")
     # clock skew: the wall clock collapses below every pruned ICT
     monkeypatch.setattr(D.time, "time", lambda: 0.001)
     fresh = DeltaTable(spark, root)
@@ -1924,9 +1941,8 @@ def test_version_at_leading_pruned_gap(spark, root):
     hist = {h["version"]: h for h in t.history()}
     ts_v0 = hist[0]["timestamp"]
     t.compact_log(0, 2)
-    fs = t._fs()
     for v in range(0, 3):
-        assert fs.delete(t._path(f"{root}/_delta_log/{v:020d}.json"), False)
+        assert _atomic.delete(t.spark, f"{root}/_delta_log/{v:020d}.json")
     fresh = DeltaTable(spark, root)
     assert fresh.snapshot().count() == 50  # replay through the compaction
     # ts at pruned v0: POSTDATES the (pruned) table start — the old code
@@ -1954,10 +1970,9 @@ def test_version_at_checkpoint_only_survivors(spark, root):
     t.append(_df(spark, 30, 40))                           # v2
     t.checkpoint()                                          # at v2
     t.prune_log()
-    fs = t._fs()
     # prune_log keeps the checkpoint-version JSON; remove it too so the
     # checkpoint is the ONLY surviving log file
-    fs.delete(t._path(f"{root}/_delta_log/{2:020d}.json"), False)
+    _atomic.delete(t.spark, f"{root}/_delta_log/{2:020d}.json")
     fresh = DeltaTable(spark, root)
     assert fresh.snapshot().count() == 40  # replays from the checkpoint
     with pytest.raises(ValueError, match="cleaned up"):
@@ -1993,12 +2008,11 @@ def test_ict_compaction_domain_requires_writer_feature(spark, root):
     t2.enable_in_commit_timestamps()
     t2.append(_df(spark, 30, 40))
     t2.append(_df(spark, 40, 50))
-    fs = t2._fs()
     for v in range(0, 4):
         p = f"{root2}/_delta_log/{v:020d}.json"
-        if not fs.exists(t2._path(p)):
+        if not _atomic.exists(t2.spark, p):
             continue
-        lines = t2._read_text(p).splitlines()
+        lines = _atomic.read_text(t2.spark, p).splitlines()
         out = []
         for ln in lines:
             a = json.loads(ln)
@@ -2007,15 +2021,15 @@ def test_ict_compaction_domain_requires_writer_feature(spark, root):
                     set(a["protocol"]["writerFeatures"]) - {"domainMetadata"}
                 )
             out.append(json.dumps(a, separators=(",", ":")))
-        fs.delete(t2._path(p), False)
-        t2._write_text(p, "\n".join(out) + "\n", exclusive=True)
+        _atomic.delete(t2.spark, p)
+        _atomic.write_text(t2.spark, p, "\n".join(out) + "\n", exclusive=True)
     t2 = DeltaTable(spark, root2)
     t2.compact_log(1, 3)
     acts2 = t2._compaction_actions(1, 3)
     assert not any("domainMetadata" in a for a in acts2)
     # replay through the compaction still reconstructs the table
     for v in range(1, 4):
-        fs.delete(t2._path(f"{root2}/_delta_log/{v:020d}.json"), False)
+        _atomic.delete(t2.spark, f"{root2}/_delta_log/{v:020d}.json")
     fresh = DeltaTable(spark, root2)
     assert fresh.snapshot().count() == 50
 

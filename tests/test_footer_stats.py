@@ -405,6 +405,46 @@ def test_footer_semantics_probe(spark, tmp_path):
     assert "dbl" not in null_stats["min"] and null_stats["nulls"]["dbl"] == 2
 
 
+def test_delta_stats_columns_come_from_the_table_schema(spark, tmp_path):
+    """The stats column list is the table schema's, not the first add
+    file's: with the narrower file listed first, a column only the later
+    file carries still gets min, max and null count there (and so can
+    skip it)."""
+    import json
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+
+    from projectdatalake_spark.sources.delta_interop import (
+        DeltaTable,
+        convert_parquet_to_delta,
+    )
+
+    root = tmp_path / "conv"
+    root.mkdir()
+    pq.write_table(pa.table({"id": [1, 2], "a": [1.0, 2.0]}), root / "part-0.parquet")
+    pq.write_table(
+        pa.table({"id": [3, 4, 5], "a": [3.0, None, 5.0], "b": [10, None, 30]}),
+        root / "part-1.parquet",
+    )
+    schema = StructType([
+        StructField("id", LongType()),
+        StructField("a", DoubleType()),
+        StructField("b", LongType()),
+    ])
+    t = convert_parquet_to_delta(spark, str(root), schema)
+    stats = {
+        a["path"]: json.loads(a["stats"])
+        for a in DeltaTable(spark, str(root))._state()["adds"].values()
+    }
+    wide = stats["part-1.parquet"]
+    assert wide["minValues"]["b"] == 10 and wide["maxValues"]["b"] == 30
+    assert wide["nullCount"] == {"id": 0, "a": 1, "b": 1}
+    assert stats["part-0.parquet"]["nullCount"] == {"id": 0, "a": 0, "b": 2}
+    assert sorted(r.id for r in t.snapshot().filter("b > 20").collect()) == [5]
+
+
 def test_delta_convert_absent_column_counts_all_nulls(spark, tmp_path):
     """A file that lacks a table column reads it as all null, so its
     Delta nullCount is its record count, never 0 (a 0 would let an
@@ -536,7 +576,7 @@ def test_delta_non_local_root_takes_spark_stats(spark, tmp_path, monkeypatch):
     for a in got:
         a.pop("stats")
     _remote_root(monkeypatch)
-    t._attach_stats(got, {"part"})
+    t._attach_stats(got, {"part"}, df.schema)
     assert [a["stats"] for a in got] == [a["stats"] for a in want]
 
 

@@ -18,6 +18,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from projectdatalake_spark.sources import atomic as _atomic
 from projectdatalake_spark.sources.avro_codec import read_container
 from projectdatalake_spark.sources.iceberg_interop import (
     IcebergCommitConflict,
@@ -65,9 +66,9 @@ def test_manifest_partition_tuples_typed(spark, root):
     t = IcebergTable.create(spark, root, _df(spark), partition_by=("seg",))
     meta = t.metadata()
     snap = meta["snapshots"][0]
-    _, manifests = read_container(t._read_bytes(snap["manifest-list"]))
+    _, manifests = read_container(_atomic.read_bytes(t.spark, snap["manifest-list"]))
     assert manifests[0]["added_files_count"] > 0
-    _, entries = read_container(t._read_bytes(manifests[0]["manifest_path"]))
+    _, entries = read_container(_atomic.read_bytes(t.spark, manifests[0]["manifest_path"]))
     parts = {e["data_file"]["partition"]["seg"] for e in entries}
     assert parts <= {0, 1, 2} and all(isinstance(p, int) for p in parts)
     total = sum(e["data_file"]["record_count"] for e in entries)
@@ -88,7 +89,7 @@ def test_jvm_avro_parses_our_manifests(spark, root):
             rows.append(str(dfr.next()))
         dfr.close()
         assert rows and "manifest_path" in rows[0]
-    _, manifests = read_container(t._read_bytes(snap["manifest-list"]))
+    _, manifests = read_container(_atomic.read_bytes(t.spark, snap["manifest-list"]))
     reader = jvm.org.apache.avro.generic.GenericDatumReader()
     dfr = jvm.org.apache.avro.file.DataFileReader(
         jvm.java.io.File(manifests[0]["manifest_path"]), reader
@@ -184,7 +185,7 @@ def test_unknown_manifest_content_refused(spark, root):
     t = IcebergTable.create(spark, root, _df(spark, 0, 10))
     meta = t.metadata()
     snap = meta["snapshots"][0]
-    _, manifests = read_container(t._read_bytes(snap["manifest-list"]))
+    _, manifests = read_container(_atomic.read_bytes(t.spark, snap["manifest-list"]))
     manifests[0]["content"] = 2  # a future manifest kind
     from projectdatalake_spark.sources.avro_codec import write_container
     from projectdatalake_spark.sources.iceberg_interop import _manifest_list_schema
@@ -273,9 +274,9 @@ def test_equality_deletes_refused(spark, root):
     t.delete_where("id = 1")
     meta = t.metadata()
     snap = meta["snapshots"][-1]
-    _, manifests = read_container(t._read_bytes(snap["manifest-list"]))
+    _, manifests = read_container(_atomic.read_bytes(t.spark, snap["manifest-list"]))
     dm = next(m for m in manifests if m["content"] == 1)
-    _, entries = read_container(t._read_bytes(dm["manifest_path"]))
+    _, entries = read_container(_atomic.read_bytes(t.spark, dm["manifest_path"]))
     entries[0]["data_file"]["content"] = 2  # pose as an equality delete
     from projectdatalake_spark.sources.avro_codec import write_container
     from projectdatalake_spark.sources.iceberg_interop import (
@@ -381,8 +382,8 @@ def test_manifest_bounds_and_range_skipping(spark, root):
     t = IcebergTable.create(spark, root, df.repartitionByRange(10, "id"))
     meta = t.metadata()
     snap = meta["snapshots"][0]
-    _, manifests = read_container(t._read_bytes(snap["manifest-list"]))
-    _, entries = read_container(t._read_bytes(manifests[0]["manifest_path"]))
+    _, manifests = read_container(_atomic.read_bytes(t.spark, snap["manifest-list"]))
+    _, entries = read_container(_atomic.read_bytes(t.spark, manifests[0]["manifest_path"]))
     e0 = entries[0]["data_file"]
     # iceberg single-value binary bounds keyed by FIELD ID
     assert e0["lower_bounds"] and e0["upper_bounds"]
@@ -642,9 +643,9 @@ def test_equality_delete_applies_and_manifests(spark, root):
     snap = meta["snapshots"][-1]
     assert snap["summary"]["added-equality-deletes"] == "10"
     # manifest entry carries content=2 + the equality field ids
-    _, manifests = read_container(t._read_bytes(snap["manifest-list"]))
+    _, manifests = read_container(_atomic.read_bytes(t.spark, snap["manifest-list"]))
     dm = next(m for m in manifests if m["content"] == 1)
-    _, entries = read_container(t._read_bytes(dm["manifest_path"]))
+    _, entries = read_container(_atomic.read_bytes(t.spark, dm["manifest_path"]))
     rec = entries[0]["data_file"]
     assert rec["content"] == 2
     id_fid = next(
@@ -1046,11 +1047,11 @@ def test_global_delete_written_under_unpartitioned_spec(spark, root):
     assert unpart, "global delete did not register an unpartitioned spec"
     assert meta["default-spec-id"] not in unpart  # data writes keep theirs
     _, manifests = read_container(
-        t._read_bytes(meta["snapshots"][-1]["manifest-list"])
+        _atomic.read_bytes(t.spark, meta["snapshots"][-1]["manifest-list"])
     )
     for dm in (m for m in manifests if m.get("content") == 1):
         assert dm["partition_spec_id"] in unpart
-        _, entries = read_container(t._read_bytes(dm["manifest_path"]))
+        _, entries = read_container(_atomic.read_bytes(t.spark, dm["manifest_path"]))
         for e in entries:
             assert not (e["data_file"].get("partition") or {})
     # semantics unchanged: deletes apply table-wide through our reader
@@ -1088,10 +1089,10 @@ def test_overwrite_manifest_min_sequence_number_covers_carried(spark, root):
     t.overwrite_partitions(fix.repartition(1))
     meta = t.metadata()
     _, manifests = read_container(
-        t._read_bytes(meta["snapshots"][-1]["manifest-list"])
+        _atomic.read_bytes(t.spark, meta["snapshots"][-1]["manifest-list"])
     )
     dm = next(m for m in manifests if m.get("content", 0) == 0)
-    _, entries = read_container(t._read_bytes(dm["manifest_path"]))
+    _, entries = read_container(_atomic.read_bytes(t.spark, dm["manifest_path"]))
     pinned = [
         e["sequence_number"]
         for e in entries
@@ -1111,7 +1112,7 @@ def test_jvm_avro_parses_equality_delete_manifest(spark, root):
     t.delete_equality(spark.range(0, 3).select("id"))
     meta = t.metadata()
     snap = meta["snapshots"][-1]
-    _, manifests = read_container(t._read_bytes(snap["manifest-list"]))
+    _, manifests = read_container(_atomic.read_bytes(t.spark, snap["manifest-list"]))
     dm = next(m for m in manifests if m["content"] == 1)
     jvm = spark.sparkContext._jvm
     reader = jvm.org.apache.avro.generic.GenericDatumReader()
@@ -1316,7 +1317,7 @@ def test_merge_upsert_single_snapshot(spark, root):
     assert snap["summary"]["added-equality-deletes"] == "2"
     # manifest list: prior data + new data manifest + delete manifest,
     # data and delete at the SAME sequence number
-    _, manifests = read_container(t._read_bytes(snap["manifest-list"]))
+    _, manifests = read_container(_atomic.read_bytes(t.spark, snap["manifest-list"]))
     data_m = [m for m in manifests if m.get("content", 0) == 0]
     del_m = [m for m in manifests if m.get("content") == 1]
     assert len(del_m) == 1
@@ -1613,7 +1614,7 @@ def test_rewrite_manifests_consolidates_metadata_only(spark, root):
         s for s in meta["snapshots"]
         if s["snapshot-id"] == meta["current-snapshot-id"]
     )
-    _, prior = read_container(t._read_bytes(cur["manifest-list"]))
+    _, prior = read_container(_atomic.read_bytes(t.spark, cur["manifest-list"]))
     assert len([m for m in prior if m.get("content", 0) == 0]) == 5
     data_before = sorted(
         e["data_file"]["file_path"]
@@ -1630,7 +1631,7 @@ def test_rewrite_manifests_consolidates_metadata_only(spark, root):
         s for s in meta2["snapshots"]
         if s["snapshot-id"] == meta2["current-snapshot-id"]
     )
-    _, after = read_container(t._read_bytes(cur2["manifest-list"]))
+    _, after = read_container(_atomic.read_bytes(t.spark, cur2["manifest-list"]))
     assert len([m for m in after if m.get("content", 0) == 0]) == 1
     assert len([m for m in after if m.get("content", 0) == 1]) == 2  # kept
     entries2, _ = t._entries_for_snapshot(meta2, None)
@@ -1672,20 +1673,20 @@ def test_manifest_list_partition_summaries_prune_planning(spark, root):
         x for x in meta["snapshots"]
         if x["snapshot-id"] == meta["current-snapshot-id"]
     )
-    _, mrows = read_container(t._read_bytes(cur["manifest-list"]))
+    _, mrows = read_container(_atomic.read_bytes(t.spark, cur["manifest-list"]))
     assert len(mrows) == 4
     for m in mrows:
         s = m["partitions"][0]
         assert s["lower_bound"] == s["upper_bound"]  # seg-disjoint batches
         assert s["contains_null"] is False
     opened = []
-    real = t._read_bytes
+    real = _atomic.read_bytes
 
-    def counting(p):
+    def counting(spark_, p):
         opened.append(p)
-        return real(p)
+        return real(spark_, p)
 
-    t._read_bytes = counting
+    _atomic.read_bytes = counting
     try:
         got = t.snapshot(where_eq={"seg": [2]})
         assert got.count() == 50
@@ -1693,7 +1694,7 @@ def test_manifest_list_partition_summaries_prune_planning(spark, root):
         manifests_opened = [p for p in opened if p.endswith("-m0.avro")]
         assert len(manifests_opened) == 1, manifests_opened
     finally:
-        t._read_bytes = real
+        _atomic.read_bytes = real
     # no predicate: all four open, full count
     assert t.snapshot().count() == 200
     # delete manifests are never summary-skipped: a global position
@@ -1708,7 +1709,7 @@ def test_manifest_list_partition_summaries_prune_planning(spark, root):
         x for x in meta2["snapshots"]
         if x["snapshot-id"] == meta2["current-snapshot-id"]
     )
-    _, mrows2 = read_container(t._read_bytes(cur2["manifest-list"]))
+    _, mrows2 = read_container(_atomic.read_bytes(t.spark, cur2["manifest-list"]))
     data_rows = [m for m in mrows2 if m.get("content", 0) == 0]
     assert len(data_rows) == 1
     s = data_rows[0]["partitions"][0]
@@ -2352,7 +2353,7 @@ def test_kll_puffin_official_datasketches_blob(spark, tmp_path):
     t.write_quantile_stats("v", k=64)
     entry = t.metadata()["statistics"][0]
     blobs, _props = _puffin.read_puffin(
-        t._read_bytes(entry["statistics-path"])
+        _atomic.read_bytes(t.spark, entry["statistics-path"])
     )
     by_type = {bm["type"]: payload for bm, payload in blobs}
     assert set(by_type) == {"graft-kll-v1", "apache-datasketches-kll-v1"}
@@ -2373,7 +2374,7 @@ def test_kll_puffin_official_datasketches_blob(spark, tmp_path):
     import os
 
     path = f"{t.root}/metadata/foreign-{os.getpid()}.stats"
-    t._write_bytes(path, data, exclusive=True)
+    _atomic.write_bytes(t.spark, path, data, exclusive=True)
 
     def mutate(md):
         md["statistics"] = [

@@ -6,6 +6,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from projectdatalake_spark.sources import atomic as _atomic
 from projectdatalake_spark.sources.txlog import CommitConflict, TxTable
 
 
@@ -1834,7 +1835,7 @@ def test_txlog_row_tracking_lifecycle(spark, tmp_path):
         t.merge_upsert(df.limit(1), ["k"])
 
 
-def test_row_tracking_enablement_race(spark, tmp_path):
+def test_row_tracking_enablement_race(spark, tmp_path, monkeypatch):
     """Enablement is decided PER publish attempt, not once before the
     retry loop: when a concurrent enable_row_tracking wins the version
     race against an append, the retried append must allocate baseRowIds
@@ -1853,16 +1854,16 @@ def test_row_tracking_enablement_race(spark, tmp_path):
     def race_enable(t):
         """Patch t so its NEXT commit attempt loses the version race to
         a concurrent enable_row_tracking from a second handle."""
-        orig = t._write_text_exclusive
+        orig = _atomic.write_text
         fired = {"done": False}
 
-        def hijack(p, text):
-            if not fired["done"]:
+        def hijack(spark_, p, text, exclusive):
+            if exclusive and not fired["done"] and p.startswith(f"{t.root}/_txlog/"):
                 fired["done"] = True
                 TxTable(spark, t.root).enable_row_tracking()
-            return orig(p, text)
+            return orig(spark_, p, text, exclusive)
 
-        t._write_text_exclusive = hijack
+        monkeypatch.setattr(_atomic, "write_text", hijack)
         return fired
 
     root1 = str(tmp_path / "t1")
@@ -1870,7 +1871,7 @@ def test_row_tracking_enablement_race(spark, tmp_path):
     fired = race_enable(t)
     t.append(batch(100, 150))
     assert fired["done"]  # the race actually happened
-    del t._write_text_exclusive  # unshadow the class method
+    monkeypatch.undo()  # unshadow the seam
     st = t._state()
     assert st["row_tracking"]["enabled"] and st["row_tracking"]["hwm"] == 149
     ids = {r.k: r.row_id for r in t.snapshot_with_row_ids().collect()}
