@@ -11,7 +11,9 @@ thin adapter over its query registry (projectdatalake_spark/queries.py).
 
 from __future__ import annotations
 
+import json
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -36,369 +38,29 @@ def entry(spark: SparkSession) -> DataFrame:
 # front-ranked, zero overlap). Queries already verified by a previous
 # round's driver run are pushed to the back; everything not yet
 # driver-proven comes first so each round's file covers new ground.
-# Round 10: the ledger stays CLOSED (369/369 oracle-backed queries carry a
-# driver hash-proof after r9, per the round-9 verdict's independent
-# re-parse). New round-10 registrations front-rank; the remaining slots
-# rotate the STALEST proofs (r3-vintage greens next: the delta core
-# family, per the round-9 rotation prescription).
-# All new queries were verify_local-proven at sf0.001 AND sf0.01.
-_R1_DRIVER_VERIFIED = frozenset(
-    {
-        "q1_pricing_summary", "scan_project", "project_rename",
-        "filter_events_eq", "filter_pred_complex", "derive_columns",
-        "dedup_distinct_pairs", "dedup_full_rows", "dedup_conditional_prefer",
-        "dedup_conditional_reference", "join_inner_orders_customer",
-        "join_left_nulls", "join_semi_customers_with_orders",
-        "join_anti_customers_no_orders", "join_theta_self", "time_parts",
-        "epoch_roundtrip", "json_extract_props", "string_functions",
-        "multi_join_snowflake", "agg_stats_by_group", "agg_having",
-        "agg_rollup", "agg_cube", "agg_grouping_sets", "agg_pivot",
-        "agg_approx_distinct", "win_topk_per_group", "win_running_sum",
-        "win_lag_delta", "win_rank_dense", "set_union_all", "set_intersect",
-        "set_except_all", "sort_limit_topk", "tpch_q3_shipping",
-        "asof_join_events_orders", "sessionize_events", "star_fact_enrich",
-        "text_token_stats", "text_quality", "text_langid", "text_fingerprint",
-        "dedup_exact_docs", "dedup_jaccard_pairs",
-        "neardup_cosine_pairs", "ann_topk_bruteforce",
+# A round's proofs are the entries of its committed CORRECTNESS_rNN.json
+# whose value hash matched the oracle; every later round's file
+# registers by being committed next to this module.
+_HERE = Path(__file__).resolve().parent
+
+
+def _verified_by_round() -> tuple[frozenset, ...]:
+    """Hash-matched query names per round, index 0 = round 1 (a round
+    without a file proves nothing)."""
+    by_round = {
+        int(p.stem.rsplit("_r", 1)[1]): frozenset(
+            name
+            for name, res in json.loads(p.read_text()).items()
+            if isinstance(res, dict) and res.get("hash_match") is True
+        )
+        for p in _HERE.glob("CORRECTNESS_r*.json")
     }
-)
-# (agg_approx_distinct, text_simhash, dedup_minhash_lsh, ann_topk_lsh were
-# listed here through round 8 but their r1 rows were actually
-# `err: no_oracle` — they are rows-only queries, never driver-verified;
-# dropped per the round-8 verdict so the set's name tells the truth.)
-
-# Hash-green in CORRECTNESS_r02.json. The two r02 rows that errored
-# (agg_collect_sorted, quantize_embeddings — array cells broke the driver's
-# canonicalizer; both since rewritten to scalar boundaries) are NOT listed,
-# so they re-enter round 3's sampling window.
-_R2_DRIVER_VERIFIED = frozenset(
-    {
-        "agg_median_stats", "agg_ordered_first_last", "conditional_expressions",
-        "correlated_min_price", "date_functions", "distinct_users_daily",
-        "explode_array", "from_json_struct", "join_cross_small",
-        "join_full_outer", "merge_upsert_customers", "mm_binary_meta",
-        "mm_chunking", "mm_decode_features", "mm_resize", "pandas_udf_scoring",
-        "profile_customer", "scalar_subquery_above_avg", "session_window_agg",
-        "skew_salted_groupby", "skew_salted_join", "sql_frontend",
-        "stream_dedup_keys", "stream_dedup_watermark", "stream_sliding_agg",
-        "stream_stateful_totals", "stream_tumbling_agg", "string_advanced",
-        "text_bpe_tokens", "tpch_q18_large_orders", "txlog_changes",
-        "txlog_data_skipping", "txlog_delete_dv", "txlog_incremental_agg",
-        "txlog_merge_upsert", "txlog_partition_evolution",
-        "txlog_rename_column", "txlog_restore", "txlog_shallow_clone",
-        "txlog_stream_sink", "txlog_time_travel", "txlog_time_travel_ts",
-        "txlog_update", "txlog_update_dv", "txlog_zorder_skipping",
-        "unpivot_metrics", "vocab_token_stats", "win_range_frame",
-    }
-)
-
-# Hash-green in CORRECTNESS_r03.json (all 50 rows green, including the
-# re-proven join_anti_customers_no_orders which also sits in the r1 set).
-_R3_DRIVER_VERIFIED = frozenset(
-    {
-        "join_anti_customers_no_orders", "agg_collect_sorted",
-        "quantize_embeddings", "tpch_q2_min_cost_supplier",
-        "tpch_q11_important_stock", "tpch_q20_part_promotion",
-        "txlog_optimize_compact", "txlog_vacuum_reclaim",
-        "txlog_checkpoint_read", "agg_regression_stats", "orc_roundtrip",
-        "llm_corpus_pipeline", "join_bucketed_colocated", "csv_roundtrip",
-        "resample_gapfill_hourly", "dedup_fuzzy_name_pairs",
-        "pyds_custom_source", "txlog_bloom_skipping", "explode_ordinality",
-        "win_nth_boundaries", "txlog_cdf_stream_source",
-        "variant_semistructured", "agg_bitwise", "safe_arithmetic",
-        "scan_provenance", "interval_overlap_join", "agg_quantile_array",
-        "set_intersect_all", "map_functions", "asof_join_grouped",
-        "scd2_customer_history", "merge_partition_scoped",
-        "sql_pricing_summary", "sql_tpch_q3", "sql_win_rank_dense",
-        "mm_decode_real", "split_assign_hash", "pack_token_budget",
-        "tfidf_top_terms", "stream_join_enrich", "dedup_clusters",
-        "null_handling", "win_distribution", "agg_filter_clause",
-        "sql_lateral_topn", "array_higher_order", "spine_calendar",
-        "validate_rules", "tpch_q5_local_volume", "tpch_q10_returned",
-    }
-)
+    return tuple(
+        by_round.get(r, frozenset()) for r in range(1, max(by_round, default=0) + 1)
+    )
 
 
-# Hash-green in CORRECTNESS_r04.json (49/50; the 50th row was the
-# rows-only semantic_dedup_survivors, correctly reported err: no_oracle —
-# it is NOT listed here and, being rows-only, ranks behind every unproven
-# oracle-backed query anyway).
-_R4_DRIVER_VERIFIED = frozenset(
-    {
-        "txlog_stream_upsert_sink", "txlog_incremental_agg_cdc",
-        "txlog_apply_changes", "txlog_widen_schema",
-        "pyds_jsonl_writer_roundtrip", "txlog_retention_lifecycle",
-        "txlog_clustered_write", "retention_cohorts", "event_transitions",
-        "pareto_frontier", "weighted_sample_priority", "mm_frame_sample",
-        "graph_triangle_counts", "graph_clustering_coefficient",
-        "arrow_embed_features", "udtf_chunk_windows", "delta_roundtrip",
-        "delta_time_travel", "delta_convert_in_place", "delta_txlog_export",
-        "delta_checkpoint_read", "iceberg_roundtrip", "iceberg_time_travel",
-        "iceberg_partition_pruning", "delta_delete_dv",
-        "iceberg_position_delete", "delta_optimize_lifecycle",
-        "iceberg_schema_evolution", "delta_cdf_changes", "delta_stream_cdf",
-        "iceberg_stats_skipping", "format_convert_loop",
-        "delta_vacuum_lifecycle", "iceberg_expire_lifecycle",
-        "iceberg_stream_cdf", "delta_schema_merge",
-        "iceberg_bucket_transform", "iceberg_month_transform",
-        "iceberg_equality_delete", "iceberg_compaction",
-        "delta_rename_mapping", "iceberg_spec_evolution",
-        "iceberg_dynamic_overwrite", "iceberg_wap_publish",
-        "delta_check_constraint", "iceberg_stream_sink", "iceberg_rollback",
-        "tpch_q14_promo", "stream_stream_join",
-    }
-)
-
-# Hash-green in CORRECTNESS_r05.json (50/50 fully green, zero err).
-_R5_DRIVER_VERIFIED = frozenset(
-    {
-        "agg_corr_stats", "agg_histogram_bins", "agg_winsorized_stats",
-        "anomaly_rolling_zscore", "anomaly_zscore_bucketed",
-        "decontam_ngram_overlap", "dedup_containment_pairs",
-        "dedup_incremental_exact", "delta_merge_bloom", "delta_merge_upsert",
-        "delta_optimize_zorder", "delta_restore", "delta_shallow_clone",
-        "delta_stream_sink", "delta_stream_upsert_sink",
-        "docs_reputable_sources", "ewma_daily_smoothing",
-        "format_convert_chain", "funnel_conversion", "iceberg_orphan_cleanup",
-        "iceberg_sorted_compaction", "mixture_balanced_sample",
-        "mm_audio_meta", "paragraph_dedup", "range_join_bucketed",
-        "source_reputation", "sql_not_in_nulls", "sql_txlog_snapshot",
-        "stratified_split_exact", "text_heavy_hitters", "text_kl_divergence",
-        "text_pii_redact", "text_repetition_stats", "text_sentences",
-        "text_unigram_logprob", "tpch_q12_shipmode", "tpch_q13_custdist",
-        "tpch_q15_top_supplier", "tpch_q16_supplier_cnt",
-        "tpch_q17_small_qty", "tpch_q19_disjunctive",
-        "tpch_q21_waiting_supplier", "tpch_q22_idle_customers",
-        "tpch_q4_priority", "tpch_q6_forecast", "tpch_q7_volume",
-        "tpch_q8_market_share", "tpch_q9_profit", "txlog_hilbert_skipping",
-        "win_gapfill_locf",
-    }
-)
-
-# Hash-green in CORRECTNESS_r06.json (50/50 fully green, zero err) —
-# includes all 11 queries round 5 flagged as never driver-sampled.
-_R6_DRIVER_VERIFIED = frozenset(
-    {
-        "agg_contribution_pareto", "agg_kmv_sketch", "agg_mode_per_group",
-        "agg_weighted_median", "ann_range_search_seeded",
-        "ann_topk_ivf_seeded", "anomaly_mad_robust", "aqp_sampled_aggregate",
-        "attribution_last_touch", "basket_lift_pairs",
-        "chi_square_status_priority", "corpus_dup_ngrams",
-        "curriculum_quality_phases", "customer_rfm_segments",
-        "delta_checkpoint_v2_sidecars", "delta_generated_column",
-        "embedding_label_centroids", "gini_customer_revenue",
-        "graph_degree_histogram", "iceberg_branch_tag",
-        "iceberg_merge_upsert", "iceberg_partitions_meta",
-        "iceberg_rewrite_pos_deletes", "iceberg_stream_upsert_sink",
-        "iceberg_zorder_rewrite", "intervals_merge_overlaps",
-        "join_null_safe", "mixture_temperature_sample",
-        "ohlc_monthly_orders", "orders_backlog_running", "path_trigram_top",
-        "rolling_corr_pairs", "scd2_point_in_time_join", "sql_grouping_id",
-        "sql_recursive_rollup", "streaks_gaps_islands",
-        "stream_backfill_bounded_batches", "text_bigram_logprob",
-        "text_bm25_topk", "text_char_entropy", "ts_holt_forecast",
-        "ts_seasonal_naive_mase", "txlog_check_constraint",
-        "txlog_generated_column", "txlog_incremental_distinct_cdc",
-        "txlog_incremental_join_cdc", "txlog_incremental_topk_cdc",
-        "txlog_recluster_incremental", "win_cumulative_distinct",
-        "yoy_growth_monthly",
-    }
-)
-
-# Hash-green in CORRECTNESS_r07.json (50/50 fully green, zero err) —
-# closes the ledger: every oracle-backed query now has a driver row.
-_R7_DRIVER_VERIFIED = frozenset(
-    {
-        "benford_first_digit", "event_entropy_per_user",
-        "embedding_outlier_centroid", "asof_join_nearest",
-        "zipf_slope_tokens", "text_hapax_ratio",
-        "tokenizer_fertility_by_lang", "ts_autocorr_daily",
-        "ts_changepoint_meanshift", "iceberg_rewrite_manifests",
-        "stream_fanout_two_sinks", "column_defaults_two_formats",
-        "dup_invoice_pairs", "customer_ltv_cohort", "dq_quarantine_split",
-        "delta_recluster_incremental", "format_convert_full_circle",
-        "scd2_incremental_apply", "delta_cdf_to_txlog_replica",
-        "dau_wau_stickiness", "ann_topk_pq_seeded",
-        "iceberg_puffin_ndv_stats", "iceberg_ndv_informed_join",
-        "txlog_optimize_lease_split", "bloom_reduce_join",
-        "ks_test_two_sample", "psi_price_drift", "ts_stl_weekly",
-        "event_audience_overlap", "geo_radius_pairs", "geo_knn_join",
-        "txlog_ndv_informed_join", "delta_ndv_informed_join",
-        "survival_kaplan_meier", "q1_pricing_summary", "scan_project",
-        "project_rename", "filter_events_eq", "filter_pred_complex",
-        "derive_columns", "dedup_distinct_pairs", "dedup_full_rows",
-        "dedup_conditional_prefer", "dedup_conditional_reference",
-        "join_inner_orders_customer", "join_left_nulls",
-        "join_semi_customers_with_orders", "join_anti_customers_no_orders",
-        "join_theta_self", "time_parts",
-    }
-)
-
-# Hash-green in CORRECTNESS_r08.json (50/50 fully green, zero err) —
-# 17 round-8 registrations + 33 stalest-proof rotations (r1-vintage).
-_R8_DRIVER_VERIFIED = frozenset(
-    {
-        "star_ndv_join_ordering", "semantic_dedup_seeded",
-        "graph_bfs_distances", "ts_theil_sen_trend",
-        "sketch_intersection_ndv", "ts_cross_corr_leadlag",
-        "stream_left_outer_join", "delta_row_tracking",
-        "iceberg_row_lineage", "txlog_row_tracking",
-        "row_id_incremental_scan", "event_pattern_match",
-        "iceberg_readable_metrics", "win_rolling_median",
-        "ann_topk_lsh_seeded", "txlog_row_tracking_optimize",
-        "delta_row_tracking_optimize", "epoch_roundtrip",
-        "json_extract_props", "string_functions", "multi_join_snowflake",
-        "agg_stats_by_group", "agg_having", "agg_rollup", "agg_cube",
-        "agg_grouping_sets", "agg_pivot", "win_topk_per_group",
-        "win_running_sum", "win_lag_delta", "win_rank_dense",
-        "set_union_all", "set_intersect", "set_except_all",
-        "sort_limit_topk", "tpch_q3_shipping", "asof_join_events_orders",
-        "sessionize_events", "star_fact_enrich", "text_token_stats",
-        "text_quality", "text_langid", "text_fingerprint",
-        "dedup_exact_docs", "dedup_jaccard_pairs", "neardup_cosine_pairs",
-        "ann_topk_bruteforce", "stream_tumbling_agg", "stream_sliding_agg",
-        "stream_dedup_keys",
-    }
-)
-
-# Hash-green in CORRECTNESS_r09.json (50/50 fully green, zero err) —
-# 26 round-9 registrations + 24 stalest-proof rotations (r2-vintage).
-_R9_DRIVER_VERIFIED = frozenset(
-    {
-        "graph_pagerank", "graph_kcore", "graph_connected_components",
-        "iceberg_row_lineage_rewrite", "sketch_kll_quantiles",
-        "sketch_kll_grouped", "stream_kll_quantiles",
-        "quantile_stats_three_formats", "iceberg_puffin_kll",
-        "kll_clustered_write", "star_ndv_outer_join",
-        "delta_uniform_export", "sketch_difference_ndv",
-        "delta_identity_column", "delta_identity_merge",
-        "delta_log_compaction", "delta_time_travel_ict",
-        "delta_type_widening", "iceberg_delete_vector",
-        "iceberg_partition_stats", "iceberg_type_promotion",
-        "pca_power_iteration", "bpe_encode_seeded", "ann_mmr_rerank_seeded",
-        "row_id_incremental_dedup", "stream_full_outer_join",
-        # stalest-proof rotations (r2-vintage)
-        "agg_median_stats", "agg_ordered_first_last",
-        "conditional_expressions", "correlated_min_price",
-        "date_functions", "distinct_users_daily", "explode_array",
-        "from_json_struct", "join_cross_small", "join_full_outer",
-        "mm_binary_meta", "mm_chunking", "mm_decode_features",
-        "pandas_udf_scoring", "scalar_subquery_above_avg",
-        "session_window_agg", "skew_salted_groupby", "skew_salted_join",
-        "sql_frontend", "stream_stateful_totals", "string_advanced",
-        "tpch_q18_large_orders", "unpivot_metrics", "win_range_frame",
-    }
-)
-
-# Hash-green in CORRECTNESS_r10.json (50/50 fully green, zero err) —
-# 7 round-10 registrations + 43 stalest-proof rotations (r2/r3-vintage:
-# the txlog core family, agg_collect_sorted, the sql_* twins).
-_R10_DRIVER_VERIFIED = frozenset(
-    {
-        "decimal_widening_three_formats", "delta_identity_evolution",
-        "iceberg_partition_stats_deletes",
-        "iceberg_partition_stats_unified",
-        "sketch_hll_registers_seeded", "text_simhash_seeded",
-        "uniform_dv_roundtrip",
-        # stalest-proof rotations (r2/r3-vintage)
-        "agg_collect_sorted", "agg_filter_clause",
-        "agg_quantile_array", "array_higher_order",
-        "asof_join_grouped", "dedup_clusters", "map_functions",
-        "merge_partition_scoped", "merge_upsert_customers",
-        "mm_decode_real", "mm_resize", "null_handling",
-        "pack_token_budget", "profile_customer",
-        "quantize_embeddings", "scd2_customer_history",
-        "set_intersect_all", "split_assign_hash", "sql_lateral_topn",
-        "sql_pricing_summary", "sql_tpch_q3", "sql_win_rank_dense",
-        "stream_dedup_watermark", "stream_join_enrich",
-        "text_bpe_tokens", "tfidf_top_terms", "txlog_changes",
-        "txlog_data_skipping", "txlog_delete_dv",
-        "txlog_incremental_agg", "txlog_merge_upsert",
-        "txlog_partition_evolution", "txlog_rename_column",
-        "txlog_restore", "txlog_shallow_clone", "txlog_stream_sink",
-        "txlog_time_travel", "txlog_time_travel_ts", "txlog_update",
-        "txlog_update_dv", "txlog_zorder_skipping",
-        "vocab_token_stats", "win_distribution",
-    }
-)
-
-# Hash-green in CORRECTNESS_r11.json (50/50 fully green, zero err) —
-# the 6 round-11 registrations front-ranked plus 44 stalest-proof
-# rotations (r3/r4-vintage: the txlog lifecycle family, TPC-H picks,
-# format round-trips, graph proof rungs).
-_R11_DRIVER_VERIFIED = frozenset(
-    {
-        "dedup_minhash_seeded", "iceberg_partition_stats_full",
-        "iceberg_lineage_dynamic_overwrite", "delta_id_mode_writes",
-        "delta_mapped_merge", "iceberg_lineage_merge",
-        # stalest-proof rotations
-        "spine_calendar", "validate_rules", "tpch_q5_local_volume",
-        "tpch_q10_returned", "tpch_q2_min_cost_supplier",
-        "tpch_q11_important_stock", "tpch_q20_part_promotion",
-        "txlog_optimize_compact", "txlog_vacuum_reclaim",
-        "txlog_checkpoint_read", "agg_regression_stats", "orc_roundtrip",
-        "llm_corpus_pipeline", "join_bucketed_colocated", "csv_roundtrip",
-        "resample_gapfill_hourly", "dedup_fuzzy_name_pairs",
-        "pyds_custom_source", "txlog_bloom_skipping",
-        "explode_ordinality", "win_nth_boundaries",
-        "txlog_cdf_stream_source", "variant_semistructured",
-        "agg_bitwise", "safe_arithmetic", "scan_provenance",
-        "interval_overlap_join", "tpch_q14_promo", "stream_stream_join",
-        "txlog_stream_upsert_sink", "txlog_incremental_agg_cdc",
-        "txlog_apply_changes", "txlog_widen_schema",
-        "pyds_jsonl_writer_roundtrip", "txlog_retention_lifecycle",
-        "txlog_clustered_write", "retention_cohorts", "event_transitions",
-        "pareto_frontier", "weighted_sample_priority", "mm_frame_sample",
-        "graph_triangle_counts", "graph_clustering_coefficient",
-        "arrow_embed_features",
-    }
-)
-
-# Hash-green in CORRECTNESS_r12.json (50/50 fully green, zero err) —
-# the 4 round-12 registrations front-ranked plus 46 stalest-proof
-# rotations (r4/r5-vintage: the delta/iceberg lifecycle core).
-_R12_DRIVER_VERIFIED = frozenset(
-    {
-        "agg_corr_stats", "agg_histogram_bins", "agg_winsorized_stats",
-        "ann_topk_ivfpq_seeded", "dedup_containment_pairs",
-        "dedup_incremental_exact", "delta_cdf_changes",
-        "delta_check_constraint", "delta_checkpoint_read",
-        "delta_convert_in_place", "delta_delete_dv",
-        "delta_foreign_partition_mapping", "delta_mapped_schema_merge",
-        "delta_optimize_lifecycle", "delta_rename_mapping",
-        "delta_roundtrip", "delta_schema_merge", "delta_stream_cdf",
-        "delta_time_travel", "delta_txlog_export", "delta_vacuum_lifecycle",
-        "format_convert_loop", "iceberg_bucket_transform",
-        "iceberg_compaction", "iceberg_dynamic_overwrite",
-        "iceberg_equality_delete", "iceberg_expire_lifecycle",
-        "iceberg_lineage_identity_partitioned", "iceberg_month_transform",
-        "iceberg_partition_pruning", "iceberg_position_delete",
-        "iceberg_rollback", "iceberg_roundtrip", "iceberg_schema_evolution",
-        "iceberg_spec_evolution", "iceberg_stats_skipping",
-        "iceberg_stream_cdf", "iceberg_stream_sink", "iceberg_time_travel",
-        "iceberg_wap_publish", "mm_audio_meta", "range_join_bucketed",
-        "stratified_split_exact", "text_heavy_hitters",
-        "text_kl_divergence", "tpch_q13_custdist", "tpch_q15_top_supplier",
-        "tpch_q17_small_qty", "tpch_q6_forecast", "udtf_chunk_windows",
-    }
-)
-
-_VERIFIED_BY_ROUND = (
-    _R1_DRIVER_VERIFIED,
-    _R2_DRIVER_VERIFIED,
-    _R3_DRIVER_VERIFIED,
-    _R4_DRIVER_VERIFIED,
-    _R5_DRIVER_VERIFIED,
-    _R6_DRIVER_VERIFIED,
-    _R7_DRIVER_VERIFIED,
-    _R8_DRIVER_VERIFIED,
-    _R9_DRIVER_VERIFIED,
-    _R10_DRIVER_VERIFIED,
-    _R11_DRIVER_VERIFIED,
-    _R12_DRIVER_VERIFIED,
-)
-
-_DRIVER_VERIFIED = frozenset().union(*_VERIFIED_BY_ROUND)
+_VERIFIED_BY_ROUND = _verified_by_round()
 
 # Round of the FRESHEST driver proof per query (1-based). With the ledger
 # closed (every oracle query proven at least once), the window's job turns

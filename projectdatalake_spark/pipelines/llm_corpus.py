@@ -90,10 +90,10 @@ def curate(
     ``through`` truncates the composition after a stage prefix —
     ``"quality"`` / ``"dedup"`` / ``"decontam"`` / ``"pack"`` (full, the
     default) — returning that stage's frame with its working columns.
-    This is the per-stage accounting seam the scale probes time marginal
-    stage cost through (tools/probe_pipeline.py); production callers use
-    the default. Early prefixes drop the grams column so Catalyst prunes
-    n-gram construction out of stages that never consume it.
+    This is the per-stage accounting seam for timing each stage's
+    marginal cost; production callers use the default. Early prefixes
+    drop the grams column so Catalyst prunes n-gram construction out of
+    stages that never consume it.
     """
     if through not in ("quality", "dedup", "decontam", "pack"):
         raise ValueError(f"unknown stage {through!r}")
@@ -143,8 +143,8 @@ def curate(
     # runs never accumulate cached partitions; release_cache() hands the
     # memory back entirely.
     release_cache()
-    # Three scale guards, all caught by the 100× probe
-    # (tools/probe_pipeline.py), all rooted in the same fact: grams are
+    # Three scale guards, all caught by a 100×-scale timing of the
+    # ``through`` prefixes, all rooted in the same fact: grams are
     # a higher-order transform(), which Spark evaluates INTERPRETED (no
     # codegen), and AQE sizes partitions by BYTES — it cannot see
     # expression cost, so a byte-small exchange upstream of an expensive

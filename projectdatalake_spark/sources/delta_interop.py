@@ -54,6 +54,7 @@ from pyspark.sql.types import StructType
 from projectdatalake_spark.session import local_frame
 from projectdatalake_spark.sources import atomic as _atomic
 from projectdatalake_spark.sources import deletion_vectors as _dv
+from projectdatalake_spark.sources import footer_stats as _fs
 
 _LOG = "_delta_log"
 _LAST_CHECKPOINT = "_last_checkpoint"
@@ -226,8 +227,6 @@ def _bloom_prune_merge(spark, cand, key_frame, bcols, schema):
     — O(#candidates × #keys), both driver-bounded."""
     import numpy as np
 
-    from .txlog import _BLOOM_M, _BLOOM_SEEDS
-
     types = {f.name: f.dataType.simpleString() for f in schema.fields}
     for c in bcols:
         pos_rows = (
@@ -235,22 +234,12 @@ def _bloom_prune_merge(spark, cand, key_frame, bcols, schema):
             .where(F.col(c).isNotNull())
             .distinct()
             .limit(_MERGE_BLOOM_KEY_CEILING + 1)
-            .select(
-                *[
-                    F.pmod(
-                        F.xxhash64(F.col(c).cast(types[c]), F.lit(seed)),
-                        F.lit(_BLOOM_M),
-                    ).alias(f"p{i}")
-                    for i, seed in enumerate(_BLOOM_SEEDS)
-                ]
-            )
+            .select(_fs.bloom_positions(F.col(c).cast(types[c])))
             .collect()
         )
         if not pos_rows or len(pos_rows) > _MERGE_BLOOM_KEY_CEILING:
             continue
-        pos_matrix = np.array(
-            [[r[f"p{i}"] for i in range(len(_BLOOM_SEEDS))] for r in pos_rows]
-        )
+        pos_matrix = np.array([list(r) for r in pos_rows])
         kept = []
         for p, a in cand:
             hexmap = (a.get("tags") or {}).get(f"{_BLOOM_TAG_PREFIX}{c}")
@@ -259,7 +248,7 @@ def _bloom_prune_merge(spark, cand, key_frame, bcols, schema):
                 continue
             bits = int(hexmap, 16)
             arr = np.frombuffer(
-                bits.to_bytes(_BLOOM_M // 8, "little"), dtype=np.uint8
+                bits.to_bytes(_fs._BLOOM_M // 8, "little"), dtype=np.uint8
             )
             bitsarr = np.unpackbits(arr, bitorder="little").astype(bool)
             if np.all(bitsarr[pos_matrix], axis=1).any():
@@ -1615,8 +1604,8 @@ class DeltaTable:
         """Write data files under _staging, move them into the table root
         (hive layout — Delta convention: partition columns live in the
         directory structure / partitionValues, NOT in the files), and
-        return spec-shaped add actions with Delta-format stats collected in
-        ONE Spark pass."""
+        return spec-shaped add actions with Delta-format stats (see
+        ``_staged_files``). Files without rows are never committed."""
         stage_id = uuid.uuid4().hex
         stage_dir = f"{self.root}/_staging/{stage_id}"
         writer = df.write.mode("overwrite")
@@ -1639,34 +1628,24 @@ class DeltaTable:
                 writer.parquet(stage_dir)
         else:
             writer.parquet(stage_dir)
-        def _pv_of(rel: str) -> dict:
-            pv = {
-                seg.split("=", 1)[0]: _unquote_path(seg.split("=", 1)[1])
-                for seg in rel.split("/")[:-1]
-                if "=" in seg
-            }
-            return {
-                k: (None if v == "__HIVE_DEFAULT_PARTITION__" else v)
-                for k, v in pv.items()
-            }
-
         adds = []
-        stage_uri = _atomic.path_only(stage_dir)
-        for p, size, mtime in _atomic.list_files(self.spark, stage_dir, ".parquet"):
-            rel = _atomic.path_only(p)[len(stage_uri):].lstrip("/")
-            if not _atomic.rename(self.spark, p, f"{self.root}/{rel}"):
-                raise IOError(f"failed to move staged file {p} -> {self.root}/{rel}")
+        for f in self._staged_files(stage_dir, partition_by, df.schema):
+            rel = f["rel"]
+            if not _atomic.rename(self.spark, f["path"], f"{self.root}/{rel}"):
+                raise IOError(
+                    f"failed to move staged file {f['path']} -> {self.root}/{rel}"
+                )
             adds.append(
                 {
                     "path": _quote_path(rel),
-                    "partitionValues": _pv_of(rel),
-                    "size": size,
-                    "modificationTime": mtime,
+                    "partitionValues": f["partitionValues"],
+                    "size": f["size"],
+                    "modificationTime": f["mtime"],
                     "dataChange": True,
+                    **f["encoded"],
                 }
             )
         _atomic.delete(self.spark, stage_dir, recursive=True)
-        self._attach_stats(adds, set(partition_by), df.schema)
         return adds
 
     @staticmethod
@@ -1682,155 +1661,47 @@ class DeltaTable:
             return tuple(getattr(self, "_pending_bloom", ()))
         return self._bloom_cols_of(self._state()["metaData"])
 
-    def _attach_stats(
-        self, adds: list[dict], pcols: set, schema: StructType
-    ) -> None:
-        """Delta-format per-file stats (numRecords / minValues / maxValues /
-        nullCount). Derived from the parquet FOOTERS instead of a full
-        Spark re-read of the data just written (guide §6; OPTIMIZATION_r13
-        lever #1) — per-type bitwise exactness is probed and pinned in
-        sources/footer_stats.py + tests/test_footer_stats.py. Columns the
-        footer cannot reproduce exactly (INT96 ltz timestamps, unexpected
-        missing stats) and every ``bloom_by`` column (per-file bloom hex in
-        add.tags needs Spark-xxhash64 parity, txlog's bit layout) run
-        through the original Spark aggregate RESTRICTED to those columns.
-        The stats columns come from ``schema`` (the written frame's, or
-        the converted table's), so a column only some files carry still
-        gets stats in each file that has it."""
-        if not adds:
-            return
-        from . import footer_stats as _fs
-
-        add_paths = [
-            _atomic.strip_file_scheme(self._abs_data_path(a["path"]))
-            for a in adds
-        ]
-        local = all(_fs.footers_readable(p) for p in add_paths)
+    def _staged_files(
+        self, stage_dir: str, partition_by, schema: StructType
+    ) -> list[dict]:
+        """``footer_stats.staged_files`` over ``stage_dir`` in Delta's
+        encoding: each file also carries ``partitionValues`` (the hive
+        null marker as null) and ``encoded`` — the add's ``stats`` JSON
+        (numRecords / minValues / maxValues / nullCount) and its bloom
+        ``tags``. The stats columns are ``schema``'s simple-typed
+        non-partition columns (the written frame's, or the converted
+        table's), so a column only some files carry still gets stats in
+        each file that has it; a file lacking a column reads it as all
+        null, so its nullCount is the record count."""
         cols = [
             f.name
             for f in schema.fields
-            if f.name not in pcols and f.dataType.typeName() in _SIMPLE_TYPES
+            if f.name not in partition_by and f.dataType.typeName() in _SIMPLE_TYPES
         ]
         bloom_cols = [c for c in self._bloom_cols() if c in set(cols)]
-        if local:
-            per_file = _fs.footer_file_stats(
-                self.spark, add_paths, want_cols=cols, with_nulls=True
-            )
-            untrusted: list[str] = []
-            for st in per_file.values():
-                untrusted += [c for c in st["untrusted"] if c not in untrusted]
-        else:
-            untrusted = cols
-        spark_by_path, spark_blooms, spark_nrec = (
-            self._attach_stats_spark(adds, untrusted, bloom_cols)
-            if untrusted or bloom_cols
-            else ({}, {}, {})
-        )
-        if not local:
-            per_file = {
-                p: _fs.untrusted_stats(spark_nrec.get(p, 0), cols)
-                for p in add_paths
+        files = _fs.staged_files(self.spark, stage_dir, cols, bloom_cols=bloom_cols)
+        for f in files:
+            f["partitionValues"] = {
+                c: (None if v == "__HIVE_DEFAULT_PARTITION__" else v)
+                for c, v in f["partition"].items()
             }
-        for a, p in zip(adds, add_paths):
-            st = per_file.get(p)
-            if st is None or st["nrec"] == 0:
-                continue  # empty file: the old read-back attached nothing
-            fallback = spark_by_path.get(p) or {}
             stats = {
-                "numRecords": st["nrec"],
+                "numRecords": f["nrec"],
                 "minValues": {},
                 "maxValues": {},
                 "nullCount": {},
             }
             for c in cols:
-                if c in st["untrusted"]:
-                    fb = fallback.get(c)
-                    if fb is None:
-                        continue
-                    mn, mx, nulls = fb
-                    if mn is not None:
-                        stats["minValues"][c] = _stats_scalar(mn)
-                    if mx is not None:
-                        stats["maxValues"][c] = _stats_scalar(mx)
-                    stats["nullCount"][c] = nulls
-                    continue
-                mn, mx = st["min"].get(c), st["max"].get(c)
-                if mn is not None:
-                    stats["minValues"][c] = _stats_scalar(mn)
-                if mx is not None:
-                    stats["maxValues"][c] = _stats_scalar(mx)
-                # no null count: the file lacks the column, which then
-                # reads as all null
-                stats["nullCount"][c] = st["nulls"].get(c, st["nrec"])
-            a["stats"] = json.dumps(stats, separators=(",", ":"))
-            blooms = spark_blooms.get(p)
-            if blooms:
-                a.setdefault("tags", {}).update(
-                    {f"{_BLOOM_TAG_PREFIX}{c}": h for c, h in blooms.items()}
-                )
-
-    def _attach_stats_spark(
-        self, adds: list[dict], cols: list[str], bloom_cols: list[str]
-    ) -> tuple[dict, dict, dict]:
-        """The original one-Spark-pass grouped stats aggregate, now the
-        RESTRICTED fallback for footer-untrusted and bloom columns (and
-        the whole stats pass on roots whose footers are not readable
-        here). Returns ({path: {col: (min, max, nulls)}},
-        {path: {col: hex}}, {path: numRecords})."""
-        from .txlog import _BLOOM_M, _BLOOM_SEEDS
-
-        paths = [self._abs_data_path(a["path"]) for a in adds]
-        df = self.spark.read.option("basePath", self.root).parquet(*paths)
-        present = set(df.columns)
-        cols = [c for c in cols if c in present]
-        bloom_cols = [c for c in bloom_cols if c in present]
-        aggs = [F.count(F.lit(1)).alias("__n")]
-        for c in cols:
-            aggs.append(F.min(c).alias(f"min__{c}"))
-            aggs.append(F.max(c).alias(f"max__{c}"))
-            aggs.append(F.sum(F.col(c).isNull().cast("long")).alias(f"nulls__{c}"))
-        for c in bloom_cols:
-            for i, seed in enumerate(_BLOOM_SEEDS):
-                aggs.append(
-                    F.collect_set(
-                        F.pmod(F.xxhash64(F.col(c), F.lit(seed)), F.lit(_BLOOM_M))
-                    ).alias(f"bloom{i}__{c}")
-                )
-        rows = (
-            df.withColumn("__file", F.input_file_name())
-            .groupBy("__file")
-            .agg(*aggs)
-            .collect()
-        )
-        # keyed by FULL PATH, never basename: partitioned writes reuse
-        # part-file basenames across partition dirs, and basename keying
-        # attributes one file's stats to its same-named siblings → WRONG
-        # min/max skipping (dropped rows, not conservatism)
-        # decode the input_file_name URI side ONLY (percent-encoded
-        # partition values would never match raw listing paths — stats
-        # silently lost for e.g. 'priority=4-NOT SPECIFIED' dirs); the
-        # filesystem side gets a plain scheme strip, never a decode
-        by_path: dict[str, dict] = {}
-        blooms_by_path: dict[str, dict] = {}
-        nrec_by_path: dict[str, int] = {}
-        for r in rows:
-            d = r.asDict()
-            fpath = _atomic.uri_to_path(d.pop("__file"))
-            nrec_by_path[fpath] = int(d["__n"])
-            by_path[fpath] = {
-                c: (d[f"min__{c}"], d[f"max__{c}"], d[f"nulls__{c}"] or 0)
-                for c in cols
-            }
-            blooms = {}
-            for c in bloom_cols:
-                bits = 0
-                for i in range(len(_BLOOM_SEEDS)):
-                    for p in d.get(f"bloom{i}__{c}") or []:
-                        bits |= 1 << p
-                if bits:
-                    blooms[c] = f"{bits:x}"
-            blooms_by_path[fpath] = blooms
-        return by_path, blooms_by_path, nrec_by_path
+                if c in f["min"]:
+                    stats["minValues"][c] = _stats_scalar(f["min"][c])
+                    stats["maxValues"][c] = _stats_scalar(f["max"][c])
+                stats["nullCount"][c] = f["nulls"].get(c, f["nrec"])
+            f["encoded"] = {"stats": json.dumps(stats, separators=(",", ":"))}
+            if f["bloom"]:
+                f["encoded"]["tags"] = {
+                    f"{_BLOOM_TAG_PREFIX}{c}": h for c, h in f["bloom"].items()
+                }
+        return files
 
     def _ict_prev(self, version: int) -> tuple[bool, int | None]:
         """(was ICT active at ``version - 1``, that commit's authoritative
@@ -4259,7 +4130,8 @@ def convert_parquet_to_delta(
     """In-place CONVERT TO DELTA: give an existing (optionally
     hive-partitioned) parquet directory a transaction log WITHOUT touching
     the data files — the metadata-only migration that makes converting a
-    100 TB directory an O(#files) listing, not an O(bytes) rewrite.
+    100 TB directory an O(#files) listing, not an O(bytes) rewrite. A
+    file without rows is deleted, never committed.
 
     ``schema`` must be the FULL logical schema including typed partition
     columns (Delta requires explicit types; hive directories only carry
@@ -4267,31 +4139,17 @@ def convert_parquet_to_delta(
     t = DeltaTable(spark, root)
     if t.exists():
         raise DeltaCommitConflict(f"already a Delta table: {root}")
-    files = []
-    root_uri = _atomic.path_only(root)
-    for p, size, mtime in _atomic.list_files(spark, root, ".parquet"):
-        rel = _atomic.path_only(p)[len(root_uri):].lstrip("/")
-        if not rel.startswith((_LOG, "_staging")):
-            files.append((rel, size, mtime))
-    adds = []
-    for rel, size, mtime in sorted(files):
-        pv = {
-            seg.split("=", 1)[0]: _unquote_path(seg.split("=", 1)[1])
-            for seg in rel.split("/")[:-1]
-            if "=" in seg
+    adds = [
+        {
+            "path": _quote_path(f["rel"]),
+            "partitionValues": {c: f["partitionValues"].get(c) for c in partition_by},
+            "size": f["size"],
+            "modificationTime": f["mtime"],
+            "dataChange": True,
+            **(f["encoded"] if collect_stats else {}),
         }
-        pv = {k: (None if v == "__HIVE_DEFAULT_PARTITION__" else v) for k, v in pv.items()}
-        adds.append(
-            {
-                "path": _quote_path(rel),
-                "partitionValues": {c: pv.get(c) for c in partition_by},
-                "size": size,
-                "modificationTime": mtime,
-                "dataChange": True,
-            }
-        )
-    if collect_stats:
-        t._attach_stats(adds, set(partition_by), schema)
+        for f in t._staged_files(root, partition_by, schema)
+    ]
     meta = {
         "id": str(uuid.uuid4()),
         "format": {"provider": "parquet", "options": {}},

@@ -1,9 +1,30 @@
-"""Parquet-FOOTER-derived per-file statistics (min/max/nullCount/
-numRecords, plus the txlog value dictionary) — the metadata-only
-replacement for the per-commit full re-read the txlog/delta/iceberg
-``_attach_stats``/``_stage_data`` passes used to run (OPTIMIZATION_r13
-lever #1, spark_optimization_guide §6: read the bytes once — the stats
-of a file just written are already sitting in its footer).
+"""The staged-file step of the three table formats, and the
+parquet-FOOTER statistics it reads.
+
+One caller path: txlog ``TxTable._stage``, Delta ``DeltaTable._stage``
+(and ``convert_parquet_to_delta``, over the table root) and Iceberg
+``IcebergTable._stage_data`` / ``_staged_files`` write a frame with
+``writer.parquet(stage_dir)`` and then call ``staged_files``. It lists
+the parquet files Spark left there, parses each file's hive partition
+values (unescaped), drops and deletes every 0-row file, and returns per
+file its record count, min, max and null count per stats column, the
+value dictionary of the requested dictionary columns and the bloom bits
+of the requested bloom columns. Each format only encodes the result
+(Delta stats JSON and bloom tags, txlog ``stats``/``dict``/``bloom``/
+``numRecords``, Iceberg ``record_count`` and bounds) and keeps its own
+null-partition marker handling.
+
+Where the stats come from: on a root whose footers are readable here
+(``footers_readable``) every stat the footer reproduces exactly comes
+from ``footer_file_stats`` (the stats of a file just written already sit
+in its footer, so no second read of the data), and one grouped
+``input_file_name`` Spark aggregate over the stage directory runs only
+for the footer-untrusted columns and the bloom columns. On any other
+root that aggregate derives every stat. The bloom bit layout
+(``_BLOOM_M`` bits, one position per seed in ``_BLOOM_SEEDS``, from
+``bloom_positions``) lives here too, so the writer's aggregate and the
+readers' probes (txlog ``_bloom_probes``, Delta ``_bloom_prune_merge``)
+hash alike by construction.
 
 Exactness contract (probed on the raw footers of Spark-written files by
 ``tests/test_footer_stats.py::test_footer_semantics_probe`` — first on
@@ -15,10 +36,13 @@ in the rest of that file):
   (3000-char value probed byte-identical) and compares strings bytewise
   (= Python str order: UTF-8 byte order is code-point order).
 - float/double: parquet-mr computes stats with Java ordering — NaN
-  sorts above +Inf and poisons max exactly like Spark's F.max; -0.0
-  sorts below +0.0. Probed: NaN / ±Inf / -0.0 / all-NaN columns all
-  byte-match the Spark aggregate. The cross-row-group merge below
-  replicates the same total order.
+  sorts above +Inf and poisons max exactly like Spark's F.max. Probed:
+  NaN / ±Inf / all-NaN columns byte-match the Spark aggregate. The
+  cross-row-group merge below replicates the same total order. A file
+  holding both zeros is the exception: the writer and Spark's F.min/
+  F.max each keep whichever zero they meet first, so ``staged_files``
+  widens a zero bound to min -0.0 / max +0.0 on both paths (safe under
+  IEEE and under Java's total order alike).
 - timestamp_ntz (the corpus' working type): INT64 micros, EXACT.
 - timestamp (ltz): Spark's default ``outputTimestampType`` is INT96,
   which carries NO footer stats → those columns fall back to the Spark
@@ -31,7 +55,7 @@ in the rest of that file):
 
 Any file/column that violates an assumption (missing stats with live
 rows, missing null counts, unknown physical type) lands in the
-``untrusted`` set and the caller re-runs the old Spark aggregate FOR
+``untrusted`` set and ``staged_files`` runs the Spark aggregate FOR
 THOSE COLUMNS ONLY — correctness never rides on the fast path.
 
 Scale shape: per-file stats derivation is O(footer) local work — the
@@ -60,6 +84,13 @@ _DRIVER_MAX_FILES = 32
 
 # dictionary cap shared with txlog's equality-skipping metadata
 _DICT_CAP = 64
+
+# Bloom sizing: 8192 bits / 2 hash functions → FPR ≈ (1-e^(-2n/8192))²,
+# ~2% at n=500 distinct values per file, ~15% at n=2000 — the equality-
+# skipping regime the 64-entry dictionary can't reach. 1 KiB per (file,
+# column) in the log; checkpointing folds it.
+_BLOOM_M = 8192
+_BLOOM_SEEDS = (0xB100, 0xB101)
 
 
 def _strip_scheme(p: str) -> str:
@@ -98,7 +129,8 @@ class _Untrusted(Exception):
     pass
 
 
-# every typeName spark_type_name can return: the stats-eligible primitives
+# every typeName spark_type_name can return: the stats-eligible
+# primitives (txlog's stats columns are the written frame's of these types)
 _STATS_TYPES = frozenset(
     {
         "byte", "short", "integer", "long", "float", "double", "boolean",
@@ -148,42 +180,10 @@ def footers_readable(root: str) -> bool:
     executor in the parallelize branch. Only local (or ``file:``) roots
     qualify, the same ``atomic.is_local_path`` rule the corpus reader
     uses; ``hdfs://``, ``s3a://`` and every other scheme take the Spark
-    aggregate (the commit paths' ``_attach_stats_spark``)."""
+    aggregate (``staged_files``)."""
     from .atomic import is_local_path
 
     return is_local_path(root)
-
-
-def column_types(spark, path: str, local: bool) -> list[tuple[str, str | None]]:
-    """(name, Spark ``typeName``) per top-level column of one data file,
-    the type None where the stats passes skip the column (binary,
-    nested, unsigned). From the footer when ``local``, else from the
-    schema Spark reads through the Hadoop filesystem."""
-    if local:
-        return [(f.name, spark_type_name(f.type)) for f in arrow_schema_of(path)]
-    names = [(f.name, f.dataType.typeName()) for f in spark.read.parquet(path).schema]
-    return [(n, tn if tn in _STATS_TYPES else None) for n, tn in names]
-
-
-def untrusted_stats(nrec: int, cols: Iterable[str], dicts: dict | None = None) -> dict:
-    """A per-file entry shaped like ``_one_file_stats`` that trusts no
-    column: for files on a root whose footers are not readable here, so
-    every column's stats come from the caller's Spark aggregate."""
-    return {
-        "nrec": nrec,
-        "min": {},
-        "max": {},
-        "nulls": {},
-        "dict": dict(dicts or {}),
-        "untrusted": list(cols),
-    }
-
-
-def arrow_schema_of(path: str):
-    """Arrow schema of one parquet file (footer only)."""
-    import pyarrow.parquet as pq
-
-    return pq.ParquetFile(_strip_scheme(path)).schema_arrow
 
 
 # Spark ``typeName`` → ``simpleString`` where the two differ
@@ -405,3 +405,205 @@ def footer_file_stats(
         lambda it: _stats_worker(list(it), want_cols, dict_cols, with_nulls)
     )
     return dict(rdd.collect())
+
+
+# --- the staged-file step ----------------------------------------------------
+
+
+def bloom_positions(value) -> list:
+    """The bloom bit positions of ``value`` (a Column), one per seed.
+    xxhash64 is type-sensitive (5 as INT ≠ 5 as BIGINT): a probe casts
+    its value to the column's stored type first."""
+    from pyspark.sql import functions as F
+
+    return [
+        F.pmod(F.xxhash64(value, F.lit(seed)), F.lit(_BLOOM_M))
+        for seed in _BLOOM_SEEDS
+    ]
+
+
+def hive_partition_values(rel: str) -> dict[str, str]:
+    """{column: value} of the ``k=v`` directory segments of a hive-layout
+    relative path, unescaped (Spark writes %, =, #, / and other
+    characters in directory names as %XX). The null marker
+    ``__HIVE_DEFAULT_PARTITION__`` comes back verbatim: each format
+    encodes a null partition value its own way."""
+    from urllib.parse import unquote
+
+    return {
+        unquote(k): unquote(v)
+        for k, v in (seg.split("=", 1) for seg in rel.split("/")[:-1] if "=" in seg)
+    }
+
+
+def _hidden(rel: str) -> bool:
+    """Spark's file-index rule: reads skip every path with a segment
+    starting with '.', or with '_' unless it names a partition
+    (``_delta_log``, ``_staging`` are skipped; ``_k=1`` is read)."""
+    return any(
+        seg.startswith(".") or (seg.startswith("_") and "=" not in seg)
+        for seg in rel.split("/")
+    )
+
+
+def _spark_file_stats(spark, stage_dir, cols, dict_cols, bloom_cols) -> dict:
+    """The one grouped ``input_file_name`` aggregate over ``stage_dir``:
+    {scheme-less raw path: stats dict shaped like ``_one_file_stats``'s,
+    plus "bloom"} for every file with at least one row, restricted to ``cols``
+    (min/max/nulls), ``dict_cols`` and ``bloom_cols`` (hex bit map).
+    Reads the DIRECTORY, not an explicit path list: a path list is
+    validated path by path on the driver (~60 ms each), the directory
+    is one recursive listing."""
+    from pyspark.sql import functions as F
+
+    from . import atomic as _atomic
+
+    df = spark.read.option("basePath", stage_dir).parquet(stage_dir)
+    present = set(df.columns)
+    cols = [c for c in cols if c in present]
+    dict_cols = [c for c in dict_cols if c in present]
+    bloom_cols = [c for c in bloom_cols if c in present]
+    aggs = [F.count(F.lit(1)).alias("__n")]
+    for c in cols:
+        aggs += [
+            F.min(c).alias(f"min__{c}"),
+            F.max(c).alias(f"max__{c}"),
+            F.sum(F.col(c).isNull().cast("long")).alias(f"nulls__{c}"),
+        ]
+    for c in dict_cols:
+        aggs.append(
+            F.slice(F.sort_array(F.collect_set(c)), 1, _DICT_CAP + 1).alias(
+                f"dict__{c}"
+            )
+        )
+    for c in bloom_cols:
+        aggs += [
+            F.collect_set(pos).alias(f"bloom{i}__{c}")
+            for i, pos in enumerate(bloom_positions(F.col(c)))
+        ]
+    rows = (
+        df.withColumn("__file", F.input_file_name())
+        .groupBy("__file")
+        .agg(*aggs)
+        .collect()
+    )
+    out = {}
+    for r in rows:
+        d = r.asDict()
+        st = {
+            "nrec": int(d["__n"]),
+            "min": {}, "max": {}, "nulls": {}, "dict": {}, "bloom": {},
+        }
+        for c in cols:
+            if d[f"min__{c}"] is not None:
+                st["min"][c] = d[f"min__{c}"]
+                st["max"][c] = d[f"max__{c}"]
+            st["nulls"][c] = d[f"nulls__{c}"] or 0
+        for c in dict_cols:
+            vals = d[f"dict__{c}"]
+            st["dict"][c] = vals if 0 < len(vals) <= _DICT_CAP else None
+        for c in bloom_cols:
+            bits = 0
+            for i in range(len(_BLOOM_SEEDS)):
+                for pos in d[f"bloom{i}__{c}"]:
+                    bits |= 1 << pos
+            if bits:
+                st["bloom"][c] = f"{bits:x}"
+        # input_file_name is a PERCENT-ENCODED URI (a partition value
+        # with a space arrives as %20); key by the raw path the listing
+        # yields — by FULL path, never basename: partitioned writes
+        # reuse part-file basenames across partition directories
+        out[_atomic.path_only(_atomic.uri_to_path(d["__file"]))] = st
+    return out
+
+
+def staged_files(
+    spark,
+    stage_dir: str,
+    cols: Iterable[str],
+    dict_cols: Iterable[str] = (),
+    bloom_cols: Iterable[str] = (),
+) -> list[dict]:
+    """The parquet files a write just left under ``stage_dir`` (files in
+    hidden paths skipped, as Spark's reads skip them), each with rows:
+    {"path" (as listed), "rel" (under ``stage_dir``), "size", "mtime",
+    "partition" (``hive_partition_values``), "nrec", "min", "max",
+    "nulls" ({col: value} per stats column in ``cols``), "dict" ({col:
+    sorted ≤64 distinct non-null values, or None past the cap} per
+    ``dict_cols``), "bloom" ({col: hex bit map} per ``bloom_cols``)}.
+    0-row files are deleted and left out: no format commits a file
+    without rows. Callers pass columns of the frame they wrote."""
+    from . import atomic as _atomic
+
+    base = _atomic.path_only(stage_dir)
+    files = []
+    for p, size, mtime in _atomic.list_files(spark, stage_dir, ".parquet"):
+        rel = _atomic.path_only(p)[len(base):].lstrip("/")
+        if not _hidden(rel):
+            files.append(
+                {
+                    "path": p,
+                    "rel": rel,
+                    "size": size,
+                    "mtime": mtime,
+                    "partition": hive_partition_values(rel),
+                }
+            )
+    if not files:
+        return []
+    cols, dict_cols, bloom_cols = list(cols), list(dict_cols), list(bloom_cols)
+    keys = [_atomic.path_only(f["path"]) for f in files]
+    local = footers_readable(stage_dir)
+    per_file: dict[str, dict] = {}
+    agg_cols, agg_dicts = cols, dict_cols
+    if local:
+        per_file = footer_file_stats(
+            spark, keys, want_cols=cols, dict_cols=dict_cols, with_nulls=True
+        )
+        untrusted = {c for st in per_file.values() for c in st["untrusted"]}
+        agg_cols, agg_dicts = [c for c in cols if c in untrusted], []
+    if not local or agg_cols or bloom_cols:
+        by_key = _spark_file_stats(spark, stage_dir, agg_cols, agg_dicts, bloom_cols)
+        stray = set(by_key) - set(keys)
+        if stray:
+            # rows in a file the listing did not name: refuse rather than
+            # take a listed file for empty and delete it
+            raise RuntimeError(
+                f"stats aggregate read files not listed under {stage_dir}: "
+                f"{sorted(stray)[:3]}"
+            )
+        for k in keys:
+            st = per_file.setdefault(
+                k, {"nrec": 0, "min": {}, "max": {}, "nulls": {}, "dict": {}}
+            )
+            agg = by_key.get(k)
+            if agg is None:
+                continue  # no group: the file has no rows
+            st["nrec"] = agg["nrec"]
+            for c in agg_cols:
+                for part in ("min", "max", "nulls"):
+                    st[part].pop(c, None)
+                    if c in agg[part]:
+                        st[part][c] = agg[part][c]
+            st["dict"].update(agg["dict"])
+            st["bloom"] = agg["bloom"]
+    out = []
+    for f, k in zip(files, keys):
+        st = per_file[k]
+        if st["nrec"] == 0:
+            _atomic.delete(spark, f["path"])
+            continue
+        for side, zero in (("min", -0.0), ("max", 0.0)):
+            for c, v in st[side].items():
+                if isinstance(v, float) and v == 0.0:
+                    st[side][c] = zero
+        f.update(
+            nrec=st["nrec"],
+            min=st["min"],
+            max=st["max"],
+            nulls=st["nulls"],
+            dict=st["dict"],
+            bloom=st.get("bloom", {}),
+        )
+        out.append(f)
+    return out

@@ -44,7 +44,6 @@ from __future__ import annotations
 import json
 import time
 import uuid
-from urllib.parse import unquote, urlsplit
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructField, StructType
@@ -52,6 +51,7 @@ from pyspark.sql.types import StructField, StructType
 from projectdatalake_spark.session import local_frame
 from projectdatalake_spark.sources import atomic as _atomic
 from projectdatalake_spark.sources import deletion_vectors as _dv
+from projectdatalake_spark.sources import footer_stats as _fs
 from projectdatalake_spark.sources.avro_codec import read_container, write_container
 
 _SPARK_TO_ICEBERG = {
@@ -2474,22 +2474,15 @@ class IcebergTable:
                 pass
 
     def _staged_files(self, stage: str) -> tuple[list[tuple[str, int]], dict]:
-        """The parquet files Spark just wrote under ``stage``: ([(path,
-        size)], {path: record count}), paths scheme-less as manifests
-        record them."""
-        files = [
-            (_atomic.path_only(p), size)
-            for p, size, _m in _atomic.list_files(self.spark, stage, ".parquet")
-        ]
-        counts = {
-            _atomic.path_only(_atomic.uri_to_path(r["__file"])): r["count"]
-            for r in self.spark.read.parquet(*[f for f, _ in files])
-            .withColumn("__file", F.input_file_name())
-            .groupBy("__file")
-            .count()
-            .collect()
-        }
-        return files, counts
+        """The parquet files with rows Spark just wrote under ``stage``:
+        ([(path, size)], {path: record count}), paths scheme-less as
+        manifests record them (``footer_stats.staged_files``: counts from
+        the footers on a local root, 0-row files deleted)."""
+        files = _fs.staged_files(self.spark, stage, [])
+        return (
+            [(_atomic.path_only(f["path"]), f["size"]) for f in files],
+            {_atomic.path_only(f["path"]): f["nrec"] for f in files},
+        )
 
     def _stage_data(
         self,
@@ -2499,114 +2492,29 @@ class IcebergTable:
     ):
         """Write parquet under data/ (hive layout for partitioned writes),
         returning (abs_path, size, partition_strings, record_count,
-        bounds) per file — counts, layout, AND per-file column min/max in
-        ONE staged write + ONE grouped stats pass (never a per-file
-        job). ``bound_types`` maps column → iceberg type for the columns
-        whose bounds the manifest should carry."""
-        stage_id = uuid.uuid4().hex
-        stage_dir = f"{self.root}/data/{stage_id}"
+        bounds) per file with rows — counts, layout, AND per-file column
+        min/max from ONE staged write + the staged-file step
+        (``footer_stats.staged_files``, never a per-file job).
+        ``bound_types`` maps column → iceberg type for the columns whose
+        bounds the manifest should carry."""
+        stage_dir = f"{self.root}/data/{uuid.uuid4().hex}"
         writer = df.write.mode("overwrite")
         if pcols:
             writer = writer.partitionBy(*pcols)
         writer.parquet(stage_dir)
-        files = [
-            (_atomic.path_only(p), size)
-            for p, size, _m in _atomic.list_files(self.spark, stage_dir, ".parquet")
-        ]
-        counts: dict = {}
-        bounds_by_file: dict[str, dict] = {}
         bcols = [
             c for c in (bound_types or {}) if c not in pcols and c in df.columns
         ]
-        if files:
-            # record counts + per-file bounds from the parquet FOOTERS of
-            # the files just staged — no second read of the data (guide
-            # §6; OPTIMIZATION_r13 lever #1). Per-type bitwise exactness
-            # is probed and pinned in sources/footer_stats.py +
-            # tests/test_footer_stats.py; columns the footer cannot
-            # reproduce exactly (INT96 ltz timestamps) fall back to the
-            # original Spark aggregate RESTRICTED to those columns. A root
-            # whose footers are not readable here (hdfs://, s3a://) takes
-            # counts and every bound from that aggregate.
-            from . import footer_stats as _fs
-
-            add_paths = [p for p, _sz in files]
-            footers = _fs.footers_readable(self.root)
-            if footers:
-                per_file = _fs.footer_file_stats(
-                    self.spark, add_paths, want_cols=bcols
-                )
-                untrusted: list[str] = []
-                for st in per_file.values():
-                    untrusted += [c for c in st["untrusted"] if c not in untrusted]
-            else:
-                untrusted = bcols
-            fb_bounds: dict[str, dict] = {}
-            fb_counts: dict[str, int] = {}
-            if untrusted or not footers:
-                aggs = [F.count(F.lit(1)).alias("__n")]
-                for c in untrusted:
-                    aggs.append(F.min(c).alias(f"min__{c}"))
-                    aggs.append(F.max(c).alias(f"max__{c}"))
-                # read the stage DIRECTORY, not N explicit paths: an
-                # explicit path list is validated path-by-path on the
-                # driver (~60 ms each — 5+ s for an 80-file hive write),
-                # while the directory is one recursive listing; the stage
-                # dir contains exactly the files just written
-                rows = (
-                    self.spark.read.option("basePath", stage_dir)
-                    .parquet(stage_dir)
-                    .withColumn("__file", F.input_file_name())
-                    .groupBy("__file")
-                    .agg(*aggs)
-                    .collect()
-                )
-                for r in rows:
-                    d = r.asDict()
-                    # decode the input_file_name URI: partition values
-                    # with spaces arrive percent-encoded and would never
-                    # match the raw listing paths (bounds lost). Hadoop
-                    # listings above are scheme-less URI paths.
-                    uri = d["__file"]
-                    key = _atomic.uri_to_path(
-                        uri if footers else urlsplit(uri).path
-                    )
-                    fb_counts[key] = d["__n"]
-                    fb_bounds[key] = {
-                        c: (d[f"min__{c}"], d[f"max__{c}"]) for c in untrusted
-                    }
-            if not footers:
-                per_file = {
-                    p: _fs.untrusted_stats(fb_counts.get(p, 0), bcols)
-                    for p in add_paths
-                }
-            for path in add_paths:
-                st = per_file.get(path)
-                if st is None:
-                    continue
-                counts[path] = st["nrec"]
-                fb = fb_bounds.get(path, {})
-                bounds_by_file[path] = {
-                    c: (
-                        fb.get(c, (None, None))
-                        if c in st["untrusted"]
-                        else (st["min"].get(c), st["max"].get(c))
-                    )
-                    for c in bcols
-                }
-        out = []
-        for path, size in files:
-            rel = path[len(_atomic.path_only(stage_dir)):].lstrip("/")
-            # hive layout escapes %, #, = (and more) in directory names
-            parts = {
-                seg.split("=", 1)[0]: unquote(seg.split("=", 1)[1])
-                for seg in rel.split("/")[:-1]
-                if "=" in seg
-            }
-            out.append(
-                (path, size, parts, counts.get(path, 0), bounds_by_file.get(path, {}))
+        return [
+            (
+                _atomic.path_only(f["path"]),
+                f["size"],
+                f["partition"],
+                f["nrec"],
+                {c: (f["min"].get(c), f["max"].get(c)) for c in bcols},
             )
-        return out
+            for f in _fs.staged_files(self.spark, stage_dir, bcols)
+        ]
 
     def _with_field_ids(
         self, df: DataFrame, meta: dict, extra_fields: dict | None = None
@@ -3706,11 +3614,10 @@ class IcebergTable:
                 "file_path": path,
                 "file_format": "PARQUET",
                 "partition": {},
-                "record_count": counts.get(path, 0),
+                "record_count": counts[path],
                 "file_size_in_bytes": size,
             }
             for path, size in del_files
-            if counts.get(path, 0) > 0
         ]
         new_manifest_row = None
         if new_files:
@@ -4677,18 +4584,15 @@ class IcebergTable:
                     "file_path": path,
                     "file_format": "PARQUET",
                     "partition": {},
-                    "record_count": counts.get(path, 0),
+                    "record_count": counts[path],
                     "file_size_in_bytes": size,
                 }
                 for path, size in del_files
-                if counts.get(path, 0) > 0
             ],
             n_deleted=n_deleted,
             summary={
                 "operation": "delete",
-                "added-position-delete-files": str(
-                    sum(1 for p, _ in del_files if counts.get(p, 0) > 0)
-                ),
+                "added-position-delete-files": str(len(del_files)),
                 "added-position-deletes": str(n_deleted),
             },
         )
@@ -4912,12 +4816,11 @@ class IcebergTable:
                     "file_path": path,
                     "file_format": "PARQUET",
                     "partition": {},
-                    "record_count": counts.get(path, 0),
+                    "record_count": counts[path],
                     "file_size_in_bytes": size,
                     "equality_ids": eq_ids,
                 }
                 for path, size in del_files
-                if counts.get(path, 0) > 0
             ],
             eq_ids,
             n_keys,

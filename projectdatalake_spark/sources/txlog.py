@@ -43,7 +43,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from projectdatalake_spark.session import local_frame
-from projectdatalake_spark.sources import atomic as _atomic
+from projectdatalake_spark.sources import atomic as _atomic, footer_stats as _fs
 
 _LOG_DIR = "_txlog"
 _STAGING = "_staging"
@@ -236,14 +236,6 @@ def _widens_to(frm: str, to: str) -> bool:
     if da is not None and db is not None:
         return db[0] - da[0] >= db[1] - da[1] >= 0 and db[0] <= 38
     return False
-
-
-# Bloom sizing: 8192 bits / 2 hash functions → FPR ≈ (1-e^(-2n/8192))²,
-# ~2% at n=500 distinct values per file, ~15% at n=2000 — the equality-
-# skipping regime the 64-entry dictionary can't reach. 1 KiB per (file,
-# column) in the log; checkpointing folds it.
-_BLOOM_M = 8192
-_BLOOM_SEEDS = (0xB100, 0xB101)
 
 
 def _bloom_may_match(add: dict, probes: dict[str, list[int]]) -> bool:
@@ -763,7 +755,13 @@ class TxTable:
         correctness."""
         adds = self._active_files(version)
         if not adds:
-            raise ValueError(f"txlog table at {self.root} has no data at version {version}")
+            # no files (an empty write commits none): the schema still reads
+            schema = self._physical_read_schema(version)
+            if not schema:
+                raise ValueError(
+                    f"txlog table at {self.root} has no data at version {version}"
+                )
+            return self._to_logical(local_frame(self.spark, [], schema))
         # prune against EVERY spec era: each file carries the keys of the
         # spec it was written under (partition evolution)
         fields = self._all_partition_fields()
@@ -1214,20 +1212,15 @@ class TxTable:
         if not cols:
             return {}
         schema = self.table_schema()
-        exprs = []
-        for c in cols:
-            typ = schema.get(c, "string")
-            for i, seed in enumerate(_BLOOM_SEEDS):
-                exprs.append(
-                    F.pmod(
-                        F.xxhash64(F.lit(where_eq[c]).cast(typ), F.lit(seed)),
-                        F.lit(_BLOOM_M),
-                    ).alias(f"p{i}__{c}")
-                )
-        row = self.spark.range(1).select(*exprs).collect()[0].asDict()
-        return {
-            c: [row[f"p{i}__{c}"] for i in range(len(_BLOOM_SEEDS))] for c in cols
-        }
+        row = self.spark.range(1).select(
+            *[
+                F.array(
+                    _fs.bloom_positions(F.lit(where_eq[c]).cast(schema.get(c, "string")))
+                ).alias(c)
+                for c in cols
+            ]
+        ).collect()[0]
+        return {c: list(row[c]) for c in cols}
 
     def _partition_fields(self) -> list[tuple[str, int | None, str, str]]:
         """Parsed CURRENT partition spec: (kind, param, source_col,
@@ -1258,15 +1251,16 @@ class TxTable:
         cluster: dict | None = None,
     ) -> list[dict]:
         """Write ``df`` under _staging/{uuid} and move the parquet files into
-        the table root (hive layout preserved). Returns add-actions; nothing
-        is visible to snapshot readers until the commit publishes.
+        the table root (hive layout preserved). Returns add-actions (files
+        without rows are never committed); nothing is visible to snapshot
+        readers until the commit publishes.
 
         ``cluster`` composes the stats-clustered sink: a range shuffle on
         the cluster key (``repartitionByRange`` — disjoint key intervals
         per task) + an in-partition sort + ``maxRecordsPerFile``. Because
         rows leave each task in key order, the record-count file splits
         inherit tight DISJOINT min/max intervals, which is exactly what
-        ``_attach_stats`` logs and ``snapshot(where=...)`` prunes on —
+        ``_staged_files`` logs and ``snapshot(where=...)`` prunes on —
         write-side skipping to match the read side."""
         stage_id = uuid.uuid4().hex
         stage_dir = f"{self.root}/{_STAGING}/{stage_id}"
@@ -1292,194 +1286,64 @@ class TxTable:
             writer = writer.partitionBy(*part_names)
         writer.parquet(stage_dir)
         adds: list[dict] = []
-        stage_uri = _atomic.path_only(stage_dir)
-        for p, size, _mtime in _atomic.list_files(self.spark, stage_dir, ".parquet"):
-            rel = _atomic.path_only(p)[len(stage_uri) :].lstrip("/")
-            partition = {
-                seg.split("=", 1)[0]: seg.split("=", 1)[1]
-                for seg in rel.split("/")[:-1]
-                if "=" in seg
-            }
-            if not _atomic.rename(self.spark, p, f"{self.root}/{rel}"):
-                raise IOError(f"failed to move staged file {p} -> {self.root}/{rel}")
-            adds.append({"path": rel, "partition": partition, "size": size})
+        for f in self._staged_files(stage_dir, part_names, df.schema):
+            rel = f["rel"]
+            if not _atomic.rename(self.spark, f["path"], f"{self.root}/{rel}"):
+                raise IOError(
+                    f"failed to move staged file {f['path']} -> {self.root}/{rel}"
+                )
+            adds.append(
+                {
+                    "path": rel,
+                    "partition": f["partition"],
+                    "size": f["size"],
+                    **f["encoded"],
+                }
+            )
         _atomic.delete(self.spark, stage_dir, recursive=True)
-        self._attach_stats(adds)
         return adds
 
-    def _attach_stats(self, adds: list[dict]) -> None:
-        """Per-file min/max column stats, value dictionaries and opt-in
-        bloom filters for the files just written. Derived from the
-        parquet FOOTERS (plus one pyarrow columnar read per dictionary
-        column) instead of a full Spark re-read of the data — the stats
-        are already sitting in the bytes just written (guide §6;
-        OPTIMIZATION_r13 lever #1). Per-type bitwise exactness is probed
-        and pinned in sources/footer_stats.py + tests/test_footer_stats
-        .py; any column the footer cannot reproduce exactly (INT96 ltz
-        timestamps, unexpected missing stats) and every bloom column
-        (Spark-xxhash64 parity) still runs through the original Spark
-        aggregate, RESTRICTED to those columns. Feeds
-        snapshot(where=...) data skipping."""
-        if not adds:
-            return
-        from . import footer_stats as _fs
-
-        add_paths = [
-            _atomic.strip_file_scheme(self._data_path(a)) for a in adds
-        ]
-        # a table may reference files outside its root (shallow clones):
-        # every file must be footer-readable for the footer path
-        local = all(_fs.footers_readable(p) for p in add_paths)
-        pcols = set().union(*(a["partition"].keys() for a in adds))
-        # same filter the old read-back-schema walk applied: non-partition
-        # primitives minus binary/array/map/struct
-        cols, dict_cols = [], []
+    def _staged_files(self, stage_dir: str, part_names, schema) -> list[dict]:
+        """``footer_stats.staged_files`` over ``stage_dir`` in txlog's
+        encoding: each file also carries ``encoded`` — ``numRecords``,
+        ``stats`` ({col: {min, max}} for columns with a bound), ``dict``
+        (≤64 sorted values) and ``bloom`` (hex bit maps), each key only
+        when it has content. The stats columns are ``schema``'s (the
+        written frame's) primitives outside ``part_names``; dictionaries
+        cover the equality-skippable types. Feeds snapshot(where=...)
+        data skipping."""
         dict_types = {"string", "integer", "long", "short", "byte", "boolean"}
-        for name, tn in _fs.column_types(self.spark, add_paths[0], local):
-            if name in pcols or tn is None:
+        cols, dict_cols = [], []
+        for f in schema.fields:
+            tn = f.dataType.typeName()
+            if f.name in part_names or tn not in _fs._STATS_TYPES:
                 continue
-            cols.append(name)
+            cols.append(f.name)
             if tn in dict_types:
-                dict_cols.append(name)
-        if not cols:
-            return
-        bloom_cols = [c for c in self._bloom_by() if c in set(cols)]
-        if local:
-            per_file = _fs.footer_file_stats(
-                self.spark, add_paths, want_cols=cols, dict_cols=dict_cols
-            )
-            untrusted: list[str] = []
-            for st in per_file.values():
-                untrusted += [c for c in st["untrusted"] if c not in untrusted]
-        else:
-            untrusted = cols
-        spark_by_path, spark_dicts, spark_blooms, spark_nrec = (
-            self._attach_stats_spark(
-                adds, untrusted, [] if local else dict_cols, bloom_cols
-            )
-            if untrusted or bloom_cols
-            else ({}, {}, {}, {})
-        )
-        if not local:
-            per_file = {
-                p: _fs.untrusted_stats(
-                    spark_nrec.get(p, 0), cols, spark_dicts.get(p)
-                )
-                for p in add_paths
-            }
-        for a, p in zip(adds, add_paths):
-            st = per_file.get(p)
-            if st is None or st["nrec"] == 0:
-                continue  # empty file: the old read-back attached nothing
-            a["numRecords"] = st["nrec"]
+                dict_cols.append(f.name)
+        bloom_cols = [c for c in self._bloom_by() if c in cols]
+        files = _fs.staged_files(self.spark, stage_dir, cols, dict_cols, bloom_cols)
+        for f in files:
+            enc: dict = {"numRecords": f["nrec"]}
             stats = {}
             for c in cols:
-                if c in st["untrusted"]:
-                    sv = (spark_by_path.get(p) or {}).get(c)
-                    if sv:
-                        stats[c] = sv
-                    continue
-                mn = _stats_value(st["min"].get(c))
-                mx = _stats_value(st["max"].get(c))
+                mn = _stats_value(f["min"].get(c))
+                mx = _stats_value(f["max"].get(c))
                 if mn is not None or mx is not None:
                     stats[c] = {"min": mn, "max": mx}
             if stats:
-                a["stats"] = stats
-            dicts = {}
-            for c in dict_cols:
-                vals = st["dict"].get(c)
-                if vals is not None and 0 < len(vals) <= 64:
-                    dicts[c] = [_stats_value(v) for v in vals]
+                enc["stats"] = stats
+            dicts = {
+                c: [_stats_value(v) for v in f["dict"][c]]
+                for c in dict_cols
+                if f["dict"].get(c)
+            }
             if dicts:
-                a["dict"] = dicts
-            blooms = spark_blooms.get(p)
-            if blooms:
-                a["bloom"] = blooms
-
-    def _attach_stats_spark(
-        self,
-        adds: list[dict],
-        cols: list[str],
-        dict_cols: list[str],
-        bloom_cols: list[str],
-    ) -> tuple[dict, dict, dict, dict]:
-        """The original ONE-Spark-pass grouped stats aggregate, now the
-        RESTRICTED fallback: runs only over the columns the footer path
-        could not serve (plus bloom columns, whose bit positions need
-        the same Spark xxhash64 expression the reader probes with), or
-        over every column on a root whose footers are not readable here.
-        Returns (stats, dicts, blooms, numRecords), each keyed by
-        stripped absolute file path."""
-        from pyspark.sql import functions as F
-
-        paths = [f"{self.root}/{a['path']}" for a in adds]
-        df = self.spark.read.option("basePath", self.root).parquet(*paths)
-        present = set(df.columns)
-        cols = [c for c in cols if c in present]
-        dict_cols = [c for c in dict_cols if c in present]
-        bloom_cols = [c for c in bloom_cols if c in present]
-        aggs = [F.count(F.lit(1)).alias("__nrec")]
-        for c in cols:
-            aggs.append(F.min(c).alias(f"min__{c}"))
-            aggs.append(F.max(c).alias(f"max__{c}"))
-        for c in dict_cols:
-            aggs.append(
-                F.slice(F.sort_array(F.collect_set(c)), 1, 65).alias(f"dict__{c}")
-            )
-        for c in bloom_cols:
-            for i, seed in enumerate(_BLOOM_SEEDS):
-                aggs.append(
-                    F.collect_set(
-                        F.pmod(F.xxhash64(F.col(c), F.lit(seed)), F.lit(_BLOOM_M))
-                    ).alias(f"bloom{i}__{c}")
-                )
-        rows = (
-            df.withColumn("__file", F.input_file_name())
-            .groupBy("__file")
-            .agg(*aggs)
-            .collect()
-        )
-        # Key by FULL PATH, never basename: Spark's partitioned writes
-        # reuse part-file basenames ACROSS partition directories
-        # (seg=0/part-00000-… and seg=1/part-00000-… coexist), and a
-        # basename-keyed map silently attributes one file's stats to all
-        # of its same-named siblings — which makes min/max skipping drop
-        # the wrong files (data loss, not conservatism).
-        # decode the input_file_name URI side ONLY (percent-encoded
-        # partition values would never match raw listing paths — stats
-        # silently lost for e.g. 'priority=4-NOT SPECIFIED' dirs); the
-        # filesystem side gets a plain scheme strip, never a decode (a
-        # raw path can legitimately contain %XX from hive escaping)
-        by_path: dict[str, dict] = {}
-        dicts_by_path: dict[str, dict] = {}
-        blooms_by_path: dict[str, dict] = {}
-        nrec_by_path: dict[str, int] = {}
-        for r in rows:
-            d = r.asDict()
-            fpath = _atomic.uri_to_path(d.pop("__file"))
-            nrec_by_path[fpath] = int(d.pop("__nrec"))
-            stats = {}
-            for c in cols:
-                mn, mx = _stats_value(d[f"min__{c}"]), _stats_value(d[f"max__{c}"])
-                if mn is not None or mx is not None:
-                    stats[c] = {"min": mn, "max": mx}
-            by_path[fpath] = stats
-            dicts = {}
-            for c in dict_cols:
-                vals = d.get(f"dict__{c}")
-                if vals is not None and 0 < len(vals) <= 64:
-                    dicts[c] = [_stats_value(v) for v in vals]
-            dicts_by_path[fpath] = dicts
-            blooms = {}
-            for c in bloom_cols:
-                bits = 0
-                for i in range(len(_BLOOM_SEEDS)):
-                    for p in d.get(f"bloom{i}__{c}") or []:
-                        bits |= 1 << p
-                if bits:
-                    blooms[c] = f"{bits:x}"
-            blooms_by_path[fpath] = blooms
-        return by_path, dicts_by_path, blooms_by_path, nrec_by_path
+                enc["dict"] = dicts
+            if f["bloom"]:
+                enc["bloom"] = f["bloom"]
+            f["encoded"] = enc
+        return files
 
     def _publish(
         self, op: str, adds: list[dict], removes: list[str], precondition=None,
@@ -2673,8 +2537,8 @@ class TxTable:
                 base_rows, "__fp string, __base long"
             )
             df = tag(self.spark.read.parquet(*[p for p, _b in base_rows]))
-            # the same URI→raw pairing _attach_stats proved: decode the
-            # _metadata URI side only, never the listing side
+            # the URI→raw pairing footer_stats.staged_files keys by:
+            # decode the _metadata URI side only, never the listing side
             df = df.withColumn(
                 "__fp",
                 F.url_decode(

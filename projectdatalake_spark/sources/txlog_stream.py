@@ -297,13 +297,14 @@ class TxLogChangesStreamReader(DataSourceStreamReader):
 
         recs = pq.read_table(partition.abs_path).to_pylist()
         # hive partition columns live in the path, not the file — typed
-        part_vals = {}
-        for seg in partition.rel_path.split("/")[:-1]:
-            if "=" in seg:
-                k, v = seg.split("=", 1)
-                part_vals[k] = _cast_partition_value(
-                    v, partition.phys_types.get(k, "string")
-                )
+        from projectdatalake_spark.sources.footer_stats import hive_partition_values
+
+        part_vals = {
+            k: None
+            if v == "__HIVE_DEFAULT_PARTITION__"
+            else _cast_partition_value(v, partition.phys_types.get(k, "string"))
+            for k, v in hive_partition_values(partition.rel_path).items()
+        }
 
         p2l = partition.phys_to_logical
         cols = partition.logical_cols

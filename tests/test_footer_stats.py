@@ -8,9 +8,10 @@ on ADVERSARIAL data written through the real table writers: NaN / ±Inf /
 dates, decimals (INT32/FLBA physicals), shorts, booleans, empty tables,
 and the distributed (>32 files) branch.
 
-Ground truth is the ORIGINAL Spark grouped aggregate, still in-tree as
-the restricted fallback (_attach_stats_spark) — each test recomputes it
-over every column and asserts the attached stats are IDENTICAL.
+Ground truth is the Spark grouped aggregate of the staged-file step
+(``footer_stats.staged_files`` with footers unreadable, so every stat
+comes from the aggregate) — each test recomputes it over every column
+and asserts the attached stats are IDENTICAL.
 """
 
 from __future__ import annotations
@@ -74,6 +75,14 @@ def _normf(v):
     return v
 
 
+def _all_from_spark(monkeypatch, fn, *args):
+    """``fn(*args)`` with every footer unreadable: the staged-file step
+    then derives every stat with its one Spark aggregate."""
+    with monkeypatch.context() as m:
+        m.setattr(FS, "footers_readable", lambda root: False)
+        return fn(*args)
+
+
 def _adversarial_df(spark, n_copies: int = 1):
     rows = [
         Row(**{**r.asDict(), "k": r.k + 10 * i})
@@ -83,8 +92,8 @@ def _adversarial_df(spark, n_copies: int = 1):
     return spark.createDataFrame(rows, SCHEMA)
 
 
-def test_txlog_footer_stats_match_spark_agg(spark, tmp_path):
-    from projectdatalake_spark.sources.txlog import TxTable
+def test_txlog_footer_stats_match_spark_agg(spark, tmp_path, monkeypatch):
+    from projectdatalake_spark.sources.txlog import TxTable, _stats_value
 
     df = _adversarial_df(spark).withColumn("part", F.col("k") % 2)
     t = TxTable.create(
@@ -92,17 +101,35 @@ def test_txlog_footer_stats_match_spark_agg(spark, tmp_path):
     )
     adds = t.history()[0]["adds"]
     assert adds, "txlog write produced no adds"
-    # ground truth: the original full Spark aggregate over ALL columns
+    # ground truth: the staged-file step's Spark aggregate over ALL columns
     cols = [f.name for f in df.schema.fields if f.name != "part"]
     dict_types = {"string", "integer", "long", "short", "byte", "boolean"}
     dict_cols = [
         f.name for f in df.schema.fields
         if f.name in cols and f.dataType.typeName() in dict_types
     ]
-    by_path, dicts, _blooms, nrec = t._attach_stats_spark(
-        adds, cols, dict_cols, []
-    )
     from projectdatalake_spark.sources import atomic as _atomic
+
+    files = _all_from_spark(
+        monkeypatch, FS.staged_files, spark, t.root, cols, dict_cols
+    )
+    nrec = {_atomic.path_only(f["path"]): f["nrec"] for f in files}
+    by_path = {
+        _atomic.path_only(f["path"]): {
+            c: {"min": _stats_value(f["min"][c]), "max": _stats_value(f["max"][c])}
+            for c in cols
+            if c in f["min"]
+        }
+        for f in files
+    }
+    dicts = {
+        _atomic.path_only(f["path"]): {
+            c: [_stats_value(v) for v in vals]
+            for c, vals in f["dict"].items()
+            if vals
+        }
+        for f in files
+    }
 
     for a in adds:
         p = _atomic.strip_file_scheme(t._data_path(a))
@@ -119,7 +146,7 @@ def test_txlog_footer_stats_match_spark_agg(spark, tmp_path):
         assert got_dicts == want_dicts, (p, got_dicts, want_dicts)
 
 
-def test_delta_footer_stats_match_spark_agg(spark, tmp_path):
+def test_delta_footer_stats_match_spark_agg(spark, tmp_path, monkeypatch):
     import json
 
     from projectdatalake_spark.sources.delta_interop import (
@@ -150,9 +177,16 @@ def test_delta_footer_stats_match_spark_agg(spark, tmp_path):
         f.name for f in df.schema.fields
         if f.name != "part" and f.dataType.typeName() in _SIMPLE_TYPES
     ]
-    by_path, _blooms, nrec = t._attach_stats_spark(adds, cols, [])
     from projectdatalake_spark.sources import atomic as _atomic
 
+    files = _all_from_spark(monkeypatch, FS.staged_files, spark, t.root, cols)
+    nrec = {_atomic.path_only(f["path"]): f["nrec"] for f in files}
+    by_path = {
+        _atomic.path_only(f["path"]): {
+            c: (f["min"].get(c), f["max"].get(c), f["nulls"][c]) for c in cols
+        }
+        for f in files
+    }
     for a in adds:
         p = _atomic.strip_file_scheme(t._abs_data_path(a["path"]))
         want = {
@@ -532,7 +566,6 @@ def _remote_root(monkeypatch):
 
     monkeypatch.setattr(FS, "footers_readable", lambda root: False)
     monkeypatch.setattr(FS, "footer_file_stats", no_footers)
-    monkeypatch.setattr(FS, "arrow_schema_of", no_footers)
 
 
 def test_txlog_non_local_root_takes_spark_stats(spark, tmp_path, monkeypatch):
@@ -551,7 +584,12 @@ def test_txlog_non_local_root_takes_spark_stats(spark, tmp_path, monkeypatch):
         for key in ("numRecords", "stats", "dict", "bloom"):
             a.pop(key, None)
     _remote_root(monkeypatch)
-    t._attach_stats(got)
+    encoded = {
+        f["rel"]: f["encoded"]
+        for f in t._staged_files(t.root, ("part",), df.schema)
+    }
+    for a in got:
+        a.update(encoded[a["path"]])
     assert _normf(got) == _normf(want)
 
 
@@ -559,7 +597,7 @@ def test_delta_non_local_root_takes_spark_stats(spark, tmp_path, monkeypatch):
     import copy
     import json
 
-    from projectdatalake_spark.sources.delta_interop import DeltaTable
+    from projectdatalake_spark.sources.delta_interop import DeltaTable, _quote_path
 
     df = (
         _adversarial_df(spark)
@@ -576,7 +614,12 @@ def test_delta_non_local_root_takes_spark_stats(spark, tmp_path, monkeypatch):
     for a in got:
         a.pop("stats")
     _remote_root(monkeypatch)
-    t._attach_stats(got, {"part"}, df.schema)
+    encoded = {
+        _quote_path(f["rel"]): f["encoded"]
+        for f in t._staged_files(t.root, ("part",), df.schema)
+    }
+    for a in got:
+        a["stats"] = encoded[a["path"]]["stats"]
     assert [a["stats"] for a in got] == [a["stats"] for a in want]
 
 
@@ -589,3 +632,231 @@ def test_iceberg_non_local_root_takes_spark_stats(spark, tmp_path, monkeypatch):
     slow = IcebergTable.create(spark, str(tmp_path / "slow"), df)
     assert _iceberg_bounds(fast) == _iceberg_bounds(slow)
     assert sum(n for _lo, _hi, n in _iceberg_bounds(slow)) == df.count()
+
+
+# --- the staged-file step: one rule for the three formats ----------------
+
+EQUIV_SCHEMA = (
+    "i int, s string, cat string, d double, dec decimal(9,2), ts timestamp, "
+    "tsn timestamp_ntz, b long, k string"
+)
+
+
+def _equiv_df(spark):
+    """ints, strings, a low-cardinality (dictionary) column, doubles with
+    NaN and -0.0, decimals, INT96 timestamps, timestamp_ntz, nulls in
+    every column, a bloom column ``b`` and a partition column ``k`` whose
+    values need hive escaping (``50%``, ``a=b``) or the null marker."""
+    ks = ["50%", "a=b", None]
+    dbls = [1.5, float("nan"), -0.0, None, 0.0, -2.25]
+    rows = []
+    for n in range(18):
+        rows.append((
+            None if n == 4 else n,
+            None if n % 5 == 0 else f"s{n:02d}",
+            ["x", "y", None][n % 3],
+            dbls[n % len(dbls)],
+            None if n == 7 else decimal.Decimal(n * 101) / 100 - 5,
+            None if n == 9 else datetime.datetime(2021, 1, 1 + n, 3, 4, 5),
+            None if n == 10 else datetime.datetime(1999, 12, 1 + n, 0, 0, n),
+            n * 7919 if n != 12 else None,
+            ks[n % 3],
+        ))
+    return spark.createDataFrame(rows, EQUIV_SCHEMA).repartition(2)
+
+
+@pytest.fixture(params=["local", "hadoop"])
+def lake_branch(request, monkeypatch):
+    """Both ``is_local_path`` branches: footer stats on a local root, and
+    a root forced non-local (Hadoop listing, every stat from Spark)."""
+    from projectdatalake_spark.sources import atomic
+
+    if request.param == "hadoop":
+        monkeypatch.setattr(atomic, "is_local_path", lambda p: False)
+    return request.param
+
+
+@pytest.mark.parametrize("partition_by", [("k",), ()], ids=["hive", "flat"])
+def test_delta_entries_equal_full_spark_aggregate(
+    spark, tmp_path, monkeypatch, lake_branch, partition_by
+):
+    from projectdatalake_spark.sources.delta_interop import DeltaTable, _quote_path
+
+    df = _equiv_df(spark)
+    t = DeltaTable.create(
+        spark, str(tmp_path / "d"), df, partition_by=partition_by, bloom_by=("b",)
+    )
+    adds = {p: a for p, a in t._state()["adds"].items()}
+    truth = {
+        _quote_path(f["rel"]): f
+        for f in _all_from_spark(
+            monkeypatch, t._staged_files, t.root, partition_by, df.schema
+        )
+    }
+    assert set(adds) == set(truth)
+    assert any(a.get("tags") for a in adds.values())
+    for p, a in adds.items():
+        assert a["stats"] == truth[p]["encoded"]["stats"], p
+        assert a.get("tags") == truth[p]["encoded"].get("tags"), p
+        assert a["partitionValues"] == truth[p]["partitionValues"], p
+    if partition_by:
+        ks = {a["partitionValues"]["k"] for a in adds.values()}
+        assert ks == {"50%", "a=b", None}
+    assert t.snapshot().count() == 18
+
+
+@pytest.mark.parametrize("partition_by", [("k",), ()], ids=["hive", "flat"])
+def test_txlog_entries_equal_full_spark_aggregate(
+    spark, tmp_path, monkeypatch, lake_branch, partition_by
+):
+    from projectdatalake_spark.sources.txlog import TxTable
+
+    df = _equiv_df(spark)
+    t = TxTable.create(
+        spark, str(tmp_path / "t"), df, partition_by=partition_by, bloom_by=("b",)
+    )
+    adds = {a["path"]: a for a in t._active_files()}
+    truth = {
+        f["rel"]: f
+        for f in _all_from_spark(
+            monkeypatch, t._staged_files, t.root, partition_by, df.schema
+        )
+    }
+    assert set(adds) == set(truth)
+    keys = ("numRecords", "stats", "dict", "bloom")
+    for p, a in adds.items():
+        got = {k: a.get(k) for k in keys}
+        want = {k: truth[p]["encoded"].get(k) for k in keys}
+        assert _normf(got) == _normf(want), p
+        assert a["partition"] == truth[p]["partition"], p
+    assert all(a.get("bloom", {}).get("b") for a in adds.values())
+    assert any((a.get("dict") or {}).get("cat") for a in adds.values())
+    if partition_by:
+        assert {a["partition"]["k"] for a in adds.values()} == {
+            "50%", "a=b", "__HIVE_DEFAULT_PARTITION__"
+        }
+    assert t.snapshot().count() == 18
+
+
+@pytest.mark.parametrize("partition_by", [("k",), ()], ids=["hive", "flat"])
+def test_iceberg_entries_equal_full_spark_aggregate(
+    spark, tmp_path, monkeypatch, lake_branch, partition_by
+):
+    from projectdatalake_spark.sources import atomic
+    from projectdatalake_spark.sources.iceberg_interop import (
+        IcebergTable,
+        _encode_bound,
+    )
+
+    df = _equiv_df(spark)
+    t = IcebergTable.create(spark, str(tmp_path / "i"), df, partition_by=partition_by)
+    meta = t.metadata()
+    fields = next(
+        s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
+    )["fields"]
+    typed = {f["name"]: (f["id"], f["type"]) for f in fields}
+    bcols = [c for c in df.columns if c not in partition_by]
+    entries, _ = t._entries_for_snapshot(meta, None)
+    # the one stage directory the write left under data/
+    (stage,) = {
+        e["data_file"]["file_path"][len(f"{t.root}/data/"):].split("/")[0]
+        for e in entries
+    }
+    truth = {
+        atomic.path_only(f["path"]): f
+        for f in _all_from_spark(
+            monkeypatch, FS.staged_files, spark, f"{t.root}/data/{stage}", bcols
+        )
+    }
+
+    def bounds(kvs):
+        return {kv["key"]: bytes(kv["value"]) for kv in kvs or []}
+
+    assert {e["data_file"]["file_path"] for e in entries} == set(truth)
+    for e in entries:
+        d = e["data_file"]
+        f = truth[d["file_path"]]
+        assert d["record_count"] == f["nrec"] > 0
+        for side, got in (("min", d["lower_bounds"]), ("max", d["upper_bounds"])):
+            want = {}
+            for c in bcols:
+                if c in f[side]:
+                    enc = _encode_bound(f[side][c], typed[c][1])
+                    if enc is not None:
+                        want[typed[c][0]] = enc
+            assert bounds(got) == want, (d["file_path"], side)
+    assert t.snapshot().count() == 18
+
+
+def _zero_row_frame(spark):
+    # range partition 0 holds only id 0, which the filter drops: Spark
+    # still writes partition 0's file, with no rows
+    return spark.range(0, 4, 1, 4).where("id > 0").withColumn("s", F.lit("v"))
+
+
+def _record_counts(fmt, t):
+    import json
+
+    if fmt == "delta":
+        adds = t._state()["adds"].values()
+        return [json.loads(a["stats"])["numRecords"] for a in adds]
+    if fmt == "txlog":
+        return [a.get("numRecords", 0) for a in t._active_files()]
+    entries, _ = t._entries_for_snapshot(t.metadata(), None)
+    return [e["data_file"]["record_count"] for e in entries]
+
+
+def _table_cls(fmt):
+    from projectdatalake_spark.sources.delta_interop import DeltaTable
+    from projectdatalake_spark.sources.iceberg_interop import IcebergTable
+    from projectdatalake_spark.sources.txlog import TxTable
+
+    return {"delta": DeltaTable, "txlog": TxTable, "iceberg": IcebergTable}[fmt]
+
+
+@pytest.mark.parametrize("fmt", ["delta", "txlog", "iceberg"])
+def test_zero_row_files_are_never_committed(spark, tmp_path, fmt):
+    """A write whose frame has an empty partition commits only files
+    with rows (the 0-row file is deleted), so row tracking, which
+    backfills ids from record counts, enables."""
+    import pyarrow.parquet as pq
+
+    root = tmp_path / fmt
+    t = _table_cls(fmt).create(spark, str(root), _zero_row_frame(spark))
+    counts = _record_counts(fmt, t)
+    assert counts and all(n > 0 for n in counts) and sum(counts) == 3, counts
+    if fmt == "iceberg":
+        t.enable_row_lineage()
+    else:
+        t.enable_row_tracking()
+    assert t.snapshot().count() == 3
+    data = [
+        p for p in root.rglob("*.parquet")
+        if not any(part.startswith(("_", ".")) for part in p.relative_to(root).parts)
+        and "metadata" not in p.relative_to(root).parts
+    ]
+    assert data and all(pq.ParquetFile(p).metadata.num_rows > 0 for p in data)
+
+
+@pytest.mark.parametrize("fmt", ["delta", "txlog", "iceberg"])
+def test_empty_append_commits_and_keeps_schema(spark, tmp_path, fmt):
+    df = _zero_row_frame(spark)
+    t = _table_cls(fmt).create(spark, str(tmp_path / fmt), df)
+    schema = t.snapshot().schema
+    if fmt == "iceberg":
+        before = len(t.metadata()["snapshots"])
+    else:
+        before = t.latest_version()
+    t.append(spark.createDataFrame([], df.schema))
+    if fmt == "iceberg":
+        assert len(t.metadata()["snapshots"]) == before + 1
+    else:
+        assert t.latest_version() == before + 1
+    assert t.snapshot().schema == schema
+    assert t.snapshot().count() == 3
+    empty = _table_cls(fmt).create(
+        spark, str(tmp_path / f"{fmt}_empty"), spark.createDataFrame([], df.schema)
+    )
+    assert _record_counts(fmt, empty) == []
+    assert empty.snapshot().schema.simpleString() == schema.simpleString()
+    assert empty.snapshot().count() == 0

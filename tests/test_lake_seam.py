@@ -86,6 +86,46 @@ def test_iceberg_runs_no_pandas_udf():
     assert refs == []
 
 
+def _calls(path: pathlib.Path, match) -> int:
+    tree = ast.parse(path.read_text(), filename=str(path))
+    return sum(
+        1
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute) and match(n)
+    )
+
+
+def _names_in(node) -> set[str]:
+    return {n.id for n in ast.walk(node) if isinstance(n, ast.Name)}
+
+
+def test_staged_file_stats_live_in_footer_stats():
+    """The grouped ``input_file_name`` stats aggregate and the bloom bit
+    expression (``pmod(xxhash64(..), _BLOOM_M)``) exist once each, in
+    ``footer_stats.py``; no format keeps an ``_attach_stats_spark`` or
+    names the bloom seeds."""
+    counts = collections.Counter()
+    for p in sorted(SOURCES.glob("*.py")):
+        counts[(p.name, "input_file_name")] = _calls(
+            p, lambda n: n.func.attr == "input_file_name"
+        )
+        counts[(p.name, "bloom")] = _calls(
+            p, lambda n: n.func.attr == "pmod" and "_BLOOM_M" in _names_in(n)
+        )
+        tree = ast.parse(p.read_text())
+        counts[(p.name, "_attach_stats_spark")] = sum(
+            isinstance(n, ast.FunctionDef) and n.name == "_attach_stats_spark"
+            for n in ast.walk(tree)
+        )
+        counts[(p.name, "_BLOOM_SEEDS")] = int(
+            p.name != "footer_stats.py" and "_BLOOM_SEEDS" in _names_in(tree)
+        )
+    assert +counts == {
+        ("footer_stats.py", "input_file_name"): 1,
+        ("footer_stats.py", "bloom"): 1,
+    }
+
+
 def _lake_df(spark, n):
     return (
         spark.range(n)

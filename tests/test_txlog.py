@@ -61,6 +61,28 @@ def test_replace_where_rejects_out_of_scope_rows(spark, table):
         table.replace_where(_mkdf(spark, [(1, "A", 11), (3, "B", 33)]), {"seg": ["A"]})
 
 
+def _escaped_table(spark, tmp_path):
+    # partition values hive writes escaped in directory names (%25, %3D)
+    df = _mkdf(spark, [(1, "50%", 10), (2, "a=b", 20), (3, "plain", 30)])
+    return TxTable.create(spark, str(tmp_path / "esc"), df, partition_by=("seg",))
+
+
+def test_partition_values_are_logged_unescaped(spark, tmp_path):
+    t = _escaped_table(spark, tmp_path)
+    assert {a["partition"]["seg"] for a in t._active_files()} == {"50%", "a=b", "plain"}
+    t.replace_where(_mkdf(spark, [(4, "50%", 40)]), {"seg": ["50%"]})
+    got = {(r.id, r.seg, r.val) for r in t.snapshot().collect()}
+    assert got == {(4, "50%", 40), (2, "a=b", 20), (3, "plain", 30)}
+
+
+def test_partition_pruning_matches_escaped_values(spark, tmp_path):
+    t = _escaped_table(spark, tmp_path)
+    got = [(r.id, r.seg) for r in t.snapshot(where={"seg": ("a=b", "a=b")}).collect()]
+    assert got == [(2, "a=b")]
+    got = [(r.id, r.seg) for r in t.snapshot(where_eq={"seg": "50%"}).collect()]
+    assert got == [(1, "50%")]
+
+
 def test_merge_upsert_partition_scoped(spark, table):
     b_files_before = {
         a["path"] for a in table._active_files() if a["partition"]["seg"] == "B"

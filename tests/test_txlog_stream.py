@@ -174,6 +174,28 @@ def test_cdf_partition_values_typed_from_path(spark, tmp_path):
     assert got.select("id", "bucket_no", "s", "_change_type").exceptAll(expected).count() == 0
 
 
+def test_cdf_partition_values_unescaped_from_path(spark, tmp_path):
+    """Partition values hive escapes in directory names (``50%``,
+    ``a=b``) and the null marker stream as the values batch changes()
+    reads."""
+    df = spark.createDataFrame(
+        [(1, "50%"), (2, "a=b"), (3, None)], "id long, seg string"
+    )
+    t = TxTable.create(spark, str(tmp_path / "esc_part"), df, partition_by=("seg",))
+    txlog_stream.register(spark)
+    stream = (
+        spark.readStream.format("txlog_changes").option("path", t.root).load()
+    )
+    got = _run_until(
+        spark, stream, "cdf_sink_esc", str(tmp_path / "ck_esc"),
+        lambda d: d.count() >= 3,
+    ).select("id", "seg", "_change_type")
+    expected = t.changes(-1).select("id", "seg", "_change_type")
+    assert sorted(r["seg"] or "" for r in got.collect()) == ["", "50%", "a=b"]
+    assert got.exceptAll(expected).count() == 0
+    assert expected.exceptAll(got).count() == 0
+
+
 def test_cdf_stream_after_widen_uses_wide_schema(spark, tmp_path):
     """widen_column commits fold into the stream schema: narrow-file rows
     arrive as the wide type, matching batch changes()."""
