@@ -11,6 +11,9 @@ Scale posture (100 TB / 1000 executors):
 - shuffle partitions sized to the cluster, not the 200 default.
 - UTC session timezone pinned so time functions are deterministic anywhere.
 - Arrow enabled for pandas-UDF and toPandas boundaries.
+- Codegen cache sized to the engine's plan working set, so each generated
+  class compiles once per session. It is a static conf: a session built
+  elsewhere and handed to ``prepare`` keeps Spark's default of 100.
 
 Driver-built frames (deletion-vector pairs, checkpoint rows, path lists,
 small query results) go through ``local_frame`` and nowhere else:
@@ -72,6 +75,16 @@ STATIC_CONFS: dict[str, str] = {
     # measured via cProfile in OPTIMIZATION_r12.md §1). Error messages
     # lose the user line number, nothing else.
     "spark.python.sql.dataFrameDebugging.enabled": "false",
+    # Whole-stage codegen compiles each distinct generated class with
+    # Janino and caches it by source text. Measured working sets with
+    # Spark's CodegenMetrics compile counter: query_mix's 12 queries make
+    # 113 classes; lake_ingest holds 127 after its set-up and 255 after
+    # day 1, then adds about 31 a day. Spark's default cap of 100, which
+    # Guava's LRU also splits across its segments, is below both: every
+    # query_mix pass recompiled 60-77 of its 113 classes, and a lake_ingest
+    # day about 250. 1000 is about 4x the largest working set; a cached
+    # class averages 2.4 KB of bytecode.
+    "spark.sql.codegen.cache.maxEntries": "1000",
 }
 
 
@@ -83,6 +96,8 @@ def prepare(spark: SparkSession) -> SparkSession:
     or a notebook). Also right-sizes shuffle partitions when the session
     still carries the 200 default — AQE coalesces batch shuffles anyway,
     but streaming state stores get one instance per partition.
+    ``STATIC_CONFS`` are not applied: a session built elsewhere keeps its
+    own values, such as Spark's codegen cache of 100 classes.
     """
     for key, value in RUNTIME_CONFS.items():
         try:

@@ -49,7 +49,7 @@ import urllib.parse
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 from projectdatalake_spark.session import local_frame
 from projectdatalake_spark.sources import atomic as _atomic
@@ -306,6 +306,20 @@ def _partition_literal(value: str | None, dtype):
     if value is None or value == "__HIVE_DEFAULT_PARTITION__":
         return F.lit(None).cast(dtype)
     return F.lit(value).cast(dtype)
+
+
+def _nullable(dt: DataType) -> DataType:
+    """``dt`` with every field, element and map value nullable, as
+    Spark's file sources read a schema (``DataType.asNullable``)."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
 
 
 class DeltaTable:
@@ -903,9 +917,8 @@ class DeltaTable:
             where_phys = {phys_of.get(c, c): v for c, v in where.items()}
             adds = [a for a in adds if self._stats_may_match(a, where_phys)]
         if not adds:
-            return local_frame(self.spark, [], schema)
-        from pyspark.sql.types import StructField
-
+            # the same schema a read of the files gives
+            return local_frame(self.spark, [], _nullable(schema))
         # physical read schema: data files store PHYSICAL column names; in
         # id mode resolution is by parquet field id (ids stamped in files),
         # in name mode strictly by physical name (files carry no ids)
@@ -1058,8 +1071,6 @@ class DeltaTable:
         projection — callers needing row identity must ask here, because
         the hidden ``_metadata`` struct does not survive the id-mode
         projection."""
-        from pyspark.sql.types import StructField
-
         def _with_meta_cols(df: DataFrame) -> DataFrame:
             return df.withColumn(
                 "__fp", _file_path_raw(F.col("_metadata.file_path"))
@@ -2037,8 +2048,6 @@ class DeltaTable:
         lack the new physical column — read the addition as null, and
         foreign readers resolve the new files by the minted id (id
         mode) or physical name (name mode)."""
-        from pyspark.sql.types import StructField
-
         cfg = dict(meta.get("configuration") or {})
         mode = cfg.get("delta.columnMapping.mode", "none")
         if mode in (None, "none"):

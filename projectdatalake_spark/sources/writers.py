@@ -10,21 +10,11 @@ of them hive-partitioned (reference etl.py:49-52, 64-66, 119-121, 135-138,
 - dynamic partition overwrite replaces only the partitions present in the
   incoming data, making re-runs idempotent per-partition instead of
   truncating the whole table.
-- Delta/Iceberg formats are supported when their jars are present (gated —
-  not available in this container), falling back to Parquet.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-
-
-def _delta_available(df: DataFrame) -> bool:
-    try:  # pragma: no cover - delta jars not in the test container
-        df.sparkSession._jvm.org.apache.spark.sql.delta.DeltaLog  # noqa: B018
-        return True
-    except Exception:
-        return False
 
 
 def write_parquet(

@@ -858,5 +858,5 @@ def test_empty_append_commits_and_keeps_schema(spark, tmp_path, fmt):
         spark, str(tmp_path / f"{fmt}_empty"), spark.createDataFrame([], df.schema)
     )
     assert _record_counts(fmt, empty) == []
-    assert empty.snapshot().schema.simpleString() == schema.simpleString()
+    assert empty.snapshot().schema == schema
     assert empty.snapshot().count() == 0

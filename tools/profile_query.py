@@ -5,6 +5,8 @@ duration, stages) plus the slowest stages from the UI REST API — the
 guide's "empirical loop" (spark_optimization_guide §1.1/§7.1) without a
 browser. Python-side wall time between jobs (driver work: planning, file
 IO, py4j) is visible as the gap between total wall and the job sum.
+Each rep also prints how many generated classes Janino compiled for it;
+with the session's codegen cache, every rep after the first prints 0.
 
 Usage:  python tools/profile_query.py <query> [sf_dir] [reps]
 """
@@ -33,9 +35,11 @@ def main() -> None:
     })
     qs = entry_mod.queries()
     fn = qs[name]
+    codegen = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
 
     for r in range(reps):
         sc = spark.sparkContext
+        compiled0 = codegen.METRIC_COMPILATION_TIME().getCount()
         t0 = time.perf_counter()
         sc.setJobDescription(f"{name} rep{r}")
         t_build0 = time.perf_counter()
@@ -44,7 +48,9 @@ def main() -> None:
         df.write.format("noop").mode("overwrite").save()
         wall = time.perf_counter() - t0
         sc.setJobDescription(None)
-        print(f"\n=== rep {r}: wall {wall:.3f}s (df-build {t_build:.3f}s)")
+        compiled = codegen.METRIC_COMPILATION_TIME().getCount() - compiled0
+        print(f"\n=== rep {r}: wall {wall:.3f}s (df-build {t_build:.3f}s, "
+              f"{compiled} classes compiled)")
 
     app_id = spark.sparkContext.applicationId
     # uiWebUrl reflects the port Spark actually bound (4099 may have been
