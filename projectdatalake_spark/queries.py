@@ -13149,8 +13149,6 @@ def iceberg_rewrite_manifests(spark: SparkSession, sf_dir: str) -> DataFrame:
     cheapest maintenance action in the book — pure metadata."""
     import tempfile
 
-    from projectdatalake_spark.sources import atomic as _atomic
-    from projectdatalake_spark.sources.avro_codec import read_container
     from projectdatalake_spark.sources.iceberg_interop import IcebergTable
 
     o = _t(spark, sf_dir, "orders").select(
@@ -13168,11 +13166,7 @@ def iceberg_rewrite_manifests(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def n_data_manifests() -> int:
         meta = t.metadata()
-        cur = next(
-            s for s in meta["snapshots"]
-            if s["snapshot-id"] == meta["current-snapshot-id"]
-        )
-        _, rows = read_container(_atomic.read_bytes(spark, cur["manifest-list"]))
+        rows = t._manifest_list(t._find_snapshot(meta, meta["current-snapshot-id"]))
         return len([m for m in rows if m.get("content", 0) == 0])
 
     assert n_data_manifests() == 5
@@ -19227,9 +19221,9 @@ def iceberg_lineage_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataF
     declared refusal; verdict item 7): ``overwrite_partitions`` on a
     row-lineage table now stamps each CARRIED file's resolved
     first_row_id explicitly (field 142 — the ``rewrite_manifests``
-    carry rule, resolved via _entries_for_snapshot's inheritance
-    accumulation) and licenses the replace commit with
-    ``lineage_carried=True``: the id of nothing that survives changes.
+    carry rule, resolved via _manifest_entries' inheritance
+    accumulation), which licenses the replace commit: the id of nothing
+    that survives changes.
     Fixture: orders keyed %3∈{0,1} in a ``truncate(2000, o_orderkey)``
     table (non-identity transform — data files keep every column, so
     the lineage reader now supports it), lineage enabled, then a

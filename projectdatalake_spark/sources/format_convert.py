@@ -41,6 +41,7 @@ from projectdatalake_spark.sources.iceberg_interop import (
     IcebergProtocolError,
     IcebergTable,
     _encode_bound,
+    _new_snapshot_id,
 )
 
 
@@ -332,33 +333,12 @@ def uniform_export(
                 return t, None  # tip already exported
     files = _delta_adds_as_iceberg_files(delta, state, t, pcols)
     ice_meta = t.metadata()
-    sid = uuid.uuid4().int % (1 << 62)
+    sid = _new_snapshot_id()
     dv_files, n_dv = _delta_dvs_as_iceberg_dv_files(
         delta, state, t, sid, ice_meta["last-sequence-number"] + 1
     )
-    extra_manifests = None
-    ensure_spec = None
     summary = {"uniform.delta-version": v}
     if dv_files:
-        ensure_spec = IcebergTable._unpartitioned_spec(ice_meta)
-        del_path, del_len = t._write_delete_manifest(
-            ensure_spec, [], dv_files, sid
-        )
-        extra_manifests = [
-            {
-                "manifest_path": del_path,
-                "manifest_length": del_len,
-                "partition_spec_id": ensure_spec["spec-id"],
-                "content": 1,
-                "added_files_count": len(dv_files),
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": n_dv,
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-                "partitions": None,
-            }
-        ]
         summary["added-dvs"] = str(len(dv_files))
         summary["added-position-deletes"] = str(n_dv)
     sid = t.append_files(
@@ -367,8 +347,7 @@ def uniform_export(
         replace=not fresh,
         operation="append" if fresh else "replace",
         summary_props=summary,
-        extra_manifests=extra_manifests,
-        ensure_spec=ensure_spec,
+        delete_manifests=[t._delete_manifest(ice_meta, dv_files, sid)] if dv_files else [],
         sid=sid,
         # the snapshot carries v3-only delete structures: declare v3 IN
         # THE SAME metadata commit so no observable version pairs a v2

@@ -88,6 +88,16 @@ class IcebergProtocolError(Exception):
     pass
 
 
+class _Unchanged(Exception):
+    """Raised by a metadata mutator whose precondition shows, on that
+    attempt's metadata, that there is nothing to commit: no version is
+    written and ``_commit_metadata`` returns ``value``."""
+
+    def __init__(self, value=None):
+        super().__init__(value)
+        self.value = value
+
+
 def _iceberg_schema(schema: StructType) -> list[dict]:
     fields = []
     for i, f in enumerate(schema.fields, start=1):
@@ -415,6 +425,28 @@ _DATE_TRANSFORMS = ("year", "month", "day", "hour")
 _ROW_ID_FIELD_ID = 2147483546
 _ROW_ID_COL = "_row_id"
 
+# metadata-log entries kept (Iceberg's default for
+# ``write.metadata.previous-versions-max``)
+_METADATA_LOG_MAX = 100
+
+
+def _new_snapshot_id() -> int:
+    return uuid.uuid4().int % (1 << 62)
+
+
+def _current_schema(meta: dict) -> dict:
+    return next(s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"])
+
+
+def _stamp_dv_v2_embedded(meta: dict) -> None:
+    """Metadata mutator recording, in the same commit as a DV delete,
+    that v3 deletion vectors sit under a v2 declaration (see
+    ``IcebergTable.delete_where_dv``), visible to any metadata auditor."""
+    meta["properties"] = {
+        **(meta.get("properties") or {}),
+        "deletion-vectors.v2-embedded": "true",
+    }
+
 
 def _partition_summaries(
     entries: list[dict], part_fields: list[tuple[str, str]]
@@ -528,9 +560,7 @@ def _spec_part_fields(meta: dict, spec: dict) -> list[dict]:
     """Resolved view of the current spec: each field as {pname, source,
     transform, src_type, result_type} with the source column looked up
     by SOURCE-ID (names are mutable; ids are not)."""
-    ice_fields = next(
-        s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
-    )["fields"]
+    ice_fields = _current_schema(meta)["fields"]
     by_id = {f["id"]: f for f in ice_fields}
     out = []
     for f in spec["fields"]:
@@ -1081,25 +1111,19 @@ class IcebergTable:
     def _entries_for_snapshot(
         self, meta: dict, snapshot_id: int | None, skip_manifest=None
     ) -> tuple[list[dict], list[dict]]:
-        """(data entries, position-delete entries) alive at the snapshot.
-        Manifest content 0 = data, 1 = deletes (v2); anything else is a
-        future format → refuse loudly. ``skip_manifest(m) -> bool`` (data
+        """(data entries, delete entries) alive at the snapshot (default:
+        the current one), annotated by ``_manifest_entries``. Manifest
+        content 0 = data, 1 = deletes (v2); anything else is a future
+        format → refuse loudly. ``skip_manifest(m) -> bool`` (data
         manifests only) lets planning drop a manifest on its
         manifest-list partition summaries WITHOUT opening its Avro —
         delete manifests are always read."""
-        sid = snapshot_id if snapshot_id is not None else meta.get("current-snapshot-id")
-        if sid is None or sid == -1:
-            return [], []
-        snap = next(
-            (s for s in meta.get("snapshots", []) if s["snapshot-id"] == sid), None
-        )
-        if snap is None:
-            raise FileNotFoundError(f"snapshot {sid} not in table metadata")
-        _, manifests = read_container(_atomic.read_bytes(self.spark, snap["manifest-list"]))
+        if snapshot_id is None:
+            snapshot_id = meta.get("current-snapshot-id")
         lineage = bool(meta.get("row-lineage"))
         data: list[dict] = []
         deletes: list[dict] = []
-        for m in manifests:
+        for m in self._manifest_list(self._find_snapshot(meta, snapshot_id)):
             content = m.get("content", 0)
             if content not in (0, 1):
                 raise IcebergProtocolError(
@@ -1107,53 +1131,290 @@ class IcebergTable:
                 )
             if content == 0 and skip_manifest is not None and skip_manifest(m):
                 continue
-            _, rows = read_container(_atomic.read_bytes(self.spark, m["manifest_path"]))
-            # row-lineage id resolution (round 11): a data file's
-            # first_row_id is its explicit field-142 stamp, else
-            # inherited from the manifest's base by record_count
-            # accumulation in entry order — the same rule
-            # snapshot_with_row_ids applies; carried into ``_fri`` so
-            # replace-shaped writers can re-stamp carried files
-            running = (
-                int(m["first_row_id"])
-                if lineage and content == 0
-                and m.get("first_row_id") is not None
-                else None
-            )
-            for e in rows:
-                if e["status"] in (0, 1):  # EXISTING / ADDED
-                    # effective DATA sequence number (spec inheritance:
-                    # a null entry seq inherits the manifest's) — the
-                    # ordering equality deletes are applied by
-                    e["_seq"] = (
-                        e.get("sequence_number")
-                        if e.get("sequence_number") is not None
-                        else m["sequence_number"]
-                    )
-                    # the spec ERA this file was written under (manifests
-                    # pin their spec id; partition tuples only make sense
-                    # against it after spec evolution)
-                    e["_spec_id"] = m.get("partition_spec_id", 0)
-                    # the snapshot that ADDED this file (spec field 503:
-                    # a null entry snapshot_id inherits the manifest's
-                    # added_snapshot_id) — partition stats' last-updated
-                    # fields resolve against it
-                    e["_snap"] = (
-                        e.get("snapshot_id")
-                        if e.get("snapshot_id") is not None
-                        else m.get("added_snapshot_id")
-                    )
-                    if content == 0 and lineage:
-                        dfri = e["data_file"].get("first_row_id")
-                        if dfri is not None:
-                            e["_fri"] = int(dfri)
-                        elif running is not None:
-                            e["_fri"] = running
-                            running += int(e["data_file"]["record_count"])
-                        else:
-                            e["_fri"] = None
-                    (deletes if content == 1 else data).append(e)
+            (deletes if content else data).extend(self._manifest_entries(m, lineage))
         return data, deletes
+
+    # --- manifests: one reader, one writer, one commit path ---------------
+
+    @staticmethod
+    def _find_snapshot(meta: dict, snapshot_id: int | None) -> dict | None:
+        """Snapshot ``snapshot_id`` of ``meta``; None for an empty head."""
+        if snapshot_id is None or snapshot_id == -1:
+            return None
+        for s in meta.get("snapshots", []):
+            if s["snapshot-id"] == snapshot_id:
+                return s
+        raise FileNotFoundError(f"snapshot {snapshot_id} not in table metadata")
+
+    @staticmethod
+    def _head(meta: dict, branch: str | None = None) -> int | None:
+        """The snapshot id ``branch`` (default main) points at, None for an
+        empty table; a branch not created yet forks from main's head."""
+        ref = (meta.get("refs") or {}).get(branch) if branch else None
+        sid = ref["snapshot-id"] if ref else meta.get("current-snapshot-id")
+        return None if sid == -1 else sid
+
+    def _manifest_list(self, snap: dict | None) -> list[dict]:
+        """The manifest-list rows of ``snap`` ([] for an empty head)."""
+        if snap is None:
+            return []
+        return read_container(_atomic.read_bytes(self.spark, snap["manifest-list"]))[1]
+
+    def _manifest_entries(self, m: dict, lineage: bool = False) -> list[dict]:
+        """The live (EXISTING / ADDED) entries of manifest-list row ``m``,
+        each annotated with what the spec lets it inherit from ``m``:
+        ``_seq``, its effective DATA sequence number (a null entry seq
+        inherits the manifest's — the order equality deletes apply by);
+        ``_spec_id``, the spec era its partition tuple reads under;
+        ``_snap``, the snapshot that added it (a null entry snapshot_id
+        inherits ``added_snapshot_id``). Under row lineage a data entry
+        also gets ``_fri``: its explicit first_row_id (field 142), else
+        the manifest's first_row_id advanced by record_count in entry
+        order, else None."""
+        _, rows = read_container(_atomic.read_bytes(self.spark, m["manifest_path"]))
+        content = m.get("content", 0)
+        lineage = lineage and content == 0
+        running = m.get("first_row_id") if lineage else None
+        out = []
+        for e in rows:
+            if e["status"] not in (0, 1):
+                continue
+            seq, snap = e.get("sequence_number"), e.get("snapshot_id")
+            e["_seq"] = seq if seq is not None else m["sequence_number"]
+            e["_spec_id"] = m.get("partition_spec_id", 0)
+            e["_snap"] = snap if snap is not None else m.get("added_snapshot_id")
+            if lineage:
+                fri = e["data_file"].get("first_row_id")
+                if fri is None and running is not None:
+                    fri = running
+                    running = int(running) + int(e["data_file"]["record_count"])
+                e["_fri"] = None if fri is None else int(fri)
+            out.append(e)
+        return out
+
+    def _referenced_files(self, snaps: list[dict], opened: dict) -> tuple[set, set]:
+        """(manifest lists and manifests, data and delete files) that
+        ``snaps`` reference. ``opened`` maps a manifest path to its files,
+        so a manifest shared by many snapshots is read once per walk."""
+        meta_files: set[str] = set()
+        files: set[str] = set()
+        for s in snaps:
+            meta_files.add(s["manifest-list"])
+            for m in self._manifest_list(s):
+                p = m["manifest_path"]
+                meta_files.add(p)
+                if p not in opened:
+                    opened[p] = {
+                        e["data_file"]["file_path"] for e in self._manifest_entries(m)
+                    }
+                files |= opened[p]
+        return meta_files, files
+
+    def _write_manifest(
+        self, meta: dict, spec: dict, entries: list[dict], content: str
+    ) -> dict:
+        """Write one manifest of ``entries`` (``content`` "data" or
+        "deletes") under ``spec``, with the key-value header the spec
+        requires, and return its manifest-list row: counts by entry
+        status, partition summaries, and a ``min_sequence_number`` over
+        the sequence numbers EXISTING entries pin. ``_commit_snapshot``
+        stamps the rest and registers ``spec`` (carried in ``_spec``)."""
+        pf = [(p["pname"], p["result_type"]) for p in _spec_part_fields(meta, spec)]
+        path = f"{self.root}/metadata/{uuid.uuid4().hex}-m{int(content != 'data')}.avro"
+        data = write_container(
+            _manifest_entry_schema(_partition_record_schema(pf)),
+            entries,
+            extra_meta={
+                "schema": json.dumps(_current_schema(meta)).encode(),
+                "partition-spec": json.dumps(spec["fields"]).encode(),
+                "partition-spec-id": str(spec["spec-id"]).encode(),
+                "format-version": b"2",
+                "content": content.encode(),
+            },
+        )
+        _atomic.write_bytes(self.spark, path, data, exclusive=True)
+        by_status = {
+            st: [e["data_file"]["record_count"] for e in entries if e["status"] == st]
+            for st in (0, 1, 2)
+        }
+        pinned = [e["sequence_number"] for e in entries if e["sequence_number"] is not None]
+        return {
+            "manifest_path": path,
+            "manifest_length": len(data),
+            "partition_spec_id": spec["spec-id"],
+            "content": int(content != "data"),
+            "min_sequence_number": min(pinned, default=None),
+            "added_files_count": len(by_status[1]),
+            "existing_files_count": len(by_status[0]),
+            "deleted_files_count": len(by_status[2]),
+            "added_rows_count": sum(by_status[1]),
+            "existing_rows_count": sum(by_status[0]),
+            "deleted_rows_count": sum(by_status[2]),
+            "partitions": _partition_summaries(entries, pf),
+            "_spec": spec,
+        }
+
+    def _delete_manifest(self, meta: dict, files: list[dict], sid: int) -> dict:
+        """A manifest of delete ``files`` ADDED by snapshot ``sid``, written
+        under the field-less spec GLOBAL deletes need (see
+        ``_unpartitioned_spec``); returns its manifest-list row."""
+        return self._write_manifest(
+            meta,
+            self._unpartitioned_spec(meta),
+            [
+                {
+                    "status": 1,
+                    "snapshot_id": sid,
+                    "sequence_number": None,
+                    "file_sequence_number": None,
+                    "data_file": f,
+                }
+                for f in files
+            ],
+            "deletes",
+        )
+
+    def _commit_metadata(self, mutate):
+        """The optimistic metadata commit every table change goes through.
+        Each attempt reads a CONSISTENT (version, metadata) pair — reading
+        them separately lets a writer land on a later version without
+        conflicting and silently drop a racer's commit — and
+        ``mutate(meta)`` edits a copy in place, re-checking its own
+        preconditions against that metadata (raising aborts the commit;
+        raising ``_Unchanged`` ends it without writing). The predecessor is logged in ``metadata-log`` (newest
+        ``_METADATA_LOG_MAX`` kept) and exactly version+1 is created.
+        Losing that create to another writer is the only failure that is
+        retried. Returns what ``mutate`` returned."""
+        for _ in range(20):
+            v = self.current_metadata_version()
+            meta = self.metadata(version=v)
+            new_meta = dict(meta)
+            new_meta["refs"] = dict(meta.get("refs") or {})
+            try:
+                out = mutate(new_meta)
+            except _Unchanged as done:
+                return done.value
+            new_meta["metadata-log"] = (
+                meta.get("metadata-log", [])
+                + [
+                    {
+                        "timestamp-ms": meta["last-updated-ms"],
+                        "metadata-file": f"{self.root}/metadata/v{v}.metadata.json",
+                    }
+                ]
+            )[-_METADATA_LOG_MAX:]
+            new_meta["last-updated-ms"] = int(time.time() * 1000)
+            try:
+                self._write_metadata(v + 1, new_meta)
+                return out
+            except IcebergCommitConflict:
+                continue
+        raise IcebergCommitConflict(f"metadata commit lost 20 races at {self.root}")
+
+    def _commit_snapshot(self, build, sid: int | None = None, branch: str | None = None) -> int:
+        """Commit one snapshot on ``branch`` (default main) through
+        ``_commit_metadata``. Each attempt calls ``build(meta, seq)``,
+        which re-checks the caller's precondition against that attempt's
+        metadata (raising aborts), may set table-level keys on ``meta``,
+        and returns (manifest-list rows, summary, added data rows) — or
+        None to commit only those keys, with no snapshot. Rows
+        from ``_write_manifest`` belong to this commit: they get its
+        sequence number and snapshot id, a first_row_id under row
+        lineage, and their partition spec registered — a spec id a
+        racing evolution claimed for other fields refuses the commit.
+        Then the manifest list and the snapshot are written (parent = the
+        ref's head; ``first-row-id`` under lineage) and the ref advances;
+        a main commit also extends the snapshot log. ``sid`` pins the
+        snapshot id when written files already carry it. Returns it."""
+        sid = _new_snapshot_id() if sid is None else sid
+
+        def mutate(meta):
+            ref = meta["refs"].get(branch) if branch else None
+            if ref is not None and ref.get("type") == "tag":
+                raise IcebergProtocolError(f"cannot write to tag {branch!r}")
+            parent = self._head(meta, branch)
+            seq = meta["last-sequence-number"] + 1
+            built = build(meta, seq)
+            if built is None:
+                return None
+            rows, summary, added_rows = built
+            lineage = bool(meta.get("row-lineage"))
+            next_row_id = int(meta.get("next-row-id", 0))
+            specs = {s["spec-id"]: s for s in meta["partition-specs"]}
+            out_rows = []
+            for r in rows:
+                if "_spec" in r:
+                    r = dict(r)
+                    spec = r.pop("_spec")
+                    if specs.setdefault(spec["spec-id"], spec)["fields"] != spec["fields"]:
+                        raise IcebergCommitConflict(
+                            f"spec id {spec['spec-id']} claimed by a racing spec "
+                            f"evolution at {self.root} — restage"
+                        )
+                    pinned = r["min_sequence_number"]
+                    r["sequence_number"] = seq
+                    r["min_sequence_number"] = seq if pinned is None else min(seq, pinned)
+                    r["added_snapshot_id"] = sid
+                    if lineage and r["content"] == 0 and r.get("first_row_id") is None:
+                        r["first_row_id"] = next_row_id
+                out_rows.append(r)
+            mlist_path = f"{self.root}/metadata/snap-{sid}-1-{uuid.uuid4().hex}.avro"
+            _atomic.write_bytes(
+                self.spark,
+                mlist_path,
+                write_container(
+                    _manifest_list_schema(),
+                    out_rows,
+                    extra_meta={
+                        "snapshot-id": str(sid).encode(),
+                        "sequence-number": str(seq).encode(),
+                        "format-version": b"2",
+                    },
+                ),
+                exclusive=True,
+            )
+            now = int(time.time() * 1000)
+            snap = {
+                "snapshot-id": sid,
+                "sequence-number": seq,
+                "timestamp-ms": now,
+                "manifest-list": mlist_path,
+                "summary": summary,
+                "schema-id": meta["current-schema-id"],
+            }
+            if parent is not None:
+                snap["parent-snapshot-id"] = parent
+            if lineage:
+                snap["first-row-id"] = next_row_id
+                meta["next-row-id"] = next_row_id + added_rows
+            meta["partition-specs"] = list(specs.values())
+            meta["last-sequence-number"] = seq
+            meta["snapshots"] = meta["snapshots"] + [snap]
+            if branch is None:
+                meta["current-snapshot-id"] = sid
+                meta["refs"]["main"] = {"snapshot-id": sid, "type": "branch"}
+                meta["snapshot-log"] = meta.get("snapshot-log", []) + [
+                    {"timestamp-ms": now, "snapshot-id": sid}
+                ]
+            else:
+                # branch commit: only the ref advances — main's head and
+                # its snapshot log are untouched (the WAP staging contract)
+                meta["refs"][branch] = {"snapshot-id": sid, "type": "branch"}
+            return sid
+
+        return self._commit_metadata(mutate)
+
+    def _require_head(self, meta: dict, base: int | None, branch: str | None = None) -> None:
+        """Refuse a commit whose file set was computed against snapshot
+        ``base`` once another commit moved the head of ``branch``
+        (default main): committing over it would drop the racer's files
+        (a compaction can run for minutes — the window is wide)."""
+        head = self._head(meta, branch)
+        if head != base:
+            raise IcebergCommitConflict(
+                f"replace base snapshot moved ({base} → {head}) at "
+                f"{self.root} — recompute against the new tip"
+            )
 
     # --- refs: branches + tags (spec "References") ------------------------
 
@@ -1165,23 +1426,6 @@ class IcebergTable:
         if r is None:
             raise FileNotFoundError(f"ref {name!r} not in table metadata")
         return r["snapshot-id"]
-
-    def _commit_refs(self, mutate) -> None:
-        """Commit a refs mutation via the optimistic metadata protocol;
-        ``mutate(meta)`` edits the dict in place."""
-        v = self.current_metadata_version()
-        for _ in range(20):
-            meta = self.metadata(version=v)
-            new_meta = dict(meta)
-            new_meta["refs"] = dict(meta.get("refs") or {})
-            mutate(new_meta)
-            new_meta["last-updated-ms"] = int(time.time() * 1000)
-            try:
-                self._write_metadata(v + 1, new_meta)
-                return
-            except IcebergCommitConflict:
-                v = self.current_metadata_version()
-        raise IcebergCommitConflict(f"ref commit lost 20 races at {self.root}")
 
     def create_branch(self, name: str, snapshot_id: int | None = None) -> None:
         """A BRANCH ref: an independently-advancing head (the
@@ -1199,7 +1443,7 @@ class IcebergTable:
                 raise FileNotFoundError(f"snapshot {sid} not in table metadata")
             meta["refs"][name] = {"snapshot-id": sid, "type": "branch"}
 
-        self._commit_refs(mutate)
+        self._commit_metadata(mutate)
 
     def create_tag(self, name: str, snapshot_id: int | None = None) -> None:
         """A TAG ref: an immutable named snapshot (release pinning)."""
@@ -1213,7 +1457,7 @@ class IcebergTable:
                 raise FileNotFoundError(f"snapshot {sid} not in table metadata")
             meta["refs"][name] = {"snapshot-id": sid, "type": "tag"}
 
-        self._commit_refs(mutate)
+        self._commit_metadata(mutate)
 
     def drop_ref(self, name: str) -> None:
         def mutate(meta):
@@ -1223,7 +1467,7 @@ class IcebergTable:
                 raise FileNotFoundError(f"ref {name!r} not in table metadata")
             del meta["refs"][name]
 
-        self._commit_refs(mutate)
+        self._commit_metadata(mutate)
 
     def fast_forward(self, target: str, source: str) -> int:
         """Advance branch ``target`` to branch ``source``'s head — the
@@ -1274,7 +1518,7 @@ class IcebergTable:
                 ]
             out["sid"] = src
 
-        self._commit_refs(mutate)
+        self._commit_metadata(mutate)
         return out["sid"]
 
     def rollback_to(self, snapshot_id: int) -> int:
@@ -1315,7 +1559,7 @@ class IcebergTable:
                 }
             ]
 
-        self._commit_refs(mutate)
+        self._commit_metadata(mutate)
         return snapshot_id
 
     # --- puffin statistics files (spec: puffin-spec.md) --------------------
@@ -1336,17 +1580,12 @@ class IcebergTable:
         from projectdatalake_spark.sources import puffin as _puffin
 
         meta = self.metadata()
-        sid = meta.get("current-snapshot-id")
-        if sid is None or sid == -1:
+        sid = self._head(meta)
+        if sid is None:
             raise IcebergProtocolError("cannot write stats for an empty table")
-        snap = next(s for s in meta["snapshots"] if s["snapshot-id"] == sid)
+        snap = self._find_snapshot(meta, sid)
         seq = int(snap.get("sequence-number", 0))
-        field_ids = {
-            f["name"]: f["id"]
-            for s in meta["schemas"]
-            if s["schema-id"] == meta["current-schema-id"]
-            for f in s["fields"]
-        }
+        field_ids = {f["name"]: f["id"] for f in _current_schema(meta)["fields"]}
         df = self.snapshot()
         for col in columns:
             if col not in field_ids:
@@ -1399,7 +1638,7 @@ class IcebergTable:
                 if s["snapshot-id"] != sid
             ] + [entry]
 
-        self._commit_refs(mutate)
+        self._commit_metadata(mutate)
         return path
 
     def ndv(self, column: str, snapshot_id: int | None = None) -> int | None:
@@ -1470,16 +1709,11 @@ class IcebergTable:
         from projectdatalake_spark.sources import puffin as _puffin
 
         meta = self.metadata()
-        sid = meta.get("current-snapshot-id")
-        if sid is None or sid == -1:
+        sid = self._head(meta)
+        if sid is None:
             raise IcebergProtocolError("cannot write stats for an empty table")
-        snap = next(s for s in meta["snapshots"] if s["snapshot-id"] == sid)
-        field_ids = {
-            f["name"]: f["id"]
-            for s in meta["schemas"]
-            if s["schema-id"] == meta["current-schema-id"]
-            for f in s["fields"]
-        }
+        snap = self._find_snapshot(meta, sid)
+        field_ids = {f["name"]: f["id"] for f in _current_schema(meta)["fields"]}
         if column not in field_ids:
             raise ValueError(f"unknown column {column!r}")
         sk = column_kll_sketch(self.snapshot(), column, k=k)
@@ -1536,7 +1770,7 @@ class IcebergTable:
                 if s["snapshot-id"] != sid
             ] + [entry]
 
-        self._commit_refs(mutate)
+        self._commit_metadata(mutate)
         return path
 
     def read_quantile_sketch(self, column: str, snapshot_id: int | None = None):
@@ -1810,7 +2044,7 @@ class IcebergTable:
                 if s["snapshot-id"] != sid
             ] + [entry]
 
-        self._commit_refs(mutate)
+        self._commit_metadata(mutate)
         return path
 
     def read_partition_stats(
@@ -1864,11 +2098,7 @@ class IcebergTable:
             # the human-auditable face of stats-based file skipping.
             # Values surface as strings so one frame covers all types.
             entries, _ = self._entries_for_snapshot(meta, None)
-            ice_fields = next(
-                s
-                for s in meta["schemas"]
-                if s["schema-id"] == meta["current-schema-id"]
-            )["fields"]
+            ice_fields = _current_schema(meta)["fields"]
             rows = []
             for e in entries:
                 dfile = e["data_file"]
@@ -2126,11 +2356,7 @@ class IcebergTable:
 
             entries = [e for e in entries if keep(e)]
         if where:
-            ice_fields = next(
-                s
-                for s in meta["schemas"]
-                if s["schema-id"] == meta["current-schema-id"]
-            )["fields"]
+            ice_fields = _current_schema(meta)["fields"]
             fid_of = {f["name"]: f["id"] for f in ice_fields}
             type_of = {f["name"]: f["type"] for f in ice_fields}
 
@@ -2205,14 +2431,7 @@ class IcebergTable:
             # one broadcast anti-join on null-safe key equality plus the
             # sequence ordering (data_seq < delete_seq): rows re-appended
             # AFTER the delete keep their higher seq and survive
-            fields_by_id = {
-                f["id"]: f
-                for f in next(
-                    s
-                    for s in meta["schemas"]
-                    if s["schema-id"] == meta["current-schema-id"]
-                )["fields"]
-            }
+            fields_by_id = {f["id"]: f for f in _current_schema(meta)["fields"]}
             spark_type = {f.name: f.dataType for f in schema.fields}
             by_ids: dict[tuple, list] = {}
             for e in eq_entries:
@@ -2315,11 +2534,7 @@ class IcebergTable:
         return out
 
     def _spark_schema(self, meta: dict) -> StructType:
-        ice = next(
-            s
-            for s in meta["schemas"]
-            if s["schema-id"] == meta["current-schema-id"]
-        )
+        ice = _current_schema(meta)
         from pyspark.sql.types import (
             BinaryType, BooleanType, DateType, DoubleType, FloatType,
             IntegerType, LongType, StringType, StructField, TimestampNTZType,
@@ -2370,8 +2585,9 @@ class IcebergTable:
         tuple — an all-null tuple would scope to the null partition only,
         and compliant external readers would resurrect the deleted rows
         everywhere else). Reuses an existing field-less spec when the
-        table has one; otherwise returns a fresh spec-id for
-        ``_commit_delete_snapshot`` to register."""
+        table has one; otherwise returns a fresh spec-id, which
+        ``_commit_snapshot`` registers — or refuses, when a racing spec
+        evolution took the id first."""
         for s in meta["partition-specs"]:
             if not s["fields"]:
                 return s
@@ -2528,9 +2744,7 @@ class IcebergTable:
         schema — the row-lineage rewrite's materialized ``_row_id``."""
         extra_fields = extra_fields or {}
         spark_schema = self._spark_schema(meta)
-        ice = next(
-            s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
-        )
+        ice = _current_schema(meta)
         known = {f["name"] for f in ice["fields"]} | set(extra_fields)
         unknown = [c for c in df.columns if c not in known]
         if unknown:
@@ -2567,51 +2781,33 @@ class IcebergTable:
         and never reused: a field matching an existing (source-id,
         transform) pair keeps its id across specs, new fields get fresh
         ids. Returns the new spec id."""
-        # consistent (version, metadata) pair: the commit below targets
-        # exactly v+1 of the state this mutation was computed from — a
-        # separately-read fresh version would let a racer's commit be
-        # silently overwritten by this stale rebuild
-        v = self.current_metadata_version()
-        meta = self.metadata(version=v)
-        ice_fields = next(
-            s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
-        )["fields"]
-        parsed = _parse_partition_by(
-            partition_by, {f["name"]: f for f in ice_fields}
-        )
-        known: dict[tuple, int] = {}
-        last_pid = meta.get("last-partition-id", 999)
-        for s in meta["partition-specs"]:
-            for f in s["fields"]:
-                known[(f["source-id"], f["transform"])] = f["field-id"]
-                last_pid = max(last_pid, f["field-id"])
-        new_fields = []
-        for f in parsed:
-            k = (f["source-id"], f["transform"])
-            if k in known:
-                fid = known[k]
-            else:
-                last_pid += 1
-                fid = last_pid
-            new_fields.append({**f, "field-id": fid})
-        new_spec_id = max(s["spec-id"] for s in meta["partition-specs"]) + 1
-        new_meta = dict(meta)
-        new_meta["partition-specs"] = meta["partition-specs"] + [
-            {"spec-id": new_spec_id, "fields": new_fields}
-        ]
-        new_meta["default-spec-id"] = new_spec_id
-        new_meta["last-partition-id"] = last_pid
-        new_meta["last-updated-ms"] = int(time.time() * 1000)
-        try:
-            self._write_metadata(v + 1, new_meta)
-            return new_spec_id
-        except IcebergCommitConflict:
-            # built from a now-stale tip — a blind retry would clobber the
-            # racer's commit; recompute (field-id reuse map, spec list)
-            raise IcebergCommitConflict(
-                f"spec evolution raced another commit at {self.root} — "
-                f"call update_spec again"
+
+        def mutate(meta):
+            parsed = _parse_partition_by(
+                partition_by, {f["name"]: f for f in _current_schema(meta)["fields"]}
             )
+            known: dict[tuple, int] = {}
+            last_pid = meta.get("last-partition-id", 999)
+            for s in meta["partition-specs"]:
+                for f in s["fields"]:
+                    known[(f["source-id"], f["transform"])] = f["field-id"]
+                    last_pid = max(last_pid, f["field-id"])
+            new_fields = []
+            for f in parsed:
+                fid = known.get((f["source-id"], f["transform"]))
+                if fid is None:
+                    last_pid += 1
+                    fid = last_pid
+                new_fields.append({**f, "field-id": fid})
+            new_spec_id = max(s["spec-id"] for s in meta["partition-specs"]) + 1
+            meta["partition-specs"] = meta["partition-specs"] + [
+                {"spec-id": new_spec_id, "fields": new_fields}
+            ]
+            meta["default-spec-id"] = new_spec_id
+            meta["last-partition-id"] = last_pid
+            return new_spec_id
+
+        return self._commit_metadata(mutate)
 
     def rename_column(self, old: str, new: str) -> int:
         """Metadata-only rename: a new schema version keeps every FIELD ID
@@ -2619,53 +2815,46 @@ class IcebergTable:
         ids in their parquet schemas) resolve under the new name with zero
         rewrites, exactly Iceberg's id-based-evolution contract. Partition
         source columns are refused (the spec evolves specs separately)."""
-        v = self.current_metadata_version()
-        meta = self.metadata(version=v)
-        spec = self._current_spec(meta)
-        if old in {p["source"] for p in _spec_part_fields(meta, spec)}:
-            raise IcebergProtocolError(
-                f"{old!r} is a partition source column — partition spec "
-                f"evolution is a separate operation"
-            )
-        if (meta.get("properties") or {}).get(
-            "projectdatalake.fieldIdsInFiles", "true"
-        ) == "false":
-            raise IcebergProtocolError(
-                "rename on a name-resolved table (converted zero-copy, data "
-                "files without field ids) — old files could not serve the "
-                "new name"
-            )
-        ice = next(
-            s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
-        )
-        names = {f["name"] for f in ice["fields"]}
-        if old not in names:
-            raise KeyError(old)
-        if new in names:
-            raise IcebergProtocolError(f"column {new!r} already exists")
-        new_fields = [
-            {**f, "name": new} if f["name"] == old else dict(f)
-            for f in ice["fields"]
-        ]
-        return self._commit_schema(meta, new_fields, version=v)
+
+        def evolve(meta, fields):
+            spec = self._current_spec(meta)
+            if old in {p["source"] for p in _spec_part_fields(meta, spec)}:
+                raise IcebergProtocolError(
+                    f"{old!r} is a partition source column — partition spec "
+                    f"evolution is a separate operation"
+                )
+            if (meta.get("properties") or {}).get(
+                "projectdatalake.fieldIdsInFiles", "true"
+            ) == "false":
+                raise IcebergProtocolError(
+                    "rename on a name-resolved table (converted zero-copy, data "
+                    "files without field ids) — old files could not serve the "
+                    "new name"
+                )
+            names = {f["name"] for f in fields}
+            if old not in names:
+                raise KeyError(old)
+            if new in names:
+                raise IcebergProtocolError(f"column {new!r} already exists")
+            return [{**f, "name": new} if f["name"] == old else dict(f) for f in fields]
+
+        return self._commit_schema(evolve)
 
     def add_column(self, name: str, ice_type: str) -> int:
         """Additive evolution: the new column gets a FRESH field id
         (last-column-id + 1 — ids are never reused, so late-arriving data
         can't alias a dropped column's bytes); existing files read it as
         null."""
-        v = self.current_metadata_version()
-        meta = self.metadata(version=v)
-        ice = next(
-            s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
-        )
-        if name in {f["name"] for f in ice["fields"]}:
-            raise IcebergProtocolError(f"column {name!r} already exists")
-        fid = meta["last-column-id"] + 1
-        new_fields = list(ice["fields"]) + [
-            {"id": fid, "name": name, "required": False, "type": ice_type}
-        ]
-        return self._commit_schema(meta, new_fields, last_column_id=fid, version=v)
+
+        def evolve(meta, fields):
+            if name in {f["name"] for f in fields}:
+                raise IcebergProtocolError(f"column {name!r} already exists")
+            fid = meta["last-column-id"] + 1
+            return list(fields) + [
+                {"id": fid, "name": name, "required": False, "type": ice_type}
+            ]
+
+        return self._commit_schema(evolve)
 
     # spec "Schema Evolution": the allowed primitive promotions — the
     # fixed pairs below plus decimal(P,S) → decimal(P',S) with P' > P
@@ -2683,104 +2872,84 @@ class IcebergTable:
         4-byte bounds stay valid through the length-aware decode in
         _decode_bound. Partition source columns are refused (their
         transform results and serialized partition values are typed)."""
-        v = self.current_metadata_version()
-        meta = self.metadata(version=v)
-        for s in meta["partition-specs"]:
-            if name in {p["source"] for p in _spec_part_fields(meta, s)}:
-                raise IcebergProtocolError(
-                    f"{name!r} is a partition source column (in a current "
-                    f"or historical spec) — promotion would retype its "
-                    f"serialized partition values"
+
+        def evolve(meta, fields):
+            for s in meta["partition-specs"]:
+                if name in {p["source"] for p in _spec_part_fields(meta, s)}:
+                    raise IcebergProtocolError(
+                        f"{name!r} is a partition source column (in a current "
+                        f"or historical spec) — promotion would retype its "
+                        f"serialized partition values"
+                    )
+            field = next((f for f in fields if f["name"] == name), None)
+            if field is None:
+                raise KeyError(name)
+            ok = (field["type"], to_type) in self._PROMOTIONS
+            if not ok and isinstance(field["type"], str):
+                # decimal(P,S) → decimal(P',S), P' > P (precision-only — the
+                # spec keeps the SCALE, which is also what keeps old
+                # manifests' unscaled-int bounds valid: the stored bytes
+                # decode to the same value under either precision)
+                da = _decimal_params_i(field["type"])
+                db = _decimal_params_i(to_type)
+                ok = (
+                    da is not None and db is not None
+                    and da[1] == db[1] and db[0] > da[0] and db[0] <= 38
                 )
-        ice = next(
-            s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
-        )
-        field = next((f for f in ice["fields"] if f["name"] == name), None)
-        if field is None:
-            raise KeyError(name)
-        ok = (field["type"], to_type) in self._PROMOTIONS
-        if not ok and isinstance(field["type"], str):
-            # decimal(P,S) → decimal(P',S), P' > P (precision-only — the
-            # spec keeps the SCALE, which is also what keeps old
-            # manifests' unscaled-int bounds valid: the stored bytes
-            # decode to the same value under either precision)
-            da = _decimal_params_i(field["type"])
-            db = _decimal_params_i(to_type)
-            ok = (
-                da is not None and db is not None
-                and da[1] == db[1] and db[0] > da[0] and db[0] <= 38
-            )
-        if not ok:
-            raise IcebergProtocolError(
-                f"promote_column: {field['type']} → {to_type} is not a "
-                f"valid Iceberg primitive promotion (allowed: "
-                f"{sorted(self._PROMOTIONS)} and decimal(P,S) → "
-                f"decimal(P',S) with P' > P ≤ 38)"
-            )
-        new_fields = [
-            {**f, "type": to_type} if f["name"] == name else dict(f)
-            for f in ice["fields"]
-        ]
-        return self._commit_schema(meta, new_fields, version=v)
+            if not ok:
+                raise IcebergProtocolError(
+                    f"promote_column: {field['type']} → {to_type} is not a "
+                    f"valid Iceberg primitive promotion (allowed: "
+                    f"{sorted(self._PROMOTIONS)} and decimal(P,S) → "
+                    f"decimal(P',S) with P' > P ≤ 38)"
+                )
+            return [{**f, "type": to_type} if f["name"] == name else dict(f) for f in fields]
+
+        return self._commit_schema(evolve)
 
     def drop_column(self, name: str) -> int:
         """Metadata-only drop: the field leaves the current schema (its id
         is retired, never reused — meta["last-column-id"] only grows), data
         files keep the bytes but no read schema references them. Partition
         source columns are refused."""
-        v = self.current_metadata_version()
-        meta = self.metadata(version=v)
-        # guard across ALL spec eras: a column sourced by ANY spec still
-        # interprets that era's partition tuples (ids never die)
-        era_sources = set()
-        for s in meta["partition-specs"]:
-            for p in _spec_part_fields(meta, s):
-                era_sources.add(p["source"])
-        if name in era_sources:
-            raise IcebergProtocolError(
-                f"{name!r} is a partition source column (in a current or "
-                f"historical spec) — evolve the partition spec first"
-            )
-        ice = next(
-            s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
-        )
-        if name not in {f["name"] for f in ice["fields"]}:
-            raise KeyError(name)
-        new_fields = [dict(f) for f in ice["fields"] if f["name"] != name]
-        if not new_fields:
-            raise IcebergProtocolError("cannot drop the last column")
-        return self._commit_schema(meta, new_fields, version=v)
 
-    def _commit_schema(
-        self,
-        meta: dict,
-        new_fields: list[dict],
-        last_column_id: int | None = None,
-        version: int | None = None,
-    ) -> int:
-        """``version`` must be the metadata version ``meta`` was read AT —
-        the commit targets exactly version+1 so a racer between read and
-        write surfaces as a conflict instead of being overwritten by this
-        stale rebuild."""
-        new_sid = max(s["schema-id"] for s in meta["schemas"]) + 1
-        new_meta = dict(meta)
-        new_meta["schemas"] = meta["schemas"] + [
-            {"type": "struct", "schema-id": new_sid, "fields": new_fields}
-        ]
-        new_meta["current-schema-id"] = new_sid
-        if last_column_id is not None:
-            new_meta["last-column-id"] = last_column_id
-        new_meta["last-updated-ms"] = int(time.time() * 1000)
-        v = self.current_metadata_version() if version is None else version
-        try:
-            self._write_metadata(v + 1, new_meta)
-            return new_sid
-        except IcebergCommitConflict:
-            raise IcebergCommitConflict(
-                f"schema evolution raced another commit at {self.root} — "
-                f"retry the operation (a stale-state retry would drop the "
-                f"racer's commit)"
+        def evolve(meta, fields):
+            # guard across ALL spec eras: a column sourced by ANY spec still
+            # interprets that era's partition tuples (ids never die)
+            for s in meta["partition-specs"]:
+                if name in {p["source"] for p in _spec_part_fields(meta, s)}:
+                    raise IcebergProtocolError(
+                        f"{name!r} is a partition source column (in a current or "
+                        f"historical spec) — evolve the partition spec first"
+                    )
+            if name not in {f["name"] for f in fields}:
+                raise KeyError(name)
+            kept = [dict(f) for f in fields if f["name"] != name]
+            if not kept:
+                raise IcebergProtocolError("cannot drop the last column")
+            return kept
+
+        return self._commit_schema(evolve)
+
+    def _commit_schema(self, evolve) -> int:
+        """Commit a new current schema: ``evolve(meta, fields)`` checks the
+        change against each attempt's metadata and returns the new field
+        list. Field ids are never reused — ``last-column-id`` only grows.
+        Returns the new schema id."""
+
+        def mutate(meta):
+            fields = evolve(meta, _current_schema(meta)["fields"])
+            new_sid = max(s["schema-id"] for s in meta["schemas"]) + 1
+            meta["schemas"] = meta["schemas"] + [
+                {"type": "struct", "schema-id": new_sid, "fields": fields}
+            ]
+            meta["current-schema-id"] = new_sid
+            meta["last-column-id"] = max(
+                [meta["last-column-id"]] + [f["id"] for f in fields]
             )
+            return new_sid
+
+        return self._commit_metadata(mutate)
 
     def _typed_part(self, value: str | None, ice_type: str):
         if value is None or value == "__HIVE_DEFAULT_PARTITION__":
@@ -2814,14 +2983,23 @@ class IcebergTable:
         snapshot retention must exceed the replay horizon (one batch).
         Returns the snapshot id, or None when skipped."""
         meta = self.metadata()
-        for s in meta.get("snapshots", []):
-            sm = s.get("summary") or {}
-            if sm.get("app-id") == app_id and sm.get("batch-id") == str(batch_id):
-                return None
+        if self._txn_committed(meta, app_id, batch_id):
+            return None
         return self.append_files(
             self._prepare_files(df, meta),
             meta=meta,
             summary_props={"app-id": app_id, "batch-id": batch_id},
+        )
+
+    @staticmethod
+    def _txn_committed(meta: dict, app_id: str, batch_id: int) -> bool:
+        """Whether a snapshot's summary already records (app-id,
+        batch-id) — the replay check of ``append_once`` and
+        ``merge_upsert(txn=)``."""
+        return any(
+            (s.get("summary") or {}).get("app-id") == app_id
+            and (s.get("summary") or {}).get("batch-id") == str(batch_id)
+            for s in meta.get("snapshots", [])
         )
 
     def row_lineage_enabled(self, meta: dict | None = None) -> bool:
@@ -2867,92 +3045,35 @@ class IcebergTable:
         manifests — ids never move, and the lineage READER applies the
         equality deletes by the strictly-smaller-seq rule (round 11),
         so merged lineage tables read end to end."""
-        for _ in range(20):
-            v = self.current_metadata_version()
-            meta = self.metadata(version=v)
+        def build(meta, seq):
+            # both checks read this attempt's metadata: a racing enable
+            # already seeded next-row-id (re-seeding would reissue ids),
+            # and a racing first append makes an empty table populated
             if meta.get("row-lineage"):
-                return v
-            now = int(time.time() * 1000)
-            new_meta = dict(meta)
-            new_meta["row-lineage"] = True
-            new_meta["properties"] = {
+                raise _Unchanged()
+            meta["row-lineage"] = True
+            meta["next-row-id"] = 0
+            meta["properties"] = {
                 **(meta.get("properties") or {}),
                 # see docstring: lineage fields embedded under a v2
                 # declaration, visible to any metadata auditor
                 "row-lineage.v2-embedded": "true",
             }
-            new_meta["last-updated-ms"] = now
-            cur_sid = meta.get("current-snapshot-id")
-            if cur_sid is None or cur_sid == -1:
-                new_meta["next-row-id"] = 0
-                try:
-                    self._write_metadata(v + 1, new_meta)
-                    return v + 1
-                except IcebergCommitConflict:
-                    continue
-            cur_snap = next(
-                s for s in meta["snapshots"] if s["snapshot-id"] == cur_sid
-            )
-            _, manifests = read_container(
-                _atomic.read_bytes(self.spark, cur_snap["manifest-list"])
-            )
+            if self._head(meta) is None:
+                return None  # empty table: nothing to backfill
             running = 0
             stamped = []
-            for m in manifests:
-                m = dict(m)
+            for m in self._manifest_list(self._find_snapshot(meta, self._head(meta))):
                 if m.get("content", 0) == 0 and m.get("first_row_id") is None:
-                    m["first_row_id"] = running
+                    m = {**m, "first_row_id": running}
                     running += int(m.get("added_rows_count", 0)) + int(
                         m.get("existing_rows_count", 0)
                     )
                 stamped.append(m)
-            sid = uuid.uuid4().int % (1 << 62)
-            seq = meta["last-sequence-number"] + 1
-            mlist_path = (
-                f"{self.root}/metadata/snap-{sid}-1-{uuid.uuid4().hex}.avro"
-            )
-            _atomic.write_bytes(
-                self.spark,
-                mlist_path,
-                write_container(
-                    _manifest_list_schema(),
-                    stamped,
-                    extra_meta={
-                        "snapshot-id": str(sid).encode(),
-                        "sequence-number": str(seq).encode(),
-                        "format-version": b"2",
-                    },
-                ),
-                exclusive=True,
-            )
-            snap = {
-                "snapshot-id": sid,
-                "parent-snapshot-id": cur_sid,
-                "sequence-number": seq,
-                "timestamp-ms": now,
-                "manifest-list": mlist_path,
-                "first-row-id": 0,
-                "summary": {"operation": "enable-row-lineage"},
-                "schema-id": meta["current-schema-id"],
-            }
-            new_meta["last-sequence-number"] = seq
-            new_meta["snapshots"] = meta["snapshots"] + [snap]
-            new_meta["current-snapshot-id"] = sid
-            refs = dict(meta.get("refs") or {})
-            refs["main"] = {"snapshot-id": sid, "type": "branch"}
-            new_meta["refs"] = refs
-            new_meta["snapshot-log"] = meta.get("snapshot-log", []) + [
-                {"timestamp-ms": now, "snapshot-id": sid}
-            ]
-            new_meta["next-row-id"] = running
-            try:
-                self._write_metadata(v + 1, new_meta)
-                return v + 1
-            except IcebergCommitConflict:
-                continue
-        raise IcebergCommitConflict(
-            f"enable_row_lineage lost 20 races at {self.root}"
-        )
+            return stamped, {"operation": "enable-row-lineage"}, running
+
+        self._commit_snapshot(build)
+        return self.current_metadata_version()
 
     def snapshot_with_row_ids(self, min_row_id: int | None = None) -> DataFrame:
         """The table plus ``_row_id``: file first_row_id (explicit, or
@@ -2981,102 +3102,56 @@ class IcebergTable:
         # identity partitioning drops the source column from data files;
         # per spec era, the pnames to restore as per-file constants
         # (round 12 — the reader previously refused identity specs)
-        specs_by_id = {s["spec-id"]: s for s in meta.get("partition-specs", [])}
         ident_by_spec = {
-            sid: [
+            s["spec-id"]: [
                 p["pname"]
                 for p in _spec_part_fields(meta, s)
                 if p["transform"] == "identity"
             ]
-            for sid, s in specs_by_id.items()
+            for s in meta.get("partition-specs", [])
         }
-        cur_sid = meta.get("current-snapshot-id")
         schema = self._spark_schema(meta)
-        if cur_sid is None or cur_sid == -1:
-            return local_frame(self.spark, [], schema).withColumn(
-                "_row_id", F.lit(None).cast("long")
-            )
-        cur_snap = next(
-            s for s in meta["snapshots"] if s["snapshot-id"] == cur_sid
-        )
-        _, manifests = read_container(_atomic.read_bytes(self.spark, cur_snap["manifest-list"]))
+        data, deletes = self._entries_for_snapshot(meta, None)
+        # round 11 (was a refusal): equality deletes apply by the spec's
+        # strictly-smaller seq rule — the id map stays valid (masking
+        # never moves survivor ids), so a MERGED lineage table reads
+        pos_entries = [e for e in deletes if e["data_file"].get("content") != 2]
+        eq_entries = [e for e in deletes if e["data_file"].get("content") == 2]
         base_of: dict[str, int] = {}
         seq_of: dict[str, int] = {}
         ident_of: dict[str, dict] = {}  # file → {pname: constant}
-        pos_entries: list[dict] = []
-        eq_entries: list[dict] = []
-        for m in manifests:
-            content = m.get("content", 0)
-            m_ident = ident_by_spec.get(m.get("partition_spec_id", 0), [])
-            _, rows = read_container(_atomic.read_bytes(self.spark, m["manifest_path"]))
-            if content == 1:
-                for e in rows:
-                    if e["status"] not in (0, 1):
-                        continue
-                    e["_seq"] = (
-                        e.get("sequence_number")
-                        if e.get("sequence_number") is not None
-                        else m["sequence_number"]
-                    )
-                    if e["data_file"].get("content") == 2:
-                        # round 11 (was a refusal): equality deletes apply
-                        # by the spec's strictly-smaller seq rule — the id
-                        # map stays valid (masking never moves survivor
-                        # ids), so a MERGED lineage table reads directly
-                        eq_entries.append(e)
-                    else:
-                        pos_entries.append(e)
-                continue
-            base = m.get("first_row_id")
-            if base is None:
+        for e in data:
+            dfile = e["data_file"]
+            fri = e["_fri"]
+            if fri is None:
                 raise IcebergProtocolError(
-                    f"manifest {m['manifest_path']} predates row lineage "
+                    f"data file {dfile['file_path']} predates row lineage "
                     "and carries no first_row_id — re-run enable_row_lineage"
                 )
-            running = int(base)
-            for e in rows:
-                if e["status"] == 2:
-                    raise IcebergProtocolError(
-                        "DELETED manifest entries not supported by this "
-                        "row-lineage reader"
-                    )
-                dfile = e["data_file"]
-                fri = dfile.get("first_row_id")
-                if fri is None:
-                    fri = running
-                    running += int(dfile["record_count"])
-                if min_row_id is not None:
-                    # a rewritten file's ids live in its materialized
-                    # _row_id column — its inherited range says nothing
-                    # about content ids; prune on the column's write-time
-                    # upper bound instead (reserved field id)
-                    ub = {
-                        b["key"]: b["value"]
-                        for b in (dfile.get("upper_bounds") or [])
-                    }
-                    mat_max = (
-                        _decode_bound(ub[_ROW_ID_FIELD_ID], "long")
-                        if _ROW_ID_FIELD_ID in ub
-                        else None
-                    )
-                    hi = (
-                        int(mat_max)
-                        if mat_max is not None
-                        else int(fri) + int(dfile["record_count"]) - 1
-                    )
-                    if hi < min_row_id:
-                        continue  # whole file below the watermark
-                base_of[dfile["file_path"]] = int(fri)
-                seq_of[dfile["file_path"]] = int(
-                    e.get("sequence_number")
-                    if e.get("sequence_number") is not None
-                    else m["sequence_number"]
+            if min_row_id is not None:
+                # a rewritten file's ids live in its materialized
+                # _row_id column — its inherited range says nothing
+                # about content ids; prune on the column's write-time
+                # upper bound instead (reserved field id)
+                ub = {b["key"]: b["value"] for b in (dfile.get("upper_bounds") or [])}
+                mat_max = (
+                    _decode_bound(ub[_ROW_ID_FIELD_ID], "long")
+                    if _ROW_ID_FIELD_ID in ub
+                    else None
                 )
-                if m_ident:
-                    part = dfile.get("partition") or {}
-                    ident_of[dfile["file_path"]] = {
-                        c: part.get(c) for c in m_ident
-                    }
+                hi = (
+                    int(mat_max)
+                    if mat_max is not None
+                    else fri + int(dfile["record_count"]) - 1
+                )
+                if hi < min_row_id:
+                    continue  # whole file below the watermark
+            base_of[dfile["file_path"]] = fri
+            seq_of[dfile["file_path"]] = int(e["_seq"])
+            m_ident = ident_by_spec.get(e["_spec_id"], [])
+            if m_ident:
+                part = dfile.get("partition") or {}
+                ident_of[dfile["file_path"]] = {c: part.get(c) for c in m_ident}
         if not base_of:
             return local_frame(self.spark, [], schema).withColumn(
                 "_row_id", F.lit(None).cast("long")
@@ -3155,14 +3230,7 @@ class IcebergTable:
             # (rows re-appended after the delete keep their higher seq
             # and survive — exactly why merge's same-snapshot data files
             # escape their own delete)
-            fields_by_id = {
-                f["id"]: f
-                for f in next(
-                    s
-                    for s in meta["schemas"]
-                    if s["schema-id"] == meta["current-schema-id"]
-                )["fields"]
-            }
+            fields_by_id = {f["id"]: f for f in _current_schema(meta)["fields"]}
             spark_type = {f.name: f.dataType for f in schema.fields}
             by_ids: dict[tuple, list] = {}
             for e in eq_entries:
@@ -3213,41 +3281,32 @@ class IcebergTable:
         the overlapping files. The Iceberg twin of txlog's ``cluster_by``
         table setting (the liquid-clustering analog). Returns the new
         order id."""
-        v = self.current_metadata_version()
-        meta = self.metadata(version=v)
-        ice_fields = next(
-            s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
-        )["fields"]
-        by_name = {f["name"]: f for f in ice_fields}
-        missing = [c for c in cols if c not in by_name]
-        if missing:
-            raise IcebergProtocolError(
-                f"sort order columns not in table schema: {missing}"
-            )
-        orders = meta.get("sort-orders") or [{"order-id": 0, "fields": []}]
-        order = {
-            "order-id": max(o["order-id"] for o in orders) + 1,
-            "fields": [
-                {
-                    "transform": "identity",
-                    "source-id": by_name[c]["id"],
-                    "direction": "asc",
-                    "null-order": "nulls-first",
-                }
-                for c in cols
-            ],
-        }
-        new_meta = dict(meta)
-        new_meta["sort-orders"] = orders + [order]
-        new_meta["default-sort-order-id"] = order["order-id"]
-        new_meta["last-updated-ms"] = int(time.time() * 1000)
-        try:
-            self._write_metadata(v + 1, new_meta)
+
+        def mutate(meta):
+            by_name = {f["name"]: f for f in _current_schema(meta)["fields"]}
+            missing = [c for c in cols if c not in by_name]
+            if missing:
+                raise IcebergProtocolError(
+                    f"sort order columns not in table schema: {missing}"
+                )
+            orders = meta.get("sort-orders") or [{"order-id": 0, "fields": []}]
+            order = {
+                "order-id": max(o["order-id"] for o in orders) + 1,
+                "fields": [
+                    {
+                        "transform": "identity",
+                        "source-id": by_name[c]["id"],
+                        "direction": "asc",
+                        "null-order": "nulls-first",
+                    }
+                    for c in cols
+                ],
+            }
+            meta["sort-orders"] = orders + [order]
+            meta["default-sort-order-id"] = order["order-id"]
             return order["order-id"]
-        except IcebergCommitConflict:
-            raise IcebergCommitConflict(
-                f"sort-order commit raced another at {self.root} — retry"
-            )
+
+        return self._commit_metadata(mutate)
 
     def _default_sort_cols(self, meta: dict) -> list[str]:
         oid = meta.get("default-sort-order-id", 0)
@@ -3257,12 +3316,7 @@ class IcebergTable:
         )
         if not order or not order["fields"]:
             return []
-        name_of = {
-            f["id"]: f["name"]
-            for s in meta["schemas"]
-            if s["schema-id"] == meta["current-schema-id"]
-            for f in s["fields"]
-        }
+        name_of = {f["id"]: f["name"] for f in _current_schema(meta)["fields"]}
         return [name_of[f["source-id"]] for f in order["fields"]]
 
     def rewrite_data_files(
@@ -3350,10 +3404,7 @@ class IcebergTable:
         files = self._prepare_files(
             df, meta, extra_fields=extra_fields, files_per_partition=per_partition
         )
-        return self.append_files(
-            files, meta=meta, replace=True, operation="replace",
-            materialized_row_ids=lineage,
-        )
+        return self.append_files(files, meta=meta, replace=True, operation="replace")
 
     def rewrite_manifests(self) -> int | None:
         """Iceberg's ``rewrite_manifests`` maintenance action: consolidate
@@ -3376,182 +3427,55 @@ class IcebergTable:
         untouched."""
         meta = self.metadata()
         lineage = bool(meta.get("row-lineage"))
-        sid_cur = meta.get("current-snapshot-id")
-        if sid_cur is None or sid_cur == -1:
-            return None
-        cur_snap = next(
-            s for s in meta["snapshots"] if s["snapshot-id"] == sid_cur
-        )
-        _, prior = read_container(_atomic.read_bytes(self.spark, cur_snap["manifest-list"]))
+        base = self._head(meta)
+        prior = self._manifest_list(self._find_snapshot(meta, base))
         data_manifests = [m for m in prior if m.get("content", 0) == 0]
-        delete_manifests = [m for m in prior if m.get("content", 0) == 1]
         specs_present = {m.get("partition_spec_id", 0) for m in data_manifests}
         if len(data_manifests) <= len(specs_present):
             return None  # one manifest per era already
-        sid = uuid.uuid4().int % (1 << 62)
         # group live entries by spec era, pin their effective sequences
         by_spec: dict[int, list[dict]] = {}
         for m in data_manifests:
-            _, rows = read_container(_atomic.read_bytes(self.spark, m["manifest_path"]))
-            if lineage:
-                if m.get("first_row_id") is None:
-                    raise IcebergProtocolError(
-                        f"manifest {m['manifest_path']} predates row "
-                        "lineage and carries no first_row_id — re-run "
-                        "enable_row_lineage"
-                    )
-                running = int(m["first_row_id"])
-            for e in rows:
-                if e["status"] not in (0, 1):
-                    continue
-                seq = (
-                    e.get("sequence_number")
-                    if e.get("sequence_number") is not None
-                    else m["sequence_number"]
-                )
+            for e in self._manifest_entries(m, lineage):
                 dfile = e["data_file"]
                 if lineage:
                     # consolidation drops the per-manifest inheritance
                     # base, so each carried file gets its RESOLVED id
                     # stamped explicitly (field 142) — the spec's rule
                     # for carrying EXISTING files between manifests
-                    dfile = dict(dfile)
-                    if dfile.get("first_row_id") is None:
-                        dfile["first_row_id"] = running
-                        running += int(dfile["record_count"])
-                by_spec.setdefault(m.get("partition_spec_id", 0), []).append(
+                    if e["_fri"] is None:
+                        raise IcebergProtocolError(
+                            f"manifest {m['manifest_path']} predates row "
+                            "lineage and carries no first_row_id — re-run "
+                            "enable_row_lineage"
+                        )
+                    dfile = {**dfile, "first_row_id": e["_fri"]}
+                by_spec.setdefault(e["_spec_id"], []).append(
                     {
                         "status": 0,  # EXISTING: carried, not added
                         "snapshot_id": e.get("snapshot_id"),
-                        "sequence_number": seq,
+                        "sequence_number": e["_seq"],
                         "file_sequence_number": e.get("file_sequence_number"),
                         "data_file": dfile,
                     }
                 )
-        new_rows = []
-        for spec_id, entries in sorted(by_spec.items()):
-            spec_of = next(
-                s for s in meta["partition-specs"] if s["spec-id"] == spec_id
-            )
-            pf = [
-                (p["pname"], p["result_type"])
-                for p in _spec_part_fields(meta, spec_of)
-            ]
-            entry_schema = _manifest_entry_schema(_partition_record_schema(pf))
-            mp = f"{self.root}/metadata/{uuid.uuid4().hex}-m0.avro"
-            mb = write_container(
-                entry_schema,
-                entries,
-                extra_meta={
-                    "schema": json.dumps(
-                        next(
-                            s
-                            for s in meta["schemas"]
-                            if s["schema-id"] == meta["current-schema-id"]
-                        )
-                    ).encode(),
-                    "partition-spec": json.dumps(spec_of["fields"]).encode(),
-                    "partition-spec-id": str(spec_of["spec-id"]).encode(),
-                    "format-version": b"2",
-                    "content": b"data",
-                },
-            )
-            _atomic.write_bytes(self.spark, mp, mb, exclusive=True)
-            new_rows.append(
-                {
-                    "manifest_path": mp,
-                    "manifest_length": len(mb),
-                    "partition_spec_id": spec_id,
-                    "content": 0,
-                    # stamped with the commit seq below
-                    "added_snapshot_id": sid,
-                    "added_files_count": 0,
-                    "existing_files_count": len(entries),
-                    "deleted_files_count": 0,
-                    "added_rows_count": 0,
-                    "existing_rows_count": sum(
-                        e["data_file"]["record_count"] for e in entries
-                    ),
-                    "deleted_rows_count": 0,
-                    "partitions": _partition_summaries(entries, pf),
-                    "_min_seq": min(
-                        e["sequence_number"] for e in entries
-                    ) if entries else None,
-                    # lineage: every carried file is explicitly stamped,
-                    # so this base is never consumed — present for spec
-                    # shape (manifests in a lineage table carry one)
-                    **(
-                        {"first_row_id": int(meta.get("next-row-id", 0))}
-                        if lineage
-                        else {}
-                    ),
-                }
-            )
-        base_sid = sid_cur
-        v = self.current_metadata_version()
-        meta = self.metadata(version=v)
-        if meta.get("current-snapshot-id") != base_sid:
-            raise IcebergCommitConflict(
-                f"rewrite_manifests base snapshot moved at {self.root} — "
-                f"recompute"
-            )
-        seq = meta["last-sequence-number"] + 1
-        rows_out = [
-            {
-                **{k: v2 for k, v2 in r.items() if k != "_min_seq"},
-                "sequence_number": seq,
-                "min_sequence_number": (
-                    r["_min_seq"] if r["_min_seq"] is not None else seq
-                ),
-            }
-            for r in new_rows
-        ] + delete_manifests
-        mlist_path = f"{self.root}/metadata/snap-{sid}-1-{uuid.uuid4().hex}.avro"
-        mlist_bytes = write_container(
-            _manifest_list_schema(),
-            rows_out,
-            extra_meta={
-                "snapshot-id": str(sid).encode(),
-                "sequence-number": str(seq).encode(),
-                "format-version": b"2",
-            },
-        )
-        _atomic.write_bytes(self.spark, mlist_path, mlist_bytes, exclusive=True)
-        now = int(time.time() * 1000)
-        snap = {
-            "snapshot-id": sid,
-            "parent-snapshot-id": base_sid,
-            "sequence-number": seq,
-            "timestamp-ms": now,
-            "manifest-list": mlist_path,
-            "summary": {
-                "operation": "replace",
-                "manifests-replaced": str(len(data_manifests)),
-                "manifests-created": str(len(new_rows)),
-            },
-            "schema-id": meta["current-schema-id"],
-        }
-        if lineage:
-            snap["first-row-id"] = int(meta.get("next-row-id", 0))
-        new_meta = dict(meta)
-        new_meta["last-sequence-number"] = seq
-        new_meta["last-updated-ms"] = now
-        new_meta["current-snapshot-id"] = sid
-        new_meta["refs"] = {
-            **(meta.get("refs") or {}),
-            "main": {"snapshot-id": sid, "type": "branch"},
-        }
-        new_meta["snapshots"] = meta["snapshots"] + [snap]
-        new_meta["snapshot-log"] = meta.get("snapshot-log", []) + [
-            {"timestamp-ms": now, "snapshot-id": sid}
+        specs = {s["spec-id"]: s for s in meta["partition-specs"]}
+        new_rows = [
+            self._write_manifest(meta, specs[spec_id], entries, "data")
+            for spec_id, entries in sorted(by_spec.items())
         ]
-        try:
-            self._write_metadata(v + 1, new_meta)
-            return sid
-        except IcebergCommitConflict:
-            raise IcebergCommitConflict(
-                f"rewrite_manifests lost a race at {self.root} — recompute"
-            )
+        delete_manifests = [m for m in prior if m.get("content", 0) == 1]
+        summary = {
+            "operation": "replace",
+            "manifests-replaced": str(len(data_manifests)),
+            "manifests-created": str(len(new_rows)),
+        }
+
+        def build(meta, seq):
+            self._require_head(meta, base)
+            return new_rows + delete_manifests, summary, 0
+
+        return self._commit_snapshot(build)
 
     def rewrite_position_deletes(self, target_files: int = 1) -> int | None:
         """Iceberg's ``rewrite_position_deletes`` maintenance action
@@ -3573,9 +3497,17 @@ class IcebergTable:
         million rows), never touches data, and resets the scan's
         delete-side read amplification to ``target_files``."""
         meta = self.metadata()
-        data_entries, delete_entries = self._entries_for_snapshot(meta, None)
+        base = self._head(meta)
+        prior = self._manifest_list(self._find_snapshot(meta, base))
+        entries_of = {
+            m["manifest_path"]: self._manifest_entries(m) for m in prior
+        }
         pos_entries = [
-            e for e in delete_entries if e["data_file"].get("content") != 2
+            e
+            for m in prior
+            if m.get("content", 0) == 1
+            for e in entries_of[m["manifest_path"]]
+            if e["data_file"].get("content") != 2
         ]
         if not pos_entries:
             return None
@@ -3585,7 +3517,12 @@ class IcebergTable:
         # of the pair files themselves. DV entries fold in through the
         # shared pair reader — consolidation converts them to sorted v2
         # pair files (a legal downgrade: the pairs are the semantics)
-        live_paths = [e["data_file"]["file_path"] for e in data_entries]
+        live_paths = [
+            e["data_file"]["file_path"]
+            for m in prior
+            if m.get("content", 0) == 0
+            for e in entries_of[m["manifest_path"]]
+        ]
         live_df = local_frame(
             self.spark,
             [(p,) for p in live_paths], "file_path string"
@@ -3606,8 +3543,35 @@ class IcebergTable:
         del_files, counts = self._staged_files(stage)
         self._raw_form_deletes.update(p for p, _ in del_files)
         n_after = sum(counts.values())
-        sid = uuid.uuid4().int % (1 << 62)
-        del_spec = self._unpartitioned_spec(meta)
+        sid = _new_snapshot_id()
+        replaced = {e["data_file"]["file_path"] for e in pos_entries}
+        specs = {s["spec-id"]: s for s in meta["partition-specs"]}
+        rows: list[dict] = []
+        for m in prior:
+            entries = entries_of[m["manifest_path"]]
+            live = [e for e in entries if e["data_file"]["file_path"] not in replaced]
+            if m.get("content", 0) == 0 or len(live) == len(entries):
+                rows.append(m)  # data manifests and pure equality manifests ride through
+            elif live:
+                # mixed manifest: rewrite the survivors with their
+                # effective sequence numbers pinned (EXISTING entries)
+                rows.append(
+                    self._write_manifest(
+                        meta,
+                        specs[m.get("partition_spec_id", 0)],
+                        [
+                            {
+                                "status": 0,
+                                "snapshot_id": e.get("snapshot_id"),
+                                "sequence_number": e["_seq"],
+                                "file_sequence_number": e.get("file_sequence_number"),
+                                "data_file": e["data_file"],
+                            }
+                            for e in live
+                        ],
+                        "deletes",
+                    )
+                )
         new_files = [
             {
                 "content": 1,  # POSITION_DELETES
@@ -3619,197 +3583,26 @@ class IcebergTable:
             }
             for path, size in del_files
         ]
-        new_manifest_row = None
         if new_files:
-            manifest_path, manifest_len = self._write_delete_manifest(
-                del_spec, [], new_files, sid
-            )
-            new_manifest_row = {
-                "manifest_path": manifest_path,
-                "manifest_length": manifest_len,
-                "partition_spec_id": del_spec["spec-id"],
-                "content": 1,
-                "added_snapshot_id": sid,
-                "added_files_count": len(new_files),
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": n_after,
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-                "partitions": None,
-            }
+            rows.append(self._delete_manifest(meta, new_files, sid))
         else:
             _atomic.delete(self.spark, stage, recursive=True)
-        base_sid = meta.get("current-snapshot-id")
-        replaced = {e["data_file"]["file_path"] for e in pos_entries}
-        # single-attempt commit: the rewritten pair set was computed
-        # against the base tip, so ANY racer (before or during the write)
-        # invalidates it — refuse and make the caller recompute, the same
-        # contract as rewrite_data_files' replace commit
-        v = self.current_metadata_version()
-        meta = self.metadata(version=v)
-        cur_sid = meta.get("current-snapshot-id")
-        if cur_sid != base_sid:
-            raise IcebergCommitConflict(
-                f"rewrite_position_deletes base snapshot moved "
-                f"({base_sid} → {cur_sid}) at {self.root} — recompute"
-            )
-        seq = meta["last-sequence-number"] + 1
-        cur_snap = next(
-            s for s in meta["snapshots"] if s["snapshot-id"] == cur_sid
-        )
-        _, prior = read_container(
-            _atomic.read_bytes(self.spark, cur_snap["manifest-list"])
-        )
-        kept: list[dict] = []
-        for m in prior:
-            if m.get("content", 0) == 0:
-                kept.append(m)  # data manifests untouched
-                continue
-            _, rows = read_container(_atomic.read_bytes(self.spark, m["manifest_path"]))
-            live_rows = [
-                e
-                for e in rows
-                if e["status"] in (0, 1)
-                and e["data_file"]["file_path"] not in replaced
-            ]
-            if not live_rows:
-                continue  # manifest held only replaced position deletes
-            if len(live_rows) == len(rows):
-                kept.append(m)  # pure equality manifest — ride through
-                continue
-            # mixed manifest: rewrite the survivors with their
-            # effective sequence numbers pinned (EXISTING entries)
-            spec_of = next(
-                s
-                for s in meta["partition-specs"]
-                if s["spec-id"] == m.get("partition_spec_id", 0)
-            )
-            pf = [
-                (p["pname"], p["result_type"])
-                for p in _spec_part_fields(meta, spec_of)
-            ]
-            entry_schema = _manifest_entry_schema(
-                _partition_record_schema(pf)
-            )
-            pinned = [
-                {
-                    "status": 0,
-                    "snapshot_id": e.get("snapshot_id"),
-                    "sequence_number": (
-                        e.get("sequence_number")
-                        if e.get("sequence_number") is not None
-                        else m["sequence_number"]
-                    ),
-                    "file_sequence_number": e.get("file_sequence_number"),
-                    "data_file": e["data_file"],
-                }
-                for e in live_rows
-            ]
-            mp = f"{self.root}/metadata/{uuid.uuid4().hex}-m1.avro"
-            mb = write_container(
-                entry_schema,
-                pinned,
-                extra_meta={
-                    "partition-spec": json.dumps(spec_of["fields"]).encode(),
-                    "partition-spec-id": str(spec_of["spec-id"]).encode(),
-                    "format-version": b"2",
-                    "content": b"deletes",
-                },
-            )
-            _atomic.write_bytes(self.spark, mp, mb, exclusive=True)
-            kept.append(
-                {
-                    "manifest_path": mp,
-                    "manifest_length": len(mb),
-                    "partition_spec_id": spec_of["spec-id"],
-                    "content": 1,
-                    "sequence_number": seq,
-                    "min_sequence_number": min(
-                        p["sequence_number"] for p in pinned
-                    ),
-                    "added_snapshot_id": sid,
-                    "added_files_count": 0,
-                    "existing_files_count": len(pinned),
-                    "deleted_files_count": 0,
-                    "added_rows_count": 0,
-                    "existing_rows_count": sum(
-                        p["data_file"]["record_count"] for p in pinned
-                    ),
-                    "deleted_rows_count": 0,
-                    "partitions": None,
-                }
-            )
-        rows_out = kept + (
-            [
-                {
-                    **new_manifest_row,
-                    "sequence_number": seq,
-                    "min_sequence_number": seq,
-                }
-            ]
-            if new_manifest_row is not None
-            else []
-        )
-        mlist_path = (
-            f"{self.root}/metadata/snap-{sid}-1-{uuid.uuid4().hex}.avro"
-        )
-        mlist_bytes = write_container(
-            _manifest_list_schema(),
-            rows_out,
-            extra_meta={
-                "snapshot-id": str(sid).encode(),
-                "sequence-number": str(seq).encode(),
-                "format-version": b"2",
-            },
-        )
-        _atomic.write_bytes(self.spark, mlist_path, mlist_bytes, exclusive=True)
-        now = int(time.time() * 1000)
-        snap = {
-            "snapshot-id": sid,
-            "parent-snapshot-id": cur_sid,
-            "sequence-number": seq,
-            "timestamp-ms": now,
-            "manifest-list": mlist_path,
-            "summary": {
-                "operation": "replace",
-                "rewritten-delete-files": str(len(pos_entries)),
-                "added-position-delete-files": str(len(new_files)),
-                "added-position-deletes": str(n_after),
-                "removed-dangling-position-deletes": str(
-                    max(0, n_before - n_after)
-                ),
-            },
-            "schema-id": meta["current-schema-id"],
+        summary = {
+            "operation": "replace",
+            "rewritten-delete-files": str(len(pos_entries)),
+            "added-position-delete-files": str(len(new_files)),
+            "added-position-deletes": str(n_after),
+            "removed-dangling-position-deletes": str(max(0, n_before - n_after)),
         }
-        new_meta = dict(meta)
-        new_meta["last-sequence-number"] = seq
-        new_meta["last-updated-ms"] = now
-        new_meta["current-snapshot-id"] = sid
-        new_meta["refs"] = {
-            **(meta.get("refs") or {}),
-            "main": {"snapshot-id": sid, "type": "branch"},
-        }
-        new_meta["snapshots"] = meta["snapshots"] + [snap]
-        new_meta["snapshot-log"] = meta.get("snapshot-log", []) + [
-            {"timestamp-ms": now, "snapshot-id": sid}
-        ]
-        if new_manifest_row is not None and del_spec["spec-id"] not in {
-            s["spec-id"] for s in meta["partition-specs"]
-        }:
-            new_meta["partition-specs"] = meta["partition-specs"] + [
-                del_spec
-            ]
-        try:
-            self._write_metadata(v + 1, new_meta)
-            return sid
-        except IcebergCommitConflict:
-            # replace semantics: a racer landed mid-write — the pair
-            # set is stale, surface instead of a blind retry
-            raise IcebergCommitConflict(
-                f"rewrite_position_deletes lost a race at {self.root} "
-                f"— recompute against the new tip"
-            )
+
+        # the rewritten pair set was computed against the base head: any
+        # commit that moved it invalidates the set (the same contract as
+        # rewrite_data_files' replace commit)
+        def build(meta, seq):
+            self._require_head(meta, base)
+            return rows, summary, 0
+
+        return self._commit_snapshot(build, sid=sid)
 
     def overwrite_partitions(self, df: DataFrame) -> int:
         """DYNAMIC PARTITION OVERWRITE: replace exactly the partitions
@@ -3868,12 +3661,7 @@ class IcebergTable:
                 desc["first_row_id"] = int(e["_fri"])
             carried.append(desc)
         return self.append_files(
-            carried + files,
-            meta=meta,
-            replace=True,
-            operation="overwrite",
-            carry_deletes=True,
-            lineage_carried=lineage,
+            carried + files, meta=meta, replace=True, operation="overwrite"
         )
 
     def _prepare_files(
@@ -3901,9 +3689,7 @@ class IcebergTable:
         # the source column IN the files — only the derived value is a
         # directory, exactly the spec's storage contract
         identity_sources = {p["source"] for p in pf if p["transform"] == "identity"}
-        ice_fields = next(
-            s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
-        )["fields"]
+        ice_fields = _current_schema(meta)["fields"]
         fid_of = {f["name"]: f["id"] for f in ice_fields}
         boundable = {
             "int", "long", "float", "double", "string", "boolean",
@@ -3976,349 +3762,123 @@ class IcebergTable:
         meta: dict | None = None,
         replace: bool = False,
         operation: str = "append",
-        carry_deletes: bool = False,
         branch: str | None = None,
         summary_props: dict | None = None,
-        extra_manifests: list[dict] | None = None,
-        ensure_spec: dict | None = None,
+        delete_manifests: list[dict] = (),
         sid: int | None = None,
-        materialized_row_ids: bool = False,
-        lineage_carried: bool = False,
         meta_mutator=None,
     ) -> int:
         """Commit an append snapshot over PRE-EXISTING parquet files — the
         zero-copy path (cross-format converts, in-place migration). Each
         descriptor: {path (absolute), size, partition (TYPED values per
-        the current spec), record_count, lower_bounds?, upper_bounds?}.
-        No data moves; only manifests + metadata are written.
-        ``replace=True`` commits the new manifest as the ENTIRE file set
-        (prior manifests dropped from the manifest list — the compaction
-        / overwrite commit shape).
+        the current spec), record_count, lower_bounds?, upper_bounds?};
+        ``status`` 0 marks a file carried over as EXISTING with its
+        original ``sequence_number`` pinned. No data moves; only
+        manifests + metadata are written, under the metadata ``meta``
+        the files were prepared against: the commit refuses if the
+        schema or default spec has evolved since.
 
-        ``extra_manifests`` are pre-written manifest-list entry templates
-        (e.g. merge_upsert's same-snapshot equality-delete manifest);
-        their sequence_number/min_sequence_number are stamped per commit
-        attempt so they share the data manifest's seq. ``ensure_spec``
-        registers a spec (e.g. the unpartitioned global-delete spec) in
-        the table metadata if absent. ``sid`` pins the snapshot id when
-        the caller pre-wrote manifests that must carry it.
-
-        ``meta_mutator`` (callable ``dict -> None``) runs on the new
-        metadata dict inside EVERY commit attempt, just before the
-        version write — the seam for declarations that must land in the
-        SAME metadata commit as the snapshot (e.g. uniform_export's
-        format-version-3 stamp on a DV-carrying sync: a separate
-        follow-up commit would leave a window where v2-declared
-        metadata references PUFFIN deletion vectors, exactly the silent
-        row-resurrection hazard the stamp closes — ADVICE r11)."""
+        ``replace=True`` commits the new manifest as the ENTIRE data file
+        set, over a head that must still be ``meta``'s (a replace's file
+        set is stale once another commit lands). Operation ``overwrite``
+        keeps the prior delete manifests (dynamic overwrite: position
+        deletes on replaced files become no-ops, equality deletes keep
+        their seq); any other replace drops them with the data they
+        applied to. ``delete_manifests`` (rows from ``_delete_manifest``)
+        commit at the same sequence number as the data, e.g. a merge's
+        equality delete. ``sid`` pins the snapshot id those manifests
+        carry. ``meta_mutator(meta)`` runs inside every commit attempt —
+        the seam for declarations that must land in the SAME metadata
+        commit as the snapshot (uniform_export's format-version-3 stamp
+        on a DV-carrying sync)."""
         if meta is None:
             meta = self.metadata()
-        if meta.get("row-lineage") and (replace or any(
-            f.get("status", 1) == 0 for f in files
-        )):
-            # a replace whose files ALL carry materialized _row_id
-            # columns (rewrite_data_files' lineage path) is id-preserving
-            # by construction: the fresh inherited ids its files burn are
-            # overridden row-for-row by the materialized column
-            mat_ok = (
-                materialized_row_ids
-                and replace
-                and all(f.get("status", 1) == 1 for f in files)
-            )
-            # round 11 (was a refusal): a replace whose CARRIED files all
-            # arrive with their RESOLVED first_row_id stamped (field 142
-            # — the rewrite_manifests carry rule) reassigns the id of
-            # nothing: carried rows keep their explicit ids, replaced
-            # rows are deletions (ids retire, never move), and added
-            # rows allocate fresh ids from next-row-id. ``lineage_
-            # carried`` is the caller's explicit declaration that its
-            # stamps came from the source manifests' resolved ids —
-            # dynamic overwrite resolves them via _entries_for_snapshot.
-            carried_ok = lineage_carried and all(
-                f.get("first_row_id") is not None
+        sid = _new_snapshot_id() if sid is None else sid
+        carried = [f for f in files if f.get("status", 1) == 0]
+        if meta.get("row-lineage") and (replace or carried):
+            # no replace may move a surviving row's id: carried files
+            # arrive with their RESOLVED first_row_id stamped (field 142 —
+            # the rewrite_manifests carry rule), and a rewrite ("replace")
+            # materializes every row's _row_id into its new files, whose
+            # fresh inherited ids it overrides row for row. Replaced rows
+            # retire their ids; added rows allocate from next-row-id.
+            unstamped = any(f.get("first_row_id") is None for f in carried)
+            unmaterialized = operation == "replace" and any(
+                _ROW_ID_FIELD_ID not in {b["key"] for b in f.get("upper_bounds") or []}
                 for f in files
-                if f.get("status", 1) == 0
+                if f.get("status", 1) == 1
             )
-            if not (mat_ok or carried_ok):
+            if unstamped or unmaterialized:
                 raise IcebergProtocolError(
                     "replace-shaped commits on a row-lineage table would "
                     "reassign carried files' row ids — rewrite_data_files "
                     "materializes _row_id into every rewritten file, and "
                     "carry-through replaces (dynamic overwrite) must "
                     "stamp each carried file's resolved first_row_id "
-                    "(field 142) and pass lineage_carried=True"
+                    "(field 142)"
                 )
         spec = self._current_spec(meta)
-        part_fields = [
-            (p["pname"], p["result_type"]) for p in _spec_part_fields(meta, spec)
-        ]
-        seq = meta["last-sequence-number"] + 1
-        if sid is None:
-            sid = uuid.uuid4().int % (1 << 62)
-        part_schema = _partition_record_schema(part_fields)
-        entry_schema = _manifest_entry_schema(part_schema)
-        entries = []
-        added_rows = 0
-        n_added = n_existing = existing_rows = 0
-        for f in files:
-            status = f.get("status", 1)  # 1 ADDED; 0 EXISTING (carried over)
-            if status == 1:
-                added_rows += f["record_count"]
-                n_added += 1
-            else:
-                existing_rows += f["record_count"]
-                n_existing += 1
-            entries.append(
-                {
-                    "status": status,
-                    "snapshot_id": sid,
-                    # ADDED entries inherit the manifest's seq (spec rule);
-                    # EXISTING entries pin their ORIGINAL data seq so
-                    # equality-delete ordering survives the carry-over
-                    "sequence_number": f.get("sequence_number"),
-                    "file_sequence_number": None,
-                    "data_file": {
-                        "content": 0,
-                        "file_path": f["path"],
-                        "file_format": "PARQUET",
-                        "partition": {
-                            c: f.get("partition", {}).get(c) for c, _t in part_fields
-                        },
-                        "record_count": f["record_count"],
-                        "file_size_in_bytes": f["size"],
-                        "lower_bounds": f.get("lower_bounds"),
-                        "upper_bounds": f.get("upper_bounds"),
-                        # explicit id carry (field 142) — carried files
-                        # under lineage arrive stamped; ADDED files stay
-                        # null and inherit from the manifest base
-                        "first_row_id": f.get("first_row_id"),
-                    },
-                }
-            )
-        manifest_path = f"{self.root}/metadata/{uuid.uuid4().hex}-m0.avro"
-        manifest_bytes = write_container(
-            entry_schema,
-            entries,
-            extra_meta={
-                "schema": json.dumps(
-                    next(
-                        s
-                        for s in meta["schemas"]
-                        if s["schema-id"] == meta["current-schema-id"]
-                    )
-                ).encode(),
-                "partition-spec": json.dumps(spec["fields"]).encode(),
-                "partition-spec-id": str(spec["spec-id"]).encode(),
-                "format-version": b"2",
-                "content": b"data",
-            },
-        )
-        _atomic.write_bytes(self.spark, manifest_path, manifest_bytes, exclusive=True)
-        # OPTIMISTIC COMMIT: the data manifest above is immutable (entry
-        # seqs are null/pinned, so it is sequence-independent), but
-        # everything derived from the table tip — sequence number,
-        # parent, prior manifests, manifest list, metadata JSON — is
-        # rebuilt from a CONSISTENT (version, metadata) pair read inside
-        # every attempt, and the write targets exactly version+1 of that
-        # pair. Reading the version and metadata separately (or reusing
-        # stale metadata after a conflict) loses a racer's snapshot: the
-        # loser lands on a later version number without ever conflicting.
-        base_schema_id = meta["current-schema-id"]
-        base_spec_id = spec["spec-id"]
-        # a REPLACE's file set (survivors + rewrites) was computed against
-        # the caller-supplied base snapshot; any commit that lands after
-        # that read would be silently dropped from the replace's manifest
-        # list (compaction can run for minutes — the window is large), so
-        # pin the base tip and refuse to commit over a moved one
-        base_sid = meta.get("current-snapshot-id")
-        if branch is not None:
-            r = (meta.get("refs") or {}).get(branch)
-            if r is not None:
-                base_sid = r["snapshot-id"]
-        # EXISTING entries pin their original data sequence numbers; the
-        # manifest-list min_sequence_number must cover them or external
-        # readers will skip older equality deletes against carried files
-        pinned_seqs = [
-            f["sequence_number"]
+        pnames = [p["pname"] for p in _spec_part_fields(meta, spec)]
+        entries = [
+            {
+                "status": f.get("status", 1),
+                "snapshot_id": sid,
+                # ADDED entries inherit the manifest's seq (spec rule);
+                # EXISTING entries pin their ORIGINAL data seq so
+                # equality-delete ordering survives the carry-over
+                "sequence_number": f.get("sequence_number"),
+                "file_sequence_number": None,
+                "data_file": {
+                    "content": 0,
+                    "file_path": f["path"],
+                    "file_format": "PARQUET",
+                    "partition": {c: f.get("partition", {}).get(c) for c in pnames},
+                    "record_count": f["record_count"],
+                    "file_size_in_bytes": f["size"],
+                    "lower_bounds": f.get("lower_bounds"),
+                    "upper_bounds": f.get("upper_bounds"),
+                    # explicit id carry (field 142) — carried files
+                    # under lineage arrive stamped; ADDED files stay
+                    # null and inherit from the manifest base
+                    "first_row_id": f.get("first_row_id"),
+                },
+            }
             for f in files
-            if f.get("status", 1) == 0 and f.get("sequence_number") is not None
         ]
-        for _ in range(20):
-            v = self.current_metadata_version()
-            meta = self.metadata(version=v)
+        row = self._write_manifest(meta, spec, entries, "data")
+        added_rows = row["added_rows_count"]
+        summary = {
+            "operation": operation,
+            "added-data-files": str(len(entries)),
+            "added-records": str(added_rows),
+            **{str(k): str(v) for k, v in (summary_props or {}).items()},
+        }
+        base_schema_id = meta["current-schema-id"]
+        base = self._head(meta, branch)
+
+        def build(meta, seq):
             if (
                 meta["current-schema-id"] != base_schema_id
-                or meta["default-spec-id"] != base_spec_id
+                or meta["default-spec-id"] != spec["spec-id"]
             ):
                 raise IcebergCommitConflict(
                     f"schema/spec evolved under this commit at {self.root} "
                     f"— restage against the new metadata"
                 )
-            seq = meta["last-sequence-number"] + 1
-            new_manifest = {
-                "manifest_path": manifest_path,
-                "manifest_length": len(manifest_bytes),
-                "partition_spec_id": spec["spec-id"],
-                "content": 0,
-                "sequence_number": seq,
-                "min_sequence_number": min([seq] + pinned_seqs),
-                "added_snapshot_id": sid,
-                "added_files_count": n_added,
-                "existing_files_count": n_existing,
-                "deleted_files_count": 0,
-                "added_rows_count": added_rows,
-                "existing_rows_count": existing_rows,
-                "deleted_rows_count": 0,
-                # spec field_summary list: planning can skip this whole
-                # manifest on partition bounds without opening it
-                "partitions": _partition_summaries(entries, part_fields),
-            }
-            lineage = bool(meta.get("row-lineage"))
-            if lineage:
-                # allocate this manifest's row-id span from the CURRENT
-                # next-row-id (same per-attempt meta the version targets —
-                # a racer forces a version conflict and re-allocation);
-                # data files inherit by record_count accumulation
-                new_manifest["first_row_id"] = int(meta.get("next-row-id", 0))
+            if replace:
+                self._require_head(meta, base, branch)
             prior = []
-            cur_sid = meta.get("current-snapshot-id")
-            if branch is not None:
-                r = (meta.get("refs") or {}).get(branch)
-                if r is not None:
-                    if r.get("type") == "tag":
-                        raise IcebergProtocolError(
-                            f"cannot write to tag {branch!r}"
-                        )
-                    cur_sid = r["snapshot-id"]  # branch head is the parent
-            if replace and cur_sid != base_sid:
-                # a concurrent commit (append/delete/replace) landed after
-                # the caller computed this replace's file set; committing
-                # over it would drop the racer's files from the table —
-                # mirror _commit_delete_snapshot's base-ancestry guard and
-                # force the caller to recompute against the new tip
-                raise IcebergCommitConflict(
-                    f"replace base snapshot moved ({base_sid} → {cur_sid}) "
-                    f"at {self.root} — recompute the replacement file set"
-                )
-            if cur_sid is not None and cur_sid != -1 and (
-                not replace or carry_deletes
-            ):
-                cur_snap = next(
-                    s for s in meta["snapshots"] if s["snapshot-id"] == cur_sid
-                )
-                _, prior = read_container(
-                    _atomic.read_bytes(self.spark, cur_snap["manifest-list"])
+            if not replace or operation == "overwrite":
+                prior = self._manifest_list(
+                    self._find_snapshot(meta, self._head(meta, branch))
                 )
                 if replace:
-                    # dynamic overwrite: data manifests are replaced by the
-                    # new one (survivors carried as EXISTING), delete
-                    # manifests ride along — position deletes on overwritten
-                    # files become no-ops, equality deletes keep their seq
                     prior = [m for m in prior if m.get("content", 0) == 1]
-            extras = [
-                {
-                    **t,
-                    "sequence_number": seq,
-                    "min_sequence_number": seq,
-                    "added_snapshot_id": sid,
-                }
-                for t in (extra_manifests or [])
-            ]
-            mlist_path = (
-                f"{self.root}/metadata/snap-{sid}-1-{uuid.uuid4().hex}.avro"
-            )
-            mlist_bytes = write_container(
-                _manifest_list_schema(),
-                prior + [new_manifest] + extras,
-                extra_meta={
-                    "snapshot-id": str(sid).encode(),
-                    "sequence-number": str(seq).encode(),
-                    "format-version": b"2",
-                },
-            )
-            _atomic.write_bytes(self.spark, mlist_path, mlist_bytes, exclusive=True)
-            now = int(time.time() * 1000)
-            snap = {
-                "snapshot-id": sid,
-                "sequence-number": seq,
-                "timestamp-ms": now,
-                "manifest-list": mlist_path,
-                "summary": {
-                    "operation": operation,
-                    "added-data-files": str(len(entries)),
-                    "added-records": str(added_rows),
-                    **{str(k): str(v2) for k, v2 in (summary_props or {}).items()},
-                },
-                "schema-id": meta["current-schema-id"],
-            }
-            if cur_sid is not None and cur_sid != -1:
-                snap["parent-snapshot-id"] = cur_sid
-            new_meta = dict(meta)
-            if lineage:
-                snap["first-row-id"] = int(meta.get("next-row-id", 0))
-                new_meta["next-row-id"] = (
-                    int(meta.get("next-row-id", 0)) + added_rows
-                )
-            new_meta["last-sequence-number"] = seq
-            new_meta["last-updated-ms"] = now
-            new_meta["snapshots"] = meta["snapshots"] + [snap]
-            refs = dict(meta.get("refs") or {})
-            if branch is not None:
-                # branch commit: only the ref advances — main's head and
-                # its snapshot log are untouched (the WAP staging contract)
-                refs[branch] = {"snapshot-id": sid, "type": "branch"}
-            else:
-                new_meta["current-snapshot-id"] = sid
-                refs["main"] = {"snapshot-id": sid, "type": "branch"}
-                new_meta["snapshot-log"] = meta.get("snapshot-log", []) + [
-                    {"timestamp-ms": now, "snapshot-id": sid}
-                ]
-            new_meta["refs"] = refs
-            new_meta["metadata-log"] = meta.get("metadata-log", []) + [
-                {
-                    "timestamp-ms": meta["last-updated-ms"],
-                    "metadata-file": f"{self.root}/metadata/v{v}.metadata.json",
-                }
-            ]
-            if ensure_spec is not None:
-                # e.g. the unpartitioned spec a merge's global equality
-                # delete manifest was written under (default-spec-id kept)
-                existing_spec = next(
-                    (
-                        s
-                        for s in meta["partition-specs"]
-                        if s["spec-id"] == ensure_spec["spec-id"]
-                    ),
-                    None,
-                )
-                if existing_spec is None:
-                    new_meta["partition-specs"] = meta["partition-specs"] + [
-                        ensure_spec
-                    ]
-                elif existing_spec["fields"] != ensure_spec["fields"]:
-                    # a racing spec evolution claimed this id for different
-                    # fields — our pre-written manifest would be
-                    # misinterpreted under it
-                    raise IcebergCommitConflict(
-                        f"spec id {ensure_spec['spec-id']} claimed by a "
-                        f"racing spec evolution at {self.root} — restage"
-                    )
             if meta_mutator is not None:
-                meta_mutator(new_meta)
-            try:
-                self._write_metadata(v + 1, new_meta)
-                return sid
-            except IcebergCommitConflict:
-                if replace:
-                    # a replace's carried file set was computed against
-                    # the pre-race tip — blind retry could resurrect or
-                    # drop the racer's files; the caller must recompute
-                    raise IcebergCommitConflict(
-                        f"replace commit lost a race at {self.root} — "
-                        f"recompute against the new tip and retry"
-                    )
-                continue  # next attempt re-reads the (version, meta) pair
-        raise IcebergCommitConflict(f"append lost 20 races at {self.root}")
+                meta_mutator(meta)
+            return prior + [row] + list(delete_manifests), summary, added_rows
+
+        return self._commit_snapshot(build, sid=sid, branch=branch)
 
     def expire_snapshots(self, retain: int = 1) -> dict:
         """Retire all but the newest ``retain`` snapshots and delete the
@@ -4337,16 +3897,12 @@ class IcebergTable:
         deletion happens AFTER the metadata commit: a crash in between
         orphans files (reclaimed by the next run) instead of leaving
         metadata pointing at deleted files."""
-        for _ in range(20):
-            v = self.current_metadata_version()
-            meta = self.metadata(version=v)
+        opened: dict[str, set] = {}
+
+        def mutate(meta):
             snaps = meta.get("snapshots", [])
-            if len(snaps) <= retain:
-                return {"snapshots": 0, "files": 0}
             # every ref target (branch head / tag) survives regardless of age
-            ref_ids = {
-                r["snapshot-id"] for r in (meta.get("refs") or {}).values()
-            }
+            ref_ids = {r["snapshot-id"] for r in meta["refs"].values()}
             keep_snaps = [
                 s
                 for s in snaps
@@ -4354,37 +3910,14 @@ class IcebergTable:
             ]
             keep_ids = {s["snapshot-id"] for s in keep_snaps}
             expired = [s for s in snaps if s["snapshot-id"] not in keep_ids]
-            keep_data: set[str] = set()
-            keep_meta: set[str] = set()
-            for s in keep_snaps:
-                keep_meta.add(s["manifest-list"])
-                _, manifests = read_container(_atomic.read_bytes(self.spark, s["manifest-list"]))
-                for m in manifests:
-                    keep_meta.add(m["manifest_path"])
-                    _, rows = read_container(_atomic.read_bytes(self.spark, m["manifest_path"]))
-                    for e in rows:
-                        keep_data.add(e["data_file"]["file_path"])
-            victims: set[str] = set()
-            for s in expired:
-                if s["manifest-list"] in keep_meta:
-                    continue
-                victims.add(s["manifest-list"])
-                _, manifests = read_container(_atomic.read_bytes(self.spark, s["manifest-list"]))
-                for m in manifests:
-                    if m["manifest_path"] not in keep_meta:
-                        victims.add(m["manifest_path"])
-                    _, rows = read_container(_atomic.read_bytes(self.spark, m["manifest_path"]))
-                    for e in rows:
-                        p = e["data_file"]["file_path"]
-                        if p not in keep_data:
-                            victims.add(p)
-            now = int(time.time() * 1000)
-            new_meta = dict(meta)
-            new_meta["snapshots"] = keep_snaps
-            new_meta["snapshot-log"] = [
-                e
-                for e in meta.get("snapshot-log", [])
-                if e["snapshot-id"] in keep_ids
+            if not expired:
+                raise _Unchanged((0, set()))
+            keep_meta, keep_data = self._referenced_files(keep_snaps, opened)
+            gone_meta, gone_data = self._referenced_files(expired, opened)
+            victims = (gone_meta - keep_meta) | (gone_data - keep_data)
+            meta["snapshots"] = keep_snaps
+            meta["snapshot-log"] = [
+                e for e in meta.get("snapshot-log", []) if e["snapshot-id"] in keep_ids
             ]
             # statistics files track their snapshot (spec: writers must
             # drop entries for expired snapshots — round-10 fix): retire
@@ -4392,39 +3925,33 @@ class IcebergTable:
             # the metadata entries and the files themselves; a stale
             # entry would keep answering ndv()/read_quantile_sketch()
             # for a snapshot whose time travel correctly raises
-            for key, path_key in (
-                ("statistics", "statistics-path"),
-                ("partition-statistics", "statistics-path"),
-            ):
+            for key in ("statistics", "partition-statistics"):
                 kept_stats = []
                 for s in meta.get(key, []):
                     if s["snapshot-id"] in keep_ids:
                         kept_stats.append(s)
                     else:
-                        victims.add(s[path_key])
+                        victims.add(s["statistics-path"])
                 if key in meta or kept_stats:
-                    new_meta[key] = kept_stats
-            new_meta["last-updated-ms"] = now
+                    meta[key] = kept_stats
+            return len(expired), victims
+
+        n_expired, victims = self._commit_metadata(mutate)
+        deleted = 0
+        prefix = self.root.rstrip("/") + "/"
+        for p in victims:
+            # ownership guard: zero-copy converts (format_convert /
+            # convert_parquet) reference FOREIGN files by absolute
+            # path — expiring a snapshot must never delete a file this
+            # table does not own, or the source table breaks
+            if not p.startswith(prefix):
+                continue
             try:
-                self._write_metadata(v + 1, new_meta)
-            except IcebergCommitConflict:
-                continue  # racer landed: recompute against the new tip
-            deleted = 0
-            prefix = self.root.rstrip("/") + "/"
-            for p in victims:
-                # ownership guard: zero-copy converts (format_convert /
-                # convert_parquet) reference FOREIGN files by absolute
-                # path — expiring a snapshot must never delete a file this
-                # table does not own, or the source table breaks
-                if not p.startswith(prefix):
-                    continue
-                try:
-                    if _atomic.delete(self.spark, p):
-                        deleted += 1
-                except Exception:
-                    pass  # already gone
-            return {"snapshots": len(expired), "files": deleted}
-        raise IcebergCommitConflict(f"expire lost 20 races at {self.root}")
+                if _atomic.delete(self.spark, p):
+                    deleted += 1
+            except Exception:
+                pass  # already gone
+        return {"snapshots": n_expired, "files": deleted}
 
     def remove_orphan_files(self, older_than_ms: int | None = 3_600_000) -> int:
         """Delete files under ``data/`` that NO snapshot references —
@@ -4439,14 +3966,8 @@ class IcebergTable:
         pass None only when no writer can be active. Scope is strictly
         ``self.root/data`` — foreign files a zero-copy convert references
         live outside it and are never touched. Returns files deleted."""
-        meta = self.metadata()
-        referenced: set[str] = set()
-        for s in meta.get("snapshots", []):
-            _, manifests = read_container(_atomic.read_bytes(self.spark, s["manifest-list"]))
-            for m in manifests:
-                _, rows = read_container(_atomic.read_bytes(self.spark, m["manifest_path"]))
-                for e in rows:
-                    referenced.add(_atomic.path_only(e["data_file"]["file_path"]))
+        _, files = self._referenced_files(self.metadata().get("snapshots", []), {})
+        referenced = {_atomic.path_only(p) for p in files}
         now = int(time.time() * 1000)
         deleted = 0
         for path, _size, mtime in _atomic.list_files(self.spark, f"{self.root}/data"):
@@ -4570,15 +4091,10 @@ class IcebergTable:
         if n_deleted == 0:
             _atomic.delete(self.spark, stage, recursive=True)
             return None
-        # the pair file spans every partition → global delete, written
-        # under the unpartitioned spec (empty tuple) per the Iceberg spec
-        del_spec = self._unpartitioned_spec(meta)
         self._raw_form_deletes.update(p for p, _ in del_files)
-        return self._commit_delete_snapshot(
+        return self._commit_deletes(
             meta,
-            del_spec,
-            [],
-            files=[
+            [
                 {
                     "content": 1,  # POSITION_DELETES
                     "file_path": path,
@@ -4589,8 +4105,7 @@ class IcebergTable:
                 }
                 for path, size in del_files
             ],
-            n_deleted=n_deleted,
-            summary={
+            {
                 "operation": "delete",
                 "added-position-delete-files": str(len(del_files)),
                 "added-position-deletes": str(n_deleted),
@@ -4643,7 +4158,7 @@ class IcebergTable:
         ]
         if not blobs:
             return None
-        sid = uuid.uuid4().int % (1 << 62)
+        sid = _new_snapshot_id()
         seq_hint = meta["last-sequence-number"] + 1
         puffin_bytes, _fsz = write_puffin(
             [
@@ -4676,12 +4191,9 @@ class IcebergTable:
             for b, _payload in written
         }
         n_deleted = sum(card for _fp, _payload, card in blobs)
-        del_spec = self._unpartitioned_spec(meta)
-        return self._commit_delete_snapshot(
+        return self._commit_deletes(
             meta,
-            del_spec,
-            [],
-            files=[
+            [
                 {
                     "content": 1,  # POSITION_DELETES (DV flavor)
                     "file_path": puffin_path,
@@ -4695,16 +4207,13 @@ class IcebergTable:
                 }
                 for fp, _payload, card in blobs
             ],
-            n_deleted=n_deleted,
-            summary={
+            {
                 "operation": "delete",
                 "added-dvs": str(len(blobs)),
                 "added-position-deletes": str(n_deleted),
             },
             sid=sid,
-            # see docstring: v3 DV surface embedded under a v2
-            # declaration, visible to any metadata auditor
-            extra_properties={"deletion-vectors.v2-embedded": "true"},
+            meta_mutator=_stamp_dv_v2_embedded,
         )
 
     def delete_equality(
@@ -4723,73 +4232,30 @@ class IcebergTable:
         matching to read/compaction). Returns the new snapshot id, or
         None for an empty key set."""
         meta = self.metadata()
-        cols = list(cols or keys.columns)
-        eq_files, _eq_ids, n_keys = self._stage_equality_keys(keys, cols, meta)
+        eq_files, n_keys = self._stage_equality_keys(keys, list(cols or keys.columns), meta)
         if n_keys == 0:
             return None
         # table-wide equality deletes MUST be global per the Iceberg spec:
         # written under an unpartitioned spec, empty partition tuple — a
         # partitioned-spec all-null tuple would be scoped to the null
         # partition by compliant readers, resurrecting rows elsewhere
-        del_spec = self._unpartitioned_spec(meta)
-        return self._commit_delete_snapshot(
+        return self._commit_deletes(
             meta,
-            del_spec,
-            [],
-            files=eq_files,
-            n_deleted=n_keys,
-            summary={
+            eq_files,
+            {
                 "operation": "delete",
                 "added-equality-delete-files": str(len(eq_files)),
                 "added-equality-deletes": str(n_keys),
             },
         )
 
-    def _write_delete_manifest(
-        self,
-        spec: dict,
-        part_fields: list[tuple[str, str]],
-        files: list[dict],
-        sid: int,
-    ) -> tuple[str, int]:
-        """Write a content=deletes manifest (Avro) for ``files`` under
-        ``spec``; returns (path, byte length)."""
-        part_schema = _partition_record_schema(part_fields)
-        entry_schema = _manifest_entry_schema(part_schema)
-        del_entries = [
-            {
-                "status": 1,
-                "snapshot_id": sid,
-                "sequence_number": None,
-                "file_sequence_number": None,
-                "data_file": f,
-            }
-            for f in files
-        ]
-        manifest_path = f"{self.root}/metadata/{uuid.uuid4().hex}-m1.avro"
-        manifest_bytes = write_container(
-            entry_schema,
-            del_entries,
-            extra_meta={
-                "partition-spec": json.dumps(spec["fields"]).encode(),
-                "partition-spec-id": str(spec["spec-id"]).encode(),
-                "format-version": b"2",
-                "content": b"deletes",
-            },
-        )
-        _atomic.write_bytes(self.spark, manifest_path, manifest_bytes, exclusive=True)
-        return manifest_path, len(manifest_bytes)
-
     def _stage_equality_keys(
         self, keys: DataFrame, cols: list[str], meta: dict
-    ) -> tuple[list[dict], list[int], int]:
+    ) -> tuple[list[dict], int]:
         """Stage the distinct key tuples of ``keys[cols]`` as an equality
-        delete parquet file; returns (content=2 file dicts, equality field
-        ids, n_keys). n_keys == 0 means nothing staged (caller no-ops)."""
-        ice_fields = next(
-            s for s in meta["schemas"] if s["schema-id"] == meta["current-schema-id"]
-        )["fields"]
-        by_name = {f["name"]: f for f in ice_fields}
+        delete parquet file; returns (content=2 file dicts, n_keys).
+        n_keys == 0 means nothing staged (caller no-ops)."""
+        by_name = {f["name"]: f for f in _current_schema(meta)["fields"]}
         missing = [c for c in cols if c not in by_name]
         if missing:
             raise IcebergProtocolError(
@@ -4808,7 +4274,7 @@ class IcebergTable:
         n_keys = sum(counts.values())
         if n_keys == 0:
             _atomic.delete(self.spark, stage, recursive=True)
-            return [], eq_ids, 0
+            return [], 0
         return (
             [
                 {
@@ -4822,11 +4288,15 @@ class IcebergTable:
                 }
                 for path, size in del_files
             ],
-            eq_ids,
             n_keys,
         )
 
-    def merge_upsert(self, updates: DataFrame, keys: list[str]) -> int:
+    def merge_upsert(
+        self,
+        updates: DataFrame,
+        keys: list[str],
+        txn: tuple[str, int] | None = None,
+    ) -> int | None:
         """MERGE (upsert) as ONE Iceberg v2 snapshot: a global equality
         delete on the key columns PLUS the update rows as new data files,
         committed together at the same sequence number. The spec's
@@ -4844,176 +4314,78 @@ class IcebergTable:
         — dedup the batch first if last-wins is wanted. Conflicts follow
         append semantics (the staged delete applies by seq ORDERING, not
         by a precomputed file set, so retrying against a newer tip stays
-        correct — unlike replace commits)."""
-        v = self.current_metadata_version()
-        meta = self.metadata(version=v)
-        missing = [k for k in keys if k not in {
-            f["name"]
-            for s in meta["schemas"]
-            if s["schema-id"] == meta["current-schema-id"]
-            for f in s["fields"]
-        }]
+        correct — unlike replace commits).
+
+        ``txn=(app_id, batch_id)`` makes the merge idempotent, as in the
+        Delta twin: the snapshot summary records the pair, and a replay
+        that finds it in the history returns None without staging."""
+        meta = self.metadata()
+        props = {}
+        if txn is not None:
+            if self._txn_committed(meta, *txn):
+                return None
+            props = {"app-id": txn[0], "batch-id": txn[1]}
+        fields = {f["name"] for f in _current_schema(meta)["fields"]}
+        missing = [k for k in keys if k not in fields]
         if missing:
             raise IcebergProtocolError(f"merge keys not in table schema: {missing}")
         files = self._prepare_files(updates, meta)
-        eq_files, _eq_ids, n_keys = self._stage_equality_keys(
-            updates.select(*keys), keys, meta
-        )
+        eq_files, n_keys = self._stage_equality_keys(updates.select(*keys), keys, meta)
         if n_keys == 0:
-            return self.append_files(files, meta=meta, operation="append")
-        sid = uuid.uuid4().int % (1 << 62)
-        del_spec = self._unpartitioned_spec(meta)
-        del_path, del_len = self._write_delete_manifest(
-            del_spec, [], eq_files, sid
-        )
-        extra = {
-            "manifest_path": del_path,
-            "manifest_length": del_len,
-            "partition_spec_id": del_spec["spec-id"],
-            "content": 1,
-            "added_files_count": len(eq_files),
-            "existing_files_count": 0,
-            "deleted_files_count": 0,
-            "added_rows_count": n_keys,
-            "existing_rows_count": 0,
-            "deleted_rows_count": 0,
-            "partitions": None,
-        }
+            return self.append_files(files, meta=meta, summary_props=props)
+        sid = _new_snapshot_id()
         return self.append_files(
             files,
             meta=meta,
             operation="overwrite",
-            extra_manifests=[extra],
-            ensure_spec=del_spec,
+            delete_manifests=[self._delete_manifest(meta, eq_files, sid)],
             summary_props={
+                **props,
                 "added-equality-deletes": n_keys,
                 "merge-keys": ",".join(keys),
             },
             sid=sid,
         )
 
-    def _commit_delete_snapshot(
+    def _commit_deletes(
         self,
         meta: dict,
-        spec: dict,
-        part_fields: list[tuple[str, str]],
         files: list[dict],
-        n_deleted: int,
         summary: dict,
         sid: int | None = None,
-        extra_properties: dict | None = None,
+        meta_mutator=None,
     ) -> int:
-        """Shared commit tail for position-, DV- and equality-delete
-        snapshots: content=1 delete manifest, manifest list = prior +
-        delete manifest, metadata advanced via the optimistic
-        exclusive-create protocol. ``sid`` pins the snapshot id when the
-        caller pre-stamped it into written artifacts (DV puffin blob
-        metadata)."""
-        if sid is None:
-            sid = uuid.uuid4().int % (1 << 62)
-        manifest_path, manifest_len = self._write_delete_manifest(
-            spec, part_fields, files, sid
-        )
-        base_sid = meta.get("current-snapshot-id")
-        # optimistic commit over a consistent (version, metadata) pair
-        # per attempt (see append_files — separate reads lose races);
-        # a racer that rewrote data files (replace / overwrite / another
-        # delete) invalidates our computed targets — refuse instead of
-        # silently mis-deleting
-        for _ in range(20):
-            v = self.current_metadata_version()
-            meta = self.metadata(version=v)
-            seq = meta["last-sequence-number"] + 1
-            delete_manifest = {
-                "manifest_path": manifest_path,
-                "manifest_length": manifest_len,
-                "partition_spec_id": spec["spec-id"],
-                "content": 1,
-                "sequence_number": seq,
-                "min_sequence_number": seq,
-                "added_snapshot_id": sid,
-                "added_files_count": len(files),
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": n_deleted,
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-                "partitions": None,
-            }
-            cur_sid = meta.get("current-snapshot-id")
-            if cur_sid != base_sid:
-                # walk the racer commits between our base and the new tip:
-                # plain appends cannot invalidate file-scoped delete
-                # targets; anything that rewrote or deleted data can
-                by_id = {s["snapshot-id"]: s for s in meta["snapshots"]}
-                ops_since = set()
-                walk = cur_sid
-                while walk is not None and walk != base_sid:
-                    s = by_id.get(walk)
-                    if s is None:
-                        break
-                    ops_since.add(s["summary"].get("operation"))
-                    walk = s.get("parent-snapshot-id")
-                if ops_since - {"append"}:
-                    raise IcebergCommitConflict(
-                        f"delete raced {sorted(ops_since)} commit(s) at "
-                        f"{self.root} — targets stale, recompute and retry"
-                    )
-            cur_snap = next(
-                s for s in meta["snapshots"] if s["snapshot-id"] == cur_sid
-            )
-            _, prior = read_container(_atomic.read_bytes(self.spark, cur_snap["manifest-list"]))
-            mlist_path = f"{self.root}/metadata/snap-{sid}-1-{uuid.uuid4().hex}.avro"
-            mlist_bytes = write_container(
-                _manifest_list_schema(),
-                prior + [delete_manifest],
-                extra_meta={
-                    "snapshot-id": str(sid).encode(),
-                    "sequence-number": str(seq).encode(),
-                    "format-version": b"2",
-                },
-            )
-            _atomic.write_bytes(self.spark, mlist_path, mlist_bytes, exclusive=True)
-            now = int(time.time() * 1000)
-            snap = {
-                "snapshot-id": sid,
-                "parent-snapshot-id": cur_sid,
-                "sequence-number": seq,
-                "timestamp-ms": now,
-                "manifest-list": mlist_path,
-                "summary": summary,
-                "schema-id": meta["current-schema-id"],
-            }
-            new_meta = dict(meta)
-            if extra_properties:
-                new_meta["properties"] = {
-                    **(meta.get("properties") or {}),
-                    **extra_properties,
-                }
-            new_meta["last-sequence-number"] = seq
-            new_meta["last-updated-ms"] = now
-            new_meta["current-snapshot-id"] = sid
-            new_meta["refs"] = {
-                **(meta.get("refs") or {}),
-                "main": {"snapshot-id": sid, "type": "branch"},
-            }
-            new_meta["snapshots"] = meta["snapshots"] + [snap]
-            new_meta["snapshot-log"] = meta.get("snapshot-log", []) + [
-                {"timestamp-ms": now, "snapshot-id": sid}
-            ]
-            if spec["spec-id"] not in {
-                s["spec-id"] for s in meta["partition-specs"]
-            }:
-                # first GLOBAL delete on a partitioned table: register the
-                # unpartitioned spec this delete manifest was written under
-                # (default-spec-id is untouched — data writes keep theirs)
-                new_meta["partition-specs"] = meta["partition-specs"] + [spec]
-            try:
-                self._write_metadata(v + 1, new_meta)
-                return sid
-            except IcebergCommitConflict:
-                continue  # next attempt re-reads the (version, meta) pair
-        raise IcebergCommitConflict(f"delete lost 20 races at {self.root}")
+        """Commit position-, DV- or equality-delete ``files`` as one
+        snapshot: a global delete manifest added to the head's manifest
+        list. The targets were computed against ``meta``'s head, so only
+        appends may land in between — a racer that rewrote or deleted
+        data makes them stale, and the commit refuses instead of
+        mis-deleting. ``sid`` pins the snapshot id when written artifacts
+        carry it (DV puffin blob metadata); ``meta_mutator(meta)`` runs
+        inside every commit attempt, as in ``append_files``."""
+        sid = _new_snapshot_id() if sid is None else sid
+        row = self._delete_manifest(meta, files, sid)
+        base = self._head(meta)
+
+        def build(meta, seq):
+            head = self._head(meta)
+            by_id = {s["snapshot-id"]: s for s in meta["snapshots"]}
+            ops_since = set()
+            walk = head
+            while walk is not None and walk != base and walk in by_id:
+                ops_since.add(by_id[walk]["summary"].get("operation"))
+                walk = by_id[walk].get("parent-snapshot-id")
+            if ops_since - {"append"}:
+                raise IcebergCommitConflict(
+                    f"delete raced {sorted(ops_since)} commit(s) at "
+                    f"{self.root} — targets stale, recompute and retry"
+                )
+            if meta_mutator is not None:
+                meta_mutator(meta)
+            rows = self._manifest_list(self._find_snapshot(meta, head)) + [row]
+            return rows, summary, 0
+
+        return self._commit_snapshot(build, sid=sid)
 
 
 def append_stream(
@@ -5028,17 +4400,11 @@ def append_stream(
     so a crash-replayed batch is skipped before any file is staged —
     the same txn mechanism as the txlog/Delta sinks, expressed through
     Iceberg's snapshot summary. Returns the StreamingQuery."""
-    app_id = checkpoint_dir  # one logical writer per checkpoint
 
     def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        table.append_once(batch_df, app_id, batch_id)
+        table.append_once(batch_df, checkpoint_dir, batch_id)
 
-    writer = stream_df.writeStream.foreachBatch(commit_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_sink(stream_df, commit_batch, checkpoint_dir, available_now)
 
 
 def upsert_stream(
@@ -5049,60 +4415,22 @@ def upsert_stream(
     available_now: bool = True,
 ):
     """Exactly-once streaming UPSERT sink: each micro-batch lands as ONE
-    merge snapshot (equality delete + data at the same sequence number —
-    ``merge_upsert``), so the table converges to last-write-wins per key
-    — the Flink-style upsert-Iceberg CDC sink. Idempotent replay via the
-    snapshot summary's (app-id, batch-id), same as ``append_stream``:
-    a crash-replayed batch is skipped before any file is staged. Within
-    a batch, duplicate keys are reduced to the LAST row by the stream's
-    arrival order column if present (callers should pre-aggregate);
-    cross-batch, later batches' deletes kill earlier generations by
-    sequence ordering. Returns the StreamingQuery."""
-    app_id = checkpoint_dir
+    ``merge_upsert`` snapshot (equality delete + data at the same
+    sequence number) whose summary records (checkpoint, batch id), so a
+    crash-replayed batch is skipped before any file is staged — the
+    Flink-style upsert-Iceberg CDC sink. Across batches, a later batch's
+    delete kills the earlier generations of its keys, so the table
+    converges to last-write-wins per key; duplicate keys WITHIN a batch
+    all survive (pre-aggregate the batch for one row per key). Returns
+    the StreamingQuery."""
 
     def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
-        meta = table.metadata()
-        for s in meta.get("snapshots", []):
-            sm = s.get("summary") or {}
-            if sm.get("app-id") == app_id and sm.get("batch-id") == str(batch_id):
-                return  # replayed batch: already committed
-        files = table._prepare_files(batch_df, meta)
-        eq_files, _ids, n_keys = table._stage_equality_keys(
-            batch_df.select(*keys), keys, meta
-        )
-        props = {"app-id": app_id, "batch-id": batch_id}
-        if n_keys == 0:
-            table.append_files(files, meta=meta, summary_props=props)
-            return
-        sid = uuid.uuid4().int % (1 << 62)
-        del_spec = table._unpartitioned_spec(meta)
-        del_path, del_len = table._write_delete_manifest(
-            del_spec, [], eq_files, sid
-        )
-        table.append_files(
-            files,
-            meta=meta,
-            operation="overwrite",
-            extra_manifests=[
-                {
-                    "manifest_path": del_path,
-                    "manifest_length": del_len,
-                    "partition_spec_id": del_spec["spec-id"],
-                    "content": 1,
-                    "added_files_count": len(eq_files),
-                    "existing_files_count": 0,
-                    "deleted_files_count": 0,
-                    "added_rows_count": n_keys,
-                    "existing_rows_count": 0,
-                    "deleted_rows_count": 0,
-                    "partitions": None,
-                }
-            ],
-            ensure_spec=del_spec,
-            summary_props={**props, "added-equality-deletes": n_keys},
-            sid=sid,
-        )
+        table.merge_upsert(batch_df, keys, txn=(checkpoint_dir, batch_id))
 
+    return _start_sink(stream_df, commit_batch, checkpoint_dir, available_now)
+
+
+def _start_sink(stream_df: DataFrame, commit_batch, checkpoint_dir: str, available_now: bool):
     writer = stream_df.writeStream.foreachBatch(commit_batch).option(
         "checkpointLocation", checkpoint_dir
     )

@@ -2389,7 +2389,7 @@ def test_kll_puffin_official_datasketches_blob(spark, tmp_path):
             }
         ]
 
-    t._commit_refs(mutate)  # generic optimistic metadata mutation
+    t._commit_metadata(mutate)  # generic optimistic metadata mutation
     got = t.read_quantile_sketch("v")
     assert got is not None and got.n == 3000
     assert got.min_value == 0.0 and got.max_value == 96.0

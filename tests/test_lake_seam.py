@@ -126,6 +126,44 @@ def test_staged_file_stats_live_in_footer_stats():
     }
 
 
+def _callers(path: pathlib.Path, callee: str) -> set[str]:
+    """Module functions and class methods of ``path`` whose body (nested
+    functions included) calls ``callee``."""
+    tree = ast.parse(path.read_text())
+    defs = [n for n in tree.body if isinstance(n, ast.FunctionDef)] + [
+        m
+        for c in tree.body
+        if isinstance(c, ast.ClassDef)
+        for m in c.body
+        if isinstance(m, ast.FunctionDef)
+    ]
+    return {
+        d.name
+        for d in defs
+        if any(
+            isinstance(n, ast.Call) and _dotted(n.func).rsplit(".", 1)[-1] == callee
+            for n in ast.walk(d)
+        )
+    }
+
+
+def test_one_iceberg_manifest_writer_and_reader():
+    """Iceberg manifests and manifest lists are written only by
+    ``_write_manifest`` and ``_commit_snapshot`` and read only by the
+    ``_manifest_list`` / ``_manifest_entries`` reader; no other module in
+    ``sources/`` decodes Avro, except the session-less stream reader."""
+    ice = SOURCES / "iceberg_interop.py"
+    assert _callers(ice, "write_container") == {"_write_manifest", "_commit_snapshot"}
+    assert _callers(ice, "read_container") == {"_manifest_list", "_manifest_entries"}
+    others = {
+        p.name
+        for p in sorted(SOURCES.glob("*.py"))
+        if p.name not in ("iceberg_interop.py", "iceberg_stream.py")
+        and _callers(p, "read_container")
+    }
+    assert others == set()
+
+
 def _lake_df(spark, n):
     return (
         spark.range(n)
