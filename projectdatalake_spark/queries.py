@@ -18119,16 +18119,15 @@ def iceberg_puffin_kll(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def quantile_stats_three_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """QUANTILE STATS IN ALL THREE FORMATS — one daily rollup lands in a
-    Delta table, an Iceberg table, and a txlog table; each format
-    carries the SAME mergeable KLL sketch through its own native stats
-    channel (Delta: a graft.quantileStats domainMetadata domain —
-    delta_interop.write_quantile_stats; Iceberg: a graft-kll-v1 puffin
-    blob — [[iceberg_puffin_kll]]; txlog: a namespaced set_stats entry —
-    txlog.write_quantile_stats), and the three read-back sketches answer
-    identical exact-mode rank selections. The cross-format twin
-    discipline that already covers NDV ([[delta_ndv_informed_join]] /
-    [[txlog_ndv_informed_join]] / [[iceberg_ndv_informed_join]]) now
-    covers quantiles.
+    Delta table, an Iceberg table, and a txlog table. One module,
+    sources/table_stats.py, builds the SAME mergeable KLL sketch for
+    each, and each format stores it where its metadata lives (Delta: the
+    graft.quantileStats domainMetadata domain; Iceberg: graft-kll-v1
+    puffin blobs — [[iceberg_puffin_kll]]; txlog: a ``__kll__:`` set_stats
+    entry); the three read-back sketches answer identical exact-mode rank
+    selections. The NDV statistics go through the same module
+    ([[delta_ndv_informed_join]] / [[txlog_ndv_informed_join]] /
+    [[iceberg_ndv_informed_join]]).
 
     100 TB: stats live in metadata in every format — a federated
     lakehouse answers percentile questions across all three without

@@ -55,6 +55,8 @@ from projectdatalake_spark.session import local_frame
 from projectdatalake_spark.sources import atomic as _atomic
 from projectdatalake_spark.sources import deletion_vectors as _dv
 from projectdatalake_spark.sources import footer_stats as _fs
+from projectdatalake_spark.sources import table_stats as _stats
+from projectdatalake_spark.sources.iceberg_interop import _start_sink
 
 _LOG = "_delta_log"
 _LAST_CHECKPOINT = "_last_checkpoint"
@@ -925,45 +927,15 @@ class DeltaTable:
     # --- deletion vectors -------------------------------------------------
 
     def _dv_deleted_rows(self, dv: dict) -> set[int]:
-        """Decode a deletion-vector descriptor → set of deleted row
-        indices. Supports the spec's three storage types: inline z85
-        ("i"), absolute path ("p"), and z85-prefixed-uuid relative path
-        ("u")."""
-        import struct as _struct
-        import uuid as _uuid
+        """Deleted row indices of a deletion-vector descriptor
+        (``roaring.dv_rows``: inline, absolute-path and relative-uuid
+        storage)."""
+        from projectdatalake_spark.sources.roaring import dv_rows
 
-        from projectdatalake_spark.sources.roaring import (
-            MAGIC, deserialize_rba, z85_decode,
-        )
-
-        st = dv["storageType"]
-        size = int(dv["sizeInBytes"])
-        if st == "i":
-            data = z85_decode(dv["pathOrInlineDv"])[:size]
-        else:
-            if st == "p":
-                path = dv["pathOrInlineDv"]
-            else:  # "u": z85([prefix bytes…] + 16-byte uuid)
-                raw = z85_decode(dv["pathOrInlineDv"])
-                # the uuid is always the LAST 16 decoded bytes; any prefix
-                # characters name a subdirectory (spec: random prefix)
-                n_prefix = len(dv["pathOrInlineDv"]) // 5 * 4 - 16
-                raw = raw[: n_prefix + 16]
-                prefix, uid = raw[:n_prefix], _uuid.UUID(bytes=raw[n_prefix:])
-                sub = prefix.decode("ascii") + "/" if prefix else ""
-                path = f"{self.root}/{sub}deletion_vector_{uid}.bin"
-            blob = _atomic.read_bytes(self.spark, path)
-            off = int(dv.get("offset", 1))
-            (stored_size,) = _struct.unpack_from(">i", blob, off)
-            if stored_size != size:
-                raise DeltaProtocolError(
-                    f"DV size mismatch at {path}:{off}: {stored_size} != {size}"
-                )
-            data = blob[off + 4 : off + 4 + size]
-        (magic,) = _struct.unpack_from("<i", data, 0)
-        if magic != MAGIC:
-            raise DeltaProtocolError(f"bad DV magic {magic}")
-        return deserialize_rba(data[4:])
+        try:
+            return dv_rows(dv, self.root, lambda p: _atomic.read_bytes(self.spark, p))
+        except ValueError as exc:
+            raise DeltaProtocolError(str(exc)) from exc
 
     def _read_physical(
         self,
@@ -1439,25 +1411,15 @@ class DeltaTable:
         }
         if name:
             meta["name"] = name
-        writer_v = 4 if gen else 2
-        if dfl or idy:
-            # writer-only table features: minWriterVersion 7 enumerates
-            # writerFeatures (legacy-implied included); readers untouched
-            wf = set()
-            for lv, fs_ in _LEGACY_WRITER_FEATURES.items():
-                if writer_v >= lv:
-                    wf |= fs_
-            if dfl:
-                wf |= {"allowColumnDefaults"}
-            if idy:
-                wf |= {"identityColumns"}
-            proto = {
-                "minReaderVersion": 1,
-                "minWriterVersion": 7,
-                "writerFeatures": sorted(wf),
-            }
-        else:
-            proto = {"minReaderVersion": 1, "minWriterVersion": writer_v}
+        # generated columns take legacy writer 4; defaults and identity are
+        # then writer-only table features at writer 7
+        proto = t._protocol_with(None, writer={"generatedColumns"} if gen else ())
+        features = {"allowColumnDefaults"} if dfl else set()
+        features |= {"identityColumns"} if idy else set()
+        proto = (
+            t._protocol_with(proto, writer=features, legacy=False)
+            or proto or {"minReaderVersion": 1, "minWriterVersion": 2}
+        )
         actions = [
             {"commitInfo": t._commit_info("CREATE TABLE AS SELECT")},
             {"protocol": proto},
@@ -1866,26 +1828,14 @@ class DeltaTable:
             conf = dict(meta.get("configuration") or {})
             if conf.get("delta.enableInCommitTimestamps") == "true":
                 return state["version"]
-            proto = state["protocol"] or {
-                "minReaderVersion": 1, "minWriterVersion": 2
-            }
-            wf = set(proto.get("writerFeatures") or [])
-            mwv = proto.get("minWriterVersion", 2)
-            if mwv < 7:
-                for lv, fs_ in _LEGACY_WRITER_FEATURES.items():
-                    if mwv >= lv:
-                        wf |= fs_
+            # domainMetadata licenses compact_log's graft.ict floor-carry
+            # domain (see docstring)
+            proto = self._protocol_with(
+                state["protocol"], writer={"inCommitTimestamp", "domainMetadata"}
+            )
             actions: list[dict] = [
                 {"commitInfo": self._commit_info("ENABLE IN-COMMIT TIMESTAMPS")},
-                {"protocol": {
-                    "minReaderVersion": proto.get("minReaderVersion", 1),
-                    "minWriterVersion": 7,
-                    # domainMetadata licenses compact_log's graft.ict
-                    # floor-carry domain (see docstring)
-                    "writerFeatures": sorted(
-                        wf | {"inCommitTimestamp", "domainMetadata"}
-                    ),
-                }},
+                *([{"protocol": proto}] if proto else []),
                 {"metaData": {
                     **meta,
                     "configuration": {
@@ -1912,6 +1862,57 @@ class DeltaTable:
             )
         except _atomic.ExclusiveCreateConflict as exc:
             raise DeltaCommitConflict(str(exc)) from exc
+
+    @staticmethod
+    def _protocol_with(
+        proto: dict | None, reader=(), writer=(), legacy: bool = True
+    ) -> dict | None:
+        """The ``protocol`` action a commit needing the ``reader`` and
+        ``writer`` features must carry, or None when ``proto`` (None = a
+        new table's (1, 2)) already grants them — the one upgrade rule of
+        PROTOCOL.md "Table Features" every commit path goes through.
+
+        Versions never drop and a granted feature is never dropped; every
+        reader feature is also a writer feature. A legacy table whose
+        needs a legacy version implies moves to that version (``add
+        constraint`` → writer 3, column mapping → (2, 5)) unless
+        ``legacy=False``. Otherwise the writer moves to 7 and lists every
+        feature the old writer version implied; a reader feature no
+        legacy reader version implies moves the reader to 3, which lists
+        ``columnMapping`` when the old reader version was 2."""
+
+        def implied(table: dict, version: int) -> set[str]:
+            return set().union(*(fs for v, fs in table.items() if version >= v))
+
+        def lowest(table: dict, feats: set[str]) -> int | None:
+            vs = [min((v for v, fs in table.items() if f in fs), default=None)
+                  for f in feats]
+            return None if None in vs else max(vs, default=0)
+
+        proto = proto or {"minReaderVersion": 1, "minWriterVersion": 2}
+        mrv = proto.get("minReaderVersion", 1)
+        mwv = proto.get("minWriterVersion", 2)
+        rf = (set(proto.get("readerFeatures") or []) if mrv >= 3
+              else implied(_LEGACY_READER_FEATURES, mrv))
+        wf = (set(proto.get("writerFeatures") or []) if mwv >= 7
+              else implied(_LEGACY_WRITER_FEATURES, mwv))
+        need_r = set(reader) - rf
+        need_w = (set(writer) | set(reader)) - wf
+        if not need_r and not need_w:
+            return None
+        legacy_r = lowest(_LEGACY_READER_FEATURES, need_r) if mrv < 3 else None
+        legacy_w = lowest(_LEGACY_WRITER_FEATURES, need_w) if mwv < 7 else None
+        if legacy and legacy_r is not None and legacy_w is not None:
+            return {"minReaderVersion": max(mrv, legacy_r),
+                    "minWriterVersion": max(mwv, legacy_w)}
+        out = {"minReaderVersion": mrv, "minWriterVersion": 7}
+        if need_r and legacy_r is not None:
+            out["minReaderVersion"] = max(mrv, legacy_r)
+        elif need_r or mrv >= 3:
+            out["minReaderVersion"] = 3
+            out["readerFeatures"] = sorted(rf | need_r)
+        out["writerFeatures"] = sorted(wf | need_w)
+        return out
 
     def _refuse_mapped(self, meta: dict, op: str) -> None:
         if self._column_mapping(meta):
@@ -1978,10 +1979,11 @@ class DeltaTable:
     def add_constraint(self, name: str, expr: str) -> int:
         """CHECK constraint (Delta protocol ``checkConstraints`` writer
         feature): stored as ``delta.constraints.<name>`` in the table
-        configuration, protocol advances to minWriterVersion 3, and this
-        writer REJECTS any append/overwrite containing a violating row
-        from then on (readers are unaffected — minReaderVersion is
-        untouched, per spec). The expression must already hold on the
+        configuration, the protocol gains ``checkConstraints`` (writer 3
+        on a legacy table, ``_protocol_with``), and this writer REJECTS
+        any append/overwrite containing a violating row from then on
+        (readers are unaffected — minReaderVersion is untouched, per
+        spec). The expression must already hold on the
         current snapshot."""
         state = self._state()
         meta = state["metaData"]
@@ -2004,19 +2006,16 @@ class DeltaTable:
                         f"constraint {name!r} already exists"
                     )
             cfg = {**(meta.get("configuration") or {}), key: expr}
-            proto = state["protocol"] or {
-                "minReaderVersion": 1, "minWriterVersion": 2
-            }
+            proto = self._protocol_with(
+                state["protocol"], writer={"checkConstraints"}
+            )
             actions = [
                 {"commitInfo": self._commit_info(
                     "ADD CONSTRAINT", {"name": name, "expr": expr}
                 )},
+                *([{"protocol": proto}] if proto else []),
+                {"metaData": {**meta, "configuration": cfg}},
             ]
-            if proto.get("minWriterVersion", 2) < 3:
-                actions.append(
-                    {"protocol": {**proto, "minWriterVersion": 3}}
-                )
-            actions.append({"metaData": {**meta, "configuration": cfg}})
             v = state["version"] + 1
             try:
                 self._publish(v, actions)
@@ -2140,9 +2139,9 @@ class DeltaTable:
         rename upgrades the table — every field gets a
         ``delta.columnMapping.id`` and a ``physicalName`` equal to its
         current name, so every existing data file keeps resolving with
-        ZERO rewrites, and the protocol advances to (2, 5) per the
-        spec's columnMapping requirement. The rename itself then only
-        changes the LOGICAL name; the physical name is frozen for the
+        ZERO rewrites, and the protocol gains ``columnMapping`` per the
+        spec — (2, 5) on a legacy table (``_protocol_with``). The rename
+        itself then only changes the LOGICAL name; the physical name is frozen for the
         column's lifetime. Partition columns are refused (their physical
         names are baked into the hive directory layout)."""
         state = self._state()
@@ -2174,9 +2173,9 @@ class DeltaTable:
                 f["metadata"] = md
             cfg["delta.columnMapping.mode"] = "name"
             cfg["delta.columnMapping.maxColumnId"] = str(max_id)
-            actions.append(
-                {"protocol": {"minReaderVersion": 2, "minWriterVersion": 5}}
-            )
+        proto = self._protocol_with(state["protocol"], reader={"columnMapping"})
+        if proto:
+            actions.append({"protocol": proto})
         for f in schema_json["fields"]:
             if f["name"] == old:
                 f["name"] = new
@@ -2277,32 +2276,13 @@ class DeltaTable:
                 {"fromType": cur, "toType": to_type, "tableVersion": v}
             ]
             field["metadata"] = md
-            proto = state["protocol"] or {
-                "minReaderVersion": 1, "minWriterVersion": 2
-            }
-            wf = set(proto.get("writerFeatures") or [])
-            rf = set(proto.get("readerFeatures") or [])
-            mwv = proto.get("minWriterVersion", 2)
-            if mwv < 7:
-                for lv, fs_ in _LEGACY_WRITER_FEATURES.items():
-                    if mwv >= lv:
-                        wf |= fs_
-            mrv = proto.get("minReaderVersion", 1)
-            if mrv < 3:
-                for lv, fs_ in _LEGACY_READER_FEATURES.items():
-                    if mrv >= lv:
-                        rf |= fs_
+            proto = self._protocol_with(state["protocol"], reader={"typeWidening"})
             actions: list[dict] = [
                 {"commitInfo": self._commit_info(
                     "WIDEN COLUMN",
                     {"column": column, "from": cur, "to": to_type},
                 )},
-                {"protocol": {
-                    "minReaderVersion": 3,
-                    "minWriterVersion": 7,
-                    "readerFeatures": sorted(rf | {"typeWidening"}),
-                    "writerFeatures": sorted(wf | {"typeWidening"}),
-                }},
+                *([{"protocol": proto}] if proto else []),
                 {"metaData": {
                     **meta,
                     "schemaString": json.dumps(schema_json),
@@ -2839,6 +2819,8 @@ class DeltaTable:
         SOURCE can break it (Delta's documented shallow-clone caveat).
         DV-carrying files clone as-is (the DV descriptor's absolute-path
         storage type travels with the add)."""
+        from projectdatalake_spark.sources.roaring import dv_file_path
+
         state = self._state()
         meta = state["metaData"]
         self._refuse_mapped(meta, "shallow_clone")
@@ -2858,7 +2840,7 @@ class DeltaTable:
             if dv and dv.get("storageType") == "u":
                 # relative-uuid DVs resolve against the SOURCE root —
                 # rewrite the descriptor to absolute-path storage
-                raw = self._dv_abs_path(dv)
+                raw = dv_file_path(self.root, dv)
                 a2["deletionVector"] = {**dv, "storageType": "p",
                                         "pathOrInlineDv": raw,
                                         "offset": dv.get("offset", 1)}
@@ -2887,28 +2869,15 @@ class DeltaTable:
         clone._publish(0, actions)
         return clone
 
-    def _dv_abs_path(self, dv: dict) -> str:
-        """Absolute .bin path of a relative-uuid ('u') DV descriptor."""
-        import uuid as _uuid
-
-        from projectdatalake_spark.sources.roaring import z85_decode
-
-        raw = z85_decode(dv["pathOrInlineDv"])
-        n_prefix = len(dv["pathOrInlineDv"]) // 5 * 4 - 16
-        raw = raw[: n_prefix + 16]
-        prefix, uid = raw[:n_prefix], _uuid.UUID(bytes=raw[n_prefix:])
-        sub = prefix.decode("ascii") + "/" if prefix else ""
-        return f"{self.root}/{sub}deletion_vector_{uid}.bin"
-
     def delete_where_dv(self, condition: str) -> int | None:
         """Merge-on-read DELETE via deletion vectors: matching rows are
         recorded as roaring bitmaps of row indices — O(deleted rows), ZERO
         data files rewritten. Each touched add is re-emitted with a
         ``deletionVector`` descriptor (inline z85 when small, a versioned
         ``.bin`` DV file otherwise) and the protocol upgrades to
-        (3, 7) + deletionVectors features, exactly as delta-spark does on
-        first DV write. Rows earlier vectors already mask do not match
-        again: the matching read is ONE parquet relation over every add
+        (3, 7) + deletionVectors features on the first DV write, listing
+        what the old versions implied (``_protocol_with``). Rows earlier
+        vectors already mask do not match again: the matching read is ONE parquet relation over every add
         with the vectors in force applied (``_read_adds``). Returns the
         committed version, or None if nothing matched."""
         import struct as _struct
@@ -2942,22 +2911,9 @@ class DeltaTable:
         actions: list[dict] = [
             {"commitInfo": self._commit_info("DELETE", {"predicate": condition})}
         ]
-        proto = state["protocol"] or {}
-        feats = set(proto.get("readerFeatures") or [])
-        if proto.get("minReaderVersion", 1) < 3 or "deletionVectors" not in feats:
-            actions.append(
-                {
-                    "protocol": {
-                        "minReaderVersion": 3,
-                        "minWriterVersion": 7,
-                        "readerFeatures": sorted(feats | {"deletionVectors"}),
-                        "writerFeatures": sorted(
-                            set(proto.get("writerFeatures") or [])
-                            | {"deletionVectors"}
-                        ),
-                    }
-                }
-            )
+        proto = self._protocol_with(state["protocol"], reader={"deletionVectors"})
+        if proto:
+            actions.append({"protocol": proto})
         # DV file shared by all large bitmaps of this commit (spec layout:
         # version byte, then per DV: int32 BE size | data | int32 BE crc32)
         dv_rel = f"deletion_vector_{uuid.uuid4()}.bin"
@@ -3200,196 +3156,86 @@ class DeltaTable:
         self._publish(v, actions)
         return v
 
-    # --- column NDV statistics (domainMetadata-carried) --------------------
-
-    _STATS_DOMAIN = "projectdatalake.columnStats"
+    # --- column statistics (domainMetadata-carried; table_stats.py) -------
 
     def write_stats(self, columns: list[str], k: int = 4096) -> int:
-        """Column NDV statistics carried in a ``domainMetadata`` action —
-        Delta's twin of Iceberg's puffin files and txlog's ``set_stats``
-        commit (all three share puffin.column_theta_sketch and the
-        duck-typed ``ndv_semi_reduce_join`` consumer). Domain metadata is
-        the spec's extension point for exactly this: engine-scoped
-        configuration that replays through the log and both checkpoint
-        shapes. Entries are version-stamped; per-column upsert into the
-        existing domain config. Metadata-only commit."""
-        import base64
-
-        from projectdatalake_spark.sources.puffin import column_theta_sketches
-
-        state = self._state()
-        v_now = state["version"]
-        df = self.snapshot()
-        existing = json.loads(
-            state["domains"].get(self._STATS_DOMAIN) or "{}"
+        """Column NDV statistics: theta sketches built in one pass over
+        the snapshot, upserted per column into the
+        ``projectdatalake.columnStats`` ``domainMetadata`` domain — the
+        spec's extension point for engine-scoped configuration, which
+        replays through the log and both checkpoint shapes. Each entry
+        records the table version it describes (``table_stats``: the
+        entry codec and staleness rule txlog shares, the sketches Iceberg
+        stores in puffin files; ``ndv_semi_reduce_join`` consumes any of
+        them). Metadata-only commit; returns its version."""
+        return self._write_stats_domain(
+            _stats.NDV, columns, k,
+            "WRITE STATS", {"columns": json.dumps(list(columns))},
         )
-        for col in columns:
-            if col not in df.columns:
-                raise ValueError(f"unknown column {col!r}")
-        # ONE pass over the snapshot builds every column's sketch
-        # (was one full scan per column — OPTIMIZATION_r13, guide §1.2)
-        sketches = column_theta_sketches(df, list(columns), k)
-        for col in columns:
-            sk = sketches[col]
-            existing[col] = {
-                "ndv": int(round(sk.estimate())),
-                "sketch": base64.b64encode(sk.to_bytes()).decode("ascii"),
-                "version": v_now,
-            }
-        proto = state["protocol"] or {
-            "minReaderVersion": 1, "minWriterVersion": 2,
-        }
-        actions: list[dict] = [
-            {"commitInfo": self._commit_info(
-                "WRITE STATS", {"columns": json.dumps(list(columns))}
-            )}
-        ]
-        wf = set(proto.get("writerFeatures") or [])
-        if proto.get("minWriterVersion", 2) < 7 or "domainMetadata" not in wf:
-            mwv = proto.get("minWriterVersion", 2)
-            if mwv < 7:
-                for lv, fs_ in _LEGACY_WRITER_FEATURES.items():
-                    if mwv >= lv:
-                        wf |= fs_
-            actions.append(
-                {"protocol": {
-                    **proto,
-                    "minWriterVersion": 7,
-                    "writerFeatures": sorted(wf | {"domainMetadata"}),
-                }}
-            )
-        actions.append(
-            {"domainMetadata": {
-                "domain": self._STATS_DOMAIN,
-                "configuration": json.dumps(existing),
-                "removed": False,
-            }}
-        )
-        self._publish(v_now + 1, actions)
-        return v_now + 1
 
     def ndv(self, column: str) -> int | None:
-        """NDV from the stats domain, STALENESS-protected: any commit
-        with add/remove actions after the recorded version — or a pruned
-        log that can't prove there was none — returns None, so consumers
-        never broadcast on numbers the table has outgrown."""
+        """NDV from the stats domain, or None when absent or stale: every
+        version after the entry's must still be in the log and carry no
+        add/remove action (``table_stats.answers``), so consumers never
+        broadcast on numbers the table has outgrown."""
         state = self._state()
-        cfg = state["domains"].get(self._STATS_DOMAIN)
-        if not cfg:
-            return None
-        ent = json.loads(cfg).get(column)
-        if ent is None:
-            return None
-        commits, _ = self._log_files()
-        later = [v for v in commits if v > ent["version"]]
-        # pruned history between stats version and the earliest commit we
-        # can still read → unverifiable → conservative None
-        if later and (min(later) > ent["version"] + 1) and (
-            ent["version"] + 1 not in commits
-        ):
-            covered = set(later)
-            if any(
-                v not in covered
-                for v in range(ent["version"] + 1, state["version"] + 1)
-            ):
-                return None
-        for v in later:
-            if any(
-                "add" in a or "remove" in a
-                for a in self._commit_actions(v)
-            ):
-                return None
-        return int(ent["ndv"])
+        commits = set(self._log_files()[0])
 
-    _QSTATS_DOMAIN = "graft.quantileStats"
+        def changed(v: int) -> bool | None:
+            if v not in commits:
+                return None
+            return any("add" in a or "remove" in a for a in self._commit_actions(v))
+
+        entry = self._stats_entry(_stats.NDV, column, state)
+        return _stats.ndv(entry, state["version"], changed)
 
     def write_quantile_stats(self, column: str, k: int = 8192) -> int:
-        """Mergeable KLL QUANTILE sketch in its own domainMetadata domain
-        — Delta's twin of Iceberg's graft-kll-v1 puffin blobs and
-        txlog's namespaced set_stats entries (one shared sketch builder,
-        operators/aggregates.column_kll_sketch). A separate domain keeps
-        quantile state out of the NDV consumers' staleness logic."""
-        import base64
-
-        from projectdatalake_spark.operators.aggregates import (
-            column_kll_sketch,
+        """Mergeable KLL quantile sketch of ``column`` in the
+        ``graft.quantileStats`` domain, apart from the NDV domain so
+        quantile entries never enter the NDV staleness check. Same codec
+        and commit step as ``write_stats``."""
+        return self._write_stats_domain(
+            _stats.KLL, [column], k, "WRITE QUANTILE STATS", {"column": column}
         )
-
-        state = self._state()
-        v_now = state["version"]
-        df = self.snapshot()
-        if column not in df.columns:
-            raise ValueError(f"unknown column {column!r}")
-        sk = column_kll_sketch(df, column, k=k)
-        existing = json.loads(
-            state["domains"].get(self._QSTATS_DOMAIN) or "{}"
-        )
-        existing[column] = {
-            "n": sk.n,
-            "exact": sk.is_exact(),
-            "sketch": base64.b64encode(sk.to_bytes()).decode("ascii"),
-            "version": v_now,
-        }
-        proto = state["protocol"] or {
-            "minReaderVersion": 1, "minWriterVersion": 2,
-        }
-        actions: list[dict] = [
-            {"commitInfo": self._commit_info(
-                "WRITE QUANTILE STATS", {"column": column}
-            )}
-        ]
-        wf = set(proto.get("writerFeatures") or [])
-        if proto.get("minWriterVersion", 2) < 7 or "domainMetadata" not in wf:
-            mwv = proto.get("minWriterVersion", 2)
-            if mwv < 7:
-                for lv, fs_ in _LEGACY_WRITER_FEATURES.items():
-                    if mwv >= lv:
-                        wf |= fs_
-            actions.append(
-                {"protocol": {
-                    **proto,
-                    "minWriterVersion": 7,
-                    "writerFeatures": sorted(wf | {"domainMetadata"}),
-                }}
-            )
-        actions.append(
-            {"domainMetadata": {
-                "domain": self._QSTATS_DOMAIN,
-                "configuration": json.dumps(existing),
-                "removed": False,
-            }}
-        )
-        self._publish(v_now + 1, actions)
-        return v_now + 1
 
     def read_quantile_sketch(self, column: str):
-        """Deserialize the column's KLL sketch from the quantile-stats
-        domain; None when absent."""
-        import base64
-
-        from projectdatalake_spark.operators.aggregates import KLLSketch
-
-        cfg = self._state()["domains"].get(self._QSTATS_DOMAIN)
-        if not cfg:
-            return None
-        ent = json.loads(cfg).get(column)
-        if ent is None:
-            return None
-        return KLLSketch.from_bytes(base64.b64decode(ent["sketch"]))
+        """The column's KLL sketch from the quantile domain; None when
+        absent."""
+        return _stats.decode(_stats.KLL, self._stats_entry(_stats.KLL, column))
 
     def read_stats_sketch(self, column: str):
-        """Deserialize the column's theta sketch (mergeable path)."""
-        import base64
+        """The column's theta sketch (the mergeable path); None when
+        absent."""
+        return _stats.decode(_stats.NDV, self._stats_entry(_stats.NDV, column))
 
-        from projectdatalake_spark.sources.puffin import ThetaSketch
+    def _stats_entry(self, kind: str, column: str, state: dict | None = None):
+        cfg = (state or self._state())["domains"].get(_stats.DELTA_DOMAIN[kind])
+        return json.loads(cfg).get(column) if cfg else None
 
-        cfg = self._state()["domains"].get(self._STATS_DOMAIN)
-        if not cfg:
-            return None
-        ent = json.loads(cfg).get(column)
-        if ent is None:
-            return None
-        return ThetaSketch.from_bytes(base64.b64decode(ent["sketch"]))
+    def _write_stats_domain(
+        self, kind: str, columns: list[str], k: int, op: str, params: dict
+    ) -> int:
+        """One metadata-only commit upserting the ``kind`` entries of
+        ``columns``, built over the current snapshot, into the kind's
+        domain; the protocol gains ``domainMetadata`` on first use."""
+        state = self._state()
+        domain = _stats.DELTA_DOMAIN[kind]
+        entries = json.loads(state["domains"].get(domain) or "{}")
+        entries.update(
+            _stats.entries(self.snapshot(), kind, columns, k, state["version"])
+        )
+        proto = self._protocol_with(state["protocol"], writer={"domainMetadata"})
+        actions: list[dict] = [
+            {"commitInfo": self._commit_info(op, params)},
+            *([{"protocol": proto}] if proto else []),
+            {"domainMetadata": {
+                "domain": domain,
+                "configuration": json.dumps(entries),
+                "removed": False,
+            }},
+        ]
+        self._publish(state["version"] + 1, actions)
+        return state["version"] + 1
 
     # --- liquid-style clustering ------------------------------------------
 
@@ -3431,19 +3277,9 @@ class DeltaTable:
         state = self._state()
         if self.row_tracking_enabled(state):
             return self.latest_version()
-        proto = state["protocol"] or {"minReaderVersion": 1, "minWriterVersion": 2}
-        wf = set(proto.get("writerFeatures") or [])
-        mwv = proto.get("minWriterVersion", 2)
-        if mwv < 7:
-            # upgrading to table features must enumerate legacy-implied ones
-            for lv, fs_ in _LEGACY_WRITER_FEATURES.items():
-                if mwv >= lv:
-                    wf |= fs_
-        proto = {
-            "minReaderVersion": proto.get("minReaderVersion", 1),
-            "minWriterVersion": 7,
-            "writerFeatures": sorted(wf | {"rowTracking", "domainMetadata"}),
-        }
+        proto = self._protocol_with(
+            state["protocol"], writer={"rowTracking", "domainMetadata"}
+        )
         meta = dict(state["metaData"])
         meta["configuration"] = {
             **(meta.get("configuration") or {}),
@@ -3476,7 +3312,7 @@ class DeltaTable:
             readds.append(add)
         actions: list[dict] = [
             {"commitInfo": self._commit_info("ENABLE ROW TRACKING")},
-            {"protocol": proto},
+            *([{"protocol": proto}] if proto else []),
             {"metaData": meta},
             {"domainMetadata": {
                 "domain": self._ROW_TRACKING_DOMAIN,
@@ -3619,30 +3455,15 @@ class DeltaTable:
         keep their layout; ``recluster()`` is the maintenance loop that
         converges it. Empty ``cols`` tombstones the domain."""
         state = self._state()
-        proto = state["protocol"] or {"minReaderVersion": 1, "minWriterVersion": 2}
+        proto = self._protocol_with(
+            state["protocol"], writer={"domainMetadata", "clustering"}
+        )
         actions: list[dict] = [
             {"commitInfo": self._commit_info(
                 "CLUSTER BY", {"columns": json.dumps(list(cols))}
-            )}
+            )},
+            *([{"protocol": proto}] if proto else []),
         ]
-        wf = set(proto.get("writerFeatures") or [])
-        if proto.get("minWriterVersion", 2) < 7 or not (
-            {"domainMetadata", "clustering"} <= wf
-        ):
-            mwv = proto.get("minWriterVersion", 2)
-            if mwv < 7:
-                for lv, fs_ in _LEGACY_WRITER_FEATURES.items():
-                    if mwv >= lv:
-                        wf |= fs_
-            actions.append(
-                {"protocol": {
-                    **proto,
-                    "minWriterVersion": 7,
-                    "writerFeatures": sorted(
-                        wf | {"domainMetadata", "clustering"}
-                    ),
-                }}
-            )
         if cols:
             actions.append(
                 {"domainMetadata": {
@@ -3854,55 +3675,26 @@ class DeltaTable:
         every cold read re-scans it from one file. Sidecars shard the
         file state so checkpoint writes parallelize across the cluster
         and cold-start readers fan sidecar scans out."""
-        state = self._state()
-        proto = state["protocol"] or {"minReaderVersion": 1, "minWriterVersion": 2}
-        feats = set(proto.get("readerFeatures") or [])
-        if proto.get("minReaderVersion", 1) < 3 or "v2Checkpoint" not in feats:
-            for attempt in range(20):
-                if attempt > 0:
-                    state = self._state()
-                    proto = state["protocol"] or {
-                        "minReaderVersion": 1, "minWriterVersion": 2,
-                    }
-                    feats = set(proto.get("readerFeatures") or [])
-                    if (
-                        proto.get("minReaderVersion", 1) >= 3
-                        and "v2Checkpoint" in feats
-                    ):
-                        break  # a racer upgraded for us
-                mrv = proto.get("minReaderVersion", 1)
-                mwv = proto.get("minWriterVersion", 2)
-                rf = set(feats)
-                wf = set(proto.get("writerFeatures") or [])
-                if mrv < 3:  # enumerate what the legacy version implied
-                    for lv, fs_ in _LEGACY_READER_FEATURES.items():
-                        if mrv >= lv:
-                            rf |= fs_
-                if mwv < 7:
-                    for lv, fs_ in _LEGACY_WRITER_FEATURES.items():
-                        if mwv >= lv:
-                            wf |= fs_
-                actions = [
+        for _ in range(20):
+            state = self._state()
+            proto = self._protocol_with(state["protocol"], reader={"v2Checkpoint"})
+            if proto is None:
+                break  # granted (by us or a racer)
+            try:
+                self._publish(state["version"] + 1, [
                     {"commitInfo": self._commit_info(
                         "UPGRADE PROTOCOL", {"feature": "v2Checkpoint"}
                     )},
-                    {"protocol": {
-                        "minReaderVersion": 3,
-                        "minWriterVersion": 7,
-                        "readerFeatures": sorted(rf | {"v2Checkpoint"}),
-                        "writerFeatures": sorted(wf | {"v2Checkpoint"}),
-                    }},
-                ]
-                try:
-                    self._publish(state["version"] + 1, actions)
-                    state = self._state()
-                    break
-                except DeltaCommitConflict:
-                    continue
-            else:
-                raise DeltaCommitConflict(
-                    f"v2Checkpoint upgrade lost 20 races at {self.root}"
-                )
+                    {"protocol": proto},
+                ])
+            except DeltaCommitConflict:
+                continue
+            state = self._state()
+            break
+        else:
+            raise DeltaCommitConflict(
+                f"v2Checkpoint upgrade lost 20 races at {self.root}"
+            )
         v = state["version"]
         adds = list(state["adds"].values())
         sidecar_actions: list[dict] = []
@@ -4049,12 +3841,7 @@ def append_stream(
     def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
         table.append(batch_df, txn=(app_id, batch_id))
 
-    writer = stream_df.writeStream.foreachBatch(commit_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_sink(stream_df, commit_batch, checkpoint_dir, available_now)
 
 
 def upsert_stream(
@@ -4076,12 +3863,7 @@ def upsert_stream(
     def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
         table.merge_upsert(batch_df, keys, txn=(app_id, batch_id))
 
-    writer = stream_df.writeStream.foreachBatch(commit_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_sink(stream_df, commit_batch, checkpoint_dir, available_now)
 
 
 def convert_parquet_to_delta(

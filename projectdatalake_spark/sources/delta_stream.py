@@ -29,7 +29,6 @@ import decimal
 import glob
 import json
 import os
-import struct
 import urllib.parse
 
 from pyspark.sql.datasource import (
@@ -144,40 +143,16 @@ def _cast_partition_value(v: str | None, typ: str):
 
 def _dv_rows(root: str, dv: dict | None) -> set[int]:
     """Decode a DV descriptor in a sessionless process (executor or
-    driver): inline z85 or file storage, roaring payload."""
+    driver), reading DV files with ``open``."""
     if not dv:
         return set()
-    from projectdatalake_spark.sources.roaring import (
-        MAGIC, deserialize_rba, z85_decode,
-    )
+    from projectdatalake_spark.sources.roaring import dv_rows
 
-    st = dv["storageType"]
-    size = int(dv["sizeInBytes"])
-    if st == "i":
-        data = z85_decode(dv["pathOrInlineDv"])[:size]
-    else:
-        if st == "p":
-            path = dv["pathOrInlineDv"]
-        else:  # "u"
-            import uuid as _uuid
-
-            raw = z85_decode(dv["pathOrInlineDv"])
-            n_prefix = len(dv["pathOrInlineDv"]) // 5 * 4 - 16
-            raw = raw[: n_prefix + 16]
-            prefix, uid = raw[:n_prefix], _uuid.UUID(bytes=raw[n_prefix:])
-            sub = prefix.decode("ascii") + "/" if prefix else ""
-            path = os.path.join(root, f"{sub}deletion_vector_{uid}.bin")
+    def read(path: str) -> bytes:
         with open(path, "rb") as fh:
-            blob = fh.read()
-        off = int(dv.get("offset", 1))
-        (stored,) = struct.unpack_from(">i", blob, off)
-        if stored != size:
-            raise ValueError(f"DV size mismatch at {path}:{off}")
-        data = blob[off + 4 : off + 4 + size]
-    (magic,) = struct.unpack_from("<i", data, 0)
-    if magic != MAGIC:
-        raise ValueError(f"bad DV magic {magic}")
-    return deserialize_rba(data[4:])
+            return fh.read()
+
+    return dv_rows(dv, root, read)
 
 
 class DeltaChangePartition(InputPartition):

@@ -52,6 +52,8 @@ from projectdatalake_spark.session import local_frame
 from projectdatalake_spark.sources import atomic as _atomic
 from projectdatalake_spark.sources import deletion_vectors as _dv
 from projectdatalake_spark.sources import footer_stats as _fs
+from projectdatalake_spark.sources import puffin as _puffin
+from projectdatalake_spark.sources import table_stats as _stats
 from projectdatalake_spark.sources.avro_codec import read_container, write_container
 
 _SPARK_TO_ICEBERG = {
@@ -864,15 +866,6 @@ def _transform_py(transform: str, value, src_type: str):
     raise IcebergProtocolError(f"unknown partition transform {transform!r}")
 
 
-def _column_theta_sketch(df: DataFrame, col: str, k: int):
-    """Shared distributed KMV/theta sketch builder — see
-    puffin.column_theta_sketch (relocated there so txlog's stats commits
-    reuse it)."""
-    from projectdatalake_spark.sources.puffin import column_theta_sketch
-
-    return column_theta_sketch(df, col, k)
-
-
 def ndv_semi_reduce_join(
     fact: DataFrame,
     dim_table,  # duck-typed: anything exposing ndv(col) + snapshot()
@@ -1562,7 +1555,7 @@ class IcebergTable:
         self._commit_metadata(mutate)
         return snapshot_id
 
-    # --- puffin statistics files (spec: puffin-spec.md) --------------------
+    # --- puffin statistics files (spec: puffin-spec.md; table_stats.py) ---
 
     def write_stats(self, columns: list[str], k: int = 4096) -> str:
         """Write a PUFFIN statistics file with one
@@ -1570,76 +1563,17 @@ class IcebergTable:
         CURRENT snapshot, and register it under table metadata's
         ``statistics`` list (Iceberg spec §Table Statistics) — the input
         a CBO consumes without scanning data (see
-        ``ndv_semi_reduce_join``). Replaces any prior stats entry for the
-        same snapshot; returns the stats file path.
+        ``ndv_semi_reduce_join``). The snapshot's earlier blobs of other
+        (type, column) pairs are carried into the new file, which
+        replaces the snapshot's stats entry; returns the file's path.
+        ``table_stats`` builds the sketches Delta and txlog also store.
 
-        100 TB: the sketch build is ONE linear pass per column — each
-        partition keeps its k smallest distinct hashes (Arrow-batched),
-        a k-row global top-k merges them, and only k+1 longs ever reach
-        the driver. KMV/theta error ~1/sqrt(k) (~1.6% at k=4096)."""
-        from projectdatalake_spark.sources import puffin as _puffin
-
-        meta = self.metadata()
-        sid = self._head(meta)
-        if sid is None:
-            raise IcebergProtocolError("cannot write stats for an empty table")
-        snap = self._find_snapshot(meta, sid)
-        seq = int(snap.get("sequence-number", 0))
-        field_ids = {f["name"]: f["id"] for f in _current_schema(meta)["fields"]}
-        df = self.snapshot()
-        for col in columns:
-            if col not in field_ids:
-                raise ValueError(f"unknown column {col!r}")
-        from projectdatalake_spark.sources.puffin import column_theta_sketches
-
-        # ONE pass over the snapshot builds every column's sketch
-        # (was one full scan per column — OPTIMIZATION_r13, guide §1.2)
-        sketches = column_theta_sketches(df, list(columns), k)
-        blobs = []
-        for col in columns:
-            sk = sketches[col]
-            blobs.append(
-                (
-                    {
-                        "type": _puffin.THETA_BLOB_TYPE,
-                        "fields": [field_ids[col]],
-                        "snapshot-id": sid,
-                        "sequence-number": seq,
-                        # `column` rides as a property in the file footer
-                        # AND the metadata copy, so both resolve names
-                        # without a schema lookup
-                        "properties": {
-                            "ndv": str(int(round(sk.estimate()))),
-                            "column": col,
-                        },
-                    },
-                    sk.to_bytes(),
-                )
-            )
-        data, footer_size = _puffin.write_puffin(
-            blobs, {"created-by": "projectdatalake-spark"}
-        )
-        path = f"{self.root}/metadata/{sid}-{uuid.uuid4().hex}.stats"
-        _atomic.write_bytes(self.spark, path, data, exclusive=True)
-        entry = {
-            "snapshot-id": sid,
-            "statistics-path": path,
-            "file-size-in-bytes": len(data),
-            "file-footer-size-in-bytes": footer_size,
-            "blob-metadata": [
-                {**m, "length": len(payload)} for m, payload in blobs
-            ],
-        }
-
-        def mutate(md):
-            md["statistics"] = [
-                s
-                for s in md.get("statistics", [])
-                if s["snapshot-id"] != sid
-            ] + [entry]
-
-        self._commit_metadata(mutate)
-        return path
+        100 TB: the sketch build is ONE linear pass over every column —
+        each partition keeps its k smallest distinct hashes
+        (Arrow-batched), a k-row global top-k merges them, and only k+1
+        longs per column reach the driver. KMV/theta error ~1/sqrt(k)
+        (~1.6% at k=4096)."""
+        return self._register_stats(_stats.NDV, columns, k)
 
     def ndv(self, column: str, snapshot_id: int | None = None) -> int | None:
         """NDV of ``column`` from the snapshot's registered puffin stats
@@ -1661,34 +1595,14 @@ class IcebergTable:
         """Deserialize the column's theta sketch from the puffin payload
         (for UNIONS across tables/snapshots — the mergeable path); None
         when absent."""
-        from projectdatalake_spark.sources import puffin as _puffin
-
-        meta = self.metadata()
-        sid = snapshot_id or meta.get("current-snapshot-id")
-        for s in meta.get("statistics", []):
-            if s["snapshot-id"] != sid:
-                continue
-            blobs, _props = _puffin.read_puffin(
-                _atomic.read_bytes(self.spark, s["statistics-path"])
-            )
-            for bm, payload in blobs:
-                if (
-                    bm.get("type") == _puffin.THETA_BLOB_TYPE
-                    and bm.get("properties", {}).get("column") == column
-                ):
-                    return _puffin.ThetaSketch.from_bytes(payload)
-        return None
-
-    _KLL_BLOB_TYPE = "graft-kll-v1"
-    _KLL_DS_BLOB_TYPE = "apache-datasketches-kll-v1"
+        return self._stats_sketch(_stats.NDV, column, snapshot_id)
 
     def write_quantile_stats(self, column: str, k: int = 8192) -> str:
         """Write a PUFFIN statistics file carrying a mergeable KLL
         QUANTILE sketch for ``column`` at the current snapshot and
-        register it under metadata ``statistics`` — the quantile member
-        of the stats shelf beside write_stats' theta NDV blobs. TWO
-        blobs per column (round 12 closed the last sketch-interop
-        refusal): ``apache-datasketches-kll-v1`` carries the OFFICIAL
+        register it under metadata ``statistics``, with the snapshot's
+        other blobs carried forward as in ``write_stats``. TWO blobs per
+        column: ``apache-datasketches-kll-v1`` carries the OFFICIAL
         Apache DataSketches KllDoublesSketch compact image (byte-level
         cross-validated against the datasketches-java copy Spark
         bundles — tests/test_accuracy_gates.py::
@@ -1697,57 +1611,55 @@ class IcebergTable:
         as float64; operators/aggregates.KLLSketch.to_bytes) rides
         beside it carrying the alternating-selector phase the official
         layout has no slot for, which resumed-compaction determinism
-        needs. Replaces any prior stats entry for the snapshot (one
-        stats file per snapshot, the same contract as write_stats).
+        needs.
 
         100 TB: one linear pass builds bounded per-task compactors;
         every later quantile/range-boundary question is metadata-only
         (see kll_clustered_write for the consumer shape)."""
-        from projectdatalake_spark.operators.aggregates import (
-            column_kll_sketch,
-        )
-        from projectdatalake_spark.sources import puffin as _puffin
+        return self._register_stats(_stats.KLL, [column], k)
 
+    def read_quantile_sketch(self, column: str, snapshot_id: int | None = None):
+        """Deserialize the column's KLL sketch from the snapshot's puffin
+        stats (old snapshots' stats entries stay readable — time-traveled
+        quantiles without a scan); the graft blob wins, and a foreign
+        file with only the official DataSketches image still answers.
+        None when absent."""
+        return self._stats_sketch(_stats.KLL, column, snapshot_id)
+
+    def _stats_sketch(self, kind: str, column: str, snapshot_id: int | None):
+        meta = self.metadata()
+        sid = snapshot_id or meta.get("current-snapshot-id")
+        for blobs in self._stats_blobs(meta, sid):
+            sk = _stats.blob_sketch(kind, blobs, column)
+            if sk is not None:
+                return sk
+        return None
+
+    def _stats_blobs(self, meta: dict, sid: int):
+        """The puffin blobs of each stats file registered for ``sid``."""
+        for s in meta.get("statistics", []):
+            if s["snapshot-id"] == sid:
+                yield _puffin.read_puffin(
+                    _atomic.read_bytes(self.spark, s["statistics-path"])
+                )[0]
+
+    def _register_stats(self, kind: str, columns: list[str], k: int) -> str:
+        """Build the ``kind`` sketches of ``columns`` over the current
+        snapshot, write them with the snapshot's earlier blobs of other
+        (type, column) pairs into one new puffin file, and register it as
+        the snapshot's only stats entry. Returns the file's path."""
         meta = self.metadata()
         sid = self._head(meta)
         if sid is None:
             raise IcebergProtocolError("cannot write stats for an empty table")
         snap = self._find_snapshot(meta, sid)
         field_ids = {f["name"]: f["id"] for f in _current_schema(meta)["fields"]}
-        if column not in field_ids:
-            raise ValueError(f"unknown column {column!r}")
-        sk = column_kll_sketch(self.snapshot(), column, k=k)
-        common = {
-            "fields": [field_ids[column]],
-            "snapshot-id": sid,
-            "sequence-number": int(snap.get("sequence-number", 0)),
-        }
-        blobs = [
-            (
-                {
-                    "type": self._KLL_BLOB_TYPE,
-                    **common,
-                    "properties": {
-                        "column": column,
-                        "n": str(sk.n),
-                        "exact": str(sk.is_exact()).lower(),
-                    },
-                },
-                sk.to_bytes(),
-            ),
-            (
-                {
-                    "type": self._KLL_DS_BLOB_TYPE,
-                    **common,
-                    "properties": {
-                        "column": column,
-                        "item-type": "double",
-                        "n": str(sk.n),
-                    },
-                },
-                sk.to_datasketches_bytes(),
-            ),
-        ]
+        blobs = _stats.puffin_blobs(
+            kind, _stats.build(self.snapshot(), kind, columns, k), field_ids,
+            sid, int(snap.get("sequence-number", 0)),
+        )
+        for old in self._stats_blobs(meta, sid):
+            blobs = _stats.carry_forward(old, blobs)
         data, footer_size = _puffin.write_puffin(
             blobs, {"created-by": "projectdatalake-spark"}
         )
@@ -1772,36 +1684,6 @@ class IcebergTable:
 
         self._commit_metadata(mutate)
         return path
-
-    def read_quantile_sketch(self, column: str, snapshot_id: int | None = None):
-        """Deserialize the column's KLL sketch from the snapshot's puffin
-        stats (old snapshots' stats entries stay readable — time-traveled
-        quantiles without a scan); None when absent."""
-        from projectdatalake_spark.operators.aggregates import KLLSketch
-        from projectdatalake_spark.sources import puffin as _puffin
-
-        meta = self.metadata()
-        sid = snapshot_id or meta.get("current-snapshot-id")
-        for s in meta.get("statistics", []):
-            if s["snapshot-id"] != sid:
-                continue
-            blobs, _props = _puffin.read_puffin(
-                _atomic.read_bytes(self.spark, s["statistics-path"])
-            )
-            ds_payload = None
-            for bm, payload in blobs:
-                if bm.get("properties", {}).get("column") != column:
-                    continue
-                if bm.get("type") == self._KLL_BLOB_TYPE:
-                    # full-fidelity engine blob (selector phase) wins
-                    return KLLSketch.from_bytes(payload)
-                if bm.get("type") == self._KLL_DS_BLOB_TYPE:
-                    ds_payload = payload
-            if ds_payload is not None:
-                # a foreign stats file carrying only the official
-                # DataSketches image (round 12) still answers quantiles
-                return KLLSketch.from_datasketches_bytes(ds_payload)
-        return None
 
     def write_partition_stats(self) -> str:
         """PARTITION STATISTICS file (spec §Partition Statistics): one
@@ -4452,6 +4334,9 @@ def upsert_stream(
 
 
 def _start_sink(stream_df: DataFrame, commit_batch, checkpoint_dir: str, available_now: bool):
+    """Start the ``foreachBatch`` query every txlog, Delta and Iceberg
+    stream sink runs: ``commit_batch`` is the format's idempotent commit,
+    ``checkpoint_dir`` the query's checkpoint (and the sinks' app id)."""
     writer = stream_df.writeStream.foreachBatch(commit_batch).option(
         "checkpointLocation", checkpoint_dir
     )

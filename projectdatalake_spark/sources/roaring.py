@@ -153,6 +153,45 @@ def deserialize_rba(data: bytes) -> set[int]:
     return out
 
 
+def dv_file_path(root: str, dv: dict) -> str:
+    """Absolute path of a file-stored Delta deletion-vector descriptor:
+    "p" names it; "u" is z85([prefix bytes] + 16-byte uuid) under
+    ``root``, the uuid always the LAST 16 decoded bytes and any prefix
+    characters a subdirectory (spec: random prefix)."""
+    if dv["storageType"] == "p":
+        return dv["pathOrInlineDv"]
+    import uuid
+
+    n_prefix = len(dv["pathOrInlineDv"]) // 5 * 4 - 16
+    raw = z85_decode(dv["pathOrInlineDv"])[: n_prefix + 16]
+    prefix, uid = raw[:n_prefix], uuid.UUID(bytes=raw[n_prefix:])
+    sub = prefix.decode("ascii") + "/" if prefix else ""
+    return f"{root}/{sub}deletion_vector_{uid}.bin"
+
+
+def dv_rows(dv: dict, root: str, read_bytes) -> set[int]:
+    """Deleted row indices of a Delta deletion-vector descriptor in any
+    of the spec's three storage types: inline z85 ("i"), absolute path
+    ("p") and z85-prefixed-uuid relative path ("u"). ``read_bytes(path)``
+    reads a DV file, so a session-less worker decodes with ``open``.
+    Raises ValueError on a size or magic mismatch."""
+    size = int(dv["sizeInBytes"])
+    if dv["storageType"] == "i":
+        data = z85_decode(dv["pathOrInlineDv"])[:size]
+    else:
+        path = dv_file_path(root, dv)
+        blob = read_bytes(path)
+        off = int(dv.get("offset", 1))
+        (stored,) = struct.unpack_from(">i", blob, off)
+        if stored != size:
+            raise ValueError(f"DV size mismatch at {path}:{off}: {stored} != {size}")
+        data = blob[off + 4 : off + 4 + size]
+    (magic,) = struct.unpack_from("<i", data, 0)
+    if magic != MAGIC:
+        raise ValueError(f"bad DV magic {magic}")
+    return deserialize_rba(data[4:])
+
+
 # --- Z85 (ZeroMQ spec 32/Z85) ----------------------------------------------
 
 _Z85_CHARS = (

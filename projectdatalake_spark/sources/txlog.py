@@ -44,6 +44,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from projectdatalake_spark.session import local_frame
 from projectdatalake_spark.sources import atomic as _atomic, footer_stats as _fs
+from projectdatalake_spark.sources import table_stats as _stats
+from projectdatalake_spark.sources.iceberg_interop import _start_sink
 
 _LOG_DIR = "_txlog"
 _STAGING = "_staging"
@@ -2300,119 +2302,57 @@ class TxTable:
         return zorder_column(df, cols, bits)
 
     def write_stats(self, columns: list[str], k: int = 4096) -> int:
-        """Column NDV statistics as a METADATA-ONLY commit (``set_stats``)
-        — txlog's twin of Iceberg's puffin stats files
-        (iceberg_interop.IcebergTable.write_stats), sharing the same
-        distributed theta/KMV sketch builder (puffin.column_theta_sketch)
-        and feeding the same duck-typed consumer
-        (``ndv_semi_reduce_join`` — any table exposing ``ndv()`` +
-        ``snapshot()`` qualifies). Each entry records the table VERSION
-        it describes; sketches serialize into the commit JSON (base64
-        DataSketches compact layout) so they fold through checkpoints
-        like every other metadata action and remain union-mergeable."""
-        import base64
-
-        from projectdatalake_spark.sources.puffin import column_theta_sketches
-
-        v = self.latest_version()
-        df = self.snapshot()
-        for col in columns:
-            if col not in df.columns:
-                raise ValueError(f"unknown column {col!r}")
-        # ONE pass over the snapshot builds every column's sketch
-        # (was one full scan per column — OPTIMIZATION_r13, guide §1.2)
-        sketches = column_theta_sketches(df, list(columns), k)
-        stats = {}
-        for col in columns:
-            sk = sketches[col]
-            stats[col] = {
-                "ndv": int(round(sk.estimate())),
-                "sketch": base64.b64encode(sk.to_bytes()).decode("ascii"),
-                "version": v,
-            }
-        return self._publish("set_stats", [], [], stats=stats)
-
-    # quantile stats ride in the SAME set_stats map under a namespaced
-    # key (a column name can never collide with the prefix), so they fold
-    # through checkpoints with zero new machinery
-    _KLL_STATS_PREFIX = "__kll__:"
+        """Column NDV statistics as a metadata-only ``set_stats`` commit:
+        theta sketches built in one pass over the snapshot, each entry
+        stamped with the table version it describes. ``table_stats``
+        holds the entry codec and staleness rule Delta shares (Iceberg
+        stores the same sketches in puffin files), and
+        ``ndv_semi_reduce_join`` consumes any table exposing ``ndv()`` +
+        ``snapshot()``. The base64 sketches ride in the commit JSON, so
+        they fold through checkpoints like every other metadata action
+        and stay union-mergeable."""
+        return self._commit_stats(_stats.NDV, columns, k)
 
     def write_quantile_stats(self, column: str, k: int = 8192) -> int:
-        """Mergeable KLL QUANTILE sketch as a metadata-only commit —
-        txlog's twin of Iceberg's graft-kll-v1 puffin blobs
-        (iceberg_interop.write_quantile_stats) and the quantile member
-        of the shared stats shelf. Serialized state is the engine's
-        KLL binary (operators/aggregates.KLLSketch.to_bytes), base64 in
-        the commit JSON like the theta entries."""
-        import base64
+        """Mergeable KLL quantile sketch of ``column`` as a metadata-only
+        ``set_stats`` commit, in the same map as the NDV entries under
+        the ``__kll__:`` key prefix (no column name can collide with it),
+        so it folds through checkpoints with no new machinery."""
+        return self._commit_stats(_stats.KLL, [column], k)
 
-        from projectdatalake_spark.operators.aggregates import (
-            column_kll_sketch,
-        )
-
-        df = self.snapshot()
-        if column not in df.columns:
-            raise ValueError(f"unknown column {column!r}")
+    def _commit_stats(self, kind: str, columns: list[str], k: int) -> int:
         v = self.latest_version()
-        sk = column_kll_sketch(df, column, k=k)
+        built = _stats.entries(self.snapshot(), kind, columns, k, v)
+        prefix = _stats.TXLOG_PREFIX[kind]
         return self._publish(
-            "set_stats", [], [],
-            stats={
-                self._KLL_STATS_PREFIX + column: {
-                    "n": sk.n,
-                    "exact": sk.is_exact(),
-                    "sketch": base64.b64encode(sk.to_bytes()).decode("ascii"),
-                    "version": v,
-                }
-            },
+            "set_stats", [], [], stats={prefix + c: e for c, e in built.items()}
         )
+
+    def _stats_entry(self, kind: str, column: str) -> dict | None:
+        return self._state().get("stats", {}).get(_stats.TXLOG_PREFIX[kind] + column)
 
     def read_quantile_sketch(self, column: str):
-        """Deserialize the column's KLL sketch (mergeable path); None
-        when absent. Staleness is the caller's concern, as with
-        read_stats_sketch."""
-        import base64
-
-        from projectdatalake_spark.operators.aggregates import KLLSketch
-
-        ent = self._state().get("stats", {}).get(
-            self._KLL_STATS_PREFIX + column
-        )
-        if ent is None:
-            return None
-        return KLLSketch.from_bytes(base64.b64decode(ent["sketch"]))
+        """The column's KLL sketch (mergeable path); None when absent.
+        Staleness is the caller's concern, as with read_stats_sketch."""
+        return _stats.decode(_stats.KLL, self._stats_entry(_stats.KLL, column))
 
     def ndv(self, column: str) -> int | None:
         """NDV of ``column`` from the stats commit, or None when absent
-        OR STALE (any data-changing commit after the recorded version
-        invalidates it — a consumer must not broadcast on numbers the
-        table has outgrown; re-run write_stats after large ingests).
-        O(metadata)."""
-        ent = self._state().get("stats", {}).get(column)
-        if ent is None:
-            return None
-        commits = self.history()
-        latest = commits[-1]["version"] if commits else -1
-        surviving = {c["version"] for c in commits}
-        # prune_log may have deleted commit JSONs between the stats version
-        # and the checkpoint; a pruned commit could have changed data, so
-        # an incomplete view of (stats_version, latest] is unverifiable →
-        # conservative None (the Delta twin's pruned-log fallback,
-        # delta_interop.DeltaTable.ndv).
-        if any(
-            v not in surviving for v in range(ent["version"] + 1, latest + 1)
-        ):
-            return None
-        data_changed = any(
-            c["version"] > ent["version"]
-            # dv-carrying commits (delete_dv: adds=[] removes=[]) change
-            # data too — the mask alters every downstream read.
-            and (c.get("adds") or c.get("removes") or "dv" in c)
-            for c in commits
-        )
-        if data_changed:
-            return None
-        return int(ent["ndv"])
+        OR STALE: every version after the entry's must still be in the
+        log and change no data — adds, removes or deletion vectors
+        (``table_stats.answers``). A consumer must not broadcast on
+        numbers the table has outgrown; re-run write_stats after large
+        ingests. O(metadata)."""
+        entry = self._stats_entry(_stats.NDV, column)
+        commits = {c["version"]: c for c in self.history()}
+
+        def changed(v: int) -> bool | None:
+            c = commits.get(v)
+            if c is None:
+                return None
+            return bool(c.get("adds") or c.get("removes") or "dv" in c)
+
+        return _stats.ndv(entry, max(commits, default=-1), changed)
 
     def row_tracking_enabled(self) -> bool:
         return bool((self._state().get("row_tracking") or {}).get("enabled"))
@@ -2584,17 +2524,10 @@ class TxTable:
         return out
 
     def read_stats_sketch(self, column: str):
-        """Deserialize the column's theta sketch (mergeable path); None
-        when absent. Staleness is the CALLER's concern here — a stale
-        sketch still unions correctly with newer partials."""
-        import base64
-
-        from projectdatalake_spark.sources.puffin import ThetaSketch
-
-        ent = self._state().get("stats", {}).get(column)
-        if ent is None:
-            return None
-        return ThetaSketch.from_bytes(base64.b64decode(ent["sketch"]))
+        """The column's theta sketch (mergeable path); None when absent.
+        Staleness is the CALLER's concern here — a stale sketch still
+        unions correctly with newer partials."""
+        return _stats.decode(_stats.NDV, self._stats_entry(_stats.NDV, column))
 
     def _active_leases(self) -> list[dict]:
         """Unexpired OPTIMIZE leases from the metadata fold. Expiry is
@@ -3119,12 +3052,7 @@ def append_stream(
     def commit_batch(batch_df: DataFrame, batch_id: int) -> None:
         table.append_once(batch_df, app_id, batch_id)
 
-    writer = stream_df.writeStream.foreachBatch(commit_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_sink(stream_df, commit_batch, checkpoint_dir, available_now)
 
 
 def upsert_stream(
@@ -3163,9 +3091,4 @@ def upsert_stream(
         else:
             armed.apply_changes(deduped, keys, delete_col=delete_col)
 
-    writer = stream_df.writeStream.foreachBatch(commit_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_sink(stream_df, commit_batch, checkpoint_dir, available_now)

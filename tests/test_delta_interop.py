@@ -1443,6 +1443,157 @@ def test_delta_stats_ndv_staleness_and_checkpoint(spark, root):
     assert t2.ndv("k") == 31
 
 
+@pytest.mark.parametrize("fmt", ["delta", "txlog"])
+def test_stats_ndv_none_when_pruned_log_hides_a_data_commit(spark, root, fmt):
+    """Stats at 100 rows, an append to 1000, a checkpoint and a log
+    prune: no commit after the entry's version is left to prove that
+    nothing changed, so ndv() must not answer 100."""
+    cls = DeltaTable if fmt == "delta" else TxTable
+    t = cls.create(spark, root, spark.range(0, 100))
+    t.write_stats(["id"], k=1024)
+    assert t.ndv("id") == 100
+    t.append(spark.range(100, 1000))
+    t.checkpoint()
+    t.prune_log()
+    assert cls(spark, root).snapshot().count() == 1000
+    assert t.ndv("id") is None
+    t.write_stats(["id"], k=1024)
+    assert t.ndv("id") == 1000
+
+
+# one protocol-upgrade rule (DeltaTable._protocol_with): starting
+# protocol × operation → the protocol that follows
+
+_W2 = ["appendOnly", "invariants"]
+_W4 = ["appendOnly", "changeDataFeed", "checkConstraints", "generatedColumns",
+       "invariants"]
+_W5 = sorted(_W4 + ["columnMapping"])
+
+
+def _proto(r, w, rf=None, wf=None):
+    out = {"minReaderVersion": r, "minWriterVersion": w}
+    if rf is not None:
+        out["readerFeatures"] = sorted(rf)
+    if wf is not None:
+        out["writerFeatures"] = sorted(wf)
+    return out
+
+
+def _start_table(spark, root, start):
+    df = spark.range(0, 20).select(
+        "id", F.col("id").cast("int").alias("n"), F.col("id").cast("int").alias("v"),
+        (F.col("id") % 2).alias("seg"),
+    )
+    if start == "generated":
+        return DeltaTable.create(spark, root, df, generated={"g": "id * 2"})
+    if start == "identity":
+        return DeltaTable.create(
+            spark, root, df,
+            identity={"rid": {"partition_by": ["seg"], "order_by": ["id"]}},
+        )
+    if start == "defaults":
+        return DeltaTable.create(spark, root, df.drop("v"), defaults={"v": "1"})
+    t = DeltaTable.create(spark, root, df)
+    if start == "mapped":
+        t.rename_column("v", "w")
+    elif start == "dv":
+        t.delete_where_dv("id < 3")
+    elif start == "stats":
+        t.write_stats(["id"], k=256)
+    return t
+
+
+_PROTOCOL_OPS = {
+    "none": lambda t: None,
+    "add_constraint": lambda t: t.add_constraint("pos", "id >= 0"),
+    "rename_column": lambda t: t.rename_column("id", "key"),
+    "widen_column": lambda t: t.widen_column("n", "long"),
+    "delete_where_dv": lambda t: t.delete_where_dv("id < 3"),
+    "write_stats": lambda t: t.write_stats(["id"], k=256),
+    "write_quantile_stats": lambda t: t.write_quantile_stats("id", k=64),
+    "enable_row_tracking": lambda t: t.enable_row_tracking(),
+    "enable_in_commit_timestamps": lambda t: t.enable_in_commit_timestamps(),
+    "set_clustering": lambda t: t.set_clustering(("id",)),
+    "checkpoint_v2": lambda t: t.checkpoint_v2(),
+}
+
+_PROTOCOL_TABLE = [
+    # paths whose protocol this writer always gave
+    ("legacy", "none", _proto(1, 2)),
+    ("generated", "none", _proto(1, 4)),
+    ("defaults", "none", _proto(1, 7, wf=_W2 + ["allowColumnDefaults"])),
+    ("identity", "none", _proto(1, 7, wf=_W2 + ["identityColumns"])),
+    ("legacy", "add_constraint", _proto(1, 3)),
+    ("generated", "add_constraint", _proto(1, 4)),
+    ("legacy", "rename_column", _proto(2, 5)),
+    ("mapped", "rename_column", _proto(2, 5)),
+    ("generated", "rename_column", _proto(2, 5)),
+    ("legacy", "widen_column", _proto(3, 7, ["typeWidening"], _W2 + ["typeWidening"])),
+    ("mapped", "widen_column",
+     _proto(3, 7, ["columnMapping", "typeWidening"], _W5 + ["typeWidening"])),
+    ("legacy", "write_stats", _proto(1, 7, wf=_W2 + ["domainMetadata"])),
+    ("mapped", "write_stats", _proto(2, 7, wf=_W5 + ["domainMetadata"])),
+    ("legacy", "write_quantile_stats", _proto(1, 7, wf=_W2 + ["domainMetadata"])),
+    ("legacy", "enable_row_tracking",
+     _proto(1, 7, wf=_W2 + ["domainMetadata", "rowTracking"])),
+    ("legacy", "enable_in_commit_timestamps",
+     _proto(1, 7, wf=_W2 + ["domainMetadata", "inCommitTimestamp"])),
+    ("legacy", "set_clustering", _proto(1, 7, wf=_W2 + ["clustering", "domainMetadata"])),
+    ("mapped", "checkpoint_v2",
+     _proto(3, 7, ["columnMapping", "v2Checkpoint"], _W5 + ["v2Checkpoint"])),
+    ("dv", "delete_where_dv", _proto(3, 7, ["deletionVectors"], _W2 + ["deletionVectors"])),
+    # a first DV delete now lists the legacy-implied writer features too
+    ("legacy", "delete_where_dv",
+     _proto(3, 7, ["deletionVectors"], _W2 + ["deletionVectors"])),
+    # the paths that lowered versions or dropped granted features
+    ("dv", "rename_column",
+     _proto(3, 7, ["columnMapping", "deletionVectors"],
+            _W2 + ["columnMapping", "deletionVectors"])),
+    ("mapped", "delete_where_dv",
+     _proto(3, 7, ["columnMapping", "deletionVectors"], _W5 + ["deletionVectors"])),
+    ("generated", "delete_where_dv",
+     _proto(3, 7, ["deletionVectors"], _W4 + ["deletionVectors"])),
+    ("stats", "add_constraint",
+     _proto(1, 7, wf=_W2 + ["checkConstraints", "domainMetadata"])),
+    ("stats", "rename_column", _proto(2, 7, wf=_W2 + ["columnMapping", "domainMetadata"])),
+    ("dv", "enable_row_tracking",
+     _proto(3, 7, ["deletionVectors"],
+            _W2 + ["deletionVectors", "domainMetadata", "rowTracking"])),
+]
+
+
+@pytest.mark.parametrize(
+    "start,op,expected", _PROTOCOL_TABLE,
+    ids=[f"{s}-{o}" for s, o, _ in _PROTOCOL_TABLE],
+)
+def test_protocol_upgrade_table(spark, root, start, op, expected):
+    t = _start_table(spark, root, start)
+    rows_before = t.snapshot().count()
+    _PROTOCOL_OPS[op](t)
+    fresh = DeltaTable(spark, root)
+    assert fresh._state()["protocol"] == expected
+    if op != "delete_where_dv":
+        assert fresh.snapshot().count() == rows_before
+
+
+def test_protocol_with_never_lowers_or_drops():
+    """The rule itself: granted features need no protocol action, a
+    reader feature is a writer feature too, and an upgrade keeps every
+    version and feature the table had."""
+    up = DeltaTable._protocol_with
+    tf = _proto(3, 7, ["deletionVectors"], _W2 + ["deletionVectors"])
+    assert up(tf, reader={"deletionVectors"}) is None
+    assert up(_proto(1, 4), writer={"checkConstraints"}) is None
+    assert up(_proto(2, 5), reader={"columnMapping"}) is None
+    assert up(None, writer={"generatedColumns"}) == _proto(1, 4)
+    assert up(None, writer={"identityColumns"}, legacy=False) == _proto(
+        1, 7, wf=_W2 + ["identityColumns"]
+    )
+    assert up(tf, writer={"checkConstraints"}) == _proto(
+        3, 7, ["deletionVectors"], _W2 + ["checkConstraints", "deletionVectors"]
+    )
+
+
 def test_row_tracking_protocol_and_stability(spark, root):
     """Row tracking lifecycle: enable backfills baseRowId +
     defaultRowCommitVersion in path order with the protocol upgraded and

@@ -15,12 +15,18 @@ deletion vectors without Python workers.
 - Deletion vectors are built and read without a Python worker, and the
   new writer's blobs are byte-equal to those of the ``applyInPandas``
   build it replaced.
+- One definition per table-format metadata rule: Delta protocol upgrades
+  go through ``DeltaTable._protocol_with``, column sketches through
+  ``table_stats.py`` (whose stored bytes match those written before it),
+  and every stream sink through one ``foreachBatch`` starter.
 """
 
 from __future__ import annotations
 
 import ast
 import collections
+import hashlib
+import json
 import pathlib
 
 import pytest
@@ -162,6 +168,107 @@ def test_one_iceberg_manifest_writer_and_reader():
         and _callers(p, "read_container")
     }
     assert others == set()
+
+
+def test_one_protocol_upgrade_rule():
+    """The legacy-version feature tables are read only by
+    ``DeltaTable._protocol_with``: every commit path that needs a feature
+    asks that one rule for its protocol action."""
+    readers = {}
+    for p in sorted(SOURCES.glob("*.py")):
+        tree = ast.parse(p.read_text())
+        names = {
+            d.name
+            for d in ast.walk(tree)
+            if isinstance(d, ast.FunctionDef)
+            and any(
+                isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)
+                and n.id.startswith("_LEGACY_")
+                for n in ast.walk(d)
+            )
+        }
+        if names:
+            readers[p.name] = names
+    assert readers == {"delta_interop.py": {"_protocol_with"}}
+
+
+def test_one_stats_sketch_builder_and_one_stream_starter():
+    """Only ``table_stats.py`` builds column sketches for the formats, and
+    one ``writeStream.foreachBatch`` starts every stream sink."""
+    builders = {
+        p.name
+        for p in sorted(SOURCES.glob("*.py"))
+        if _callers(p, "column_theta_sketches") | _callers(p, "column_kll_sketch")
+    }
+    assert builders == {"table_stats.py"}
+    starters = collections.Counter()
+    for p in sorted(SOURCES.glob("*.py")):
+        for ref in _attribute_refs(p, lambda n: n.attr == "foreachBatch"):
+            if ref.endswith("writeStream.foreachBatch"):
+                starters[p.name] += 1
+    assert starters == {"iceberg_interop.py": 1}
+
+
+def _stats_frame(spark):
+    return spark.range(0, 3000, numPartitions=1).select(
+        "id", (F.col("id") % 37).alias("x")
+    )
+
+
+def _digest(data: bytes) -> str:
+    return hashlib.sha256(data).hexdigest()[:16]
+
+
+def test_stats_bytes_unchanged(spark, tmp_path):
+    """For a fixed frame the stats entries Delta and txlog store and the
+    puffin blob payloads Iceberg writes keep the bytes tables written
+    before ``table_stats.py`` carry, so those tables read back unchanged."""
+    from projectdatalake_spark.sources.delta_interop import DeltaTable
+    from projectdatalake_spark.sources.puffin import read_puffin
+    from projectdatalake_spark.sources.txlog import TxTable
+
+    d = DeltaTable.create(spark, str(tmp_path / "d"), _stats_frame(spark))
+    d.write_stats(["id", "x"], k=256)
+    d.write_quantile_stats("x", k=64)
+    domains = d._state()["domains"]
+    assert _digest(domains["projectdatalake.columnStats"].encode()) == "bf8a241f162e527f"
+    assert _digest(domains["graft.quantileStats"].encode()) == "22ab4f77b07adcda"
+
+    t = TxTable.create(spark, str(tmp_path / "t"), _stats_frame(spark))
+    t.write_stats(["id", "x"], k=256)
+    t.write_quantile_stats("x", k=64)
+    stats = t._state()["stats"]
+    assert set(stats) == {"id", "x", "__kll__:x"}
+    assert _digest(json.dumps(stats, sort_keys=True).encode()) == "93fb7edda0e6a3a3"
+
+    i = IcebergTable.create(spark, str(tmp_path / "i"), _stats_frame(spark))
+    payloads = set()
+    for path in (i.write_stats(["id", "x"], k=256), i.write_quantile_stats("x", k=64)):
+        blobs, _ = read_puffin(open(path, "rb").read())
+        payloads |= {(m["type"], m["properties"]["column"], _digest(b)) for m, b in blobs}
+    assert sorted(payloads) == [
+        ("apache-datasketches-kll-v1", "x", "9064ebf203721c60"),
+        ("apache-datasketches-theta-v1", "id", "8ee75be5c233f49a"),
+        ("apache-datasketches-theta-v1", "x", "933a0005fe321260"),
+        ("graft-kll-v1", "x", "55c7688960fd26aa"),
+    ]
+
+
+def test_iceberg_stats_keep_the_snapshots_other_blobs(spark, tmp_path):
+    """Writing one stats kind on a snapshot keeps the other kind's blobs
+    (the snapshot's stats file is replaced, not added), as Delta and
+    txlog keep both."""
+    t = IcebergTable.create(spark, str(tmp_path / "i"), _lake_df(spark, 200))
+    t.write_stats(["id"], k=1024)
+    assert t.ndv("id") == 200
+    t.write_quantile_stats("seg", k=64)
+    assert t.ndv("id") == 200
+    assert t.read_stats_sketch("id") is not None
+    assert t.read_quantile_sketch("seg").n == 200
+    t.write_stats(["seg"], k=1024)
+    assert (t.ndv("id"), t.ndv("seg")) == (200, 3)
+    assert t.read_quantile_sketch("seg").n == 200
+    assert len(t.metadata()["statistics"]) == 1
 
 
 def _lake_df(spark, n):
